@@ -490,7 +490,8 @@ object SparkEntry {
     d.unionByName(near).unionByName(exact)
   }
 
-  /** Profiling hook (tools.Profile3) — not part of the driver contract. */
+  /** Profiling hook (tools.SetSimProbe, DedupSpec) — not part of the
+    * driver contract. */
   def dupCorpusForProfiling(s: SparkSession, dir: String): DataFrame =
     dupCorpus(s, dir)
 

@@ -248,9 +248,9 @@ object Analytics {
     * formulation shuffled the fact table twice more to build the same
     * pairs through a join — the lesson [[frequentTriples]] recorded
     * one lattice level up, now applied here too. Small inputs (total
-    * set cells after collapse ≤ `localThreshold`) count on the driver
-    * instead — one job, zero further shuffles — with both paths
-    * asserted bit-equal (Round4OpsSpec).
+    * set cells after collapse within the shared [[graft.fitsDriver]]
+    * gate) count on the driver instead — one job, zero further
+    * shuffles — with both paths asserted bit-equal (Round4OpsSpec).
     *
     * All counts are exact integers; lift = (N·supp_ab)/(supp_a·supp_b)
     * and confidence = supp_ab/supp_a are each ONE double division of
@@ -262,8 +262,7 @@ object Analytics {
     *         lift) for pairs with supp_ab ≥ minSupport, item_a < item_b.
     */
   def basketLift(baskets: DataFrame, basketCol: String, itemCol: String,
-                 minSupport: Long,
-                 localThreshold: Long = 1000000L): DataFrame = {
+                 minSupport: Long): DataFrame = {
     val bs = baskets
       .groupBy(col(basketCol).as("bk"))
       .agg(sort_array(collect_set(col(itemCol))).as("items"))
@@ -271,7 +270,8 @@ object Analytics {
     val st = bs.agg(count(lit(1)),
       coalesce(sum(size(col("items"))), lit(0L))).head
     val nBaskets = st.getLong(0)
-    if (st.getLong(1) <= localThreshold) {
+    // 32 bytes per set cell: the item string plus its driver count entry
+    if (graft.fitsDriver(baskets.sparkSession, st.getLong(1) * 32)) {
       val out = localPairCounts(bs, nBaskets, minSupport)
       bs.unpersist()
       return out
@@ -378,8 +378,7 @@ object Analytics {
     *         item_a < item_b < item_c and support = supp/n at 6dp.
     */
   def frequentTriples(baskets: DataFrame, basketCol: String,
-                      itemCol: String, minSupportBp: Int,
-                      localThreshold: Long = 1000000L): DataFrame = {
+                      itemCol: String, minSupportBp: Int): DataFrame = {
     require(minSupportBp > 0 && minSupportBp <= 10000)
     val bs0 = baskets
       .groupBy(col(basketCol).as("bk"))
@@ -391,11 +390,12 @@ object Analytics {
     // exact integer ceil-division on collected longs, mirroring the
     // oracle's `//` — a double divide would round-trip through IEEE
     val minsup = (nBaskets * minSupportBp + 9999L) / 10000L
-    // small input (total set cells ≤ localThreshold): count the whole
-    // lattice on the driver — one job after the collapse, zero further
-    // shuffles (the Graph.scala hybrid-rung pattern; both paths
-    // asserted bit-equal in Round4OpsSpec)
-    if (st.getLong(1) <= localThreshold) {
+    // small input (total set cells within the size gate): count the
+    // whole lattice on the driver — one job after the collapse, zero
+    // further shuffles (the Graph.scala hybrid-rung pattern; both paths
+    // asserted bit-equal in Round4OpsSpec). 32 bytes per set cell, the
+    // basketLift footprint.
+    if (graft.fitsDriver(baskets.sparkSession, st.getLong(1) * 32)) {
       val out = localTripleCounts(bs0, nBaskets, minsup)
       bs0.unpersist()
       return out

@@ -828,8 +828,8 @@ object Corpus {
     * aggregate; driver traffic is nBuckets longs per round (the
     * k-means centroid-pull discipline). The corpus never shuffles
     * beyond its (doc, bucket) count. Hybrid rung: a (doc, bucket)
-    * table at or under `localThreshold` rows instead collects once and
-    * runs the identical integer recurrence on the driver (the
+    * table within the shared [[graft.fitsDriver]] gate instead collects
+    * once and runs the identical integer recurrence on the driver (the
     * Graph.scala small-input discipline; bit-equal, CorpusSpec).
     *
     * Output: one row per distinct feature bucket (bucket, weight),
@@ -838,8 +838,7 @@ object Corpus {
     */
   def perceptronTrain(docs: DataFrame, idCol: String, labelCol: String,
                       textCol: String, tokens: Column => Column,
-                      nBuckets: Int = 64, rounds: Int = 3,
-                      localThreshold: Long = 500000L): DataFrame = {
+                      nBuckets: Int = 64, rounds: Int = 3): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val feats = docs.select(col(idCol).as("doc_id"),
@@ -853,14 +852,15 @@ object Corpus {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the count materializes the cache for the loop AND decides the
     // hybrid rung (the Graph.scala discipline): a (doc, bucket) table
-    // under `localThreshold` rows makes the rounds·(margins + delta)
+    // within the size gate makes the rounds·(margins + delta)
     // jobs pure scheduling floor — run the IDENTICAL integer recurrence
     // on collected arrays instead. Every update is a commutative
     // integer sum, so driver and distributed paths are bit-equal
     // (asserted in CorpusSpec), and real corpora (rows ≈ docs ×
-    // distinct-bucket count, > threshold) take the distributed loop.
+    // distinct-bucket count, over the gate) take the distributed loop.
+    // 64 bytes per row: four longs collected as a generic Row.
     val nFeat = feats.count()
-    if (nFeat <= localThreshold) {
+    if (graft.fitsDriver(spark, nFeat * 64)) {
       val rows = feats.select(col("doc_id"), col("y"), col("b"), col("tf"))
         .collect()
       feats.unpersist()
@@ -1109,7 +1109,7 @@ object Corpus {
     * IN-ROW (zip of the token array with its own tail — no positional
     * self-join), symmetrized + deduped, and ranked by
     * [[Graph.pageRankFixed]] — the exact-integer fixed-point iteration
-    * (hash-gateable; hybrid driver rung under its edge threshold for
+    * (hash-gateable; hybrid driver rung under the size gate for
     * free). Words enter the graph as 48-bit md5-prefix ids so node ids
     * never need a global dictionary sort (at web scale the vocabulary
     * is millions of words — a row_number dictionary would single-

@@ -33,11 +33,12 @@ object Graph {
     *
     * Hybrid execution: dedup funnels usually reduce a huge corpus to a
     * SMALL edge set (pairs that survived LSH + verification), so when
-    * the symmetrized edge list fits comfortably on the driver
-    * (`localThreshold`, default 2M edges ≈ 32 MB) we collect it and
-    * run union-find — one job, O(E·α) — instead of O(diameter)
-    * iterated shuffles. Above the threshold the distributed
-    * min-label-propagation loop runs unchanged. Both paths produce the
+    * the canonical edge list fits comfortably on the driver (the
+    * shared [[graft.fitsDriver]] gate at 16 bytes per edge: 2M edges
+    * ≈ 32 MB at the default bound) we collect it and run union-find —
+    * one job, O(E·α) — instead of O(diameter) iterated shuffles.
+    * Above the bound the distributed min-label-propagation loop runs
+    * unchanged. Both paths produce the
     * identical (id, min-reachable-id) labeling (asserted in
     * GraphSamplingSpec), so the choice is pure execution strategy —
     * the same decision broadcast-vs-shuffle joins make.
@@ -46,8 +47,7 @@ object Graph {
     *         (id, component) where component = min node id reachable.
     */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-                          maxIter: Int = 25,
-                          localThreshold: Long = 2000000L): DataFrame = {
+                          maxIter: Int = 25): DataFrame = {
     // canonicalize to undirected (min,max) edges FIRST and persist:
     // the naive union(e, e.swapped) evaluates the upstream pipeline —
     // often an expensive dedup-candidate join — TWICE before any cache
@@ -59,7 +59,8 @@ object Graph {
         greatest(col("s"), col("d")).as("dst"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    if (und.count() <= localThreshold) {
+    // 16 bytes per edge: one (src, dst) long pair
+    if (graft.fitsDriver(edges.sparkSession, und.count() * 16)) {
       // union-find treats edges as undirected — no symmetrization needed
       val result = localUnionFind(und)
       und.unpersist()
@@ -161,7 +162,7 @@ object Graph {
     * edges ⋈ ranks on src (rank/outdeg per edge), then groupBy dst +
     * sum, then a left join back onto the node set so rank mass
     * re-seeds nodes with no in-edges. Degrees are joined once and
-    * cached; nothing ever collects to the driver. Rank sums are
+    * cached; the rounds never collect to the driver. Rank sums are
     * floating-point (aggregation order varies with partitioning), so
     * gates over this operator are rows-only; semantics are spec'd
     * with tolerance in GraphSamplingSpec.
@@ -170,8 +171,7 @@ object Graph {
     * original formulation — acceptable for ranking use.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               damping: Double = 0.85, iterations: Int = 10,
-               localThreshold: Long = 2000000L): DataFrame = {
+               damping: Double = 0.85, iterations: Int = 10): DataFrame = {
     val e = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
@@ -179,9 +179,9 @@ object Graph {
     // hybrid execution, same rationale as connectedComponents: dedup
     // funnels reduce a huge corpus to a SMALL edge set, where 10
     // distributed rounds are pure scheduling floor — collect and power-
-    // iterate on the driver instead. Above threshold: the distributed
-    // loop, unchanged.
-    if (e.count() <= localThreshold) {
+    // iterate on the driver instead. Above the gate: the distributed
+    // loop, unchanged. 16 bytes per edge: one (src, dst) long pair.
+    if (graft.fitsDriver(edges.sparkSession, e.count() * 16)) {
       val result = localPageRank(e, damping, iterations)
       e.unpersist()
       return result
@@ -243,10 +243,10 @@ object Graph {
     * agree to ~9 significant digits (asserted in GraphSamplingSpec) —
     * in exchange for determinism the float form cannot offer.
     *
-    * Same hybrid execution as [[pageRank]]: graphs at or below
-    * `localThreshold` edges power-iterate on the driver (identical
-    * integer ops ⇒ identical result to the distributed loop, asserted
-    * in GraphSamplingSpec); larger graphs run the two-shuffle
+    * Same hybrid execution as [[pageRank]]: graphs that pass the
+    * shared [[graft.fitsDriver]] gate power-iterate on the driver
+    * (identical integer ops ⇒ identical result to the distributed
+    * loop, asserted in GraphSamplingSpec); larger graphs run the two-shuffle
     * distributed rounds with per-round localCheckpoint lineage
     * truncation. Dangling nodes leak mass, as in [[pageRank]].
     *
@@ -255,14 +255,14 @@ object Graph {
   def pageRankFixed(edges: DataFrame, srcCol: String, dstCol: String,
                     dampNum: Long = 85L, dampDen: Long = 100L,
                     iterations: Int = 5,
-                    scale: Long = 1000000000000L,
-                    localThreshold: Long = 2000000L): DataFrame = {
+                    scale: Long = 1000000000000L): DataFrame = {
     val spark = edges.sparkSession
     val e = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    if (e.count() <= localThreshold) {
+    // 16 bytes per edge: one (src, dst) long pair
+    if (graft.fitsDriver(spark, e.count() * 16)) {
       import spark.implicits._
       val es = e.as[(Long, Long)].collect()
       e.unpersist()
@@ -340,13 +340,7 @@ object Graph {
     * @return (id, hub_fp, auth_fp) in `scale`-units (round max = scale).
     */
   def hitsFixedPoint(edges: DataFrame, srcCol: String, dstCol: String,
-                     rounds: Int = 2, scale: Long = 1000000L,
-                     localThreshold: Long = 500000L): DataFrame = {
-    // 500k (not the long-id operators' 2M): node ids here are STRINGS
-    // (URLs), so a collected edge is ~10× the 16 bytes of a long pair —
-    // the conservative default of triangleStats/localClustering keeps
-    // the driver pull bounded at the same ~100 MB
-
+                     rounds: Int = 2, scale: Long = 1000000L): DataFrame = {
     require(rounds >= 1 && rounds <= 8 && scale >= 1000L)
     val e = edges.select(col(srcCol).cast("string").as("src"),
         col(dstCol).cast("string").as("dst"))
@@ -354,12 +348,14 @@ object Graph {
         col("src") =!= col("dst"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // hybrid small-graph rung (the CC/PageRank/LPA discipline): below
-    // the threshold the 4·rounds tiny sequential jobs are pure
+    // hybrid small-graph rung (the CC/PageRank/LPA discipline): under
+    // the size gate the 4·rounds tiny sequential jobs are pure
     // scheduling floor — run the identical integer recurrence on
     // driver arrays instead (asserted bit-equal in GraphSamplingSpec;
-    // everything is exact integer arithmetic, so equality is ==)
-    if (e.count() <= localThreshold) {
+    // everything is exact integer arithmetic, so equality is ==).
+    // 64 bytes per edge, not the long-id operators' 16: node ids here
+    // are STRINGS (URLs), several times the size of a long pair.
+    if (graft.fitsDriver(edges.sparkSession, e.count() * 64)) {
       val spark = edges.sparkSession
       import spark.implicits._
       val es = e.as[(String, String)].collect()
@@ -515,8 +511,7 @@ object Graph {
     * @return one row: (n_nodes, n_edges, n_triangles, clustering)
     */
   def triangleStats(edges: DataFrame, srcCol: String, dstCol: String,
-                    degreeOrdered: Boolean = true,
-                    localThreshold: Long = 500000L): DataFrame = {
+                    degreeOrdered: Boolean = true): DataFrame = {
     val und = edges.select(col(srcCol).cast("long").as("s"),
         col(dstCol).cast("long").as("d"))
       .filter(col("s") =!= col("d"))
@@ -525,10 +520,11 @@ object Graph {
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     // hybrid small-graph rung (CC/PageRank/LPA/HITS discipline): the
-    // wedge joins are pure scheduling floor below the threshold — the
+    // wedge joins are pure scheduling floor under the size gate — the
     // driver enumeration is the same forward orientation, bit-equal
-    // (GraphSamplingSpec)
-    if (und.count() <= localThreshold) {
+    // (GraphSamplingSpec). 64 bytes per edge: the pair plus its two
+    // adjacency entries and the per-node degree/triangle counters.
+    if (graft.fitsDriver(edges.sparkSession, und.count() * 64)) {
       val spark = edges.sparkSession
       import spark.implicits._
       val es = und.as[(Long, Long)].collect()
@@ -617,8 +613,7 @@ object Graph {
     * @return (id, degree, n_tri, lcc) — lcc 0.0 for degree < 2.
     */
   def localClustering(edges: DataFrame, srcCol: String, dstCol: String,
-                      degreeOrdered: Boolean = true,
-                      localThreshold: Long = 500000L): DataFrame = {
+                      degreeOrdered: Boolean = true): DataFrame = {
     val und = edges.select(col(srcCol).cast("long").as("s"),
         col(dstCol).cast("long").as("d"))
       .filter(col("s") =!= col("d"))
@@ -627,7 +622,8 @@ object Graph {
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     // hybrid small-graph rung, same enumeration crediting all corners
-    if (und.count() <= localThreshold) {
+    // (64 bytes per edge, the triangleStats driver footprint)
+    if (graft.fitsDriver(edges.sparkSession, und.count() * 64)) {
       val spark = edges.sparkSession
       import spark.implicits._
       val es = und.as[(Long, Long)].collect()
@@ -717,8 +713,7 @@ object Graph {
     * @return (id, community) for every node appearing in any edge.
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-                       rounds: Int = 3,
-                       localThreshold: Long = 2000000L): DataFrame = {
+                       rounds: Int = 3): DataFrame = {
     // canonicalize + persist BEFORE symmetrizing — union(e, e.swap) on
     // an unpersisted plan would evaluate the (often expensive) upstream
     // candidate join twice, the exact trap connectedComponents documents
@@ -732,8 +727,9 @@ object Graph {
     // hybrid execution, same rationale as CC/PageRank: post-funnel
     // graphs are tiny, and LPA's update is pure INTEGER arithmetic
     // (counts + min-label ties), so the driver loop is bit-identical
-    // to the distributed rounds — asserted in GraphSamplingSpec
-    if (e.count() <= localThreshold) {
+    // to the distributed rounds — asserted in GraphSamplingSpec.
+    // 16 bytes per edge: one (src, dst) long pair.
+    if (graft.fitsDriver(edges.sparkSession, e.count() * 16)) {
       val result = localLabelPropagation(e, rounds)
       e.unpersist()
       return result
@@ -844,8 +840,7 @@ object Graph {
     *         (id, core_deg).
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-            maxRounds: Int = 30,
-            localThreshold: Long = 2000000L): DataFrame = {
+            maxRounds: Int = 30): DataFrame = {
     require(k >= 1, s"k must be ≥ 1: $k")
     val und0 = edges.select(col(srcCol).cast("long").as("s"),
         col(dstCol).cast("long").as("d"))
@@ -855,7 +850,8 @@ object Graph {
       .distinct()
     var cur = und0.persist(StorageLevel.MEMORY_AND_DISK)
     var nEdges = cur.count()
-    if (nEdges <= localThreshold) {
+    // 16 bytes per edge: one (a, b) long pair
+    if (graft.fitsDriver(edges.sparkSession, nEdges * 16)) {
       // same hybrid rung as CC/LPA/PageRank: a reduced graph this
       // small peels on the driver in one pass (all-integer state →
       // bit-identical to the distributed rounds, spec-asserted);
@@ -911,8 +907,9 @@ object Graph {
     * (the kCore discipline — wrong answers are never returned).
     * Support counting is exact integers → hash-gateable; the oracle
     * unrolls the rounds MATERIALIZED, so hash-equality also certifies
-    * convergence within the unroll. Below `localThreshold` edges the
-    * standard queue-cascade peel runs on the driver (k-truss is the
+    * convergence within the unroll. Under the shared
+    * [[graft.fitsDriver]] gate the standard queue-cascade peel runs on
+    * the driver (k-truss is the
     * unique maximal subgraph, so peel order is immaterial) —
     * bit-identical, asserted in Round9OpsSpec.
     *
@@ -920,8 +917,7 @@ object Graph {
     *         count within the fixpoint subgraph (≥ k−2 by definition).
     */
   def kTruss(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-             maxRounds: Int = 30,
-             localThreshold: Long = 2000000L): DataFrame = {
+             maxRounds: Int = 30): DataFrame = {
     require(k >= 3, s"k must be ≥ 3 (k=2 is the whole graph): $k")
     val und0 = edges.select(col(srcCol).cast("long").as("s"),
         col(dstCol).cast("long").as("d"))
@@ -931,7 +927,8 @@ object Graph {
       .distinct()
     var cur = und0.persist(StorageLevel.MEMORY_AND_DISK)
     var nEdges = cur.count()
-    if (nEdges <= localThreshold) {
+    // 16 bytes per edge: one (a, b) long pair
+    if (graft.fitsDriver(edges.sparkSession, nEdges * 16)) {
       val result = localKTruss(cur, k)
       cur.unpersist()
       return result
@@ -1170,9 +1167,9 @@ object Graph {
     * rounds, per-round `localCheckpoint` truncating lineage (the CC
     * cache discipline); the only scalar crossing the driver is the
     * new-frontier count (early exit when the frontier drains). Same
-    * hybrid rung as CC/LPA/kCore: a reduced graph under
-    * `localThreshold` edges runs a driver-side queue BFS — all-integer
-    * state, asserted bit-identical to the distributed rounds.
+    * hybrid rung as CC/LPA/kCore: a reduced graph under the shared
+    * [[graft.fitsDriver]] gate runs a driver-side queue BFS —
+    * all-integer state, asserted bit-identical to the distributed rounds.
     *
     * Seeds appear at hop 0 even when isolated (they are "reached" by
     * definition); non-seed nodes appear only if reached within
@@ -1181,8 +1178,8 @@ object Graph {
     * @return (id, hop) — hop = min #edges from any seed, 0 ≤ hop ≤ maxHops.
     */
   def shortestHops(edges: DataFrame, srcCol: String, dstCol: String,
-                   seeds: DataFrame, seedCol: String, maxHops: Int,
-                   localThreshold: Long = 2000000L): DataFrame = {
+                   seeds: DataFrame, seedCol: String,
+                   maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be ≥ 0: $maxHops")
     val und = edges.select(col(srcCol).cast("long").as("s"),
         col(dstCol).cast("long").as("d"))
@@ -1192,7 +1189,8 @@ object Graph {
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     val seed = seeds.select(col(seedCol).cast("long").as("id")).distinct()
-    if (und.count() <= localThreshold) {
+    // 16 bytes per edge: one (a, b) long pair
+    if (graft.fitsDriver(edges.sparkSession, und.count() * 16)) {
       val result = localBfs(und, seed, maxHops)
       und.unpersist()
       return result
@@ -1261,9 +1259,10 @@ object Graph {
     * of nodes u with u ⇝ v AND v ⇝ u, labeled by the component's min
     * id (the CC labeling convention).
     *
-    * Hybrid rung like CC/LPA/kCore/BFS: graphs under `localThreshold`
-    * edges run iterative Tarjan on the driver (explicit stack — no
-    * recursion depth limit), asserted equal to the distributed path.
+    * Hybrid rung like CC/LPA/kCore/BFS: graphs under the shared
+    * [[graft.fitsDriver]] gate run iterative Tarjan on the driver
+    * (explicit stack — no recursion depth limit), asserted equal to
+    * the distributed path.
     * The distributed path is trim + forward-min/backward-check
     * (the FW-BW-MIN / coloring family):
     *   1. TRIM — nodes with zero in- or out-degree among the remaining
@@ -1289,14 +1288,15 @@ object Graph {
     *         edge).
     */
   def stronglyConnectedComponents(edges: DataFrame, srcCol: String,
-                                  dstCol: String, maxIter: Int = 25,
-                                  localThreshold: Long = 2000000L): DataFrame = {
+                                  dstCol: String,
+                                  maxIter: Int = 25): DataFrame = {
     val e0 = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    if (e0.count() <= localThreshold) {
+    // 16 bytes per edge: one (src, dst) long pair
+    if (graft.fitsDriver(edges.sparkSession, e0.count() * 16)) {
       val result = localTarjan(e0)
       e0.unpersist()
       return result
@@ -1409,8 +1409,8 @@ object Graph {
     * semantics well-defined even with negative edge weights). Per
     * round: one keyed join + min aggregate + min-merge, scalar-sum
     * convergence for early exit, per-round localCheckpoint; driver
-    * fast path under `localThreshold` runs the same rounds in a hash
-    * map, asserted identical.
+    * fast path under the shared [[graft.fitsDriver]] gate runs the
+    * same rounds in a hash map, asserted identical.
     *
     * @return (id, cost) — min total weight over paths of ≤ maxHops
     *         edges from any seed; seeds at cost 0; unreached nodes
@@ -1418,8 +1418,7 @@ object Graph {
     */
   def shortestPaths(edges: DataFrame, srcCol: String, dstCol: String,
                     wCol: String, seeds: DataFrame, seedCol: String,
-                    maxHops: Int,
-                    localThreshold: Long = 2000000L): DataFrame = {
+                    maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be ≥ 0: $maxHops")
     val e = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"),
@@ -1428,7 +1427,9 @@ object Graph {
       .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val seed = seeds.select(col(seedCol).cast("long").as("id")).distinct()
-    if (e.count() <= localThreshold) {
+    // 16 bytes per edge, the long-pair class of the unweighted
+    // operators (the weight is not charged)
+    if (graft.fitsDriver(edges.sparkSession, e.count() * 16)) {
       val result = localBellmanFord(e, seed, maxHops)
       e.unpersist()
       return result
@@ -1577,20 +1578,20 @@ object Graph {
     *         desc, id_a, id_b) — a total, engine-portable order.
     */
   def linkPrediction(edges: DataFrame, srcCol: String, dstCol: String,
-                     maxDeg: Long = 1000L, topK: Int = 100,
-                     localThreshold: Long = 500000L): DataFrame = {
+                     maxDeg: Long = 1000L, topK: Int = 100): DataFrame = {
     val e = edges.select(col(srcCol).cast("long").as("a"),
         col(dstCol).cast("long").as("b"))
       .filter(col("a") =!= col("b")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     // hybrid driver rung (the CC/LPA/kCore/HITS precedent, r8 VERDICT
-    // task #6): below `localThreshold` edges the wedge census runs as
+    // task #6): under the size gate the wedge census runs as
     // one driver loop — the distributed plan's cost at gate scale is
     // pure scheduling floor (~4s for kilobyte partitions). Bit-equal
     // by construction (Round9OpsSpec asserts local ≡ distributed);
     // bails back to the distributed path if the candidate-pair set
-    // outgrows the in-memory bound.
-    if (e.count() <= localThreshold) {
+    // outgrows the in-memory bound. 64 bytes per edge: the pair plus
+    // its adjacency entries and candidate-pair counters.
+    if (graft.fitsDriver(edges.sparkSession, e.count() * 64)) {
       localLinkPrediction(e, maxDeg, topK) match {
         case Some(out) => e.unpersist(); return out
         case None => // fall through to the distributed wedge join
@@ -1694,8 +1695,7 @@ object Graph {
                seeds: DataFrame,
                dampNum: Long = 85L, dampDen: Long = 100L,
                iterations: Int = 5,
-               scale: Long = 1000000000000L,
-               localThreshold: Long = 2000000L): DataFrame = {
+               scale: Long = 1000000000000L): DataFrame = {
     val spark = edges.sparkSession
     val e = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
@@ -1703,7 +1703,8 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val sd = seeds.select(col(seeds.columns.head).cast("long").as("id"))
       .distinct()
-    if (e.count() <= localThreshold) {
+    // 16 bytes per edge: one (src, dst) long pair
+    if (graft.fitsDriver(spark, e.count() * 16)) {
       import spark.implicits._
       val es = e.as[(Long, Long)].collect()
       e.unpersist()

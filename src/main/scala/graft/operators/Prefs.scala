@@ -47,8 +47,7 @@ object Prefs {
     */
   def bradleyTerryFixed(comparisons: DataFrame, winnerCol: String,
                         loserCol: String, iterations: Int = 5,
-                        scale: Long = 1000000L,
-                        localThreshold: Long = 2000000L): DataFrame = {
+                        scale: Long = 1000000L): DataFrame = {
     require(iterations >= 1 && scale >= 1000L,
       s"bradleyTerryFixed: iterations=$iterations scale=$scale")
     val spark = comparisons.sparkSession
@@ -92,7 +91,8 @@ object Prefs {
       return Seq.empty[(String, Long, Long, Long)]
         .toDF("item", "n_games", "n_wins", "rating_fp")
     }
-    if (nPairs <= localThreshold) {
+    // 16 bytes per (i, j) pair: the pair's count plus its rating slot
+    if (graft.fitsDriver(spark, nPairs * 16)) {
       // driver rung: the tournament fits comfortably in memory — the
       // SAME integer recurrence, asserted bit-equal to the distributed
       // rounds in Round8OpsSpec

@@ -397,23 +397,6 @@ object Similarity {
     } finally vecs.unpersist()
   }
 
-  /** Gate for the trainers' driver-local fast path (round 13, VERDICT
-    * r12 item 6): true when the training corpus's plan-leaf bytes fit
-    * `spark.graft.trainer.localSolveBytes` (default 32 MiB — a
-    * comfortably driver-resident corpus; 0 disables the path, which
-    * the path-equality spec uses to force the distributed form). The
-    * probe is plan-time only (logical statistics — no job, no .rdd).
-    * Only the EXACT-INTEGER trainers take this path: their state is
-    * bit-identical wherever computed, so the result relation is the
-    * same; the float trainers keep their distributed fold order.
-    */
-  private def trainerLocalSolve(df: DataFrame): Boolean = {
-    val bound = df.sparkSession.conf
-      .getOption("spark.graft.trainer.localSolveBytes")
-      .map(_.toLong).getOrElse(32L * 1024 * 1024)
-    bound > 0 && graft.leafBytes(df) <= BigInt(bound)
-  }
-
   /** Lowercase md5 hex of a string — the driver-side mirror of the
     * md5-portable init ordering (Spark's md5() yields lowercase hex;
     * lexicographic comparison of lowercase hex is identical to the
@@ -488,15 +471,18 @@ object Similarity {
       .select(col("id"),
         transform(array_sort(col("pv")),
           p => p.getField("code").cast("double")).as("v"))
-    // round-13 (VERDICT r12 item 6): driver-local solve under the
-    // size gate — every Lloyd step here is EXACT integer arithmetic
-    // (the scaladoc ladder), so the trained state is bit-identical no
-    // matter where it is computed; when the corpus fits the bound,
-    // ONE collect replaces the (1 init + iters) driver-synchronized
-    // cluster jobs whose scheduling dominated the query. Above the
-    // bound (any real corpus) the distributed iterate path below is
-    // unchanged. Round13OpsSpec pins path equality.
-    if (trainerLocalSolve(corpus)) {
+    // driver-local solve under the shared size gate, sized by the
+    // corpus's plan-leaf bytes (plan statistics — no job, no .rdd) —
+    // every Lloyd step here is EXACT integer arithmetic (the scaladoc
+    // ladder), so the trained state is bit-identical no matter where
+    // it is computed; when the corpus fits the bound, ONE collect
+    // replaces the (1 init + iters) driver-synchronized cluster jobs
+    // whose scheduling dominated the query. Above the bound (any real
+    // corpus) the distributed iterate path below is unchanged. Only
+    // the exact-integer trainers take this path; the float trainers
+    // keep their distributed fold order. Round13OpsSpec pins path
+    // equality.
+    if (graft.fitsDriver(spark, graft.leafBytes(corpus))) {
       import spark.implicits._
       val pts = vecsPlan.collect().map(r =>
         (r.getLong(0), r.getSeq[Double](1).map(_.toLong).toArray))
@@ -617,7 +603,7 @@ object Similarity {
     // Gonzalez step is exact integer arithmetic, so under the size
     // gate ONE collect replaces 1 seed + (k−1)×(top-1 + checkpoint)
     // driver-synchronized jobs. Round13OpsSpec pins path equality.
-    if (trainerLocalSolve(corpus)) {
+    if (graft.fitsDriver(spark, graft.leafBytes(corpus))) {
       import spark.implicits._
       val pts = vecsPlan.collect().map(r =>
         (r.getLong(0), r.getSeq[Double](1).map(_.toLong).toArray))
@@ -938,7 +924,7 @@ object Similarity {
     // dim probe + seed job + iters collect jobs; the final
     // corpus-sized code assignment stays DISTRIBUTED through the same
     // native pq_codes expression. Round13OpsSpec pins path equality.
-    if (trainerLocalSolve(corpus)) {
+    if (graft.fitsDriver(corpus.sparkSession, graft.leafBytes(corpus))) {
       val pts = vecsPlan.collect().map(r =>
         (r.getLong(0), r.getSeq[Double](1).map(_.toLong).toArray))
       require(pts.nonEmpty, "pqFixedEncode: empty corpus")
@@ -1126,7 +1112,7 @@ object Similarity {
     * blocking key (a label, an SRP-LSH bucket, or an IVF cell id —
     * q_ann_lsh/ivf machinery), which keeps every stage deterministic.
     * Scale shape: blocked self-join (per-block pair space), hybrid
-    * connected components (driver union-find under the edge threshold,
+    * connected components (driver union-find under the size gate,
     * min-label rounds above), then two keyed joins of cluster-
     * cardinality tables back to the corpus — nothing global.
     */

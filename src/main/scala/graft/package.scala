@@ -14,16 +14,6 @@ package object graft {
     */
   val BatchDate = "2026-08-12"
 
-  /** Load one of the driver-generated parquet tables from an sf dir.
-    *
-    * Some generations of `events.parquet` carry TIMESTAMP(NANOS), which
-    * Spark's parquet reader only accepts as a long
-    * (spark.sql.legacy.parquet.nanosAsLong) — in that case we
-    * re-materialize `ts` as a proper microsecond timestamp with exact
-    * integer division (`div`), no double round-trip. Other generations
-    * use TIMESTAMP(MICROS), which Spark reads natively; detect which by
-    * the type `ts` actually arrives as rather than assuming either.
-    */
   /** Operator-internal cache discipline (Graph.scala's pattern applied
     * library-wide — VERDICT r5 §wrong.1): eagerly materialize `result`
     * via `localCheckpoint(true)` — truncating its lineage off every
@@ -60,9 +50,9 @@ package object graft {
     df.unpersist()
   }
 
-  /** Conf key: per-partition INPUT-byte target for the data-bound
+  /** Per-partition INPUT-byte target for the data-bound
     * [[fanOut]] width (guide §2: "size partitions by bytes"). The
-    * default (256 KiB of compressed parquet ≈ ~1-2 MB of in-memory
+    * value (256 KiB of compressed parquet ≈ ~1-2 MB of in-memory
     * rows) sizes a fanned task at roughly 50-200 ms for the mixed
     * tokenize/aggregate kernels that use the default tier — large
     * enough that the exchange + task-scheduling overhead never
@@ -74,8 +64,7 @@ package object graft {
     * whose scan is already ≥ the core count); for a genuinely small
     * table it bounds the spread to what the bytes justify.
     */
-  private val FanOutBytesConf = "spark.graft.fanout.partitionBytes"
-  private val FanOutBytesDefault = 256L * 1024
+  private val FanOutPartitionBytes = 256L * 1024
 
   /** Sum of the plan's LEAF sizes in bytes (file bytes for parquet
     * relations, estimated/actual size for cached relations) — the
@@ -84,6 +73,15 @@ package object graft {
   private[graft] def leafBytes(df: DataFrame): BigInt =
     df.queryExecution.optimizedPlan.collectLeaves()
       .map(_.stats.sizeInBytes).sum
+
+  /** The one driver-local size gate: a hybrid operator collects and
+    * solves on the driver iff `bytes` (rows × per-row driver cost from
+    * a count it already takes, or a corpus's [[leafBytes]]) is at most
+    * `spark.graft.localSolveBytes` (default 32,000,000; 0 forces every
+    * non-empty input distributed). Both paths give the same relation.
+    */
+  private[graft] def fitsDriver(spark: SparkSession, bytes: BigInt): Boolean =
+    bytes <= BigInt(spark.conf.get("spark.graft.localSolveBytes", "32000000"))
 
   /** True iff the frame is scan-shaped: no shuffle-inducing logical
     * node, so probing `df.rdd.getNumPartitions` is plan-time only
@@ -141,7 +139,7 @@ package object graft {
     * (pair joins, shingling, quantization) runs on one core no matter
     * how many the session has. Round-13 (VERDICT r12 item 2): the
     * width is DATA-BOUND — min(cores, ceil(inputBytes/target)), target
-    * from `spark.graft.fanout.partitionBytes` — instead of the
+    * [[FanOutPartitionBytes]] — instead of the
     * unconditional core count, which over-spread light consumers (the
     * 32-way exchange cost more than the kernel it parallelized; the
     * driver measured the whole suite faster at 8 cores than 32).
@@ -157,8 +155,12 @@ package object graft {
     * its DuckDB oracle at sf0.001 + sf0.01.
     */
   private[graft] def fanOut(df: DataFrame,
-      keys: org.apache.spark.sql.Column*): DataFrame =
-    fanOutAt(df, confFanBytes(df), keys: _*)
+      keys: org.apache.spark.sql.Column*): DataFrame = {
+    val w = fanWidth(df, FanOutPartitionBytes)
+    if (w <= 0) df
+    else if (keys.nonEmpty) df.repartition(w, keys: _*)
+    else df.repartition(w)
+  }
 
   /** [[fanOut]] with the full core-count width — for PROVEN
     * kernel-bound stages only (per-row cost ≫ per-byte cost: the
@@ -168,22 +170,12 @@ package object graft {
     * negligible against the kernel.
     */
   private[graft] def fanOutHeavy(df: DataFrame,
-      keys: org.apache.spark.sql.Column*): DataFrame =
-    fanOutAt(df, 0L, keys: _*)
-
-  /** [[fanOut]] with an explicit per-partition input-byte target
-    * (0 = kernel-bound = full core count). */
-  private[graft] def fanOutAt(df: DataFrame, perPartBytes: Long,
       keys: org.apache.spark.sql.Column*): DataFrame = {
-    val w = fanWidth(df, perPartBytes)
+    val w = fanWidth(df, 0L)
     if (w <= 0) df
     else if (keys.nonEmpty) df.repartition(w, keys: _*)
     else df.repartition(w)
   }
-
-  private def confFanBytes(df: DataFrame): Long =
-    df.sparkSession.conf.getOption(FanOutBytesConf)
-      .map(_.toLong).getOrElse(FanOutBytesDefault)
 
   /** Width to pin a DERIVED heavy stage to, probed from a RAW (scan-
     * stage, shuffle-free) input: 0 = leave the derived plan to AQE
@@ -195,8 +187,18 @@ package object graft {
     * its AQE stages).
     */
   private[graft] def spreadWidth(input: DataFrame): Int =
-    fanWidth(input, confFanBytes(input))
+    fanWidth(input, FanOutPartitionBytes)
 
+  /** Load one of the driver-generated parquet tables from an sf dir.
+    *
+    * Some generations of `events.parquet` carry TIMESTAMP(NANOS), which
+    * Spark's parquet reader only accepts as a long
+    * (spark.sql.legacy.parquet.nanosAsLong) — in that case we
+    * re-materialize `ts` as a proper microsecond timestamp with exact
+    * integer division (`div`), no double round-trip. Other generations
+    * use TIMESTAMP(MICROS), which Spark reads natively; detect which by
+    * the type `ts` actually arrives as rather than assuming either.
+    */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = spark.read.parquet(s"$dir/$name.parquet")

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   * Round 10: primitive parallel arrays instead of a PriorityQueue of
   * boxed tuples. This buffer's `add` runs once per CANDIDATE PAIR in
   * the ANN/k-NN family (q_knn_eval: 4M pairs through 2000 buffers) and
-  * the tuple-allocating heap dominated the profile (ProfKnn: ~3s of a
+  * the tuple-allocating heap dominated the stage profile (~3s of a
   * 3.6s query in the aggregate stage). The losing pair — the common
   * case — now costs one branch against a cached weakest slot, zero
   * allocation; a winning pair pays an O(k) rescan (k ≤ ~100).

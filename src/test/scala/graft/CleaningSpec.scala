@@ -15,6 +15,19 @@ object SparkTestSession {
       java.nio.file.Files.createTempDirectory("graft_wh").toString)
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Runs `body` with the driver-local size gate
+    * (`spark.graft.localSolveBytes`, see `graft.fitsDriver`) set to
+    * `bytes` on `session`, then unsets it. 0 forces every hybrid
+    * operator down its distributed path. The gate is read when the
+    * operator is called, so the call must sit inside `body`, on the
+    * session the operator's input belongs to.
+    */
+  def withLocalSolveBytes[T](session: SparkSession, bytes: Long)(
+      body: => T): T = {
+    session.conf.set("spark.graft.localSolveBytes", bytes)
+    try body finally session.conf.unset("spark.graft.localSolveBytes")
+  }
 }
 
 class CleaningSpec extends AnyFunSuite {

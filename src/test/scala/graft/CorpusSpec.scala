@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import SparkTestSession.withLocalSolveBytes
 
 import graft.functions.TextFunctions
 import graft.operators.Corpus
@@ -617,14 +618,15 @@ class CorpusSpec extends AnyFunSuite {
 
   test("perceptronTrain: local driver rung ≡ distributed rounds, bit-exact") {
     // non-separable mix so weights/bias/errs all exercise non-trivial
-    // values; localThreshold = 0 forces the distributed loop
+    // values; a size gate of 0 forces the distributed loop
     val docs = (1 to 30).map(i => (i.toLong, i % 3 != 0,
       s"w${i % 5} w${i % 7} w${i % 2} common token w${i % 11}"))
       .toDF("doc_id", "pos", "text")
-    def run(threshold: Long) =
+    def run(bound: Long) = withLocalSolveBytes(spark, bound) {
       Corpus.perceptronTrain(docs, "doc_id", "pos", "text",
-        TextFunctions.words, rounds = 3, localThreshold = threshold)
+        TextFunctions.words, rounds = 3)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
     assert(run(0L) == run(Long.MaxValue),
       "driver rung must be bit-equal to the distributed round loop")
   }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import SparkTestSession.withLocalSolveBytes
 
 import graft.operators.{Dedup, Graph, Sampling}
 
@@ -52,11 +53,12 @@ class GraphSamplingSpec extends AnyFunSuite {
         Seq((1L, 2L), (2L, 3L), (3L, 1L)), // one triangle, all ranks tied
         (0L until 12L).flatMap(i => ((i + 1) until 12L).map(j => (i, j))))) { // K12
       val df = edges.toDF("a", "b")
-      // localThreshold = 0 forces the DISTRIBUTED joins in both
+      // a size gate of 0 forces the DISTRIBUTED joins in both
       // orientations; the default run exercises the driver-local rung
-      val fwd = Graph.triangleStats(df, "a", "b", localThreshold = 0).head
-      val ids = Graph.triangleStats(df, "a", "b", degreeOrdered = false,
-        localThreshold = 0).head
+      val (fwd, ids) = withLocalSolveBytes(spark, 0L) {
+        (Graph.triangleStats(df, "a", "b").head,
+          Graph.triangleStats(df, "a", "b", degreeOrdered = false).head)
+      }
       val loc = Graph.triangleStats(df, "a", "b").head
       for (other <- Seq(ids, loc)) {
         assert(fwd.getAs[Long]("n_triangles") == other.getAs[Long]("n_triangles"))
@@ -80,16 +82,17 @@ class GraphSamplingSpec extends AnyFunSuite {
         Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)),
         (0L until 10L).flatMap(i => ((i + 1) until 10L).map(j => (i, j))))) {
       val df = edges.toDF("a", "b")
-      def rows(degOrdered: Boolean, threshold: Long) =
-        Graph.localClustering(df, "a", "b", degreeOrdered = degOrdered,
-            localThreshold = threshold)
-          .collect()
-          .map(r => r.getAs[Long]("id") ->
-            ((r.getAs[Long]("degree"), r.getAs[Long]("n_tri"),
-              r.getAs[Double]("lcc")))).toMap
+      def rows(degOrdered: Boolean, bound: Long) =
+        withLocalSolveBytes(spark, bound) {
+          Graph.localClustering(df, "a", "b", degreeOrdered = degOrdered)
+            .collect()
+            .map(r => r.getAs[Long]("id") ->
+              ((r.getAs[Long]("degree"), r.getAs[Long]("n_tri"),
+                r.getAs[Double]("lcc")))).toMap
+        }
       // both distributed orientations AND the driver-local rung agree
       assert(rows(true, 0L) == rows(false, 0L))
-      assert(rows(true, 0L) == rows(true, 500000L))
+      assert(rows(true, 0L) == rows(true, Long.MaxValue))
     }
     // spot-check exact values on K4 + pendant: node 4 sees 3 triangles
     // over deg 4 → lcc = 6/12; pendant 5 deg 2, 0 triangles → 0.0
@@ -106,17 +109,19 @@ class GraphSamplingSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(23)
     val edges = Seq.fill(120)((s"n${rnd.nextInt(25)}", s"n${rnd.nextInt(25)}"))
       .filter(e => e._1 != e._2).toDF("s", "t")
-    def run(threshold: Long) =
-      Graph.hitsFixedPoint(edges, "s", "t", rounds = 3,
-          localThreshold = threshold)
+    def run(bound: Long) = withLocalSolveBytes(spark, bound) {
+      Graph.hitsFixedPoint(edges, "s", "t", rounds = 3)
         .collect()
         .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(run(2000000L) == run(0L))
+    }
+    assert(run(Long.MaxValue) == run(0L))
     // distributed-path overflow guard fails loudly when scale² eats
     // the Long headroom (the wrap would otherwise be silent garbage)
-    intercept[IllegalArgumentException] {
-      Graph.hitsFixedPoint(edges, "s", "t", rounds = 1,
-        scale = 4000000000L, localThreshold = 0)
+    withLocalSolveBytes(spark, 0L) {
+      intercept[IllegalArgumentException] {
+        Graph.hitsFixedPoint(edges, "s", "t", rounds = 1,
+          scale = 4000000000L)
+      }
     }
   }
 
@@ -148,9 +153,10 @@ class GraphSamplingSpec extends AnyFunSuite {
       val a = rnd.nextInt(120).toLong; val b = rnd.nextInt(120).toLong
       (a, b)
     }.filter { case (a, b) => a != b }
-    def run(threshold: Long) = Graph.connectedComponents(
-        edges.toDF("a", "b"), "a", "b", localThreshold = threshold)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def run(bound: Long) = withLocalSolveBytes(spark, bound) {
+      Graph.connectedComponents(edges.toDF("a", "b"), "a", "b")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     val local = run(Long.MaxValue)
     val distributed = run(0L) // force the iterated path
     assert(local == distributed)
@@ -186,14 +192,16 @@ class GraphSamplingSpec extends AnyFunSuite {
   test("pagerank: star center outranks leaves; mass conserved sans dangling") {
     import spark.implicits._
     // 4-cycle plus chords into node 0: every node has out-edges, so
-    // total rank mass stays 1 (no dangling leak). localThreshold=0
+    // total rank mass stays 1 (no dangling leak). A size gate of 0
     // forces the DISTRIBUTED loop even on this tiny graph.
     val edges = Seq((1L, 0L), (2L, 0L), (3L, 0L), (0L, 1L),
       (1L, 2L), (2L, 3L), (3L, 1L)).toDF("s", "d")
-    for (thresh <- Seq(0L, 1000L)) { // distributed and local paths
-      val r = Graph.pageRank(edges, "s", "d", localThreshold = thresh)
-        .collect()
-        .map(x => x.getAs[Long]("id") -> x.getAs[Double]("rank")).toMap
+    for (bound <- Seq(0L, 16000L)) { // distributed and local paths
+      val r = withLocalSolveBytes(spark, bound) {
+        Graph.pageRank(edges, "s", "d")
+          .collect()
+          .map(x => x.getAs[Long]("id") -> x.getAs[Double]("rank")).toMap
+      }
       assert(math.abs(r.values.sum - 1.0) < 1e-9)
       assert(r(0L) > r(2L) && r(0L) > r(3L)) // three in-links vs one/two
       r.values.foreach(v => assert(v > 0))
@@ -206,9 +214,10 @@ class GraphSamplingSpec extends AnyFunSuite {
       .toDF("s", "d")
     val local = Graph.pageRank(edges, "s", "d").collect()
       .map(x => x.getAs[Long]("id") -> x.getAs[Double]("rank")).toMap
-    val dist = Graph.pageRank(edges.repartition(13), "s", "d",
-        localThreshold = 0L).collect()
-      .map(x => x.getAs[Long]("id") -> x.getAs[Double]("rank")).toMap
+    val dist = withLocalSolveBytes(spark, 0L) {
+      Graph.pageRank(edges.repartition(13), "s", "d").collect()
+        .map(x => x.getAs[Long]("id") -> x.getAs[Double]("rank")).toMap
+    }
     assert(local.keySet == dist.keySet)
     local.foreach { case (k, v) => assert(math.abs(v - dist(k)) < 1e-12) }
   }
@@ -219,9 +228,10 @@ class GraphSamplingSpec extends AnyFunSuite {
       .toDF("s", "d")
     val local = Graph.pageRankFixed(edges, "s", "d").collect()
       .map(x => x.getAs[Long]("id") -> x.getAs[Long]("rank_fp")).toMap
-    val dist = Graph.pageRankFixed(edges.repartition(13), "s", "d",
-        localThreshold = 0L).collect()
-      .map(x => x.getAs[Long]("id") -> x.getAs[Long]("rank_fp")).toMap
+    val dist = withLocalSolveBytes(spark, 0L) {
+      Graph.pageRankFixed(edges.repartition(13), "s", "d").collect()
+        .map(x => x.getAs[Long]("id") -> x.getAs[Long]("rank_fp")).toMap
+    }
     // integer arithmetic: the two execution paths are BIT-identical,
     // not merely close — this is the property the hash gate rides
     assert(local == dist)
@@ -257,10 +267,11 @@ class GraphSamplingSpec extends AnyFunSuite {
     // the distributed loop (forced) is bit-identical to the driver path
     // — LPA state is all-integer, so unlike PageRank there is no fp
     // caveat to the equivalence
-    val dist = Graph.labelPropagation(edges, "a", "b", rounds = 3,
-        localThreshold = 0L)
-      .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("community"))
-      .toMap
+    val dist = withLocalSolveBytes(spark, 0L) {
+      Graph.labelPropagation(edges, "a", "b", rounds = 3)
+        .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("community"))
+        .toMap
+    }
     assert(dist == got)
   }
 
@@ -429,22 +440,24 @@ class GraphSamplingSpec extends AnyFunSuite {
     // local peel ≡ distributed rounds, exactly, incl. on random graphs
     def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(asMap(Graph.kCore(edges, "s", "d", k = 2, localThreshold = 0)) ==
-      asMap(Graph.kCore(edges, "s", "d", k = 2)))
+    assert(withLocalSolveBytes(spark, 0L) {
+      asMap(Graph.kCore(edges, "s", "d", k = 2))
+    } == asMap(Graph.kCore(edges, "s", "d", k = 2)))
     val rnd = new scala.util.Random(21)
     val redges = (1 to 80).map(_ =>
       (rnd.nextInt(25).toLong, rnd.nextInt(25).toLong)).toDF("s", "d")
     for (kk <- Seq(2, 3)) {
-      assert(asMap(Graph.kCore(redges, "s", "d", kk, localThreshold = 0)) ==
-        asMap(Graph.kCore(redges, "s", "d", kk)), s"k=$kk")
+      assert(withLocalSolveBytes(spark, 0L) {
+        asMap(Graph.kCore(redges, "s", "d", kk))
+      } == asMap(Graph.kCore(redges, "s", "d", kk)), s"k=$kk")
     }
   }
 
   test("shortestHops: multi-source min distance, hop cap, isolated seeds") {
-    def hops(edges: Seq[(Long, Long)], seeds: Seq[Long], max: Int,
-             thresh: Long = 2000000L): Map[Long, Long] =
+    def hops(edges: Seq[(Long, Long)], seeds: Seq[Long],
+             max: Int): Map[Long, Long] =
       Graph.shortestHops(edges.toDF("s", "d"), "s", "d",
-          seeds.toDF("id"), "id", max, localThreshold = thresh)
+          seeds.toDF("id"), "id", max)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // path 1-2-3-4-5 seeded at both ends: distances meet in the middle
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
@@ -465,7 +478,8 @@ class GraphSamplingSpec extends AnyFunSuite {
       .map(_ => (rnd.nextInt(20).toLong, rnd.nextInt(20).toLong))
       .filter(e => e._1 != e._2)
     val seeds = Seq(0L, 3L, 17L)
-    assert(hops(redges, seeds, 3) == hops(redges, seeds, 3, thresh = 0L))
+    assert(hops(redges, seeds, 3) ==
+      withLocalSolveBytes(spark, 0L)(hops(redges, seeds, 3)))
     // maxHops=0 → the seed set itself (present seeds only at hop 0)
     assert(hops(path, Seq(2L), 0) == Map(2L -> 0L))
   }

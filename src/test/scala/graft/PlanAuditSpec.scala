@@ -626,8 +626,9 @@ class PlanAuditSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(l)
     val kt = try {
-      val df = graft.operators.Graph.kTruss(edges, "s", "d", k = 3,
-        localThreshold = 0L)
+      val df = SparkTestSession.withLocalSolveBytes(spark, 0L) {
+        graft.operators.Graph.kTruss(edges, "s", "d", k = 3)
+      }
       org.apache.spark.sql.GraftBridge.waitListenerBusEmpty(spark)
       df
     } finally spark.listenerManager.unregister(l)

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import SparkTestSession.withLocalSolveBytes
 
 import graft.plans.TopKBuffer
 
@@ -304,11 +305,12 @@ class PropertySpec extends AnyFunSuite {
       val edges = (for (i <- 0 until n; j <- (i + 1) until n
         if r.nextInt(100) < 35) yield (i.toLong, j.toLong)).toVector
       val k = 3 + r.nextInt(2)
-      def run(th: Long) = Graph.kTruss(edges.toDF("s", "d"), "s", "d", k,
-          localThreshold = th)
-        .collect().map(x => ((x.getLong(0), x.getLong(1)), x.getLong(2)))
-        .toMap
-      val local = run(1000000L)
+      def run(bound: Long) = withLocalSolveBytes(spark, bound) {
+        Graph.kTruss(edges.toDF("s", "d"), "s", "d", k)
+          .collect().map(x => ((x.getLong(0), x.getLong(1)), x.getLong(2)))
+          .toMap
+      }
+      val local = run(Long.MaxValue)
       val dist = run(0L)
       // brute: iterate support-recompute + filter until stable
       var es = edges.toSet

@@ -14,6 +14,8 @@ class QueriesSpec extends AnyFunSuite {
     val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(noOracle == SparkEntry.rowsOnly,
       s"undocumented queries without oracleSql: ${noOracle -- SparkEntry.rowsOnly}")
+    val noQuery = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
+    assert(noQuery.isEmpty, s"oracleSql entries without a query: $noQuery")
   }
 
   test("entry returns rows") {

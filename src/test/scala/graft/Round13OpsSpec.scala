@@ -56,7 +56,7 @@ class Round13OpsSpec extends AnyFunSuite {
 
   test("exact-integer trainers: the driver-local solve equals the " +
       "distributed iterate bit-for-bit (size gate forced off via " +
-      "spark.graft.trainer.localSolveBytes=0)") {
+      "spark.graft.localSolveBytes=0)") {
     val spark = SparkTestSession.spark
     val emb = table(spark, "/root/testdata/sf0.001", "embeddings")
     def runAll() = Seq(
@@ -67,10 +67,7 @@ class Round13OpsSpec extends AnyFunSuite {
         8, 16, 3)
     ).map(_.collect().map(_.toString).sorted.toSeq)
     val local = runAll() // default gate: tiny corpus takes the local path
-    spark.conf.set("spark.graft.trainer.localSolveBytes", "0")
-    try {
-      val dist = runAll()
-      assert(local == dist)
-    } finally spark.conf.unset("spark.graft.trainer.localSolveBytes")
+    val dist = SparkTestSession.withLocalSolveBytes(spark, 0L)(runAll())
+    assert(local == dist)
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import SparkTestSession.withLocalSolveBytes
 
 import graft.operators.{Graph, Linkage, Sampling, Sessions, Similarity,
   Stats, TimeSeries}
@@ -271,10 +272,12 @@ class Round4OpsSpec extends AnyFunSuite {
       val local = Graph.stronglyConnectedComponents(df, "s", "d")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(local == exp, s"trial $trial local != brute force")
-      // distributed path (threshold 0) must agree exactly
-      val dist = Graph.stronglyConnectedComponents(df.repartition(5),
-          "s", "d", maxIter = 40, localThreshold = 0L)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // distributed path (size gate 0) must agree exactly
+      val dist = withLocalSolveBytes(spark, 0L) {
+        Graph.stronglyConnectedComponents(df.repartition(5),
+            "s", "d", maxIter = 40)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
       assert(dist == exp, s"trial $trial distributed != brute force")
     }
   }
@@ -320,9 +323,11 @@ class Round4OpsSpec extends AnyFunSuite {
       val local = Graph.shortestPaths(df, "s", "d", "w", seeds, "id", h)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(local == dp, s"trial $trial local != DP")
-      val distd = Graph.shortestPaths(df.repartition(5), "s", "d", "w",
-          seeds, "id", h, localThreshold = 0L)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val distd = withLocalSolveBytes(spark, 0L) {
+        Graph.shortestPaths(df.repartition(5), "s", "d", "w",
+            seeds, "id", h)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
       assert(distd == dp, s"trial $trial distributed != DP")
     }
   }
@@ -388,15 +393,16 @@ class Round4OpsSpec extends AnyFunSuite {
       df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
     val tLocal = operators.Analytics
       .frequentTriples(baskets, "bk", "it", 600)
-    val tDist = operators.Analytics
-      .frequentTriples(baskets, "bk", "it", 600, localThreshold = 0L)
+    val tDist = withLocalSolveBytes(spark, 0L) {
+      operators.Analytics.frequentTriples(baskets, "bk", "it", 600)
+    }
     assert(tLocal.columns.sameElements(tDist.columns))
     assert(rows(tLocal) == rows(tDist) && rows(tLocal).nonEmpty)
     val bLocal = operators.Analytics
       .basketLift(baskets, "bk", "it", minSupport = 8L)
-    val bDist = operators.Analytics
-      .basketLift(baskets, "bk", "it", minSupport = 8L,
-        localThreshold = 0L)
+    val bDist = withLocalSolveBytes(spark, 0L) {
+      operators.Analytics.basketLift(baskets, "bk", "it", minSupport = 8L)
+    }
     assert(bLocal.columns.sameElements(bDist.columns))
     assert(rows(bLocal) == rows(bDist) && rows(bLocal).nonEmpty)
   }

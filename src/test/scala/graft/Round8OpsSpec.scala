@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import SparkTestSession.withLocalSolveBytes
 
 import org.apache.spark.sql.functions.col
 
@@ -77,8 +78,10 @@ class Round8OpsSpec extends AnyFunSuite {
     val seed = Seq(1L).toDF("id")
     val local = Graph.pprFixed(edges, "s", "d", seed)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dist = Graph.pprFixed(edges, "s", "d", seed, localThreshold = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val dist = withLocalSolveBytes(spark, 0L) {
+      Graph.pprFixed(edges, "s", "d", seed)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(local == dist)
     assert(local(1L) > local(2L) && local(2L) > local(3L) &&
       local(3L) > local(4L))
@@ -364,11 +367,12 @@ class Round8OpsSpec extends AnyFunSuite {
     // ranking respects the planted order
     assert(p("a") > p("b") && p("b") > p("c"))
     // the distributed rounds are bit-equal to the driver rung
-    val dist = Prefs.bradleyTerryFixed(df, "win", "lose",
-        localThreshold = 0L)
-      .collect()
-      .map(r => r.getString(0) ->
-        (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    val dist = withLocalSolveBytes(spark, 0L) {
+      Prefs.bradleyTerryFixed(df, "win", "lose")
+        .collect()
+        .map(r => r.getString(0) ->
+          (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    }
     assert(dist == got)
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import SparkTestSession.withLocalSolveBytes
 
 /** Round-9 additions: bench-harness floor gate, VERDICT/ADVICE fixes. */
 class Round9OpsSpec extends AnyFunSuite {
@@ -51,8 +52,10 @@ class Round9OpsSpec extends AnyFunSuite {
         r.getLong(3))).toSeq
     val local = rows(Graph.linkPrediction(edges, "src", "dst",
       maxDeg = 50L, topK = 40))
-    val dist = rows(Graph.linkPrediction(edges, "src", "dst",
-      maxDeg = 50L, topK = 40, localThreshold = 0L))
+    val dist = withLocalSolveBytes(spark, 0L) {
+      rows(Graph.linkPrediction(edges, "src", "dst", maxDeg = 50L,
+        topK = 40))
+    }
     assert(local == dist)
     assert(local.size == 40 && local.head._3 >= local.last._3)
     // predicted pairs are genuinely absent from the edge set
@@ -72,11 +75,12 @@ class Round9OpsSpec extends AnyFunSuite {
     val tri = Seq((10L, 11L), (11L, 12L), (10L, 12L))
     val path = Seq((20L, 21L), (21L, 22L))
     val edges = (k5 ++ star ++ tri ++ path).toDF("s", "d")
-    def run(th: Long) = Graph.kTruss(edges, "s", "d", k = 3,
-        localThreshold = th)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2)))
-      .sortBy(_._1)
-    val local = run(2000000L)
+    def run(bound: Long) = withLocalSolveBytes(spark, bound) {
+      Graph.kTruss(edges, "s", "d", k = 3)
+        .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2)))
+        .sortBy(_._1)
+    }
+    val local = run(Long.MaxValue)
     val dist = run(0L)
     assert(local.toSeq == dist.toSeq)
     val m = local.toMap
@@ -93,8 +97,9 @@ class Round9OpsSpec extends AnyFunSuite {
     // drops neighbors below threshold transitively)
     val chipped = k5.filterNot(_ == ((1L, 2L))).toDF("s", "d")
     assert(Graph.kTruss(chipped, "s", "d", k = 5).count() == 0)
-    assert(Graph.kTruss(chipped, "s", "d", k = 5,
-      localThreshold = 0L).count() == 0)
+    assert(withLocalSolveBytes(spark, 0L) {
+      Graph.kTruss(chipped, "s", "d", k = 5).count()
+    } == 0)
   }
 
   test("mergeInto: all four MERGE outcomes in one pass — matched-delete " +
