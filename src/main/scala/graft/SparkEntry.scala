@@ -490,8 +490,9 @@ object SparkEntry {
     d.unionByName(near).unionByName(exact)
   }
 
-  /** Profiling hook (tools.SetSimProbe, DedupSpec) — not part of the
-    * driver contract. */
+  /** The dup-seeded corpus the E1-E4/E42 gate queries read, for specs
+    * that test those operators on it — not part of the driver
+    * contract. */
   def dupCorpusForProfiling(s: SparkSession, dir: String): DataFrame =
     dupCorpus(s, dir)
 
@@ -3565,14 +3566,12 @@ object SparkEntry {
 
   /** E42: set-similarity self-join with prefix filtering
     * (AllPairs/PPJoin) over the dup-seeded corpus, on 5-gram shingle
-    * sets at τ = 3/5 — the SAME relation q_dedup_ngram computes via
-    * the full shingle join, but candidate generation is bounded to
-    * rarest-first prefix shingles, so hot shingles never enter the
-    * self-join. Every prune and acceptance test is exact integer
-    * arithmetic. The oracle is the brute-force shared-shingle pair
-    * set — equality IS the prefix-filter correctness theorem, checked
-    * end-to-end (and SetSimSpec asserts parity with Dedup
-    * .ngramJaccardPairs: two implementations, one relation).
+    * sets at τ = 3/5 — the pairs q_dedup_ngram finds at 0.6, through
+    * the same prefix-filtered kernel (`SetSim.prefixJoin`) with exact
+    * integer pruning and acceptance instead of Dedup's IEEE-double
+    * size test and 4-dp rounding. The oracle is the brute-force
+    * shared-shingle pair set — equality IS the prefix-filter
+    * correctness theorem, checked end-to-end.
     */
   private def qSetsimJoin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

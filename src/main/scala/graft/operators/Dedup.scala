@@ -60,90 +60,34 @@ object Dedup {
 
   /** E2: n-gram Jaccard near-dup pairs with similarity ≥ `threshold`.
     *
-    * Candidate generation is PREFIX-FILTERED (AllPairs/PPJoin —
-    * Bayardo et al. WWW'07, same bound as [[SetSim.jaccardSelfJoin]]):
-    * under a rarest-first global shingle order, two docs with
+    * Candidate generation is PREFIX-FILTERED through the shared
+    * `SetSim.prefixJoin` kernel (AllPairs/PPJoin — Bayardo et al.
+    * WWW'07): under a rarest-first global shingle order, two docs with
     * J ≥ τ must share a shingle among the first |x| − ⌈τ·|x|⌉ + 1 of
     * each, so the self-join runs only on those low-df prefix
     * shingles. A boilerplate shingle shared by d docs therefore never
     * creates d²/2 join rows — it sits at the high-df tail and is
-    * outside every doc's prefix. This is the lesson the repo learned
-    * twice (E55's df-cap after a 99s→1.9s incident, E42's prefix
-    * filter); unlike a df-cap it is LOSSLESS, so the oracle SQL and
-    * the result relation are unchanged.
+    * outside every doc's prefix. Unlike a df-cap the filter is
+    * LOSSLESS, so the result relation is the one the oracle SQL
+    * defines with a full shingle self-join.
     *
-    * The prefix/size candidate bounds use a slightly lowered rational
-    * τ′ = (⌊1000·τ⌋ − 1)/1000 in exact integer arithmetic; acceptance
-    * still applies the caller's τ through the identical rounded
-    * expression the old shingle self-join used, so the output is
-    * bit-identical — τ′ only widens the candidate superset enough to
-    * cover the 4-dp rounding of the acceptance test.
+    * The kernel's bound is a slightly lowered rational
+    * τ′ = (⌊1000·τ⌋ − 1)/1000 in exact integer arithmetic, which
+    * makes its pairs a superset of every pair the tests below can
+    * accept. Acceptance then applies the caller's τ exactly as the
+    * oracle does: the IEEE-double size-ratio test
+    * `max ≤ min / τ` and the 4-dp rounded Jaccard ≥ τ.
     */
   def ngramJaccardPairs(df: DataFrame, textCol: String, idCol: String,
                         n: Int, threshold: Double): DataFrame = {
     val tauN = math.max(1L, math.floor(threshold * 1000).toLong - 1)
-    // RAW exploded shingles — no distinct: per-doc dedup happens for
-    // free inside collect_set below, saving a full shuffle of the
-    // shingle table. `dfreq` therefore counts occurrences rather than
-    // documents; prefix filtering is correct under ANY fixed global
-    // order, and occurrence counts are just as rarest-first-
-    // correlated as document counts, so the pruning power is the same.
-    // deliberately NOT persisted although two branches (dfreq, ord)
-    // each re-run the scan+shingle pass: the native codegen'd shingle
-    // expression over a columnar scan is CHEAPER than materializing
-    // the exploded string stream through the block manager (measured
-    // round 6: persisting raw made the four ngram-pair gate queries
-    // 1.5× slower)
-    // round-13 (VERDICT r12 item 1): NO fanOut here. The round-12
-    // spread assumed the exchange would be shared by the dfreq and
-    // ord branches via ReusedExchange; under AQE the two stage trees
-    // materialize concurrently and the reuse never registered, so the
-    // repartition (and the scan+shingle pass under it) ran once PER
-    // BRANCH — the driver measured q_dedup_ngram and its 10+ consumer
-    // queries slower at BOTH core counts. The un-fanned scan keeps
-    // the two-branch re-scan cheap (the round-6 measurement above).
-    val raw = df.select(col(idCol).as("id"),
-      explode(TextFunctions.shingles(col(textCol), n)).as("sh"))
-    val dfreq = raw.groupBy(col("sh")).agg(count(lit(1)).as("dfreq"))
-    // ONE per-doc aggregation builds the rarest-first sorted shingle
-    // array; size, prefix, and the verify arrays are all derived from
-    // it in-row (no window, no second per-doc shuffle). Persisted —
-    // it feeds both sides of the candidate join and both verify
-    // joins; at cluster scale this is the "persist the shingle table"
-    // step of any similarity pipeline, spilling when RAM-tight.
-    val ord = raw
-      .join(dfreq, "sh")
-      .groupBy(col("id"))
-      .agg(transform(
-        sort_array(collect_set(struct(col("dfreq"), col("sh")))),
-        x => x.getField("sh")).as("toks"))
-      .withColumn("sz", size(col("toks")).cast("long"))
-      // prefix length |x| − ⌈τ′·|x|⌉ + 1, exact integer arithmetic
-      .withColumn("pref", slice(col("toks"), lit(1),
-        (col("sz") - expr(s"($tauN * sz + 999) div 1000") + 1)
-          .cast("int")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pc = ord.select(col("id"), col("sz"), explode(col("pref")).as("sh"))
-    // the size-ratio condition is the OLD join's exact test (J ≤
-    // min/max ⇒ max ≤ min/τ), so any pair the legacy plan pruned on
-    // size is pruned here too
-    val cand = pc.as("a").join(pc.as("b"),
-        col("a.sh") === col("b.sh") && col("a.id") < col("b.id") &&
-          col("a.sz") <= col("b.sz") / threshold &&
-          col("b.sz") <= col("a.sz") / threshold)
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        col("a.sz").as("sz_a"), col("b.sz").as("sz_b"))
-      .distinct()
-    // exact verify: |∩| via array_intersect (codegen'd) over the
-    // persisted per-doc arrays; the jaccard expression and filter are
-    // byte-identical to the legacy self-join-count form
+    val (pairs, ord) = SetSim.prefixJoin(df,
+      TextFunctions.shingles(col(textCol), n), col(idCol), tauN, 1000L)
     // near-dup-pair output (corpus-small): seal — materialize, release
     // the persisted per-doc shingle arrays
-    graft.sealResult(cand
-      .join(ord.select(col("id").as("id_a"), col("toks").as("ta")), "id_a")
-      .join(ord.select(col("id").as("id_b"), col("toks").as("tb")), "id_b")
-      .withColumn("inter",
-        size(array_intersect(col("ta"), col("tb"))).cast("long"))
+    graft.sealResult(pairs
+      .filter(col("sz_a") <= col("sz_b") / threshold &&
+        col("sz_b") <= col("sz_a") / threshold)
       .withColumn("jaccard",
         round(col("inter").cast("double") /
           (col("sz_a") + col("sz_b") - col("inter")), 4))

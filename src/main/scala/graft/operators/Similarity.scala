@@ -417,9 +417,8 @@ object Similarity {
   /** k lowest-(md5(id), id) points, returned in ID order — the
     * md5-portable seed rule shared by the fixed trainers. The hash
     * key is PRECOMPUTED once per point: Scala's sortBy evaluates its
-    * key function per COMPARISON, and n·log n md5 digests took ~4 s
-    * at n=20k (measured, tools.LloydProbe) against ~30 ms hashed
-    * once.
+    * key function per COMPARISON, so hashing inside the key would
+    * cost n·log n md5 digests instead of n.
     */
   private def seedsByMd5(pts: Array[(Long, Array[Long])],
                          k: Int): Array[(Long, Array[Long])] =
@@ -1635,9 +1634,14 @@ object Similarity {
     * generation (broadcast queries, MAP-SIDE partial top-k heaps via
     * the topk_by aggregate — each map task ships ≤ poolSize rows per
     * query, the corpus is never window-sorted or shuffled) and one
-    * broadcast-pruned re-scan to re-attach pool vectors; the k greedy
-    * rounds run on |queries|·pool rows with broadcast-sized joins.
-    * poolSize and k are small constants, so lineage depth is bounded.
+    * broadcast-pruned re-scan to re-attach pool vectors. The pool is
+    * ≤ poolSize rows per query by construction, so it collapses to ONE
+    * array per query and the whole greedy selection runs in-row as one
+    * native call ([[graft.plans.NativeMmr.select]]): one plan for any
+    * k, no build-time jobs, O(k·poolSize·D) work per query. The native
+    * loop keeps the Spark expressions' IEEE op order (sim via the same
+    * dot/norm division, 0.0 max-sim for the first pick) and the
+    * (score desc, cid asc) tie-break.
     *
     * @return (q_id, pick, sel_id, score) — pick = 1..k selection order,
     *         score = the winning MMR objective at 6dp.
@@ -1646,20 +1650,8 @@ object Similarity {
                 vecCol: String, k: Int = 3, poolSize: Int = 20,
                 lambdaBp: Int = 5500): DataFrame = {
     require(k >= 1 && poolSize >= k && lambdaBp >= 0 && lambdaBp <= 10000)
-    // k ≤ 4 runs the unrolled in-row selection below (it re-embeds
-    // earlier picks' expressions, ~3^k growth after projection
-    // collapse — fast for the small-constant k MMR is for); larger k
-    // dispatches to the iterative per-pick form (round-11 shape, kept
-    // as [[mmrRerankIterative]]) so the operator's domain is
-    // unchanged (VERDICT r12 item 7). The crossover is MEASURED, not
-    // guessed: at k=5 the unrolled form's analysis alone takes ~69 s
-    // and at k=6 the analyzer's Resolution batch hits max iterations —
-    // the round-12 "k ≤ 8" fence was never viable above 4; the
-    // iterative form with per-round lineage truncation runs k=10 in
-    // ~8 s. Round13OpsSpec pins prefix-consistency between the forms.
-    // round-12 measured: fanOut here REGRESSED (+0.3s) — the relevance
-    // kernel is |queries|·n dots (tiny), while the greedy loop below is
-    // job-count-bound; an extra exchange only deepens it. Left alone.
+    // no fanOut: the relevance kernel is |queries|·n dots (tiny), and
+    // an extra exchange only deepens the plan
     val c = corpus.select(col(idCol).cast("long").as("cid"),
         toDouble(col(vecCol)).as("cv"))
       .withColumn("cn", l2Norm(col("cv")))
@@ -1676,120 +1668,18 @@ object Similarity {
         .as("top"))
       .select(col("q_id"), explode(col("top")).as("t"))
       .select(col("q_id"), col("t.id").as("cid"), col("t.score").as("rel"))
-    if (k > 4) return mmrRerankIterative(c, top, k, lambdaBp)
-    // round-12 rewrite: the k greedy rounds used to run as per-pick
-    // anti-join + sim join + aggregate + window over the persisted
-    // pool — ~25 AQE stage jobs of broadcast-sized work whose
-    // scheduling dominated the query (measured 2.3s at sf0.1 with the
-    // kernel itself trivial). The pool is ≤ poolSize rows per query BY
-    // CONSTRUCTION, so collapse it to ONE row per query (array sorted
-    // by cid — deterministic collect) and unroll the k argmax steps
-    // IN-ROW: each step filters out picked cids, scores the rest with
-    // the IDENTICAL fp expression order (λ·rel − (1−λ)·maxsim, maxsim
-    // via the same dot/norm division, 0.0 literal for step 1), and
-    // takes array_max of struct(score, −cid, el) ≡ the old window's
-    // (score DESC, cid ASC) tie-break. Per-query work is
-    // O(k·poolSize²·D) — bounded constants on the broadcast-sized
-    // side; the corpus-sized stages are unchanged. Same oracle hash
-    // (sf0.001 + sf0.01) and the Round4OpsSpec selection semantics.
+    // sorted by cid: a deterministic collect, and the element order the
+    // native selection's tie rules are stated against
     val pool = c.join(broadcast(top), Seq("cid"))
       .groupBy(col("q_id"))
       .agg(sort_array(collect_list(
         struct(col("cid"), col("rel"), col("cn"), col("cv")))).as("pool"))
-    val lam = lit(lambdaBp.toDouble)
-    val oneMinus = lit((10000 - lambdaBp).toDouble)
-    def simTo(cEl: Column, sel: Column): Column =
-      dot(cEl.getField("cv"), sel.getField("el").getField("cv")) /
-        (cEl.getField("cn") * sel.getField("el").getField("cn"))
-    // one pick: max by (score desc, cid asc) over unpicked elements;
-    // null when the pool is exhausted (mirrors the loop form, where a
-    // drained candidate set simply produced no row for that pick)
-    def pick(poolC: Column, selected: Seq[Column]): Column = {
-      val cand =
-        if (selected.isEmpty) poolC
-        else filter(poolC, c => selected
-          .map(s => c.getField("cid") =!= s.getField("el").getField("cid"))
-          .reduce(_ && _))
-      val scored = transform(cand, c => {
-        val ms =
-          if (selected.isEmpty) lit(0.0)
-          else selected.map(s => simTo(c, s)).reduce(greatest(_, _))
-        struct((lam * c.getField("rel") - oneMinus * ms).as("score"),
-          (-c.getField("cid")).as("negid"), c.as("el"))
-      })
-      array_max(scored)
-    }
-    var picks = Vector.empty[Column]
-    for (_ <- 1 to k) picks :+= pick(col("pool"), picks)
-    val out = pool
-      .select(col("q_id"), posexplode(array(picks: _*)).as(Seq("i", "p")))
-      .filter(col("p").isNotNull)
+    pool
+      .select(col("q_id"), posexplode(graft.plans.VectorFunctions
+        .mmrSelect(col("pool"), k, lambdaBp)).as(Seq("i", "p")))
       .select(col("q_id"), (col("i") + 1).cast("long").as("pick"),
-        col("p").getField("el").getField("cid").as("sel_id"),
-        round(col("p").getField("score") / 10000d, 6).as("score"))
-    out
-  }
-
-  /** The k > 4 branch of [[mmrRerank]]: the round-11 per-pick
-    * iterative form (anti-join + sim join + aggregate + window per
-    * greedy round). Job-scheduling-bound for small k — which is why
-    * the unrolled in-row form exists — but expression-tree-bounded
-    * for ANY k, so it serves as the large-k path. Identical fp
-    * expression order and the same (score desc, cid asc) tie-break
-    * as the unrolled form.
-    */
-  private def mmrRerankIterative(c: DataFrame, top: DataFrame, k: Int,
-                                 lambdaBp: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-    val pool = c.join(broadcast(top), Seq("cid"))
-      .select(col("q_id"), col("cid"), col("cv"), col("cn"), col("rel"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val lam = lit(lambdaBp.toDouble)
-    val oneMinus = lit((10000 - lambdaBp).toDouble)
-    var selected: DataFrame = null // (q_id, pick, sel_id, sel_vec, sel_n, score)
-    for (t <- 1 to k) {
-      val cand =
-        if (selected == null) pool
-        else pool.join(
-          selected.select(col("q_id"), col("sel_id").as("cid")),
-          Seq("q_id", "cid"), "left_anti")
-      val simMax =
-        if (selected == null) cand.withColumn("maxsim", lit(0.0))
-        else {
-          // max-sim computed on (q_id, cid) keys then joined back —
-          // never grouping by the vector column itself
-          val ms = cand
-            .join(selected.select(col("q_id"), col("sel_vec"),
-              col("sel_n")), Seq("q_id"))
-            .withColumn("sim",
-              dot(col("cv"), col("sel_vec")) / (col("cn") * col("sel_n")))
-            .groupBy(col("q_id"), col("cid"))
-            .agg(max(col("sim")).as("maxsim"))
-          cand.join(ms, Seq("q_id", "cid"))
-        }
-      val next = simMax
-        .withColumn("score", lam * col("rel") - oneMinus * col("maxsim"))
-        .withColumn("__rn", row_number().over(
-          w.partitionBy(col("q_id")).orderBy(col("score").desc, col("cid"))))
-        .filter(col("__rn") === 1)
-        .select(col("q_id"), lit(t.toLong).as("pick"),
-          col("cid").as("sel_id"), col("cv").as("sel_vec"),
-          col("cn").as("sel_n"), col("score"))
-        // truncate lineage EVERY round: selected references pool and
-        // the previous round ~3× per step, so the un-truncated plan
-        // grows ~3^k and k > 8 exhausts the analyzer (heap) before a
-        // single task runs. One eager checkpoint per round keeps the
-        // plan linear in k; the checkpointed frame is one row per
-        // query. Round blocks are freed by the ContextCleaner once
-        // the sealed result drops them.
-        .localCheckpoint(eager = true)
-      selected = if (selected == null) next else selected.unionByName(next)
-    }
-    // k rows per query: seal — materialize, release the persisted pool
-    graft.sealResult(
-      selected.select(col("q_id"), col("pick"), col("sel_id"),
-        round(col("score") / 10000d, 6).as("score")),
-      pool)
+        col("p.cid").as("sel_id"),
+        round(col("p.score") / 10000d, 6).as("score"))
   }
 
   /** Pairwise cosine similarity between LABEL CENTROIDS of an

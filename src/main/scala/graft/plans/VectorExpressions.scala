@@ -5,8 +5,9 @@ import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** Native vector arithmetic (SURVEY.md §2.E5-E7 hot path).
   *
@@ -244,6 +245,119 @@ case class PqLut(child: Expression, books: Array[Array[Array[Double]]])
     copy(child = newChild)
 }
 
+object NativeMmr {
+
+  /** Greedy Maximal-Marginal-Relevance selection over ONE query's
+    * candidate pool — `pool` is array<struct<cid: long, rel: double,
+    * cn: double, cv: array<double>>> sorted ascending (the
+    * `sort_array(collect_list(struct(...)))` order). Returns up to `k`
+    * picks as array<struct<cid: long, score: double>> in pick order;
+    * fewer when the pool runs out.
+    *
+    * Each pick scores every unpicked element as
+    * `lam·rel − oneMinus·ms`, where ms is 0.0 for the first pick and
+    * otherwise the `greatest` of sim(el, s) over the picks s so far,
+    * in pick order; sim = [[NativeVec.dot]](el.cv, s.cv) /
+    * (el.cn · s.cn). Nulls and comparisons follow the Spark
+    * expressions this replaces: a null dot or a zero divisor gives a
+    * null sim (a zero norm already fails the relevance division under
+    * ANSI), `greatest` skips nulls and keeps the earlier value on a
+    * tie, and the winner is the `array_max` of struct(score, −cid,
+    * el) — doubles compared by `SQLOrderingUtil.compareDoubles` (NaN
+    * largest, −0.0 = 0.0), a null score below any value, ties to the
+    * smaller cid, and the earlier element kept unless a later one is
+    * strictly greater. A picked cid leaves the pool with every
+    * element carrying it.
+    */
+  def select(pool: ArrayData, k: Int, lam: Double,
+             oneMinus: Double): ArrayData = {
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    val n = pool.numElements()
+    val els = Array.tabulate(n)(i => pool.getStruct(i, 4))
+    val cid = els.map(_.getLong(0))
+    def dbl(i: Int, f: Int): java.lang.Double =
+      if (els(i).isNullAt(f)) null else els(i).getDouble(f)
+    val rel = Array.tabulate(n)(dbl(_, 1))
+    val cn = Array.tabulate(n)(dbl(_, 2))
+    val cv = els.map(e => if (e.isNullAt(3)) null else e.getArray(3))
+    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+    val picked = new Array[Boolean](n)
+    // running `greatest` of sim(el, pick) over the picks so far
+    val ms = new Array[java.lang.Double](n)
+    def cmpScore(a: java.lang.Double, b: java.lang.Double): Int =
+      if (a == null) { if (b == null) 0 else -1 }
+      else if (b == null) 1
+      else compareDoubles(a, b)
+    def sim(i: Int, j: Int): java.lang.Double = {
+      val d = if (cv(i) == null || cv(j) == null) null
+        else NativeVec.dot(cv(i), cv(j))
+      if (d == null || cn(i) == null || cn(j) == null) null
+      else {
+        val den = cn(i) * cn(j)
+        if (den == 0.0) null else d / den
+      }
+    }
+    var t = 0
+    var best = 0
+    while (t < k && best >= 0) {
+      best = -1
+      var bestScore: java.lang.Double = null
+      for (i <- 0 until n if !picked(i)) {
+        val m: java.lang.Double = if (t == 0) 0.0 else ms(i)
+        val score: java.lang.Double =
+          if (rel(i) == null || m == null) null
+          else lam * rel(i) - oneMinus * m
+        val c = if (best < 0) 1 else cmpScore(score, bestScore)
+        if (c > 0 || (c == 0 && cid(i) <= cid(best))) {
+          best = i; bestScore = score
+        }
+      }
+      if (best >= 0) {
+        out += new GenericInternalRow(Array[Any](cid(best), bestScore))
+        for (i <- 0 until n if cid(i) == cid(best)) picked(i) = true
+        for (i <- 0 until n if !picked(i)) {
+          val s = sim(i, best)
+          if (s != null && (ms(i) == null || compareDoubles(s, ms(i)) > 0))
+            ms(i) = s
+        }
+      }
+      t += 1
+    }
+    new GenericArrayData(out.toArray)
+  }
+}
+
+/** mmr_select(pool, k, lambdaBp) → array<struct<cid, score>>: the
+  * whole greedy MMR selection for one query in one native call (see
+  * [[NativeMmr.select]]); scores are in basis points, λ = lambdaBp.
+  */
+case class MmrSelect(child: Expression, k: Int, lambdaBp: Int)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+  private def lam: Double = lambdaBp.toDouble
+  private def oneMinus: Double = (10000 - lambdaBp).toDouble
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("cid", LongType, nullable = false),
+    StructField("score", DoubleType, nullable = true))), containsNull = false)
+  override def prettyName: String = "mmr_select"
+  override def checkInputDataTypes(): TypeCheckResult =
+    child.dataType match {
+      case ArrayType(StructType(Array(StructField(_, LongType, _, _),
+          StructField(_, DoubleType, _, _), StructField(_, DoubleType, _, _),
+          StructField(_, ArrayType(DoubleType, _), _, _))), _) =>
+        TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(s"$prettyName needs " +
+        "array<struct<cid:long, rel:double, cn:double, cv:array<double>>>, " +
+        s"got ${other.catalogString}")
+    }
+  override protected def nullSafeEval(input: Any): Any =
+    NativeMmr.select(input.asInstanceOf[ArrayData], k, lam, oneMinus)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.plans.NativeMmr.select($c, $k, ${lam}D, ${oneMinus}D);")
+  override protected def withNewChildInternal(newChild: Expression): MmrSelect =
+    copy(child = newChild)
+}
+
 object VectorFunctions {
   def dotProduct(a: Column, b: Column): Column =
     GraftBridge.column(DotProduct(GraftBridge.expression(a),
@@ -258,4 +372,7 @@ object VectorFunctions {
 
   def pqLut(v: Column, books: Array[Array[Array[Double]]]): Column =
     GraftBridge.column(PqLut(GraftBridge.expression(v), books))
+
+  def mmrSelect(pool: Column, k: Int, lambdaBp: Int): Column =
+    GraftBridge.column(MmrSelect(GraftBridge.expression(pool), k, lambdaBp))
 }

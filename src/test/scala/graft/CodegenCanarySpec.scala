@@ -21,7 +21,6 @@ import graft.pipeline.BankEtl
   */
 class CodegenCanarySpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
-  private val dataDir = "/root/reference/data"
 
   private def strict[T](body: => T): T = {
     spark.conf.set("spark.sql.codegen.fallback", "false")
@@ -31,39 +30,42 @@ class CodegenCanarySpec extends AnyFunSuite {
 
   test("EtlMain full run compiles every stage (no interpreted fallback), " +
     "rows unchanged") {
-    val out = java.nio.file.Files.createTempDirectory("graft_canary").toString
-    strict {
-      EtlMain.runFull(spark, dataDir, out, "2026-08-14")
+    for (src <- EtlTestData.sources) withClue(s"${src.name}: ") {
+      val out = java.nio.file.Files.createTempDirectory("graft_canary").toString
+      strict {
+        EtlMain.runFull(spark, src.dir, out, "2026-08-14")
+      }
+      // the fixture's by-construction counts; the reference's own
+      // logged run: 25 branches / 5022 customers / 2006 loans
+      for (e <- Seq("branches", "customers", "loans"))
+        assert(spark.read.parquet(s"$out/$e").count() == src.staged(e), e)
     }
-    // the reference's own logged run: 25 branches / 5022 customers /
-    // 2006 loans (+ transactions when the fixture is present)
-    assert(spark.read.parquet(s"$out/branches").count() == 25L)
-    assert(spark.read.parquet(s"$out/customers").count() == 5022L)
-    assert(spark.read.parquet(s"$out/loans").count() == 2006L)
   }
 
   test("derived-column filter + no-key aggregate compiles for every " +
     "entity transform (the exact round-8 failing shape)") {
-    strict {
-      val cust = BankEtl.schemas.find(_.name == "customers").get
-      val t = BankEtl.transform("customers",
-        BankEtl.extract(spark, s"$dataDir/customers.csv", cust).data)
-      // the shape that tripped janino: prune-to-derived-column → filter
-      // → count fuses the parse ladder under doAggregateWithoutKey
-      assert(t.filter(col("age") < 0).count() == 0L)
-      assert(t.filter(col("customer_segment") === "VIP").count() >= 0L)
-      assert(t.filter(col("customer_tenure_days") < 0).count() == 0L)
+    for (src <- EtlTestData.sources) withClue(s"${src.name}: ") {
+      strict {
+        val cust = BankEtl.schemas.find(_.name == "customers").get
+        val t = BankEtl.transform("customers",
+          BankEtl.extract(spark, src.csv("customers"), cust).data)
+        // the shape that tripped janino: prune-to-derived-column → filter
+        // → count fuses the parse ladder under doAggregateWithoutKey
+        assert(t.filter(col("age") < 0).count() == 0L)
+        assert(t.filter(col("customer_segment") === "VIP").count() >= 0L)
+        assert(t.filter(col("customer_tenure_days") < 0).count() == 0L)
 
-      val loan = BankEtl.schemas.find(_.name == "loans").get
-      val l = BankEtl.transform("loans",
-        BankEtl.extract(spark, s"$dataDir/loans.csv", loan).data)
-      assert(l.filter(col("loan_duration_months") < 0).count() == 0L)
-      assert(l.filter(col("risk_category") === "High").count() > 0L)
+        val loan = BankEtl.schemas.find(_.name == "loans").get
+        val l = BankEtl.transform("loans",
+          BankEtl.extract(spark, src.csv("loans"), loan).data)
+        assert(l.filter(col("loan_duration_months") < 0).count() == 0L)
+        assert(l.filter(col("risk_category") === "High").count() > 0L)
 
-      val br = BankEtl.schemas.find(_.name == "branches").get
-      val b = BankEtl.transform("branches",
-        BankEtl.extract(spark, s"$dataDir/branches.csv", br).data)
-      assert(b.filter(col("region") =!= "NA").count() > 0L)
+        val br = BankEtl.schemas.find(_.name == "branches").get
+        val b = BankEtl.transform("branches",
+          BankEtl.extract(spark, src.csv("branches"), br).data)
+        assert(b.filter(col("region") =!= "NA").count() > 0L)
+      }
     }
   }
 

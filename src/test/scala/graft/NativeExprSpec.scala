@@ -38,10 +38,12 @@ class NativeExprSpec extends AnyFunSuite {
       " 13-03-2011 ", "\t13-03-2011", "13 -03-2011", "", "9999-99-99",
       "0013-03-11", "4-5-26", "4-5-27", "31-13-11", "13-13-11", null)
       .zipWithIndex.map { case (s, i) => (i.toLong, s) }
-    val refDates = spark.read.option("header", "true")
-      .csv("/root/reference/data/customers.csv")
-      .select(monotonically_increasing_id().as("id"),
-        $"dob".as("s")).limit(2000)
+    // the first 2000 dob strings of every customers.csv present
+    val refDates = EtlTestData.sources.map(src =>
+        spark.read.option("header", "true").csv(src.csv("customers"))
+          .select($"dob".as("s")).limit(2000))
+      .reduce(_ unionByName _)
+      .select((monotonically_increasing_id() + 1000L).as("id"), $"s")
     val corpus = adversarial.toDF("id", "s").unionByName(refDates)
     def check(): Unit = {
       val bad = corpus.select($"id", $"s",

@@ -5,85 +5,101 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.BankEtl
 
-/** End-to-end bank ETL over the reference repo's own CSV data
-  * (read-only): extract → transform → incremental load, checking the
-  * reference's derivation semantics hold on its real inputs.
+/** End-to-end bank ETL over the four-entity CSV inputs
+  * ([[EtlTestData]]: the in-repo fixture, plus the reference repo's own
+  * data when present; read-only): extract → transform → incremental
+  * load, checking the reference's derivation semantics hold on them.
+  * Each test runs once per source.
   */
 class PipelineSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
-  private val dataDir = "/root/reference/data"
 
-  private lazy val loans = {
+  private def loansOf(src: EtlSource) = {
     val e = BankEtl.schemas.find(_.name == "loans").get
     BankEtl.transform("loans",
-      BankEtl.extract(spark, s"$dataDir/loans.csv", e).data)
+      BankEtl.extract(spark, src.csv("loans"), e).data)
   }
 
   test("loans: extract+transform derives duration and risk like the reference") {
-    val byId = loans.collect().map(r => r.getAs[String]("loan_id") -> r).toMap
-    // loans.csv:2 → loan 1: Home 545642.51, 13-03-11 → 13-03-19
-    val l1 = byId("1")
-    assert(l1.getAs[Double]("loan_amount") == 545642.51)
-    assert(l1.getAs[String]("risk_category") == "High")
-    assert(l1.getAs[Int]("loan_duration_months") == 96)
-    assert(l1.getAs[java.sql.Date]("start_date").toString == "2011-03-13")
-    assert(loans.filter(col("risk_category").isin("High", "Medium", "Low"))
-      .count() == loans.count())
+    for (src <- EtlTestData.sources) withClue(s"${src.name}: ") {
+      val loans = loansOf(src)
+      val byId = loans.collect().map(r => r.getAs[String]("loan_id") -> r).toMap
+      // loans.csv:2 → loan 1: Home 545642.51, 13-03-11 → 13-03-19
+      val l1 = byId("1")
+      assert(l1.getAs[Double]("loan_amount") == 545642.51)
+      assert(l1.getAs[String]("risk_category") == "High")
+      assert(l1.getAs[Int]("loan_duration_months") == 96)
+      assert(l1.getAs[java.sql.Date]("start_date").toString == "2011-03-13")
+      assert(loans.filter(col("risk_category").isin("High", "Medium", "Low"))
+        .count() == loans.count())
+    }
   }
 
   test("customers: segment/age/gender derivations populated") {
-    val e = BankEtl.schemas.find(_.name == "customers").get
-    val staged = BankEtl.extract(spark, s"$dataDir/customers.csv", e)
-    val t = BankEtl.transform("customers", staged.data)
-    assert(t.count() == staged.data.count())
-    val seg = t.groupBy("customer_segment").count().collect()
-      .map(r => r.getAs[String]("customer_segment")).toSet
-    assert(seg.subsetOf(Set("VIP", "Regular", "New", "NA")))
-    assert(t.filter(col("gender").isin("M", "F", "N")).count() == t.count())
-    assert(t.filter(col("age") < 0).count() == 0)
-    // emails lower-cased, except the 'NA' missing sentinel
-    assert(t.filter(col("email") =!= "NA" &&
-      col("email") =!= lower(col("email"))).count() == 0)
+    for (src <- EtlTestData.sources) withClue(s"${src.name}: ") {
+      val e = BankEtl.schemas.find(_.name == "customers").get
+      val staged = BankEtl.extract(spark, src.csv("customers"), e)
+      val t = BankEtl.transform("customers", staged.data)
+      assert(t.count() == staged.data.count())
+      val seg = t.groupBy("customer_segment").count().collect()
+        .map(r => r.getAs[String]("customer_segment")).toSet
+      assert(seg.subsetOf(Set("VIP", "Regular", "New", "NA")))
+      assert(t.filter(col("gender").isin("M", "F", "N")).count() == t.count())
+      assert(t.filter(col("age") < 0).count() == 0)
+      // emails lower-cased, except the 'NA' missing sentinel
+      assert(t.filter(col("email") =!= "NA" &&
+        col("email") =!= lower(col("email"))).count() == 0)
+    }
   }
 
   test("branches: region mapping over real states") {
-    val e = BankEtl.schemas.find(_.name == "branches").get
-    val t = BankEtl.transform("branches",
-      BankEtl.extract(spark, s"$dataDir/branches.csv", e).data)
-    val regions = t.select("region").distinct().collect()
-      .map(_.getString(0)).toSet
-    assert(regions.subsetOf(Set("North", "South", "East", "West", "NA")))
-    assert(t.filter(upper(col("state")).contains("PUNJAB") &&
-      col("region") =!= "North").count() == 0)
+    for (src <- EtlTestData.sources) withClue(s"${src.name}: ") {
+      val e = BankEtl.schemas.find(_.name == "branches").get
+      val t = BankEtl.transform("branches",
+        BankEtl.extract(spark, src.csv("branches"), e).data)
+      val regions = t.select("region").distinct().collect()
+        .map(_.getString(0)).toSet
+      assert(regions.subsetOf(Set("North", "South", "East", "West", "NA")))
+      assert(t.filter(upper(col("state")).contains("PUNJAB") &&
+        col("region") =!= "North").count() == 0)
+    }
   }
 
   test("extract counts match the reference's own logged runs") {
     // the reference's historical logs record its extraction counts
     // (logs/etl_pipeline_20250916.log:load_csv_to_staging — branches
     // 26 rows, loans 2007 rows); our staging read reproduces them on
-    // the same CSVs. (customers.csv grew 5014→5024 after that run, so
-    // only the unchanged files are comparable.)
-    val branches = BankEtl.extract(spark, s"$dataDir/branches.csv",
-      BankEtl.schemas.find(_.name == "branches").get)
-    assert(branches.totalRows == 26)
-    val loansStaged = BankEtl.extract(spark, s"$dataDir/loans.csv",
-      BankEtl.schemas.find(_.name == "loans").get)
-    assert(loansStaged.totalRows == 2007)
+    // the same CSVs, and the fixture's by-construction row counts on
+    // its own. (customers.csv grew 5014→5024 after that run, so only
+    // the unchanged files are comparable.)
+    for (src <- EtlTestData.sources) withClue(s"${src.name}: ") {
+      val branches = BankEtl.extract(spark, src.csv("branches"),
+        BankEtl.schemas.find(_.name == "branches").get)
+      assert(branches.totalRows == src.rows("branches"))
+      val loansStaged = BankEtl.extract(spark, src.csv("loans"),
+        BankEtl.schemas.find(_.name == "loans").get)
+      assert(loansStaged.totalRows == src.rows("loans"))
+    }
   }
 
   test("incremental load appends only new keys") {
-    val existing = loans.limit(3)
-    val loaded = BankEtl.loadIncremental(loans, existing, "loan_id")
-    assert(loaded.count() == loans.count() - 3)
-    val again = BankEtl.loadIncremental(loans, loans, "loan_id")
-    assert(again.count() == 0) // fully synced → nothing to load
+    for (src <- EtlTestData.sources) withClue(s"${src.name}: ") {
+      val loans = loansOf(src)
+      val existing = loans.limit(3)
+      val loaded = BankEtl.loadIncremental(loans, existing, "loan_id")
+      assert(loaded.count() == loans.count() - 3)
+      val again = BankEtl.loadIncremental(loans, loans, "loan_id")
+      assert(again.count() == 0) // fully synced → nothing to load
+    }
   }
 
   test("observe-based row metrics fire without extra jobs") {
-    val observed = BankEtl.withRowMetric(loans, "loans_rows")
-    val n = observed.count()
-    // metrics surface through the observation API on the last query
-    assert(n > 0)
+    for (src <- EtlTestData.sources) withClue(s"${src.name}: ") {
+      val observed = BankEtl.withRowMetric(loansOf(src), "loans_rows")
+      val n = observed.count()
+      // metrics surface through the observation API on the last query
+      assert(n > 0)
+    }
   }
 
   test("PlanMetrics: shuffle budget assertions against executed plans") {
@@ -128,25 +144,28 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("EtlMain: phase-split extract/transform/load ≡ fused full run") {
-    val split = java.nio.file.Files.createTempDirectory("graft_split").toString
-    val fused = java.nio.file.Files.createTempDirectory("graft_fused").toString
-    val date = "2026-08-14"
-    EtlMain.runExtract(spark, dataDir, split)
-    EtlMain.runTransform(spark, split, date)
-    EtlMain.runLoad(spark, split)
-    EtlMain.runFull(spark, dataDir, fused, date)
-    BankEtl.schemas.map(_.name).filter(e =>
-      new java.io.File(s"$fused/$e").isDirectory).foreach { e =>
-      val a = spark.read.parquet(s"$split/$e")
-      val b = spark.read.parquet(s"$fused/$e")
-      assert(a.count() == b.count(), e)
-      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
-        s"$e: phase-split and fused production tables diverge")
+    for (src <- EtlTestData.sources) withClue(s"${src.name}: ") {
+      val dataDir = src.dir
+      val split = java.nio.file.Files.createTempDirectory("graft_split").toString
+      val fused = java.nio.file.Files.createTempDirectory("graft_fused").toString
+      val date = "2026-08-14"
+      EtlMain.runExtract(spark, dataDir, split)
+      EtlMain.runTransform(spark, split, date)
+      EtlMain.runLoad(spark, split)
+      EtlMain.runFull(spark, dataDir, fused, date)
+      BankEtl.schemas.map(_.name).filter(e =>
+        new java.io.File(s"$fused/$e").isDirectory).foreach { e =>
+        val a = spark.read.parquet(s"$split/$e")
+        val b = spark.read.parquet(s"$fused/$e")
+        assert(a.count() == b.count(), e)
+        assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
+          s"$e: phase-split and fused production tables diverge")
+      }
+      // re-running extract against the unchanged CSV dir stages nothing
+      EtlMain.runExtract(spark, dataDir, split)
+      val again = spark.read.parquet(s"$split/customers").count()
+      assert(again == spark.read.parquet(s"$fused/customers").count())
     }
-    // re-running extract against the unchanged CSV dir stages nothing
-    EtlMain.runExtract(spark, dataDir, split)
-    val again = spark.read.parquet(s"$split/customers").count()
-    assert(again == spark.read.parquet(s"$fused/customers").count())
   }
 
   test("EtlMain full processes all FOUR entities (synthesized " +
@@ -155,51 +174,52 @@ class PipelineSpec extends AnyFunSuite {
     import java.nio.file.{Files, Paths}
     import graft.pipeline.RunLog
     import graft.tools.TransactionsFixture
-    val csvDir = Files.createTempDirectory("graft_data4")
-    Seq("branches", "customers", "loans").foreach { e =>
-      Files.copy(Paths.get(s"$dataDir/$e.csv"), csvDir.resolve(s"$e.csv"))
+    for (src <- EtlTestData.sources) withClue(s"${src.name}: ") {
+      val csvDir = Files.createTempDirectory("graft_data4")
+      Seq("branches", "customers", "loans").foreach { e =>
+        Files.copy(Paths.get(src.csv(e)), csvDir.resolve(s"$e.csv"))
+      }
+      val fx = TransactionsFixture.write(csvDir.resolve("transactions.csv"))
+      val out = Files.createTempDirectory("graft_out4").toString
+      val log = new RunLog(s"$out/_logs", RunLog.newRunId())
+      EtlMain.runFull(spark, csvDir.toString, out, "2026-08-14", Some(log))
+      // the reference's own target: `[etl] summary full: ok=4`
+      val full = RunLog.summarize(log.currentFile).find(_._1 == "full").get
+      assert(full._2 == 4 && full._3 == 0, s"summary: $full")
+      val tx = spark.read.parquet(s"$out/transactions")
+      // staged = total − empty-PK drops − keep-last shadows (by construction)
+      assert(tx.count() == fx.staged)
+      for (e <- Seq("customers", "loans", "branches"))
+        assert(spark.read.parquet(s"$out/$e").count() == src.staged(e), e)
+      // planted dirty-value semantics (transform.py:430-463)
+      val byId = tx.filter(col("transaction_id").isin(
+        "2", "6", "7", "8", "9", "10", "11", "12", "21"))
+        .collect().map(r => r.getAs[String]("transaction_id") -> r).toMap
+      assert(byId("7").getAs[Double]("amount") == 12345.67) // ₹12,345.67
+      assert(byId("7").getAs[String]("transaction_category") == "Large")
+      assert(byId("8").getAs[Double]("amount") == 0.0) // safe_num junk → 0
+      assert(byId("8").getAs[String]("transaction_category") == "Small")
+      assert(byId("9").getAs[Double]("amount") == 2500.0) // $ 2,500.00
+      assert(byId("9").getAs[String]("transaction_category") == "Medium")
+      assert(byId("10").isNullAt(byId("10").fieldIndex("transaction_date")),
+        "April 31 must parse to null")
+      assert(byId("11").isNullAt(byId("11").fieldIndex("transaction_date")))
+      assert(byId("11").getAs[Boolean]("fraud_flag")) // "YES"
+      assert(!byId("2").getAs[Boolean]("fraud_flag")) // "false"
+      assert(byId("12").getAs[String]("customer_id") == "NA") // empty → NA
+      assert(byId("6").getAs[String]("customer_id") == "106") // trimmed
+      // keep-LAST dedup: the shadow row's marker amount won
+      assert(byId("21").getAs[Double]("amount") == 77777.77)
+      assert(byId("21").getAs[java.sql.Date]("transaction_date").toString
+        == "2022-06-15")
+      // production partitioning on the analysis dimension
+      val parts = new java.io.File(s"$out/transactions").list().toSeq
+      assert(Seq("Large", "Medium", "Small").forall(c =>
+        parts.contains(s"transaction_category=$c")), parts.toString)
+      // idempotent re-run: tracker skips the unchanged files, counts hold
+      EtlMain.runFull(spark, csvDir.toString, out, "2026-08-14", Some(log))
+      assert(spark.read.parquet(s"$out/transactions").count() == fx.staged)
     }
-    val fx = TransactionsFixture.write(csvDir.resolve("transactions.csv"))
-    val out = Files.createTempDirectory("graft_out4").toString
-    val log = new RunLog(s"$out/_logs", RunLog.newRunId())
-    EtlMain.runFull(spark, csvDir.toString, out, "2026-08-14", Some(log))
-    // the reference's own target: `[etl] summary full: ok=4`
-    val full = RunLog.summarize(log.currentFile).find(_._1 == "full").get
-    assert(full._2 == 4 && full._3 == 0, s"summary: $full")
-    val tx = spark.read.parquet(s"$out/transactions")
-    // staged = total − empty-PK drops − keep-last shadows (by construction)
-    assert(tx.count() == fx.staged)
-    assert(spark.read.parquet(s"$out/customers").count() == 5022L)
-    assert(spark.read.parquet(s"$out/loans").count() == 2006L)
-    assert(spark.read.parquet(s"$out/branches").count() == 25L)
-    // planted dirty-value semantics (transform.py:430-463)
-    val byId = tx.filter(col("transaction_id").isin(
-      "2", "6", "7", "8", "9", "10", "11", "12", "21"))
-      .collect().map(r => r.getAs[String]("transaction_id") -> r).toMap
-    assert(byId("7").getAs[Double]("amount") == 12345.67) // ₹12,345.67
-    assert(byId("7").getAs[String]("transaction_category") == "Large")
-    assert(byId("8").getAs[Double]("amount") == 0.0) // safe_num junk → 0
-    assert(byId("8").getAs[String]("transaction_category") == "Small")
-    assert(byId("9").getAs[Double]("amount") == 2500.0) // $ 2,500.00
-    assert(byId("9").getAs[String]("transaction_category") == "Medium")
-    assert(byId("10").isNullAt(byId("10").fieldIndex("transaction_date")),
-      "April 31 must parse to null")
-    assert(byId("11").isNullAt(byId("11").fieldIndex("transaction_date")))
-    assert(byId("11").getAs[Boolean]("fraud_flag")) // "YES"
-    assert(!byId("2").getAs[Boolean]("fraud_flag")) // "false"
-    assert(byId("12").getAs[String]("customer_id") == "NA") // empty → NA
-    assert(byId("6").getAs[String]("customer_id") == "106") // trimmed
-    // keep-LAST dedup: the shadow row's marker amount won
-    assert(byId("21").getAs[Double]("amount") == 77777.77)
-    assert(byId("21").getAs[java.sql.Date]("transaction_date").toString
-      == "2022-06-15")
-    // production partitioning on the analysis dimension
-    val parts = new java.io.File(s"$out/transactions").list().toSeq
-    assert(Seq("Large", "Medium", "Small").forall(c =>
-      parts.contains(s"transaction_category=$c")), parts.toString)
-    // idempotent re-run: tracker skips the unchanged files, counts hold
-    EtlMain.runFull(spark, csvDir.toString, out, "2026-08-14", Some(log))
-    assert(spark.read.parquet(s"$out/transactions").count() == fx.staged)
   }
 
   test("operator cache lifecycle: composing sealed operators leaves " +

@@ -22,6 +22,37 @@ class PlanAuditSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark.newSession()
   private val dir = "/root/testdata/sf0.001"
 
+  /** Run `body` and count the Spark jobs it launched. Counts ONLY
+    * jobs carrying this thread's job group: the SparkContext listener
+    * bus is JVM-global, so a late async job from an earlier suite
+    * (streaming teardown, cleaner work) would otherwise land in the
+    * window (job events have no sessionUUID, so the group id is the
+    * filter — the job-side twin of the isolated session).
+    */
+  private def buildJobs[T](label: String)(body: => T): (T, Int) = {
+    val group = s"build-probe-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        if (Option(js.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet(); ()
+        }
+      }
+    }
+    spark.sparkContext.setJobGroup(group, label)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = body
+      org.apache.spark.sql.GraftBridge.waitListenerBusEmpty(spark)
+      (out, jobs.get())
+    } finally {
+      spark.sparkContext.removeSparkListener(l)
+      spark.sparkContext.clearJobGroup()
+    }
+  }
+
   /** All plans a gate query PLANS OR EXECUTES. Sealed operators
     * (graft.sealResult) materialize inside the query fn and return a
     * LogicalRDD-backed result whose own executedPlan is just the
@@ -668,25 +699,17 @@ class PlanAuditSpec extends AnyFunSuite {
         all.count(_.isInstanceOf[BroadcastExchangeLike]))
     }
     // (query -> (shuffles, broadcasts)) — the 10 most expensive
-    // BENCH queries of the r9/r10 close
-    // round-12 re-pin (re-audited with tools.ShuffleCount): the
-    // scale-adaptive fanOut (graft.fanOut, guide-§2.5 unsplittable-
-    // input spread) adds exactly one round-robin/hash exchange to the
-    // pair-kernel queries AT SMALL SF ONLY (it is a no-op once the
-    // corpus scan has ≥ defaultParallelism partitions) — knn_eval
-    // 5→6, hard_negatives 3→4, jaro_winkler 1→2.
-    // round-13 re-pin (tools.ShuffleCount, 3 identical runs):
-    // q_setsim_join is DETERMINISTIC again — the shared token cache
-    // is GONE (SetSim no longer persists the exploded token stream;
-    // measured 1.61 s un-persisted vs 1.94-2.42 s cached at sf0.1),
-    // so the round-12 cache-population reuse race (3 OR 4 shuffles
-    // run-to-run) is structurally impossible and the pin is a single
-    // value again (ADVICE r12). Broadcasts 7→4 for the same reason
-    // (the cached plan's extra broadcast instances went with it).
-    // q_ann_pq 6→5: the pq trainer fanOuts are data-bound now and
-    // no-op at this sf.
+    // BENCH queries of the r9/r10 close. Each pin is the sum over every
+    // plan the query executes at sf0.001, re-audited with
+    // tools.ShuffleCount after any deliberate plan change; a pin only
+    // tightens. The pair-kernel queries carry the scale-adaptive
+    // fanOut exchange that exists AT SMALL SF ONLY (a no-op once the
+    // corpus scan has ≥ defaultParallelism partitions). q_setsim_join
+    // runs the shared prefix-join kernel with no persisted token
+    // stream, so its count is a single value (a cache-population reuse
+    // race would make it vary run to run).
     val budgets = Seq(
-      "q_knn_eval" -> ((Set(6), 2)), "q_setsim_join" -> ((Set(4), 4)),
+      "q_knn_eval" -> ((Set(6), 2)), "q_setsim_join" -> ((Set(1), 3)),
       "q_ann_pq" -> ((Set(5), 3)), "q_hard_negatives" -> ((Set(4), 1)),
       "q_jaro_winkler" -> ((Set(2), 1)),
       "q_assortativity" -> ((Set(5), 3)),
@@ -741,39 +764,15 @@ class PlanAuditSpec extends AnyFunSuite {
     // with an explicit queryMod, CONSTRUCTING the sampler plan must
     // launch zero Spark jobs — the old eager agg().head guard was a
     // second linear corpus scan paid even when the plan never executed.
-    // Count ONLY jobs carrying this thread's job group: the SparkContext
-    // listener bus is JVM-global, so a late async job from an earlier
-    // suite (streaming teardown, cleaner work) would otherwise land in
-    // the window and fail the ==0 assertion spuriously (the same
-    // straggler class the isolated session fixes for plan capture —
-    // job events have no sessionUUID, so the group id is the filter).
-    val group = s"sampler-probe-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (Option(js.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group)) {
-          jobs.incrementAndGet(); ()
-        }
-      }
-    }
     val emb = graft.table(spark, dir, "embeddings")
     emb.count() // materialize the session/table setup outside the probe
-    spark.sparkContext.setJobGroup(group, "sampler zero-job probe")
-    spark.sparkContext.addSparkListener(l)
-    val (dfs, built) = try {
-      val a = operators.Similarity.knnClassifyEval(
-        emb, "vec_id", "label", "embedding", 5, queryMod = 7)
-      val b = operators.Similarity.hardNegatives(
-        emb, "vec_id", "label", "embedding", 3, queryMod = 7)
-      val c = operators.Similarity.silhouetteEval(
-        emb, "vec_id", "label", "embedding", queryMod = 7)
-      org.apache.spark.sql.GraftBridge.waitListenerBusEmpty(spark)
-      (Seq(a, b, c), jobs.get())
-    } finally {
-      spark.sparkContext.removeSparkListener(l)
-      spark.sparkContext.clearJobGroup()
+    val (dfs, built) = buildJobs("sampler zero-job probe") {
+      Seq(operators.Similarity.knnClassifyEval(
+          emb, "vec_id", "label", "embedding", 5, queryMod = 7),
+        operators.Similarity.hardNegatives(
+          emb, "vec_id", "label", "embedding", 3, queryMod = 7),
+        operators.Similarity.silhouetteEval(
+          emb, "vec_id", "label", "embedding", queryMod = 7))
     }
     assert(built == 0,
       s"sampler plan construction launched $built jobs — the guard " +
@@ -785,5 +784,20 @@ class PlanAuditSpec extends AnyFunSuite {
         "data-bound guard missing from the sampler plan")
     // executing still works (guard passes on real data)
     assert(dfs.head.count() > 0)
+  }
+
+  test("mmrRerank builds with zero jobs at k = 3 and at k = 10") {
+    // one selection plan for every k: constructing the operator runs
+    // no job (no per-pick checkpoint), whatever k is
+    val emb = graft.table(spark, dir, "embeddings")
+    emb.count() // materialize the session/table setup outside the probe
+    val qs = emb.filter(org.apache.spark.sql.functions.col("vec_id") % 1000 === 0)
+    for (k <- Seq(3, 10)) {
+      val (df, built) = buildJobs(s"mmr k=$k zero-job probe") {
+        operators.Similarity.mmrRerank(emb, qs, "vec_id", "embedding", k = k)
+      }
+      assert(built == 0, s"mmrRerank k=$k launched $built jobs while building")
+      assert(df.count() == k * qs.count())
+    }
   }
 }

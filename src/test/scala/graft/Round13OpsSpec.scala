@@ -36,22 +36,23 @@ class Round13OpsSpec extends AnyFunSuite {
     assert(t > Bench.retimeThreshold("q_attribution_decay", tail) * ref)
   }
 
-  test("mmrRerank k > 4 dispatches to the iterative form (domain " +
-      "restored, VERDICT r12 item 7); greedy selection is " +
-      "prefix-stable, so the iterative k = 10 run's first 4 picks " +
-      "equal the unrolled k = 4 form's") {
+  test("mmrRerank is prefix-stable: k = 4, 10 and poolSize (pool exhausted)") {
+    // greedy selection never revisits a pick, so a larger k extends the
+    // smaller k's picks; k = poolSize drains every query's pool
     val spark = SparkTestSession.spark
     import org.apache.spark.sql.functions._
     val emb = table(spark, "/root/testdata/sf0.001", "embeddings")
     val qs = emb.filter(col("vec_id") % 1000 === 0)
-    val k10 = operators.Similarity.mmrRerank(
-      emb, qs, "vec_id", "embedding", k = 10, poolSize = 20)
-    val k4 = operators.Similarity.mmrRerank(
-      emb, qs, "vec_id", "embedding", k = 4, poolSize = 20)
+    def mmr(k: Int) = operators.Similarity.mmrRerank(
+      emb, qs, "vec_id", "embedding", k = k, poolSize = 20)
+    val (k4, k10, k20) = (mmr(4), mmr(10), mmr(20))
     val nQueries = qs.count()
     assert(k10.count() == 10 * nQueries)
+    assert(k20.count() == 20 * nQueries)
     val prefix = k10.filter(col("pick") <= 4)
     assert(prefix.exceptAll(k4).isEmpty && k4.exceptAll(prefix).isEmpty)
+    val prefix10 = k20.filter(col("pick") <= 10)
+    assert(prefix10.exceptAll(k10).isEmpty && k10.exceptAll(prefix10).isEmpty)
   }
 
   test("exact-integer trainers: the driver-local solve equals the " +

@@ -44,9 +44,29 @@ class SetSimSpec extends AnyFunSuite {
       val slow = pairSet(SetSim.jaccardNaive(rdocs, "text", "doc_id", num, den))
       assert(fast == slow, s"mismatch at tau=$num/$den")
     }
+    // Dedup's caller of the same kernel: its lowered integer bound plus
+    // the IEEE-double size test and 4-dp rounded acceptance must give
+    // exactly the brute-force pairs under those two tests
+    val uni = (c: org.apache.spark.sql.Column) => TextFunctions.shingles(c, 1)
+    val all = SetSim.jaccardNaive(rdocs, "text", "doc_id", 1, 1000, uni)
+    val found = for (tau <- Seq(0.5, 0.6, 0.65, 0.7, 0.9)) yield {
+      val fast = Dedup.ngramJaccardPairs(rdocs, "text", "doc_id", 1, tau)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
+        .toMap
+      val slow = all
+        .filter(col("n_a") <= col("n_b") / tau && col("n_b") <= col("n_a") / tau)
+        .withColumn("jaccard", round(col("inter").cast("double") /
+          (col("n_a") + col("n_b") - col("inter")), 4))
+        .filter(col("jaccard") >= tau)
+        .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")) ->
+          r.getAs[Double]("jaccard")).toMap
+      assert(fast == slow, s"Dedup mismatch at tau=$tau")
+      slow.size
+    }
+    assert(found.head > 0, "no pair at tau=0.5: the comparison is vacuous")
   }
 
-  test("5-gram shingle SetSim ≡ ngramJaccardPairs: two implementations, one relation") {
+  test("5-gram shingle SetSim ≡ ngramJaccardPairs: one kernel, two acceptance tests") {
     val longDocs = Seq(
       (1L, "one two three four five six seven eight nine ten eleven twelve"),
       (2L, "one two three four five six seven eight nine ten eleven twelve"),

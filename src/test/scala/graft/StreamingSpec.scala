@@ -145,25 +145,27 @@ class StreamingSpec extends AnyFunSuite {
     import graft.pipeline.BankEtl
     import graft.sources.CsvStaging
     val entity = BankEtl.schemas.find(_.name == "loans").get
-    val dir = java.nio.file.Files.createTempDirectory("graft_etl_stream").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Path.of("/root/reference/data/loans.csv"),
-      java.nio.file.Path.of(dir, "loans.csv"))
-    // the same transform stage works batch OR streaming: the plan is
-    // declarative, the source is the only difference
-    val stream = spark.readStream
-      .schema(CsvStaging.schemaFor(entity.columns))
-      .option("header", "true").csv(dir)
-    val q = BankEtl.transform("loans", stream)
-      .writeStream.format("memory").queryName("etl_stream_out")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val out = spark.table("etl_stream_out")
-    assert(out.count() == 2007)
-    assert(out.filter(org.apache.spark.sql.functions.col("risk_category")
-      .isin("High", "Medium", "Low")).count() == 2007)
+    for (src <- EtlTestData.sources) withClue(s"${src.name}: ") {
+      val dir = java.nio.file.Files.createTempDirectory("graft_etl_stream").toString
+      java.nio.file.Files.copy(
+        java.nio.file.Path.of(src.csv("loans")),
+        java.nio.file.Path.of(dir, "loans.csv"))
+      // the same transform stage works batch OR streaming: the plan is
+      // declarative, the source is the only difference
+      val stream = spark.readStream
+        .schema(CsvStaging.schemaFor(entity.columns))
+        .option("header", "true").csv(dir)
+      val q = BankEtl.transform("loans", stream)
+        .writeStream.format("memory").queryName(s"etl_stream_${src.name}")
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      val out = spark.table(s"etl_stream_${src.name}")
+      assert(out.count() == src.rows("loans"))
+      assert(out.filter(org.apache.spark.sql.functions.col("risk_category")
+        .isin("High", "Medium", "Low")).count() == src.rows("loans"))
+    }
   }
 
   test("AvailableNow file stream processes a batch then resumes from checkpoint") {

@@ -124,8 +124,12 @@ object ScaleFixture {
         start, f"${1 + rnd.nextInt(28)}%02d-${1 + rnd.nextInt(12)}%02d-${22 + rnd.nextInt(10)}%02d",
         statuses(rnd.nextInt(statuses.size)))
     }
+    // loan 1's keep-last shadow is the reference's loans.csv:2 row:
+    // Home 545642.51, 13-03-11 → 13-03-19 (96 months, High risk)
     val shadows = (1 to dups).iterator.map { i =>
-      Seq(i.toString, "1", "Home", "99999.99", "9.99", "01-01-20",
+      if (i == 1) Seq("1", "1", "Home", "545642.51", "9.40", "13-03-11",
+        "13-03-19", "Closed")
+      else Seq(i.toString, "1", "Home", "99999.99", "9.99", "01-01-20",
         "01-01-28", "Active")
     }
     val bad = (1 to emptyPk).iterator.map { i =>
