@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 import graft.pipeline.{BankEtl, BatchScheduler, RunLog}
-import graft.sources.FileTracker
+import graft.sources.{CsvStaging, FileTracker}
 
 /** CLI entrypoint — the reference's `main.py` controller: run the bank
   * ETL over a CSV directory into parquet production tables, with
@@ -88,34 +88,53 @@ object EtlMain {
     neu.toString
   }
 
+  /** Runs `body` on each entity with new files under `csvDir`, in
+    * schema order, logging under `phase`. The tracker hashes every
+    * entity's files in one job up front and records the processed
+    * ones, with exactly the hashes it diffed, in one write at the end —
+    * also when a later entity fails, so a re-run skips what loaded.
+    */
+  private def forEachPending(spark: SparkSession, csvDir: String,
+                             outDir: String, phase: String, rl: RunLog)
+                            (body: (BankEtl.EntitySchema, CsvStaging.StagingResult) => Long): Unit = {
+    val tracker = new FileTracker(spark, trackerPath(spark, outDir))
+    val globs = BankEtl.schemas.map(e => e -> s"$csvDir/${e.name}*.csv")
+    val pending = tracker.pending(globs.map(_._2))
+    val done = Seq.newBuilder[(FileTracker.TrackedFile, Long)]
+    try globs.foreach { case (entity, glob) =>
+      val files = pending.files(glob)
+      if (files.isEmpty) {
+        rl.log(phase, entity.name, "skip", "reason" -> "no new files")
+      } else {
+        rl.timed[Long](phase, entity.name, n => Seq("rows_out" -> n)) {
+          val staged = BankEtl.extract(spark, glob, entity)
+          val n = body(entity, staged)
+          // per-FILE raw counts (not the glob total against every file)
+          done ++= files.map(f => f -> staged.perFileRows.getOrElse(f.name, 0L))
+          rl.log(phase, entity.name, "stats",
+            "csv_rows" -> staged.totalRows,
+            "invalid_pk" -> staged.invalidKeyRows,
+            "deduped" -> staged.dedupedRows)
+          n
+        }
+      }
+    } finally {
+      val processed = done.result()
+      if (processed.nonEmpty) tracker.record(pending, processed)
+    }
+  }
+
   /** Extract phase: stage new CSV files (raw strings, PK-filtered,
     * deduped) into the staging layer and mark them processed. The
     * reference's extract.py → MySQL-staging leg.
     */
   def runExtract(spark: SparkSession, csvDir: String, outDir: String,
-                 log: Option[RunLog] = None): Unit = {
-    val rl = openLog(outDir, log)
-    val tracker = new FileTracker(spark, trackerPath(spark, outDir))
-    BankEtl.schemas.foreach { entity =>
-      val glob = s"$csvDir/${entity.name}*.csv"
-      val pending = tracker.newFiles(glob)
-      if (pending.isEmpty) {
-        rl.log("extract", entity.name, "skip", "reason" -> "no new files")
-      } else {
-        rl.timed[Long]("extract", entity.name, n => Seq(
-          "rows_out" -> n)) {
-          val staged = BankEtl.extract(spark, glob, entity)
-          sources.ParquetIo.replace(staged.data, staging(outDir, entity.name))
-          tracker.markProcessed(pending, staged.perFileRows)
-          rl.log("extract", entity.name, "stats",
-            "csv_rows" -> staged.totalRows,
-            "invalid_pk" -> staged.invalidKeyRows,
-            "deduped" -> staged.dedupedRows)
-          staged.totalRows - staged.invalidKeyRows - staged.dedupedRows
-        }
-      }
+                 log: Option[RunLog] = None): Unit =
+    forEachPending(spark, csvDir, outDir, "extract", openLog(outDir, log)) {
+      (entity, staged) =>
+        sources.ParquetIo.replace(staged.data, staging(outDir, entity.name))
+        staged.totalRows - staged.invalidKeyRows - staged.dedupedRows
     }
-  }
 
   /** Transform phase: staged batch → typed/cleaned batch. The
     * reference's transform.py leg.
@@ -158,16 +177,21 @@ object EtlMain {
     }
   }
 
+  /** The one-column schema production keys are read with: no
+    * footer-inference job.
+    */
+  private def keySchema(entity: BankEtl.EntitySchema) =
+    CsvStaging.schemaFor(Seq(entity.primaryKey))
+
   private def loadProduction(spark: SparkSession, transformedBatch: DataFrame,
                              outDir: String,
                              entity: BankEtl.EntitySchema): Long = {
     val target = s"$outDir/${entity.name}"
-    val existing = sources.ParquetIo.readIfExists(spark, target)
+    val existing = sources.ParquetIo.readIfExists(spark, target, keySchema(entity))
       .map(_.select(entity.primaryKey))
       .getOrElse(transformedBatch.limit(0).select(entity.primaryKey))
-    val newRows = BankEtl.loadIncremental(transformedBatch, existing,
-      entity.primaryKey)
-    val loaded = newRows.cache().count()
+    val (newRows, rows) = BankEtl.withRowMetric(BankEtl.loadIncremental(
+      transformedBatch, existing, entity.primaryKey))
     // production tables are directory-partitioned on their analysis
     // dimension so downstream predicates prune (see Writers)
     val partCols = entity.name match {
@@ -176,13 +200,23 @@ object EtlMain {
       case "transactions" => Seq("transaction_category")
       case _ => Nil
     }
-    if (loaded > 0) {
-      if (partCols.nonEmpty)
-        graft.sources.Writers.writePartitioned(newRows, target, partCols,
-          mode = SaveMode.Append)
-      else newRows.write.mode(SaveMode.Append).parquet(target)
+    val path = new org.apache.hadoop.fs.Path(target)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def entries = if (fs.exists(path)) fs.listStatus(path).map(_.getPath).toSet
+      else Set.empty[org.apache.hadoop.fs.Path]
+    val before = entries
+    if (partCols.nonEmpty)
+      graft.sources.Writers.writePartitioned(newRows, target, partCols,
+        mode = SaveMode.Append)
+    else newRows.write.mode(SaveMode.Append).parquet(target)
+    val loaded = rows()
+    // an empty non-partitioned append still writes task 0's empty part
+    // file: a load that adds no row takes back what its write added
+    if (loaded == 0) {
+      if (before.isEmpty) fs.delete(path, true)
+      else (entries -- before).filterNot(_.getName.startsWith("_"))
+        .foreach(fs.delete(_, true))
     }
-    newRows.unpersist()
     loaded
   }
 
@@ -193,26 +227,9 @@ object EtlMain {
   def runFull(spark: SparkSession, csvDir: String, outDir: String,
               batchDate: String, log: Option[RunLog] = None): Unit = {
     val rl = openLog(outDir, log)
-    val tracker = new FileTracker(spark, trackerPath(spark, outDir))
-    BankEtl.schemas.foreach { entity =>
-      val glob = s"$csvDir/${entity.name}*.csv"
-      val pending = tracker.newFiles(glob)
-      if (pending.isEmpty) {
-        rl.log("full", entity.name, "skip", "reason" -> "no new files")
-      } else {
-        rl.timed[Long]("full", entity.name, n => Seq("rows_out" -> n)) {
-          val staged = BankEtl.extract(spark, glob, entity)
-          val out = BankEtl.transform(entity.name, staged.data, batchDate)
-          val loaded = loadProduction(spark, out, outDir, entity)
-          // per-FILE raw counts (not the glob total against every file)
-          tracker.markProcessed(pending, staged.perFileRows)
-          rl.log("full", entity.name, "stats",
-            "csv_rows" -> staged.totalRows,
-            "invalid_pk" -> staged.invalidKeyRows,
-            "deduped" -> staged.dedupedRows)
-          loaded
-        }
-      }
+    forEachPending(spark, csvDir, outDir, "full", rl) { (entity, staged) =>
+      val out = BankEtl.transform(entity.name, staged.data, batchDate)
+      loadProduction(spark, out, outDir, entity)
     }
     runHealth(spark, outDir)
     // the reference's log_pipeline_summary, derived from the log itself
@@ -225,7 +242,8 @@ object EtlMain {
   /** Health report (reference test.py): per-table production counts. */
   def runHealth(spark: SparkSession, outDir: String): Unit = {
     val tables = BankEtl.schemas.flatMap { e =>
-      sources.ParquetIo.readIfExists(spark, s"$outDir/${e.name}").map(e.name -> _)
+      sources.ParquetIo.readIfExists(spark, s"$outDir/${e.name}", keySchema(e))
+        .map(e.name -> _)
     }.toMap
     if (tables.isEmpty) println("[health] no production tables yet")
     else operators.Loads.countReport(tables).collect().foreach { r =>

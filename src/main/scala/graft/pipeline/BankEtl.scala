@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Cleaning
@@ -150,9 +150,15 @@ object BankEtl {
                       key: String): DataFrame =
     graft.operators.Loads.incrementalNew(transformed, existing, Seq(key))
 
-  /** Per-stage row metrics via `observe` — collected by the driver with
-    * zero extra jobs (reference main.py ETLMetrics analog).
+  /** `df` with its row count observed as it runs (reference main.py
+    * ETLMetrics analog): read the count with the returned function
+    * after the one action on the returned frame — no job of its own.
+    * The observation is unnamed, so loads run side by side in one
+    * session never collide.
     */
-  def withRowMetric(df: DataFrame, name: String): DataFrame =
-    df.observe(name, count(lit(1)).as("rows"))
+  def withRowMetric(df: DataFrame): (DataFrame, () => Long) = {
+    val obs = Observation()
+    (df.observe(obs, count(lit(1)).as("rows")),
+      () => obs.get("rows").asInstanceOf[Long])
+  }
 }

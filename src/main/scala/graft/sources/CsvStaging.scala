@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -41,8 +42,19 @@ object CsvStaging {
   def schemaFor(columns: Seq[String]): StructType =
     StructType(columns.map(c => StructField(c, StringType, nullable = true)))
 
-  /** Read CSVs into raw-string staging form. Fails fast if the file
-    * header doesn't carry exactly `columns` (any order).
+  /** Read CSVs into raw-string staging form. Fails fast if the header
+    * doesn't carry exactly `columns` (any order), and fails the read if
+    * a file under the glob orders its header differently from the
+    * first file's.
+    *
+    * Invariants:
+    *  - the header is read on the driver from the first file, and every
+    *    file is parsed against it with `enforceSchema=false`: Spark
+    *    checks each file's own header against it, where `header=true`
+    *    alone would apply one file's column order to every file;
+    *  - the stats (rows per file, rows, valid-key rows, distinct valid
+    *    keys) cover the whole glob and come from ONE aggregate query;
+    *    `data` stays lazy.
     */
   def read(spark: SparkSession, path: String, columns: Seq[String],
            primaryKey: String): StagingResult = {
@@ -51,44 +63,64 @@ object CsvStaging {
     // file and warn-logs a FileNotFoundException trace per read
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val expanded = Option(fs.globStatus(hp))
-      .filter(_.nonEmpty)
-      .map(_.map(_.getPath.toString).toIndexedSeq)
-      .getOrElse(Seq(path)) // no match: keep the original error path
+    val expanded = Option(fs.globStatus(hp)).toSeq.flatten
+      .map(_.getPath).sortBy(_.toString)
+    require(expanded.nonEmpty, s"no CSV file matches $path")
+    val header = headerOf(fs, expanded.head)
+    require(header.sorted == columns.sorted,
+      s"column mismatch: csv has ${header.sorted}, expected ${columns.sorted}")
     val raw = spark.read
+      .schema(schemaFor(header))
       .option("header", "true")
+      .option("enforceSchema", "false")
       .option("mode", "PERMISSIVE")
-      .csv(expanded: _*)
-
-    val got = raw.columns.toSet
-    require(got == columns.toSet,
-      s"column mismatch: csv has ${got.toSeq.sorted}, expected ${columns.sorted}")
+      .csv(expanded.map(_.toString): _*)
 
     val ordered = raw.select(columns.map(col): _*)
       .withColumn("__file_order", monotonically_increasing_id())
 
-    val keyed = ordered.filter(col(primaryKey).isNotNull &&
-      trim(col(primaryKey)) =!= "")
+    val valid = col(primaryKey).isNotNull && trim(col(primaryKey)) =!= ""
 
     // keep-last per key, by file order (reference keep='last')
     val w = Window.partitionBy(col(primaryKey))
       .orderBy(col("__file_order").desc)
-    val deduped = keyed
+    val deduped = ordered.filter(valid)
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn", "__file_order")
       .withColumn("numeric_sort_key", numericSortKey(col(primaryKey)))
 
-    val perFile = ordered
-      .groupBy(element_at(split(input_file_name(), "/"), -1).as("file_name"))
-      .count()
+    // per-file rows, and over the glob (the rollup's total row) rows,
+    // valid-key rows and distinct valid keys — the dedup keeps one row
+    // per distinct valid key
+    val stats = ordered
+      .select(element_at(split(input_file_name(), "/"), -1).as("file_name"),
+        valid.as("valid"), col(primaryKey).as("pk"))
+      .rollup(col("file_name"))
+      .agg(grouping(col("file_name")).as("total"), count(lit(1)).as("rows"),
+        count_if(col("valid")).as("valid"),
+        count_distinct(when(col("valid"), col("pk"))).as("keys"))
       .collect()
-      .map(r => r.getString(0) -> r.getLong(1))
-      .toMap
-    val total = perFile.valuesIterator.sum
-    val valid = keyed.count()
-    val kept = deduped.count()
-    StagingResult(deduped, total, total - valid, valid - kept, perFile)
+    val (totals, files) = stats.partition(_.getAs[Byte]("total") == 1)
+    val perFile = files.map(r => r.getAs[String]("file_name") -> r.getAs[Long]("rows")).toMap
+    val (total, kept, keys) = totals.headOption
+      .map(r => (r.getAs[Long]("rows"), r.getAs[Long]("valid"), r.getAs[Long]("keys")))
+      .getOrElse((0L, 0L, 0L))
+    StagingResult(deduped, total, total - kept, kept - keys, perFile)
+  }
+
+  /** The first line of `file`, split by the CSV reader's own parser
+    * settings.
+    */
+  private def headerOf(fs: org.apache.hadoop.fs.FileSystem,
+                       file: org.apache.hadoop.fs.Path): Seq[String] = {
+    val in = new java.io.BufferedReader(new java.io.InputStreamReader(
+      fs.open(file), java.nio.charset.StandardCharsets.UTF_8))
+    val line = try Option(in.readLine()).getOrElse("") finally in.close()
+    val settings = new CSVOptions(Map.empty[String, String], true, "UTC")
+      .asParserSettings
+    Option(new com.univocity.parsers.csv.CsvParser(settings).parseLine(line))
+      .toSeq.flatten.map(Option(_).getOrElse(""))
   }
 
   /** The reference's `_extract_numeric_id`: all digits of the id glued

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Existence-checked parquet reads and rename-based table swaps.
   *
@@ -34,7 +35,17 @@ object ParquetIo {
   /** Some(df) if `path` exists (after crash recovery), None if absent.
     * Read failures on an existing path are NOT swallowed.
     */
-  def readIfExists(spark: SparkSession, path: String): Option[DataFrame] = {
+  def readIfExists(spark: SparkSession, path: String): Option[DataFrame] =
+    if (exists(spark, path)) Some(spark.read.parquet(path)) else None
+
+  /** [[readIfExists]] with a declared schema: no footer-inference job.
+    * Partition columns the path's directories carry are appended.
+    */
+  def readIfExists(spark: SparkSession, path: String,
+                   schema: StructType): Option[DataFrame] =
+    if (exists(spark, path)) Some(spark.read.schema(schema).parquet(path)) else None
+
+  private def exists(spark: SparkSession, path: String): Boolean = {
     val target = new Path(path)
     val filesystem = fs(spark, target)
     // crash recovery: a swap that died between renames left the
@@ -45,12 +56,11 @@ object ParquetIo {
     // _SUCCESS marker without part files) is NO state: reading it
     // warn-logs "All paths were ignored" on every normal run and
     // yields an empty schema-less frame anyway
-    val hasData = filesystem.exists(target) &&
+    filesystem.exists(target) &&
       filesystem.listStatus(target).exists { s =>
         val n = s.getPath.getName
         !(n.startsWith("_") || n.startsWith("."))
       }
-    if (hasData) Some(spark.read.parquet(path)) else None
   }
 
   /** Replace the table at `path` with `df` via write-tmp + rename. */

@@ -95,11 +95,96 @@ class PipelineSpec extends AnyFunSuite {
 
   test("observe-based row metrics fire without extra jobs") {
     for (src <- EtlTestData.sources) withClue(s"${src.name}: ") {
-      val observed = BankEtl.withRowMetric(loansOf(src), "loans_rows")
+      val (observed, rows) = BankEtl.withRowMetric(loansOf(src))
       val n = observed.count()
       // metrics surface through the observation API on the last query
       assert(n > 0)
+      assert(rows() == n)
     }
+  }
+
+  /** Every file under `dir`, relative to it. */
+  private def filesUnder(dir: String): Set[String] = {
+    val root = java.nio.file.Paths.get(dir)
+    scala.util.Using.resource(java.nio.file.Files.walk(root)) { s =>
+      scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
+        .filter(java.nio.file.Files.isRegularFile(_))
+        .map(root.relativize(_).toString).toSet
+    }
+  }
+
+  /** Per `full` record of `status` that `log`'s run wrote, entity → the
+    * record.
+    */
+  private def fullRecords(log: graft.pipeline.RunLog,
+                          status: String): Map[String, String] = {
+    val ent = """"entity":"([^"]*)"""".r
+    scala.jdk.CollectionConverters.ListHasAsScala(
+      java.nio.file.Files.readAllLines(log.currentFile)).asScala.toSeq
+      .filter(l => l.contains(s"\"run_id\":\"${log.runId}\"") &&
+        l.contains("\"phase\":\"full\"") &&
+        l.contains(s"\"status\":\"$status\""))
+      .flatMap(l => ent.findFirstMatchIn(l).map(_.group(1) -> l)).toMap
+  }
+
+  test("EtlMain: a pending file that only re-sends loaded keys loads " +
+    "0 rows and adds no file to production") {
+    import java.nio.file.{Files, Paths}
+    val src = EtlTestData.fixture
+    val csvDir = Files.createTempDirectory("graft_resend")
+    // branches: a non-partitioned table; customers: a partitioned one
+    val entities = Seq("branches", "customers")
+    entities.foreach(e => Files.copy(Paths.get(src.csv(e)), csvDir.resolve(s"$e.csv")))
+    val out = Files.createTempDirectory("graft_resend_out").toString
+    EtlMain.runFull(spark, csvDir.toString, out, "2026-08-14")
+    val before = entities.map(e => e -> filesUnder(s"$out/$e")).toMap
+    entities.foreach(e => Files.copy(csvDir.resolve(s"$e.csv"),
+      csvDir.resolve(s"${e}_resend.csv")))
+    val log = new graft.pipeline.RunLog(s"$out/_logs", graft.pipeline.RunLog.newRunId())
+    EtlMain.runFull(spark, csvDir.toString, out, "2026-08-14", Some(log))
+    val ok = fullRecords(log, "ok")
+    for (e <- entities) {
+      assert(ok(e).contains("\"rows_out\":0,"), ok(e))
+      assert(filesUnder(s"$out/$e") == before(e), e)
+      assert(spark.read.parquet(s"$out/$e").count() == src.staged(e), e)
+    }
+  }
+
+  test("EtlMain: a re-run after a failed entity skips what loaded and " +
+    "ends with the tables of one clean run") {
+    import java.nio.file.{Files, Paths}
+    import graft.operators.Loads
+    val src = EtlTestData.fixture
+    def csvCopy(prefix: String) = {
+      val d = Files.createTempDirectory(prefix)
+      BankEtl.schemas.foreach(e =>
+        Files.copy(Paths.get(src.csv(e.name)), d.resolve(s"${e.name}.csv")))
+      d
+    }
+    val csvDir = csvCopy("graft_rerun")
+    val loans = csvDir.resolve("loans.csv")
+    val good = Files.readAllLines(loans)
+    // a wrong column set: loans fails after branches and customers load
+    val broken = new java.util.ArrayList[String](good)
+    broken.set(0, good.get(0).replace("loan_status", "status"))
+    Files.write(loans, broken)
+    val out = Files.createTempDirectory("graft_rerun_out").toString
+    val date = "2026-08-14"
+    intercept[IllegalArgumentException] {
+      EtlMain.runFull(spark, csvDir.toString, out, date)
+    }
+    Files.write(loans, good)
+    val log = new graft.pipeline.RunLog(s"$out/_logs", graft.pipeline.RunLog.newRunId())
+    EtlMain.runFull(spark, csvDir.toString, out, date, Some(log))
+    assert(fullRecords(log, "skip").keySet == Set("branches", "customers"))
+    assert(fullRecords(log, "ok").keySet == Set("loans", "transactions"))
+    val clean = Files.createTempDirectory("graft_rerun_clean").toString
+    EtlMain.runFull(spark, csvCopy("graft_rerun_csv").toString, clean, date)
+    def digests(dir: String) = Loads.digestReport(BankEtl.schemas.map { e =>
+      val df = spark.read.parquet(s"$dir/${e.name}")
+      e.name -> ((df, df.columns.toSeq.sorted))
+    }.toMap).collect().map(_.toSeq).toSeq
+    assert(digests(out) == digests(clean))
   }
 
   test("PlanMetrics: shuffle budget assertions against executed plans") {

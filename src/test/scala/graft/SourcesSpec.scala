@@ -49,6 +49,14 @@ class SourcesSpec extends AnyFunSuite {
     // record_count must be per FILE, not the glob total (ADVICE r1)
     assert(res.perFileRows == Map("tx_1.csv" -> 2L, "tx_2.csv" -> 3L))
     assert(res.totalRows == 5)
+    // invalid keys and keep-last shadows count over the whole glob
+    Files.writeString(java.nio.file.Path.of(dir, "tx_3.csv"),
+      "id,v\nT6,6\n,7\nT6,8\nT2,9\n")
+    val all = CsvStaging.read(spark, s"$dir/tx_*.csv", Seq("id", "v"), "id")
+    assert(all.perFileRows("tx_3.csv") == 4L && all.totalRows == 9)
+    assert(all.invalidKeyRows == 1 && all.dedupedRows == 2)
+    assert(all.data.collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("T1", "T2", "T3", "T4", "T5", "T6"))
   }
 
   test("JsonlSource: good rows parse, malformed lines quarantine") {
@@ -72,19 +80,59 @@ class SourcesSpec extends AnyFunSuite {
 
   test("FileTracker: unprocessed files surface, changed files re-surface") {
     val dir = tmpDir(); val state = tmpDir() + "/state"
+    val glob = s"$dir/*.csv"
     Files.writeString(java.nio.file.Path.of(dir, "a.csv"), "id\n1\n")
     Files.writeString(java.nio.file.Path.of(dir, "b.csv"), "id\n2\n")
     val tracker = new FileTracker(spark, state)
-    val first = tracker.newFiles(s"$dir/*.csv")
-    assert(first.count() == 2)
-    tracker.markProcessed(first, Map("a.csv" -> 1L, "b.csv" -> 1L))
-    assert(tracker.newFiles(s"$dir/*.csv").count() == 0) // all tracked
+    def pending() = tracker.pending(Seq(glob))
+    val first = pending()
+    assert(first.files(glob).size == 2)
+    tracker.record(first, first.files(glob).map(f => f -> 1L))
+    assert(pending().files(glob).isEmpty) // all tracked
     Files.writeString(java.nio.file.Path.of(dir, "a.csv"), "id\n1\n99\n")
-    val changed = tracker.newFiles(s"$dir/*.csv").collect()
-    assert(changed.map(_.getAs[String]("file_name")).toSeq == Seq("a.csv"))
-    tracker.markProcessed(tracker.newFiles(s"$dir/*.csv"), Map("a.csv" -> 2L))
-    assert(tracker.newFiles(s"$dir/*.csv").count() == 0)
+    val changed = pending()
+    assert(changed.files(glob).map(_.name) == Seq("a.csv"))
+    tracker.record(changed, changed.files(glob).map(f => f -> 2L))
+    assert(pending().files(glob).isEmpty)
     assert(tracker.state().count() == 2) // upsert by name, not append
+    // a glob matching nothing has no pending files
+    assert(tracker.pending(Seq(s"$dir/none*.csv")).files(s"$dir/none*.csv").isEmpty)
+  }
+
+  test("FileTracker: a file rewritten between diff and record re-surfaces") {
+    val dir = tmpDir(); val state = tmpDir() + "/state"
+    val glob = s"$dir/*.csv"
+    val a = java.nio.file.Path.of(dir, "a.csv")
+    Files.writeString(a, "id\n1\n")
+    val tracker = new FileTracker(spark, state)
+    val taken = tracker.pending(Seq(glob))
+    // the run loads the content it hashed; the file changes meanwhile
+    Files.writeString(a, "id\n1\n2\n")
+    tracker.record(taken, taken.files(glob).map(f => f -> 1L))
+    // the state holds the hash the run diffed, not the new content's
+    assert(tracker.pending(Seq(glob)).files(glob).map(_.name) == Seq("a.csv"))
+  }
+
+  test("CsvStaging: a file whose header orders the columns differently " +
+    "fails the read instead of shifting values") {
+    val dir = tmpDir()
+    Files.writeString(java.nio.file.Path.of(dir, "t_1.csv"), "id,a,b\nT1,a1,b1\n")
+    Files.writeString(java.nio.file.Path.of(dir, "t_2.csv"), "id,b,a\nT2,b2,a2\n")
+    val ex = intercept[Exception] {
+      CsvStaging.read(spark, s"$dir/t_*.csv", Seq("id", "a", "b"), "id")
+        .data.collect()
+    }
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("header")), ex)
+    // the same files with agreeing headers, in either order, read by name
+    Files.writeString(java.nio.file.Path.of(dir, "t_2.csv"), "id,a,b\nT2,a2,b2\n")
+    Files.writeString(java.nio.file.Path.of(dir, "u_1.csv"), "b,id,a\nb3,T3,a3\n")
+    for (g <- Seq("t_*.csv", "u_*.csv")) {
+      val rows = CsvStaging.read(spark, s"$dir/$g", Seq("id", "a", "b"), "id")
+        .data.collect()
+      assert(rows.forall(r => r.getAs[String]("a").startsWith("a") &&
+        r.getAs[String]("b").startsWith("b")), rows.mkString)
+    }
   }
 
   private def rangeDf(start: Long, end: Long, slices: Int = 4) =

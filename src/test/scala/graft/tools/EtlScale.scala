@@ -7,7 +7,8 @@ import org.apache.spark.sql.SparkSession
 /** EtlMain at 100× the reference's data volume (r9 VERDICT #5): runs
   * the FULL reference-surface pipeline on ScaleFixture CSVs at 1× and
   * 100×, asserts production row counts BY CONSTRUCTION, and prints
-  * per-phase time ratios + the production partition layout. The
+  * per-phase time ratios, each production table's content digest
+  * (`Loads.digestReport`) and the production partition layout. The
   * claim under test: phase time grows ≤ linearly in the data (the
   * fused extract→transform→load is one Spark plan per entity — scans,
   * window dedup on the PK, typed projections, partitioned write; no
@@ -61,6 +62,14 @@ object EtlScale {
       checks.foreach { case (e, got, want) =>
         assert(got == want, s"[$m x] $e: got $got want $want")
         println(s"[scale] ${m}x $e rows OK: $got (= by-construction)")
+      }
+      // content digests: two builds agree on the tables iff the
+      // `[digest]` lines of their outputs are equal
+      graft.operators.Loads.digestReport(checks.map { case (e, _, _) =>
+        val df = spark.read.parquet(s"$out/$e")
+        e -> ((df, df.columns.toSeq.sorted))
+      }.toMap).collect().foreach { r =>
+        println(s"[digest] ${m}x ${r.getString(0)} rows=${r.getLong(1)} digest=${r.getString(2)}")
       }
       (durations(log.currentFile), fx, out)
     }
