@@ -248,8 +248,8 @@ object Analytics {
     * formulation shuffled the fact table twice more to build the same
     * pairs through a join — the lesson [[frequentTriples]] recorded
     * one lattice level up, now applied here too. Small inputs (total
-    * set cells after collapse within the shared [[graft.fitsDriver]]
-    * gate) count on the driver instead — one job, zero further
+    * set cells after collapse within the shared [[graft.hybrid]]
+    * rung) count on the driver instead — one job, zero further
     * shuffles — with both paths asserted bit-equal (Round4OpsSpec).
     *
     * All counts are exact integers; lift = (N·supp_ab)/(supp_a·supp_b)
@@ -263,49 +263,52 @@ object Analytics {
     */
   def basketLift(baskets: DataFrame, basketCol: String, itemCol: String,
                  minSupport: Long): DataFrame = {
+    val spark = baskets.sparkSession
+    import spark.implicits._
     val bs = baskets
       .groupBy(col(basketCol).as("bk"))
       .agg(sort_array(collect_set(col(itemCol))).as("items"))
+      .select(col("items"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val st = bs.agg(count(lit(1)),
       coalesce(sum(size(col("items"))), lit(0L))).head
     val nBaskets = st.getLong(0)
     // 32 bytes per set cell: the item string plus its driver count entry
-    if (graft.fitsDriver(baskets.sparkSession, st.getLong(1) * 32)) {
-      val out = localPairCounts(bs, nBaskets, minSupport)
-      bs.unpersist()
-      return out
+    graft.hybridSized("basketLift", bs.as[Seq[String]], st.getLong(1) * 32)(
+        sets => Some(localPairCounts(sets, nBaskets, minSupport)
+          .toDF("item_a", "item_b", "supp_a", "supp_b", "supp_ab",
+            "confidence", "lift"))) { bs =>
+      val supp = bs.select(explode(col("items")).as("it"))
+        .groupBy(col("it")).agg(count(lit(1)).as("supp"))
+        .filter(col("supp") >= minSupport) // a-priori: prune before pairing
+      val f1arr = supp.agg(sort_array(collect_list(col("it"))).as("f1"))
+      val pairs = bs.crossJoin(broadcast(f1arr))
+        .select(filter(col("items"), x => array_contains(col("f1"), x))
+          .as("items"))
+        .filter(size(col("items")) >= 2)
+        .select(explode(flatten(transform(col("items"), (x, i) =>
+          transform(slice(col("items"), i + lit(2), size(col("items"))),
+            y => struct(x.as("a"), y.as("b")))))).as("p"))
+        .groupBy(col("p.a").as("item_a"), col("p.b").as("item_b"))
+        .agg(count(lit(1)).as("supp_ab"))
+        .filter(col("supp_ab") >= minSupport)
+      val out = pairs
+        .join(broadcast(supp.select(col("it").as("item_a"),
+          col("supp").as("supp_a"))), "item_a")
+        .join(broadcast(supp.select(col("it").as("item_b"),
+          col("supp").as("supp_b"))), "item_b")
+        .select(col("item_a"), col("item_b"),
+          col("supp_a"), col("supp_b"), col("supp_ab"),
+          (col("supp_ab").cast("double") / col("supp_a").cast("double"))
+            .as("confidence"),
+          // nBaskets is already an exact collected long — a literal, not
+          // another broadcast-crossJoin job
+          ((lit(nBaskets) * col("supp_ab")).cast("double") /
+            (col("supp_a") * col("supp_b")).cast("double")).as("lift"))
+      // bounded output (pairs above minSupport): seal — materialize,
+      // release the persisted basket table (graft.sealResult contract)
+      graft.sealResult(out, bs)
     }
-    val supp = bs.select(explode(col("items")).as("it"))
-      .groupBy(col("it")).agg(count(lit(1)).as("supp"))
-      .filter(col("supp") >= minSupport) // a-priori: prune before pairing
-    val f1arr = supp.agg(sort_array(collect_list(col("it"))).as("f1"))
-    val pairs = bs.crossJoin(broadcast(f1arr))
-      .select(filter(col("items"), x => array_contains(col("f1"), x))
-        .as("items"))
-      .filter(size(col("items")) >= 2)
-      .select(explode(flatten(transform(col("items"), (x, i) =>
-        transform(slice(col("items"), i + lit(2), size(col("items"))),
-          y => struct(x.as("a"), y.as("b")))))).as("p"))
-      .groupBy(col("p.a").as("item_a"), col("p.b").as("item_b"))
-      .agg(count(lit(1)).as("supp_ab"))
-      .filter(col("supp_ab") >= minSupport)
-    val out = pairs
-      .join(broadcast(supp.select(col("it").as("item_a"),
-        col("supp").as("supp_a"))), "item_a")
-      .join(broadcast(supp.select(col("it").as("item_b"),
-        col("supp").as("supp_b"))), "item_b")
-      .select(col("item_a"), col("item_b"),
-        col("supp_a"), col("supp_b"), col("supp_ab"),
-        (col("supp_ab").cast("double") / col("supp_a").cast("double"))
-          .as("confidence"),
-        // nBaskets is already an exact collected long — a literal, not
-        // another broadcast-crossJoin job
-        ((lit(nBaskets) * col("supp_ab")).cast("double") /
-          (col("supp_a") * col("supp_b")).cast("double")).as("lift"))
-    // bounded output (pairs above minSupport): seal — materialize,
-    // release the persisted basket table (graft.sealResult contract)
-    graft.sealResult(out, bs)
   }
 
   /** Driver-side pair counting over collected basket sets — the
@@ -315,11 +318,9 @@ object Analytics {
     * sorted from `sort_array`, so i<j iteration preserves the
     * item_a < item_b contract.
     */
-  private def localPairCounts(bs: DataFrame, nBaskets: Long,
-                              minSupport: Long): DataFrame = {
-    val spark = bs.sparkSession
-    import spark.implicits._
-    val sets = bs.select(col("items")).as[Seq[String]].collect()
+  private def localPairCounts(sets: Array[Seq[String]], nBaskets: Long,
+      minSupport: Long): Seq[(String, String, Long, Long, Long, Double,
+      Double)] = {
     val supp = scala.collection.mutable.HashMap.empty[String, Long]
     sets.foreach(_.foreach(it =>
       supp.update(it, supp.getOrElse(it, 0L) + 1L)))
@@ -338,7 +339,7 @@ object Analytics {
         i += 1
       }
     }
-    val rows = pair.iterator
+    pair.iterator
       .filter(_._2 >= minSupport)
       .map { case ((a, b), ab) =>
         val sa = freq(a); val sb = freq(b)
@@ -346,8 +347,6 @@ object Analytics {
           ab.toDouble / sa.toDouble,
           (nBaskets * ab).toDouble / (sa * sb).toDouble)
       }.toSeq
-    spark.createDataFrame(rows).toDF("item_a", "item_b",
-      "supp_a", "supp_b", "supp_ab", "confidence", "lift")
   }
 
   /** Frequent 3-itemsets with RELATIVE minimum support (Agrawal &
@@ -380,9 +379,12 @@ object Analytics {
   def frequentTriples(baskets: DataFrame, basketCol: String,
                       itemCol: String, minSupportBp: Int): DataFrame = {
     require(minSupportBp > 0 && minSupportBp <= 10000)
+    val spark = baskets.sparkSession
+    import spark.implicits._
     val bs0 = baskets
       .groupBy(col(basketCol).as("bk"))
       .agg(sort_array(collect_set(col(itemCol))).as("items0"))
+      .select(col("items0"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val st = bs0.agg(count(lit(1)),
       coalesce(sum(size(col("items0"))), lit(0L))).head
@@ -395,51 +397,51 @@ object Analytics {
     // further shuffles (the Graph.scala hybrid-rung pattern; both paths
     // asserted bit-equal in Round4OpsSpec). 32 bytes per set cell, the
     // basketLift footprint.
-    if (graft.fitsDriver(baskets.sparkSession, st.getLong(1) * 32)) {
-      val out = localTripleCounts(bs0, nBaskets, minsup)
-      bs0.unpersist()
-      return out
-    }
-    // level 1: frequent items → broadcast array filtering basket sets
-    val f1arr = bs0.select(explode(col("items0")).as("it"))
-      .groupBy(col("it")).agg(count(lit(1)).as("s1"))
-      .filter(col("s1") >= minsup)
-      .agg(sort_array(collect_list(col("it"))).as("f1arr"))
-    val bs = bs0.crossJoin(broadcast(f1arr))
-      .select(col("bk"),
-        filter(col("items0"), x => array_contains(col("f1arr"), x))
+    graft.hybridSized("frequentTriples", bs0.as[Seq[String]],
+        st.getLong(1) * 32)(sets =>
+      Some(localTripleCounts(sets, nBaskets, minsup)
+        .toDF("item_a", "item_b", "item_c", "supp_abc", "support"))) {
+        bs0 =>
+      // level 1: frequent items → broadcast array filtering basket sets
+      val f1arr = bs0.select(explode(col("items0")).as("it"))
+        .groupBy(col("it")).agg(count(lit(1)).as("s1"))
+        .filter(col("s1") >= minsup)
+        .agg(sort_array(collect_list(col("it"))).as("f1arr"))
+      val bs = bs0.crossJoin(broadcast(f1arr))
+        .select(filter(col("items0"), x => array_contains(col("f1arr"), x))
           .as("items"))
-      .filter(size(col("items")) >= 2)
-    // in-row (a, b, rest-after-b) candidates: i < j in the sorted set
-    val pairRest = flatten(transform(col("items"), (x, i) =>
-      transform(slice(col("items"), i + lit(2), size(col("items"))),
-        (y, k) => struct(x.as("ia"), y.as("ib"),
-          slice(col("items"), i + k + lit(3), size(col("items")))
-            .as("rest")))))
-    val cand = bs.select(explode(pairRest).as("pr"))
-      .select(col("pr.ia").as("ia"), col("pr.ib").as("ib"),
-        col("pr.rest").as("rest"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // level 2: frequent pairs (bounded by frequent-item²), broadcast
-    val p2 = cand.groupBy(col("ia"), col("ib"))
-      .agg(count(lit(1)).as("s2"))
-      .filter(col("s2") >= minsup)
-      .select(col("ia").as("pa"), col("ib").as("pb"))
-    // level 3: third item explodes only under a frequent (a, b)
-    val triples = cand
-      .join(broadcast(p2),
-        col("ia") === col("pa") && col("ib") === col("pb"), "left_semi")
-      .select(col("ia"), col("ib"), explode(col("rest")).as("ic"))
-      .groupBy(col("ia").as("item_a"), col("ib").as("item_b"),
-        col("ic").as("item_c"))
-      .agg(count(lit(1)).as("supp_abc"))
-      .filter(col("supp_abc") >= minsup)
-    graft.sealResult(
-      triples.select(col("item_a"), col("item_b"), col("item_c"),
-        col("supp_abc"),
-        round(col("supp_abc").cast("double") / lit(nBaskets.toDouble), 6)
-          .as("support")),
-      bs0, cand)
+        .filter(size(col("items")) >= 2)
+      // in-row (a, b, rest-after-b) candidates: i < j in the sorted set
+      val pairRest = flatten(transform(col("items"), (x, i) =>
+        transform(slice(col("items"), i + lit(2), size(col("items"))),
+          (y, k) => struct(x.as("ia"), y.as("ib"),
+            slice(col("items"), i + k + lit(3), size(col("items")))
+              .as("rest")))))
+      val cand = bs.select(explode(pairRest).as("pr"))
+        .select(col("pr.ia").as("ia"), col("pr.ib").as("ib"),
+          col("pr.rest").as("rest"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // level 2: frequent pairs (bounded by frequent-item²), broadcast
+      val p2 = cand.groupBy(col("ia"), col("ib"))
+        .agg(count(lit(1)).as("s2"))
+        .filter(col("s2") >= minsup)
+        .select(col("ia").as("pa"), col("ib").as("pb"))
+      // level 3: third item explodes only under a frequent (a, b)
+      val triples = cand
+        .join(broadcast(p2),
+          col("ia") === col("pa") && col("ib") === col("pb"), "left_semi")
+        .select(col("ia"), col("ib"), explode(col("rest")).as("ic"))
+        .groupBy(col("ia").as("item_a"), col("ib").as("item_b"),
+          col("ic").as("item_c"))
+        .agg(count(lit(1)).as("supp_abc"))
+        .filter(col("supp_abc") >= minsup)
+      graft.sealResult(
+        triples.select(col("item_a"), col("item_b"), col("item_c"),
+          col("supp_abc"),
+          round(col("supp_abc").cast("double") / lit(nBaskets.toDouble), 6)
+            .as("support")),
+        bs0, cand)
+    }
   }
 
   /** Driver-side Apriori lattice over collected basket sets — the
@@ -449,11 +451,8 @@ object Analytics {
     * `BigDecimal(x).setScale(6, HALF_UP)` is exactly Spark's
     * `round(double, 6)` evaluation.
     */
-  private def localTripleCounts(bs0: DataFrame, nBaskets: Long,
-                                minsup: Long): DataFrame = {
-    val spark = bs0.sparkSession
-    import spark.implicits._
-    val sets = bs0.select(col("items0")).as[Seq[String]].collect()
+  private def localTripleCounts(sets: Array[Seq[String]], nBaskets: Long,
+      minsup: Long): Seq[(String, String, String, Long, Double)] = {
     val s1 = scala.collection.mutable.HashMap.empty[String, Long]
     sets.foreach(_.foreach(it =>
       s1.update(it, s1.getOrElse(it, 0L) + 1L)))
@@ -495,13 +494,11 @@ object Analytics {
         i += 1
       }
     }
-    val rows = s3.iterator.filter(_._2 >= minsup).map { case ((a, b, c), s) =>
+    s3.iterator.filter(_._2 >= minsup).map { case ((a, b, c), s) =>
       (a, b, c, s,
         BigDecimal(s.toDouble / nBaskets.toDouble)
           .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
     }.toSeq
-    spark.createDataFrame(rows).toDF("item_a", "item_b", "item_c",
-      "supp_abc", "support")
   }
 
   /** A/B experiment read-out: per variant the metric moments, the

@@ -34,7 +34,7 @@ object Graph {
     * Hybrid execution: dedup funnels usually reduce a huge corpus to a
     * SMALL edge set (pairs that survived LSH + verification), so when
     * the canonical edge list fits comfortably on the driver (the
-    * shared [[graft.fitsDriver]] gate at 16 bytes per edge: 2M edges
+    * shared [[graft.hybrid]] rung at 16 bytes per edge: 2M edges
     * ≈ 32 MB at the default bound) we collect it and run union-find —
     * one job, O(E·α) — instead of O(diameter) iterated shuffles.
     * Above the bound the distributed min-label-propagation loop runs
@@ -48,6 +48,7 @@ object Graph {
     */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
                           maxIter: Int = 25): DataFrame = {
+    import edges.sparkSession.implicits._
     // canonicalize to undirected (min,max) edges FIRST and persist:
     // the naive union(e, e.swapped) evaluates the upstream pipeline —
     // often an expensive dedup-candidate join — TWICE before any cache
@@ -58,72 +59,67 @@ object Graph {
       .select(least(col("s"), col("d")).as("src"),
         greatest(col("s"), col("d")).as("dst"))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // 16 bytes per edge: one (src, dst) long pair
-    if (graft.fitsDriver(edges.sparkSession, und.count() * 16)) {
-      // union-find treats edges as undirected — no symmetrization needed
-      val result = localUnionFind(und)
-      und.unpersist()
-      return result
-    }
-    // symmetrize (from cache) so min-propagation flows both directions
-    val sym = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    sym.count()
-    und.unpersist()
-    // round 0 fused into init: label₀ = min(id, direct neighbors) — one
-    // groupBy instead of an identity-label table plus a full round
-    var labels = sym
-      .groupBy(col("src"))
-      .agg(min(col("dst")).as("mn"))
-      .select(col("src").as("id"), least(col("src"), col("mn")).as("comp"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // sum(comp) strictly decreases while any label can still shrink, so
-    // an unchanged sum IS the fixpoint — one scalar per round crosses
-    // the driver, never the label table
-    var prevSum = labels.agg(sum(col("comp"))).head.getLong(0)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val nbrMin = sym.join(labels, sym("dst") === labels("id"))
-        .groupBy(sym("src").as("id"))
-        .agg(min(col("comp")).as("nbr_comp"))
-      val next = labels.as("l")
-        .join(nbrMin.as("n"), col("l.id") === col("n.id"), "left")
-        .select(col("l.id").as("id"),
-          least(col("l.comp"), coalesce(col("n.nbr_comp"), col("l.comp")))
-            .as("comp"))
+    // 16 bytes per edge: one (src, dst) long pair; union-find treats
+    // edges as undirected — no symmetrization needed
+    graft.hybrid("connectedComponents", und.as[(Long, Long)], 16)(es =>
+      Some(localUnionFind(es).toDF("id", "comp")
+        .repartition(col("comp")))) { (und, _) =>
+      // symmetrize (from cache) so min-propagation flows both directions
+      val sym = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val s = next.agg(sum(col("comp"))).head.getLong(0)
+      sym.count()
+      und.unpersist()
+      // round 0 fused into init: label₀ = min(id, direct neighbors) — one
+      // groupBy instead of an identity-label table plus a full round
+      var labels = sym
+        .groupBy(col("src"))
+        .agg(min(col("dst")).as("mn"))
+        .select(col("src").as("id"), least(col("src"), col("mn")).as("comp"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // sum(comp) strictly decreases while any label can still shrink, so
+      // an unchanged sum IS the fixpoint — one scalar per round crosses
+      // the driver, never the label table
+      var prevSum = labels.agg(sum(col("comp"))).head.getLong(0)
+      var iter = 0
+      var converged = false
+      while (!converged && iter < maxIter) {
+        val nbrMin = sym.join(labels, sym("dst") === labels("id"))
+          .groupBy(sym("src").as("id"))
+          .agg(min(col("comp")).as("nbr_comp"))
+        val next = labels.as("l")
+          .join(nbrMin.as("n"), col("l.id") === col("n.id"), "left")
+          .select(col("l.id").as("id"),
+            least(col("l.comp"), coalesce(col("n.nbr_comp"), col("l.comp")))
+              .as("comp"))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        val s = next.agg(sum(col("comp"))).head.getLong(0)
+        labels.unpersist()
+        labels = next
+        converged = s == prevSum
+        prevSum = s
+        iter += 1
+      }
+      sym.unpersist()
+      if (!converged) {
+        labels.unpersist()
+        throw new IllegalStateException(
+          s"connectedComponents: no fixpoint after $maxIter rounds — " +
+            "component diameter exceeds maxIter; raise maxIter " +
+            "(labels would be incorrect, refusing to return them)")
+      }
+      // materialize eagerly, then release the cache slot: callers get a
+      // self-contained result with no dangling persisted lineage to leak
+      val out = labels.localCheckpoint(true)
       labels.unpersist()
-      labels = next
-      converged = s == prevSum
-      prevSum = s
-      iter += 1
+      out
     }
-    sym.unpersist()
-    if (!converged) {
-      labels.unpersist()
-      throw new IllegalStateException(
-        s"connectedComponents: no fixpoint after $maxIter rounds — " +
-          "component diameter exceeds maxIter; raise maxIter " +
-          "(labels would be incorrect, refusing to return them)")
-    }
-    // materialize eagerly, then release the cache slot: callers get a
-    // self-contained result with no dangling persisted lineage to leak
-    val out = labels.localCheckpoint(true)
-    labels.unpersist()
-    out
   }
 
   /** Driver-side union-find over a collected edge list — the small-
     * graph fast path. Path-halving + union-by-min keeps the root the
     * MINIMUM id of its set, matching the distributed labeling exactly.
     */
-  private def localUnionFind(sym: DataFrame): DataFrame = {
-    val spark = sym.sparkSession
-    import spark.implicits._
-    val es = sym.as[(Long, Long)].collect()
+  private def localUnionFind(es: Array[(Long, Long)]): Seq[(Long, Long)] = {
     val parent = new scala.collection.mutable.HashMap[Long, Long]()
     def find(x: Long): Long = {
       var r = x
@@ -142,9 +138,7 @@ object Graph {
       if (ra < rb) parent(rb) = ra
       else if (rb < ra) parent(ra) = rb
     }
-    val labeled = parent.keys.toArray.map(id => (id, find(id)))
-    spark.createDataset(labeled.toSeq).toDF("id", "comp")
-      .repartition(col("comp"))
+    parent.keys.toSeq.map(id => (id, find(id)))
   }
 
   /** Cluster roll-up: one row per component with its size and the
@@ -172,51 +166,50 @@ object Graph {
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                damping: Double = 0.85, iterations: Int = 10): DataFrame = {
+    import edges.sparkSession.implicits._
     val e = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
     // hybrid execution, same rationale as connectedComponents: dedup
     // funnels reduce a huge corpus to a SMALL edge set, where 10
     // distributed rounds are pure scheduling floor — collect and power-
     // iterate on the driver instead. Above the gate: the distributed
     // loop, unchanged. 16 bytes per edge: one (src, dst) long pair.
-    if (graft.fitsDriver(edges.sparkSession, e.count() * 16)) {
-      val result = localPageRank(e, damping, iterations)
+    graft.hybrid("pageRank", e.as[(Long, Long)], 16)(es =>
+      Some(localPageRank(es, damping, iterations).toDF("id", "rank"))) {
+        (e, _) =>
+      val nodes = e.select(col("src").as("id"))
+        .union(e.select(col("dst").as("id"))).distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val n = nodes.count()
+      val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      val withDeg = e.join(outdeg, "src")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val base = (1.0 - damping) / n
+      var ranks = nodes.select(col("id"), lit(1.0 / n).as("rank"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      for (_ <- 1 to iterations) {
+        val contribs = withDeg.join(ranks, withDeg("src") === ranks("id"))
+          .groupBy(col("dst").as("id"))
+          .agg(sum(col("rank") / col("deg")).as("inflow"))
+        // localCheckpoint (eager) TRUNCATES LINEAGE each round — without
+        // it the plan nests one join level per iteration: generated code
+        // blows past JIT/janino limits and plan rendering itself is
+        // quadratic. A cluster run over billions of edges would use
+        // reliable checkpoint() to HDFS instead, same reason.
+        val next = nodes.join(contribs, Seq("id"), "left")
+          .select(col("id"),
+            (lit(base) + lit(damping) * coalesce(col("inflow"), lit(0.0)))
+              .as("rank"))
+          .localCheckpoint(true)
+        ranks.unpersist()
+        ranks = next
+      }
+      nodes.unpersist()
+      withDeg.unpersist()
       e.unpersist()
-      return result
+      ranks
     }
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count()
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val withDeg = e.join(outdeg, "src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val base = (1.0 - damping) / n
-    var ranks = nodes.select(col("id"), lit(1.0 / n).as("rank"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    for (_ <- 1 to iterations) {
-      val contribs = withDeg.join(ranks, withDeg("src") === ranks("id"))
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("rank") / col("deg")).as("inflow"))
-      // localCheckpoint (eager) TRUNCATES LINEAGE each round — without
-      // it the plan nests one join level per iteration: generated code
-      // blows past JIT/janino limits and plan rendering itself is
-      // quadratic. A cluster run over billions of edges would use
-      // reliable checkpoint() to HDFS instead, same reason.
-      val next = nodes.join(contribs, Seq("id"), "left")
-        .select(col("id"),
-          (lit(base) + lit(damping) * coalesce(col("inflow"), lit(0.0)))
-            .as("rank"))
-        .localCheckpoint(true)
-      ranks.unpersist()
-      ranks = next
-    }
-    nodes.unpersist()
-    withDeg.unpersist()
-    e.unpersist()
-    ranks
   }
 
   /** E30b: fixed-point PageRank — the ENGINE-PORTABLE twin of
@@ -244,7 +237,7 @@ object Graph {
     * in exchange for determinism the float form cannot offer.
     *
     * Same hybrid execution as [[pageRank]]: graphs that pass the
-    * shared [[graft.fitsDriver]] gate power-iterate on the driver
+    * shared [[graft.hybrid]] rung power-iterate on the driver
     * (identical integer ops ⇒ identical result to the distributed
     * loop, asserted in GraphSamplingSpec); larger graphs run the two-shuffle
     * distributed rounds with per-round localCheckpoint lineage
@@ -255,65 +248,9 @@ object Graph {
   def pageRankFixed(edges: DataFrame, srcCol: String, dstCol: String,
                     dampNum: Long = 85L, dampDen: Long = 100L,
                     iterations: Int = 5,
-                    scale: Long = 1000000000000L): DataFrame = {
-    val spark = edges.sparkSession
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // 16 bytes per edge: one (src, dst) long pair
-    if (graft.fitsDriver(spark, e.count() * 16)) {
-      import spark.implicits._
-      val es = e.as[(Long, Long)].collect()
-      e.unpersist()
-      val ids = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
-      val idx = ids.zipWithIndex.toMap
-      val n = ids.length
-      val deg = new Array[Long](n)
-      es.foreach { case (s, _) => deg(idx(s)) += 1 }
-      val adj = es.map { case (s, d) => (idx(s), idx(d)) }
-        .groupBy(_._1).map { case (s, arr) => s -> arr.map(_._2) }
-      val base = ((dampDen - dampNum) * scale) / (dampDen * n)
-      var rank = Array.fill(n)(scale / n)
-      for (_ <- 1 to iterations) {
-        val inflow = new Array[Long](n)
-        adj.foreach { case (s, ds) =>
-          val c = rank(s) / deg(s)
-          ds.foreach(d => inflow(d) += c)
-        }
-        rank = inflow.map(f => base + (dampNum * f) / dampDen)
-      }
-      return spark.createDataset(ids.toSeq.map(id => (id, rank(idx(id)))))
-        .toDF("id", "rank_fp")
-    }
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count()
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val withDeg = e.join(outdeg, "src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val base = ((dampDen - dampNum) * scale) / (dampDen * n)
-    var ranks = nodes.select(col("id"), lit(scale / n).as("rank_fp"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    for (_ <- 1 to iterations) {
-      val contribs = withDeg.join(ranks, withDeg("src") === ranks("id"))
-        .groupBy(col("dst").as("id"))
-        .agg(sum(expr("rank_fp div deg")).as("inflow"))
-      val next = nodes.join(contribs, Seq("id"), "left")
-        .select(col("id"),
-          (lit(base) +
-            expr(s"($dampNum * coalesce(inflow, 0L)) div $dampDen"))
-            .as("rank_fp"))
-        .localCheckpoint(true)
-      ranks.unpersist()
-      ranks = next
-    }
-    nodes.unpersist()
-    withDeg.unpersist()
-    e.unpersist()
-    ranks
-  }
+                    scale: Long = 1000000000000L): DataFrame =
+    fixedRank("pageRankFixed", edges, srcCol, dstCol, None, dampNum,
+      dampDen, iterations, scale)
 
   /** HITS hubs & authorities (Kleinberg, JACM 1999) over a directed
     * edge list, fixed-point integer variant — the web-relevance pair
@@ -341,13 +278,13 @@ object Graph {
     */
   def hitsFixedPoint(edges: DataFrame, srcCol: String, dstCol: String,
                      rounds: Int = 2, scale: Long = 1000000L): DataFrame = {
+    import edges.sparkSession.implicits._
     require(rounds >= 1 && rounds <= 8 && scale >= 1000L)
     val e = edges.select(col(srcCol).cast("string").as("src"),
         col(dstCol).cast("string").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
         col("src") =!= col("dst"))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
     // hybrid small-graph rung (the CC/PageRank/LPA discipline): under
     // the size gate the 4·rounds tiny sequential jobs are pure
     // scheduling floor — run the identical integer recurrence on
@@ -355,11 +292,7 @@ object Graph {
     // everything is exact integer arithmetic, so equality is ==).
     // 64 bytes per edge, not the long-id operators' 16: node ids here
     // are STRINGS (URLs), several times the size of a long pair.
-    if (graft.fitsDriver(edges.sparkSession, e.count() * 64)) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val es = e.as[(String, String)].collect()
-      e.unpersist()
+    graft.hybrid("hitsFixedPoint", e.as[(String, String)], 64) { es =>
       val ids = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
       val idx = ids.zipWithIndex.toMap
       val n = ids.length
@@ -379,59 +312,60 @@ object Graph {
         out.foreach { case (s, d) => hRaw(s) += auth(d) }
         hub = normalize(hRaw)
       }
-      return ids.indices.map(i => (ids(i), hub(i), auth(i)))
-        .toDF("id", "hub_fp", "auth_fp")
+      Some(ids.indices.map(i => (ids(i), hub(i), auth(i)))
+        .toDF("id", "hub_fp", "auth_fp"))
+    } { (e, _) =>
+      val nodes = e.select(col("src").as("id"))
+        .union(e.select(col("dst"))).distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // loud overflow guard (the knn/silhouette data-validation
+      // discipline): the normalization computes s·scale with
+      // s ≤ maxDegree·scale, so maxDegree must stay ≤ Long.Max/scale² —
+      // validate the GRAPH and fail instead of wrapping negative. One
+      // cheap degree aggregate; only the distributed branch needs it
+      // (the local rung goes through BigInt).
+      val maxDeg = e.select(col("src").as("n"))
+        .unionAll(e.select(col("dst").as("n")))
+        .groupBy(col("n")).agg(count(lit(1)).as("d"))
+        .agg(max(col("d"))).head.getLong(0)
+      require(maxDeg <= Long.MaxValue / scale / scale,
+        s"hitsFixedPoint: max node degree $maxDeg exceeds the Long-safe " +
+          s"bound ${Long.MaxValue / scale / scale} at scale=$scale — " +
+          "lower `scale` for this graph")
+      def normalized(raw: DataFrame, outCol: String): DataFrame = {
+        // full node frame (zero-fill) → renormalize so the round max is
+        // exactly `scale`; floor div, deterministic
+        val full = nodes.join(raw, Seq("id"), "left")
+          .select(col("id"), coalesce(col("s"), lit(0L)).as("s"))
+        val mx = full.agg(max(col("s")).as("mx"))
+        full.crossJoin(broadcast(mx))
+          .select(col("id"),
+            when(col("mx") > 0, expr(s"(s * ${scale}L) div mx"))
+              .otherwise(lit(0L)).as(outCol))
+      }
+      var hub = nodes.select(col("id"), lit(scale).as("hub_fp"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      var auth: DataFrame = null
+      for (_ <- 1 to rounds) {
+        val aNext = normalized(
+          e.join(hub.withColumnRenamed("id", "src"), "src")
+            .groupBy(col("dst").as("id")).agg(sum(col("hub_fp")).as("s")),
+          "auth_fp").persist(StorageLevel.MEMORY_AND_DISK)
+        aNext.count()
+        if (auth != null) auth.unpersist()
+        auth = aNext
+        val hNext = normalized(
+          e.join(auth.withColumnRenamed("id", "dst"), "dst")
+            .groupBy(col("src").as("id")).agg(sum(col("auth_fp")).as("s")),
+          "hub_fp").persist(StorageLevel.MEMORY_AND_DISK)
+        hNext.count()
+        hub.unpersist()
+        hub = hNext
+      }
+      val out = hub.join(auth, Seq("id")).localCheckpoint(true)
+      hub.unpersist(); auth.unpersist(); nodes.unpersist(); e.unpersist()
+      out
     }
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // loud overflow guard (the knn/silhouette data-validation
-    // discipline): the normalization computes s·scale with
-    // s ≤ maxDegree·scale, so maxDegree must stay ≤ Long.Max/scale² —
-    // validate the GRAPH and fail instead of wrapping negative. One
-    // cheap degree aggregate; only the distributed branch needs it
-    // (the local rung goes through BigInt).
-    val maxDeg = e.select(col("src").as("n"))
-      .unionAll(e.select(col("dst").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("d"))
-      .agg(max(col("d"))).head.getLong(0)
-    require(maxDeg <= Long.MaxValue / scale / scale,
-      s"hitsFixedPoint: max node degree $maxDeg exceeds the Long-safe " +
-        s"bound ${Long.MaxValue / scale / scale} at scale=$scale — " +
-        "lower `scale` for this graph")
-    def normalized(raw: DataFrame, outCol: String): DataFrame = {
-      // full node frame (zero-fill) → renormalize so the round max is
-      // exactly `scale`; floor div, deterministic
-      val full = nodes.join(raw, Seq("id"), "left")
-        .select(col("id"), coalesce(col("s"), lit(0L)).as("s"))
-      val mx = full.agg(max(col("s")).as("mx"))
-      full.crossJoin(broadcast(mx))
-        .select(col("id"),
-          when(col("mx") > 0, expr(s"(s * ${scale}L) div mx"))
-            .otherwise(lit(0L)).as(outCol))
-    }
-    var hub = nodes.select(col("id"), lit(scale).as("hub_fp"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var auth: DataFrame = null
-    for (_ <- 1 to rounds) {
-      val aNext = normalized(
-        e.join(hub.withColumnRenamed("id", "src"), "src")
-          .groupBy(col("dst").as("id")).agg(sum(col("hub_fp")).as("s")),
-        "auth_fp").persist(StorageLevel.MEMORY_AND_DISK)
-      aNext.count()
-      if (auth != null) auth.unpersist()
-      auth = aNext
-      val hNext = normalized(
-        e.join(auth.withColumnRenamed("id", "dst"), "dst")
-          .groupBy(col("src").as("id")).agg(sum(col("auth_fp")).as("s")),
-        "hub_fp").persist(StorageLevel.MEMORY_AND_DISK)
-      hNext.count()
-      hub.unpersist()
-      hub = hNext
-    }
-    val out = hub.join(auth, Seq("id")).localCheckpoint(true)
-    hub.unpersist(); auth.unpersist(); nodes.unpersist(); e.unpersist()
-    out
   }
 
   /** Driver-local forward-oriented triangle enumeration for the
@@ -512,81 +446,78 @@ object Graph {
     */
   def triangleStats(edges: DataFrame, srcCol: String, dstCol: String,
                     degreeOrdered: Boolean = true): DataFrame = {
+    import edges.sparkSession.implicits._
     val und = edges.select(col(srcCol).cast("long").as("s"),
         col(dstCol).cast("long").as("d"))
       .filter(col("s") =!= col("d"))
       .select(least(col("s"), col("d")).as("a"),
         greatest(col("s"), col("d")).as("b"))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
     // hybrid small-graph rung (CC/PageRank/LPA/HITS discipline): the
     // wedge joins are pure scheduling floor under the size gate — the
     // driver enumeration is the same forward orientation, bit-equal
     // (GraphSamplingSpec). 64 bytes per edge: the pair plus its two
     // adjacency entries and the per-node degree/triangle counters.
-    if (graft.fitsDriver(edges.sparkSession, und.count() * 64)) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val es = und.as[(Long, Long)].collect()
-      und.unpersist()
+    graft.hybrid("triangleStats", und.as[(Long, Long)], 64) { es =>
       val (dg, _, total) = localTriangleCounts(es)
       val wedges = dg.values.map(d => d * (d - 1) / 2).sum
       val clustering =
         if (wedges > 0) Some((total * 3).toDouble / wedges.toDouble)
         else None
-      return Seq((dg.size.toLong, es.length.toLong, total, clustering))
-        .toDF("n_nodes", "n_edges", "n_triangles", "clustering")
+      Some(Seq((dg.size.toLong, es.length.toLong, total, clustering))
+        .toDF("n_nodes", "n_edges", "n_triangles", "clustering"))
+    } { (und, _) =>
+      val deg = und.select(explode(array(col("a"), col("b"))).as("p"))
+        .groupBy(col("p")).agg(count(lit(1)).as("d"))
+      // d(d−1) is even, so DIV keeps the wedge sum in exact integers —
+      // a float `/` would sum doubles in partition order
+      val nodeStats = deg.agg(count(lit(1)).as("n_nodes"),
+        sum(expr("d * (d - 1) DIV 2")).cast("long").as("wedges"))
+      val edgeStats = und.agg(count(lit(1)).as("n_edges"))
+      var oriented: DataFrame = null
+      val tri = if (degreeOrdered) {
+        // rank r(v) = (deg v, v); orient lo-rank → hi-rank, out-edges
+        // carry the dst rank so the wedge dedup needs no further join
+        val dd = und
+          .join(deg.select(col("p").as("a"), col("d").as("da")), "a")
+          .join(deg.select(col("p").as("b"), col("d").as("db")), "b")
+        oriented = dd.select(
+            when(col("da") < col("db") ||
+                 (col("da") === col("db") && col("a") < col("b")),
+              struct(col("a").as("src"), col("b").as("dst"),
+                col("db").as("dd")))
+            .otherwise(struct(col("b").as("src"), col("a").as("dst"),
+              col("da").as("dd"))).as("e"))
+          .select(col("e.src").as("src"), col("e.dst").as("dst"),
+            col("e.dd").as("dd"))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        val w1 = oriented.toDF("src", "x", "dx")
+        val w2 = oriented.toDF("src", "y", "dy")
+        // each wedge once: (rank x) < (rank y); the closing edge, if it
+        // exists, is oriented x→y by transitivity of the rank order
+        w1.join(w2, "src")
+          .filter(col("dx") < col("dy") ||
+            (col("dx") === col("dy") && col("x") < col("y")))
+          .join(oriented.select(col("src").as("x"), col("dst").as("y")),
+            Seq("x", "y"), "left_semi")
+          .agg(count(lit(1)).as("n_triangles"))
+      } else {
+        val e1 = und.toDF("a", "b")
+        val e2 = und.toDF("b", "c")
+        val e3 = und.toDF("a", "c")
+        e1.join(e2, "b").join(e3, Seq("a", "c"), "left_semi")
+          .agg(count(lit(1)).as("n_triangles"))
+      }
+      val out = nodeStats.crossJoin(edgeStats).crossJoin(tri)
+        .select(col("n_nodes"), col("n_edges"), col("n_triangles"),
+          when(col("wedges") > 0,
+            (col("n_triangles") * 3).cast("double") /
+              col("wedges").cast("double")).as("clustering"))
+        .localCheckpoint(true)
+      if (oriented != null) oriented.unpersist()
+      und.unpersist()
+      out
     }
-    val deg = und.select(explode(array(col("a"), col("b"))).as("p"))
-      .groupBy(col("p")).agg(count(lit(1)).as("d"))
-    // d(d−1) is even, so DIV keeps the wedge sum in exact integers —
-    // a float `/` would sum doubles in partition order
-    val nodeStats = deg.agg(count(lit(1)).as("n_nodes"),
-      sum(expr("d * (d - 1) DIV 2")).cast("long").as("wedges"))
-    val edgeStats = und.agg(count(lit(1)).as("n_edges"))
-    var oriented: DataFrame = null
-    val tri = if (degreeOrdered) {
-      // rank r(v) = (deg v, v); orient lo-rank → hi-rank, out-edges
-      // carry the dst rank so the wedge dedup needs no further join
-      val dd = und
-        .join(deg.select(col("p").as("a"), col("d").as("da")), "a")
-        .join(deg.select(col("p").as("b"), col("d").as("db")), "b")
-      oriented = dd.select(
-          when(col("da") < col("db") ||
-               (col("da") === col("db") && col("a") < col("b")),
-            struct(col("a").as("src"), col("b").as("dst"),
-              col("db").as("dd")))
-          .otherwise(struct(col("b").as("src"), col("a").as("dst"),
-            col("da").as("dd"))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"),
-          col("e.dd").as("dd"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val w1 = oriented.toDF("src", "x", "dx")
-      val w2 = oriented.toDF("src", "y", "dy")
-      // each wedge once: (rank x) < (rank y); the closing edge, if it
-      // exists, is oriented x→y by transitivity of the rank order
-      w1.join(w2, "src")
-        .filter(col("dx") < col("dy") ||
-          (col("dx") === col("dy") && col("x") < col("y")))
-        .join(oriented.select(col("src").as("x"), col("dst").as("y")),
-          Seq("x", "y"), "left_semi")
-        .agg(count(lit(1)).as("n_triangles"))
-    } else {
-      val e1 = und.toDF("a", "b")
-      val e2 = und.toDF("b", "c")
-      val e3 = und.toDF("a", "c")
-      e1.join(e2, "b").join(e3, Seq("a", "c"), "left_semi")
-        .agg(count(lit(1)).as("n_triangles"))
-    }
-    val out = nodeStats.crossJoin(edgeStats).crossJoin(tri)
-      .select(col("n_nodes"), col("n_edges"), col("n_triangles"),
-        when(col("wedges") > 0,
-          (col("n_triangles") * 3).cast("double") /
-            col("wedges").cast("double")).as("clustering"))
-      .localCheckpoint(true)
-    if (oriented != null) oriented.unpersist()
-    und.unpersist()
-    out
   }
 
   /** E76: per-node local clustering coefficient (Watts–Strogatz) over
@@ -614,81 +545,78 @@ object Graph {
     */
   def localClustering(edges: DataFrame, srcCol: String, dstCol: String,
                       degreeOrdered: Boolean = true): DataFrame = {
+    import edges.sparkSession.implicits._
     val und = edges.select(col(srcCol).cast("long").as("s"),
         col(dstCol).cast("long").as("d"))
       .filter(col("s") =!= col("d"))
       .select(least(col("s"), col("d")).as("a"),
         greatest(col("s"), col("d")).as("b"))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
     // hybrid small-graph rung, same enumeration crediting all corners
     // (64 bytes per edge, the triangleStats driver footprint)
-    if (graft.fitsDriver(edges.sparkSession, und.count() * 64)) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val es = und.as[(Long, Long)].collect()
-      und.unpersist()
+    graft.hybrid("localClustering", und.as[(Long, Long)], 64) { es =>
       val (dg, tri, _) = localTriangleCounts(es)
-      return dg.toSeq.map { case (id, d) =>
+      Some(dg.toSeq.map { case (id, d) =>
         val t = tri.getOrElse(id, 0L)
         (id, d, t,
           if (d >= 2) (t * 2).toDouble / (d * (d - 1)).toDouble else 0.0)
-      }.toDF("id", "degree", "n_tri", "lcc")
-    }
-    val deg = und.select(explode(array(col("a"), col("b"))).as("id"))
-      .groupBy(col("id")).agg(count(lit(1)).as("degree"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var oriented: DataFrame = null
-    val triCorners = if (degreeOrdered) {
-      // rank r(v) = (deg v, v); orient lo-rank → hi-rank; wedges at
-      // the 2-out-edge node; INNER closing join (the rows ARE the
-      // triangles, oriented x→y by rank transitivity, each once)
-      val dd = und
-        .join(deg.select(col("id").as("a"), col("degree").as("da")), "a")
-        .join(deg.select(col("id").as("b"), col("degree").as("db")), "b")
-      oriented = dd.select(
-          when(col("da") < col("db") ||
-               (col("da") === col("db") && col("a") < col("b")),
-            struct(col("a").as("src"), col("b").as("dst"),
-              col("db").as("dd")))
-          .otherwise(struct(col("b").as("src"), col("a").as("dst"),
-            col("da").as("dd"))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"),
-          col("e.dd").as("dd"))
+      }.toDF("id", "degree", "n_tri", "lcc"))
+    } { (und, _) =>
+      val deg = und.select(explode(array(col("a"), col("b"))).as("id"))
+        .groupBy(col("id")).agg(count(lit(1)).as("degree"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val w1 = oriented.toDF("src", "x", "dx")
-      val w2 = oriented.toDF("src", "y", "dy")
-      w1.join(w2, "src")
-        .filter(col("dx") < col("dy") ||
-          (col("dx") === col("dy") && col("x") < col("y")))
-        .join(oriented.select(col("src").as("x"), col("dst").as("y")),
-          Seq("x", "y"))
-        .select(col("src").as("a"), col("x").as("b"), col("y").as("c"))
-    } else {
-      val e1 = und.toDF("a", "b")
-      val e2 = und.toDF("b", "c")
-      val e3 = und.toDF("a", "c")
-      // inner (not semi) join on the closing edge: the (a,b,c) rows ARE
-      // the triangles, each exactly once under a<b<c
-      e1.join(e2, "b").join(e3, Seq("a", "c"))
+      var oriented: DataFrame = null
+      val triCorners = if (degreeOrdered) {
+        // rank r(v) = (deg v, v); orient lo-rank → hi-rank; wedges at
+        // the 2-out-edge node; INNER closing join (the rows ARE the
+        // triangles, oriented x→y by rank transitivity, each once)
+        val dd = und
+          .join(deg.select(col("id").as("a"), col("degree").as("da")), "a")
+          .join(deg.select(col("id").as("b"), col("degree").as("db")), "b")
+        oriented = dd.select(
+            when(col("da") < col("db") ||
+                 (col("da") === col("db") && col("a") < col("b")),
+              struct(col("a").as("src"), col("b").as("dst"),
+                col("db").as("dd")))
+            .otherwise(struct(col("b").as("src"), col("a").as("dst"),
+              col("da").as("dd"))).as("e"))
+          .select(col("e.src").as("src"), col("e.dst").as("dst"),
+            col("e.dd").as("dd"))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        val w1 = oriented.toDF("src", "x", "dx")
+        val w2 = oriented.toDF("src", "y", "dy")
+        w1.join(w2, "src")
+          .filter(col("dx") < col("dy") ||
+            (col("dx") === col("dy") && col("x") < col("y")))
+          .join(oriented.select(col("src").as("x"), col("dst").as("y")),
+            Seq("x", "y"))
+          .select(col("src").as("a"), col("x").as("b"), col("y").as("c"))
+      } else {
+        val e1 = und.toDF("a", "b")
+        val e2 = und.toDF("b", "c")
+        val e3 = und.toDF("a", "c")
+        // inner (not semi) join on the closing edge: the (a,b,c) rows ARE
+        // the triangles, each exactly once under a<b<c
+        e1.join(e2, "b").join(e3, Seq("a", "c"))
+      }
+      val tris = triCorners.persist(StorageLevel.MEMORY_AND_DISK)
+      val triPerNode = tris.select(explode(
+          array(col("a"), col("b"), col("c"))).as("id"))
+        .groupBy(col("id")).agg(count(lit(1)).as("n_tri"))
+      val out = deg.join(triPerNode, Seq("id"), "left")
+        .select(col("id"), col("degree"),
+          coalesce(col("n_tri"), lit(0L)).as("n_tri"),
+          when(col("degree") >= 2,
+            (coalesce(col("n_tri"), lit(0L)) * 2).cast("double") /
+              (col("degree") * (col("degree") - 1)).cast("double"))
+            .otherwise(lit(0.0)).as("lcc"))
+        .localCheckpoint(true)
+      tris.unpersist()
+      if (oriented != null) oriented.unpersist()
+      deg.unpersist()
+      und.unpersist()
+      out
     }
-    val tris = triCorners.persist(StorageLevel.MEMORY_AND_DISK)
-    val triPerNode = tris.select(explode(
-        array(col("a"), col("b"), col("c"))).as("id"))
-      .groupBy(col("id")).agg(count(lit(1)).as("n_tri"))
-    val out = deg.join(triPerNode, Seq("id"), "left")
-      .select(col("id"), col("degree"),
-        coalesce(col("n_tri"), lit(0L)).as("n_tri"),
-        when(col("degree") >= 2,
-          (coalesce(col("n_tri"), lit(0L)) * 2).cast("double") /
-            (col("degree") * (col("degree") - 1)).cast("double"))
-          .otherwise(lit(0.0)).as("lcc"))
-      .localCheckpoint(true)
-    tris.unpersist()
-    if (oriented != null) oriented.unpersist()
-    deg.unpersist()
-    und.unpersist()
-    out
   }
 
   /** Synchronous label propagation (community detection) over an
@@ -714,6 +642,7 @@ object Graph {
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        rounds: Int = 3): DataFrame = {
+    import edges.sparkSession.implicits._
     // canonicalize + persist BEFORE symmetrizing — union(e, e.swap) on
     // an unpersisted plan would evaluate the (often expensive) upstream
     // candidate join twice, the exact trap connectedComponents documents
@@ -723,40 +652,38 @@ object Graph {
       .select(least(col("s"), col("d")).as("src"),
         greatest(col("s"), col("d")).as("dst"))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
     // hybrid execution, same rationale as CC/PageRank: post-funnel
     // graphs are tiny, and LPA's update is pure INTEGER arithmetic
     // (counts + min-label ties), so the driver loop is bit-identical
     // to the distributed rounds — asserted in GraphSamplingSpec.
     // 16 bytes per edge: one (src, dst) long pair.
-    if (graft.fitsDriver(edges.sparkSession, e.count() * 16)) {
-      val result = localLabelPropagation(e, rounds)
+    graft.hybrid("labelPropagation", e.as[(Long, Long)], 16)(es =>
+      Some(localLabelPropagation(es, rounds).toDF("id", "community")
+        .repartition(col("community")))) { (e, _) =>
+      val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      sym.count()
       e.unpersist()
-      return result
+      var labels = sym.select(col("src").as("v")).distinct()
+        .select(col("v"), col("v").as("lab"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      for (_ <- 1 to rounds) {
+        val nbr = sym.join(labels, sym("dst") === labels("v"))
+          .select(sym("src").as("v"), col("lab"))
+        // argmax(count, then min label) = max of the (count, -label)
+        // struct — map-combinable, no window, no per-node sort
+        val next = nbr.groupBy(col("v"), col("lab"))
+          .agg(count(lit(1)).as("c"))
+          .groupBy(col("v"))
+          .agg(max(struct(col("c"), (-col("lab")).as("nl"))).as("m"))
+          .select(col("v"), (-col("m.nl")).as("lab"))
+          .localCheckpoint(true)
+        labels.unpersist()
+        labels = next
+      }
+      sym.unpersist()
+      labels.select(col("v").as("id"), col("lab").as("community"))
     }
-    val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    sym.count()
-    e.unpersist()
-    var labels = sym.select(col("src").as("v")).distinct()
-      .select(col("v"), col("v").as("lab"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    for (_ <- 1 to rounds) {
-      val nbr = sym.join(labels, sym("dst") === labels("v"))
-        .select(sym("src").as("v"), col("lab"))
-      // argmax(count, then min label) = max of the (count, -label)
-      // struct — map-combinable, no window, no per-node sort
-      val next = nbr.groupBy(col("v"), col("lab"))
-        .agg(count(lit(1)).as("c"))
-        .groupBy(col("v"))
-        .agg(max(struct(col("c"), (-col("lab")).as("nl"))).as("m"))
-        .select(col("v"), (-col("m.nl")).as("lab"))
-        .localCheckpoint(true)
-      labels.unpersist()
-      labels = next
-    }
-    sym.unpersist()
-    labels.select(col("v").as("id"), col("lab").as("community"))
   }
 
   /** Driver-side synchronized LPA for small (already-reduced) graphs —
@@ -765,10 +692,8 @@ object Graph {
     * the smallest. All-integer state → bit-identical to the
     * distributed path (no fp caveat like PageRank's).
     */
-  private def localLabelPropagation(und: DataFrame, rounds: Int): DataFrame = {
-    val spark = und.sparkSession
-    import spark.implicits._
-    val es = und.as[(Long, Long)].collect()
+  private def localLabelPropagation(es: Array[(Long, Long)],
+                                    rounds: Int): Seq[(Long, Long)] = {
     val adj = new scala.collection.mutable.HashMap[Long,
       scala.collection.mutable.ArrayBuffer[Long]]()
     es.foreach { case (a, b) =>
@@ -784,8 +709,7 @@ object Graph {
         v -> counts.minBy { case (l, c) => (-c, l) }._1
       }.toMap
     }
-    spark.createDataset(lab.toSeq).toDF("id", "community")
-      .repartition(col("community"))
+    lab.toSeq
   }
 
   /** Driver-side power iteration for small (already-reduced) graphs —
@@ -793,11 +717,8 @@ object Graph {
     * fully deterministic, unlike the distributed path's partition-order
     * sums.
     */
-  private def localPageRank(e: DataFrame, damping: Double,
-                            iterations: Int): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    val es = e.as[(Long, Long)].collect()
+  private def localPageRank(es: Array[(Long, Long)], damping: Double,
+                            iterations: Int): Seq[(Long, Double)] = {
     val ids = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
     val idx = ids.zipWithIndex.toMap
     val n = ids.length
@@ -817,8 +738,7 @@ object Graph {
       }
       rank = inflow.map(base + damping * _)
     }
-    spark.createDataset(ids.toSeq.map(id => (id, rank(idx(id)))))
-      .toDF("id", "rank")
+    ids.toSeq.map(id => (id, rank(idx(id))))
   }
 
   /** k-core: the maximal subgraph in which every node has degree ≥ k
@@ -841,6 +761,7 @@ object Graph {
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
             maxRounds: Int = 30): DataFrame = {
+    import edges.sparkSession.implicits._
     require(k >= 1, s"k must be ≥ 1: $k")
     val und0 = edges.select(col(srcCol).cast("long").as("s"),
         col(dstCol).cast("long").as("d"))
@@ -848,47 +769,44 @@ object Graph {
       .select(least(col("s"), col("d")).as("a"),
         greatest(col("s"), col("d")).as("b"))
       .distinct()
-    var cur = und0.persist(StorageLevel.MEMORY_AND_DISK)
-    var nEdges = cur.count()
-    // 16 bytes per edge: one (a, b) long pair
-    if (graft.fitsDriver(edges.sparkSession, nEdges * 16)) {
-      // same hybrid rung as CC/LPA/PageRank: a reduced graph this
-      // small peels on the driver in one pass (all-integer state →
-      // bit-identical to the distributed rounds, spec-asserted);
-      // each distributed round would otherwise pay the full
-      // scheduling floor for kilobytes of work
-      val result = localKCore(cur, k)
-      cur.unpersist()
-      return result
-    }
-    var round = 0
-    var converged = false
-    var lastDeg: DataFrame = null
-    while (!converged) {
-      val deg = cur.select(explode(array(col("a"), col("b"))).as("p"))
-        .groupBy(col("p")).agg(count(lit(1)).as("deg"))
-      val keep = deg.filter(col("deg") >= k).select(col("p"))
-      val next = cur
-        .join(keep.withColumnRenamed("p", "a"), Seq("a"), "left_semi")
-        .join(keep.withColumnRenamed("p", "b"), Seq("b"), "left_semi")
-        .select(col("a"), col("b"))
-        .localCheckpoint(true)
-      val nNext = next.count()
-      if (nNext == nEdges) {
-        converged = true
-        lastDeg = deg
-      } else {
-        cur.unpersist()
-        cur = next
-        nEdges = nNext
-        round += 1
-        if (round > maxRounds)
-          throw new IllegalStateException(
-            s"kCore: no fixpoint after $maxRounds peeling rounds")
+    // 16 bytes per edge: one (a, b) long pair. Same hybrid rung as
+    // CC/LPA/PageRank: a reduced graph this small peels on the driver
+    // in one pass (all-integer state → bit-identical to the distributed
+    // rounds, spec-asserted); each distributed round would otherwise
+    // pay the full scheduling floor for kilobytes of work
+    graft.hybrid("kCore", und0.as[(Long, Long)], 16)(es =>
+      Some(localKCore(es, k).toDF("id", "core_deg"))) { (und, n) =>
+      var cur = und
+      var nEdges = n
+      var round = 0
+      var converged = false
+      var lastDeg: DataFrame = null
+      while (!converged) {
+        val deg = cur.select(explode(array(col("a"), col("b"))).as("p"))
+          .groupBy(col("p")).agg(count(lit(1)).as("deg"))
+        val keep = deg.filter(col("deg") >= k).select(col("p"))
+        val next = cur
+          .join(keep.withColumnRenamed("p", "a"), Seq("a"), "left_semi")
+          .join(keep.withColumnRenamed("p", "b"), Seq("b"), "left_semi")
+          .select(col("a"), col("b"))
+          .localCheckpoint(true)
+        val nNext = next.count()
+        if (nNext == nEdges) {
+          converged = true
+          lastDeg = deg
+        } else {
+          cur.unpersist()
+          cur = next
+          nEdges = nNext
+          round += 1
+          if (round > maxRounds)
+            throw new IllegalStateException(
+              s"kCore: no fixpoint after $maxRounds peeling rounds")
+        }
       }
+      // final degrees ARE ≥ k for every survivor by the fixpoint
+      lastDeg.select(col("p").as("id"), col("deg").as("core_deg"))
     }
-    // final degrees ARE ≥ k for every survivor by the fixpoint
-    lastDeg.select(col("p").as("id"), col("deg").as("core_deg"))
   }
 
   /** E111: k-truss subgraph (Cohen 2008; Wang & Cheng, VLDB 2012) —
@@ -908,7 +826,7 @@ object Graph {
     * Support counting is exact integers → hash-gateable; the oracle
     * unrolls the rounds MATERIALIZED, so hash-equality also certifies
     * convergence within the unroll. Under the shared
-    * [[graft.fitsDriver]] gate the standard queue-cascade peel runs on
+    * [[graft.hybrid]] rung the standard queue-cascade peel runs on
     * the driver (k-truss is the
     * unique maximal subgraph, so peel order is immaterial) —
     * bit-identical, asserted in Round9OpsSpec.
@@ -919,67 +837,68 @@ object Graph {
   def kTruss(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
              maxRounds: Int = 30): DataFrame = {
     require(k >= 3, s"k must be ≥ 3 (k=2 is the whole graph): $k")
+    import edges.sparkSession.implicits._
     val und0 = edges.select(col(srcCol).cast("long").as("s"),
         col(dstCol).cast("long").as("d"))
       .filter(col("s") =!= col("d"))
       .select(least(col("s"), col("d")).as("a"),
         greatest(col("s"), col("d")).as("b"))
       .distinct()
-    var cur = und0.persist(StorageLevel.MEMORY_AND_DISK)
-    var nEdges = cur.count()
     // 16 bytes per edge: one (a, b) long pair
-    if (graft.fitsDriver(edges.sparkSession, nEdges * 16)) {
-      val result = localKTruss(cur, k)
-      cur.unpersist()
-      return result
-    }
-    def support(e: DataFrame): DataFrame = {
-      val tri = e.select(col("a").as("x"), col("b").as("y"))
-        .join(e.select(col("a").as("y"), col("b").as("z")), "y")
-        .join(e.select(col("a").as("x"), col("b").as("z")),
-          Seq("x", "z"), "left_semi")
-      tri.select(explode(array(
-          struct(col("x").as("a"), col("y").as("b")),
-          struct(col("y").as("a"), col("z").as("b")),
-          struct(col("x").as("a"), col("z").as("b")))).as("e"))
-        .select(col("e.a").as("a"), col("e.b").as("b"))
-        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
-    }
-    var round = 0
-    while (true) {
-      val sup = support(cur)
-      val next = cur.join(sup.filter(col("support") >= k - 2),
-          Seq("a", "b"), "left_semi")
-        .localCheckpoint(true)
-      val nNext = next.count()
-      if (nNext == nEdges) {
-        // fixpoint: sup was computed over the surviving set itself
-        val out = cur.join(sup, Seq("a", "b"))
-          .select(col("a").as("id_a"), col("b").as("id_b"),
-            col("support"))
+    graft.hybrid("kTruss", und0.as[(Long, Long)], 16)(es =>
+      Some(localKTruss(es, k).toDF("id_a", "id_b", "support"))) {
+        (und, n) =>
+      def support(e: DataFrame): DataFrame = {
+        val tri = e.select(col("a").as("x"), col("b").as("y"))
+          .join(e.select(col("a").as("y"), col("b").as("z")), "y")
+          .join(e.select(col("a").as("x"), col("b").as("z")),
+            Seq("x", "z"), "left_semi")
+        tri.select(explode(array(
+            struct(col("x").as("a"), col("y").as("b")),
+            struct(col("y").as("a"), col("z").as("b")),
+            struct(col("x").as("a"), col("z").as("b")))).as("e"))
+          .select(col("e.a").as("a"), col("e.b").as("b"))
+          .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
+      }
+      var cur = und
+      var nEdges = n
+      var round = 0
+      var out: DataFrame = null
+      while (out == null) {
+        val sup = support(cur)
+        val next = cur.join(sup.filter(col("support") >= k - 2),
+            Seq("a", "b"), "left_semi")
           .localCheckpoint(true)
-        graft.release(cur)
-        return out
+        val nNext = next.count()
+        if (nNext == nEdges) {
+          // fixpoint: sup was computed over the surviving set itself
+          out = cur.join(sup, Seq("a", "b"))
+            .select(col("a").as("id_a"), col("b").as("id_b"),
+              col("support"))
+            .localCheckpoint(true)
+          graft.release(cur)
+        } else {
+          // release the superseded round's CHECKPOINT blocks, not just
+          // its CacheManager entry — plain unpersist leaves
+          // localCheckpoint RDD blocks pinned until GC, so a high-round
+          // peel would accumulate block-manager storage for the whole
+          // query (`next` is already eagerly checkpointed and does not
+          // depend on `cur`)
+          graft.release(cur)
+          cur = next
+          nEdges = nNext
+          round += 1
+          if (nEdges == 0)
+            // empty fixpoint: no edge closes k−2 triangles
+            out = cur.select(col("a").as("id_a"), col("b").as("id_b"),
+              lit(0L).as("support"))
+          else if (round > maxRounds)
+            throw new IllegalStateException(
+              s"kTruss: no fixpoint after $maxRounds peeling rounds")
+        }
       }
-      // release the superseded round's CHECKPOINT blocks, not just its
-      // CacheManager entry — plain unpersist leaves localCheckpoint RDD
-      // blocks pinned until GC, so a high-round peel would accumulate
-      // block-manager storage for the whole query (`next` is already
-      // eagerly checkpointed and does not depend on `cur`)
-      graft.release(cur)
-      cur = next
-      nEdges = nNext
-      round += 1
-      if (nEdges == 0) {
-        // empty fixpoint: no edge closes k−2 triangles
-        return cur.select(col("a").as("id_a"), col("b").as("id_b"),
-          lit(0L).as("support"))
-      }
-      if (round > maxRounds)
-        throw new IllegalStateException(
-          s"kTruss: no fixpoint after $maxRounds peeling rounds")
+      out
     }
-    sys.error("unreachable")
   }
 
   /** [[kTruss]]'s driver rung: support = |Γ(a)∩Γ(b)| per edge, queue
@@ -987,13 +906,11 @@ object Graph {
     * co-triangle edges; final supports recomputed over the survivor
     * adjacency so the output is definitionally the distributed one.
     */
-  private def localKTruss(und: DataFrame, k: Int): DataFrame = {
-    val spark = und.sparkSession
-    import spark.implicits._
+  private def localKTruss(es: Array[(Long, Long)],
+                          k: Int): Seq[(Long, Long, Long)] = {
     val adj = scala.collection.mutable.Map.empty[Long,
       scala.collection.mutable.Set[Long]]
-    und.collect().foreach { r =>
-      val (a, b) = (r.getLong(0), r.getLong(1))
+    es.foreach { case (a, b) =>
       adj.getOrElseUpdate(a, scala.collection.mutable.Set.empty) += b
       adj.getOrElseUpdate(b, scala.collection.mutable.Set.empty) += a
     }
@@ -1026,20 +943,17 @@ object Graph {
         adj(a) -= b; adj(b) -= a
       }
     }
-    val out = sup.keysIterator.filterNot(dead).map { case (a, b) =>
+    sup.keysIterator.filterNot(dead).map { case (a, b) =>
       (a, b, commons(a, b).size.toLong)
     }.toSeq
-    out.toDF("id_a", "id_b", "support")
   }
 
   /** Driver-side peel for small graphs — queue-based cascade, O(E). */
-  private def localKCore(und: DataFrame, k: Int): DataFrame = {
-    val spark = und.sparkSession
-    import spark.implicits._
+  private def localKCore(es: Array[(Long, Long)],
+                         k: Int): Seq[(Long, Long)] = {
     val adj = scala.collection.mutable.Map.empty[Long,
       scala.collection.mutable.Set[Long]]
-    und.collect().foreach { r =>
-      val (a, b) = (r.getLong(0), r.getLong(1))
+    es.foreach { case (a, b) =>
       adj.getOrElseUpdate(a, scala.collection.mutable.Set.empty) += b
       adj.getOrElseUpdate(b, scala.collection.mutable.Set.empty) += a
     }
@@ -1058,8 +972,7 @@ object Graph {
         }
       }
     }
-    spark.createDataset(adj.toSeq.map { case (v, ns) => (v, ns.size.toLong) })
-      .toDF("id", "core_deg")
+    adj.toSeq.map { case (v, ns) => (v, ns.size.toLong) }
   }
 
   /** Degree assortativity (Newman 2002): Pearson correlation of the
@@ -1168,7 +1081,7 @@ object Graph {
     * cache discipline); the only scalar crossing the driver is the
     * new-frontier count (early exit when the frontier drains). Same
     * hybrid rung as CC/LPA/kCore: a reduced graph under the shared
-    * [[graft.fitsDriver]] gate runs a driver-side queue BFS —
+    * [[graft.hybrid]] rung runs a driver-side queue BFS —
     * all-integer state, asserted bit-identical to the distributed rounds.
     *
     * Seeds appear at hop 0 even when isolated (they are "reached" by
@@ -1180,6 +1093,7 @@ object Graph {
   def shortestHops(edges: DataFrame, srcCol: String, dstCol: String,
                    seeds: DataFrame, seedCol: String,
                    maxHops: Int): DataFrame = {
+    import edges.sparkSession.implicits._
     require(maxHops >= 0, s"maxHops must be ≥ 0: $maxHops")
     val und = edges.select(col(srcCol).cast("long").as("s"),
         col(dstCol).cast("long").as("d"))
@@ -1187,56 +1101,52 @@ object Graph {
       .select(least(col("s"), col("d")).as("a"),
         greatest(col("s"), col("d")).as("b"))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val seed = seeds.select(col(seedCol).cast("long").as("id")).distinct()
     // 16 bytes per edge: one (a, b) long pair
-    if (graft.fitsDriver(edges.sparkSession, und.count() * 16)) {
-      val result = localBfs(und, seed, maxHops)
+    graft.hybrid("shortestHops", und.as[(Long, Long)], 16)(es =>
+      Some(localBfs(es, seed.as[Long].collect(), maxHops)
+        .toDF("id", "hop"))) { (und, _) =>
+      val sym = und.union(und.select(col("b").as("a"), col("a").as("b")))
+        .toDF("src", "dst")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      sym.count()
       und.unpersist()
-      return result
-    }
-    val sym = und.union(und.select(col("b").as("a"), col("a").as("b")))
-      .toDF("src", "dst")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    sym.count()
-    und.unpersist()
-    var dist = seed.select(col("id"), lit(0L).as("hop"))
-      .localCheckpoint(true)
-    var frontier = dist
-    var hop = 0L
-    var drained = false
-    while (!drained && hop < maxHops) {
-      hop += 1
-      val next = sym.join(frontier, sym("src") === frontier("id"))
-        .select(sym("dst").as("id")).distinct()
-        .join(dist, Seq("id"), "left_anti")
-        .select(col("id"), lit(hop).as("hop"))
+      var dist = seed.select(col("id"), lit(0L).as("hop"))
         .localCheckpoint(true)
-      if (next.count() == 0) drained = true
-      else {
-        dist = dist.union(next).localCheckpoint(true)
-        frontier = next
+      var frontier = dist
+      var hop = 0L
+      var drained = false
+      while (!drained && hop < maxHops) {
+        hop += 1
+        val next = sym.join(frontier, sym("src") === frontier("id"))
+          .select(sym("dst").as("id")).distinct()
+          .join(dist, Seq("id"), "left_anti")
+          .select(col("id"), lit(hop).as("hop"))
+          .localCheckpoint(true)
+        if (next.count() == 0) drained = true
+        else {
+          dist = dist.union(next).localCheckpoint(true)
+          frontier = next
+        }
       }
+      sym.unpersist()
+      dist
     }
-    sym.unpersist()
-    dist
   }
 
   /** Driver-side multi-source BFS for small graphs — queue sweep,
     * O(V+E), integer state only (bit-identical to the rounds). */
-  private def localBfs(und: DataFrame, seed: DataFrame,
-                       maxHops: Int): DataFrame = {
-    val spark = und.sparkSession
-    import spark.implicits._
+  private def localBfs(es: Array[(Long, Long)], seeds: Array[Long],
+                       maxHops: Int): Seq[(Long, Long)] = {
     val adj = scala.collection.mutable.Map.empty[Long,
       scala.collection.mutable.ArrayBuffer[Long]]
-    und.as[(Long, Long)].collect().foreach { case (a, b) =>
+    es.foreach { case (a, b) =>
       adj.getOrElseUpdate(a, scala.collection.mutable.ArrayBuffer.empty) += b
       adj.getOrElseUpdate(b, scala.collection.mutable.ArrayBuffer.empty) += a
     }
     val dist = scala.collection.mutable.Map.empty[Long, Long]
     val queue = scala.collection.mutable.Queue.empty[Long]
-    seed.as[Long].collect().foreach { s =>
+    seeds.foreach { s =>
       dist(s) = 0L
       queue += s
     }
@@ -1250,7 +1160,7 @@ object Graph {
         }
       }
     }
-    spark.createDataset(dist.toSeq).toDF("id", "hop")
+    dist.toSeq
   }
 
   /** E87: strongly connected components of a DIRECTED graph — the
@@ -1260,7 +1170,7 @@ object Graph {
     * id (the CC labeling convention).
     *
     * Hybrid rung like CC/LPA/kCore/BFS: graphs under the shared
-    * [[graft.fitsDriver]] gate run iterative Tarjan on the driver
+    * [[graft.hybrid]] rung run iterative Tarjan on the driver
     * (explicit stack — no recursion depth limit), asserted equal to
     * the distributed path.
     * The distributed path is trim + forward-min/backward-check
@@ -1290,115 +1200,113 @@ object Graph {
   def stronglyConnectedComponents(edges: DataFrame, srcCol: String,
                                   dstCol: String,
                                   maxIter: Int = 25): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
     val e0 = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
     // 16 bytes per edge: one (src, dst) long pair
-    if (graft.fitsDriver(edges.sparkSession, e0.count() * 16)) {
-      val result = localTarjan(e0)
+    graft.hybrid("stronglyConnectedComponents", e0.as[(Long, Long)], 16)(
+        es => Some(localTarjan(es).toDF("id", "scc")
+          .repartition(col("scc")))) { (e0, _) =>
+      var remaining = e0.localCheckpoint(true)
       e0.unpersist()
-      return result
-    }
-    val spark = edges.sparkSession
-    import spark.implicits._
-    var remaining = e0.localCheckpoint(true)
-    e0.unpersist()
-    var nodes = remaining.select(col("src").as("id"))
-      .union(remaining.select(col("dst").as("id")))
-      .distinct().localCheckpoint(true)
-    var assigned = spark.emptyDataset[(Long, Long)].toDF("id", "scc")
-      .localCheckpoint(true)
-    var outer = 0
-    while (nodes.count() > 0 && outer < maxIter) {
-      outer += 1
-      // 1. trim to fixpoint: zero in- or out-degree ⇒ singleton SCC
-      var trimmed = true
-      while (trimmed && nodes.count() > 0) {
-        val hasIn = remaining.select(col("dst").as("id")).distinct()
-        val hasOut = remaining.select(col("src").as("id")).distinct()
-        val keep = nodes.join(hasIn, Seq("id"), "left_semi")
-          .join(hasOut, Seq("id"), "left_semi")
-          .localCheckpoint(true)
-        val dropped = nodes.join(keep, Seq("id"), "left_anti")
-          .select(col("id"), col("id").as("scc"))
-          .localCheckpoint(true)
-        if (dropped.count() == 0) trimmed = false
+      var nodes = remaining.select(col("src").as("id"))
+        .union(remaining.select(col("dst").as("id")))
+        .distinct().localCheckpoint(true)
+      var assigned = spark.emptyDataset[(Long, Long)].toDF("id", "scc")
+        .localCheckpoint(true)
+      var outer = 0
+      while (nodes.count() > 0 && outer < maxIter) {
+        outer += 1
+        // 1. trim to fixpoint: zero in- or out-degree ⇒ singleton SCC
+        var trimmed = true
+        while (trimmed && nodes.count() > 0) {
+          val hasIn = remaining.select(col("dst").as("id")).distinct()
+          val hasOut = remaining.select(col("src").as("id")).distinct()
+          val keep = nodes.join(hasIn, Seq("id"), "left_semi")
+            .join(hasOut, Seq("id"), "left_semi")
+            .localCheckpoint(true)
+          val dropped = nodes.join(keep, Seq("id"), "left_anti")
+            .select(col("id"), col("id").as("scc"))
+            .localCheckpoint(true)
+          if (dropped.count() == 0) trimmed = false
+          else {
+            assigned = assigned.union(dropped).localCheckpoint(true)
+            nodes = keep
+            remaining = remaining
+              .join(keep.select(col("id").as("src")), Seq("src"), "left_semi")
+              .join(keep.select(col("id").as("dst")), Seq("dst"), "left_semi")
+              .select(col("src"), col("dst"))
+              .localCheckpoint(true)
+          }
+        }
+        if (nodes.count() == 0) () // all trimmed — outer loop exits
         else {
-          assigned = assigned.union(dropped).localCheckpoint(true)
-          nodes = keep
+          // 2. forward min-label to fixpoint (directed CC loop)
+          var f = nodes.select(col("id"), col("id").as("f"))
+            .localCheckpoint(true)
+          var prevSum = f.agg(sum(col("f"))).head.getLong(0)
+          var converged = false
+          var it = 0
+          while (!converged && it < maxIter) {
+            it += 1
+            val inMin = remaining.join(f, remaining("src") === f("id"))
+              .groupBy(remaining("dst").as("id"))
+              .agg(min(col("f")).as("inf"))
+            val next = f.as("l").join(inMin.as("n"), Seq("id"), "left")
+              .select(col("id"),
+                least(col("l.f"), coalesce(col("n.inf"), col("l.f"))).as("f"))
+              .localCheckpoint(true)
+            val s = next.agg(sum(col("f"))).head.getLong(0)
+            f = next
+            converged = s == prevSum
+            prevSum = s
+          }
+          if (!converged) throw new IllegalStateException(
+            s"scc: forward pass hit $maxIter rounds without a fixpoint")
+          // 3. backward check within f-classes from each root
+          var flagged = f.filter(col("id") === col("f"))
+            .select(col("id"), col("f")).localCheckpoint(true)
+          var prevN = flagged.count()
+          var done = false
+          var bit = 0
+          while (!done && bit < maxIter) {
+            bit += 1
+            val step = remaining
+              .join(flagged.select(col("id").as("dst"), col("f").as("fd")),
+                Seq("dst"))
+              .join(f.select(col("id").as("src"), col("f").as("fs")),
+                Seq("src"))
+              .filter(col("fs") === col("fd"))
+              .select(col("src").as("id"), col("fs").as("f"))
+            val nf = flagged.union(step).distinct().localCheckpoint(true)
+            val n = nf.count()
+            done = n == prevN
+            flagged = nf
+            prevN = n
+          }
+          if (!done) throw new IllegalStateException(
+            s"scc: backward pass hit $maxIter rounds without a fixpoint")
+          // 4. extract flagged (scc = f), remove, iterate
+          assigned = assigned
+            .union(flagged.select(col("id"), col("f").as("scc")))
+            .localCheckpoint(true)
+          nodes = nodes.join(flagged.select(col("id")), Seq("id"), "left_anti")
+            .localCheckpoint(true)
           remaining = remaining
-            .join(keep.select(col("id").as("src")), Seq("src"), "left_semi")
-            .join(keep.select(col("id").as("dst")), Seq("dst"), "left_semi")
+            .join(nodes.select(col("id").as("src")), Seq("src"), "left_semi")
+            .join(nodes.select(col("id").as("dst")), Seq("dst"), "left_semi")
             .select(col("src"), col("dst"))
             .localCheckpoint(true)
         }
       }
-      if (nodes.count() == 0) () // all trimmed — outer loop exits
-      else {
-        // 2. forward min-label to fixpoint (directed CC loop)
-        var f = nodes.select(col("id"), col("id").as("f"))
-          .localCheckpoint(true)
-        var prevSum = f.agg(sum(col("f"))).head.getLong(0)
-        var converged = false
-        var it = 0
-        while (!converged && it < maxIter) {
-          it += 1
-          val inMin = remaining.join(f, remaining("src") === f("id"))
-            .groupBy(remaining("dst").as("id"))
-            .agg(min(col("f")).as("inf"))
-          val next = f.as("l").join(inMin.as("n"), Seq("id"), "left")
-            .select(col("id"),
-              least(col("l.f"), coalesce(col("n.inf"), col("l.f"))).as("f"))
-            .localCheckpoint(true)
-          val s = next.agg(sum(col("f"))).head.getLong(0)
-          f = next
-          converged = s == prevSum
-          prevSum = s
-        }
-        if (!converged) throw new IllegalStateException(
-          s"scc: forward pass hit $maxIter rounds without a fixpoint")
-        // 3. backward check within f-classes from each root
-        var flagged = f.filter(col("id") === col("f"))
-          .select(col("id"), col("f")).localCheckpoint(true)
-        var prevN = flagged.count()
-        var done = false
-        var bit = 0
-        while (!done && bit < maxIter) {
-          bit += 1
-          val step = remaining
-            .join(flagged.select(col("id").as("dst"), col("f").as("fd")),
-              Seq("dst"))
-            .join(f.select(col("id").as("src"), col("f").as("fs")),
-              Seq("src"))
-            .filter(col("fs") === col("fd"))
-            .select(col("src").as("id"), col("fs").as("f"))
-          val nf = flagged.union(step).distinct().localCheckpoint(true)
-          val n = nf.count()
-          done = n == prevN
-          flagged = nf
-          prevN = n
-        }
-        if (!done) throw new IllegalStateException(
-          s"scc: backward pass hit $maxIter rounds without a fixpoint")
-        // 4. extract flagged (scc = f), remove, iterate
-        assigned = assigned
-          .union(flagged.select(col("id"), col("f").as("scc")))
-          .localCheckpoint(true)
-        nodes = nodes.join(flagged.select(col("id")), Seq("id"), "left_anti")
-          .localCheckpoint(true)
-        remaining = remaining
-          .join(nodes.select(col("id").as("src")), Seq("src"), "left_semi")
-          .join(nodes.select(col("id").as("dst")), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst"))
-          .localCheckpoint(true)
-      }
+      if (nodes.count() > 0) throw new IllegalStateException(
+        s"scc: $maxIter outer rounds left nodes unassigned — a chain of " +
+          "SCCs longer than maxIter; raise maxIter")
+      assigned
     }
-    if (nodes.count() > 0) throw new IllegalStateException(
-      s"scc: $maxIter outer rounds left nodes unassigned — a chain of " +
-        "SCCs longer than maxIter; raise maxIter")
-    assigned
   }
 
   /** E88: weighted shortest paths from a seed set (bounded
@@ -1409,7 +1317,7 @@ object Graph {
     * semantics well-defined even with negative edge weights). Per
     * round: one keyed join + min aggregate + min-merge, scalar-sum
     * convergence for early exit, per-round localCheckpoint; driver
-    * fast path under the shared [[graft.fitsDriver]] gate runs the
+    * fast path under the shared [[graft.hybrid]] rung runs the
     * same rounds in a hash map, asserted identical.
     *
     * @return (id, cost) — min total weight over paths of ≤ maxHops
@@ -1419,58 +1327,55 @@ object Graph {
   def shortestPaths(edges: DataFrame, srcCol: String, dstCol: String,
                     wCol: String, seeds: DataFrame, seedCol: String,
                     maxHops: Int): DataFrame = {
+    import edges.sparkSession.implicits._
     require(maxHops >= 0, s"maxHops must be ≥ 0: $maxHops")
     val e = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"),
         col(wCol).cast("long").as("w"))
       .filter(col("src") =!= col("dst"))
       .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val seed = seeds.select(col(seedCol).cast("long").as("id")).distinct()
     // 16 bytes per edge, the long-pair class of the unweighted
     // operators (the weight is not charged)
-    if (graft.fitsDriver(edges.sparkSession, e.count() * 16)) {
-      val result = localBellmanFord(e, seed, maxHops)
-      e.unpersist()
-      return result
-    }
-    var dist = seed.select(col("id"), lit(0L).as("cost"))
-      .localCheckpoint(true)
-    var prevSum = dist.agg(coalesce(sum(col("cost")), lit(0L)))
-      .head.getLong(0)
-    var prevN = dist.count()
-    var round = 0
-    var converged = false
-    while (!converged && round < maxHops) {
-      round += 1
-      val relax = e.join(dist, e("src") === dist("id"))
-        .groupBy(e("dst").as("id"))
-        .agg(min(col("cost") + col("w")).as("cand"))
-      val next = dist.as("d").join(relax.as("r"), Seq("id"), "full_outer")
-        .select(col("id"),
-          least(coalesce(col("d.cost"), col("r.cand")),
-            coalesce(col("r.cand"), col("d.cost"))).as("cost"))
+    graft.hybrid("shortestPaths", e.as[(Long, Long, Long)], 16)(es =>
+      Some(localBellmanFord(es, seed.as[Long].collect(), maxHops)
+        .toDF("id", "cost"))) { (e, _) =>
+      var dist = seed.select(col("id"), lit(0L).as("cost"))
         .localCheckpoint(true)
-      val s = next.agg(coalesce(sum(col("cost")), lit(0L))).head.getLong(0)
-      val n = next.count()
-      converged = s == prevSum && n == prevN
-      dist = next
-      prevSum = s
-      prevN = n
+      var prevSum = dist.agg(coalesce(sum(col("cost")), lit(0L)))
+        .head.getLong(0)
+      var prevN = dist.count()
+      var round = 0
+      var converged = false
+      while (!converged && round < maxHops) {
+        round += 1
+        val relax = e.join(dist, e("src") === dist("id"))
+          .groupBy(e("dst").as("id"))
+          .agg(min(col("cost") + col("w")).as("cand"))
+        val next = dist.as("d").join(relax.as("r"), Seq("id"), "full_outer")
+          .select(col("id"),
+            least(coalesce(col("d.cost"), col("r.cand")),
+              coalesce(col("r.cand"), col("d.cost"))).as("cost"))
+          .localCheckpoint(true)
+        val s = next.agg(coalesce(sum(col("cost")), lit(0L))).head.getLong(0)
+        val n = next.count()
+        converged = s == prevSum && n == prevN
+        dist = next
+        prevSum = s
+        prevN = n
+      }
+      e.unpersist()
+      dist
     }
-    e.unpersist()
-    dist
   }
 
   /** Driver-side bounded Bellman–Ford — identical rounds in a hash
     * map; integer state only.
     */
-  private def localBellmanFord(e: DataFrame, seed: DataFrame,
-                               maxHops: Int): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    val es = e.as[(Long, Long, Long)].collect()
-    var dist = seed.as[Long].collect().map(_ -> 0L).toMap
+  private def localBellmanFord(es: Array[(Long, Long, Long)],
+                               seeds: Array[Long],
+                               maxHops: Int): Seq[(Long, Long)] = {
+    var dist = seeds.map(_ -> 0L).toMap
     var round = 0
     var changed = true
     while (changed && round < maxHops) {
@@ -1485,17 +1390,14 @@ object Graph {
       changed = next != dist
       dist = next
     }
-    spark.createDataset(dist.toSeq).toDF("id", "cost")
+    dist.toSeq
   }
 
   /** Driver-side iterative Tarjan (explicit stack — no recursion
     * limit) for small directed graphs; SCC labels remapped to the
     * component min id to match the distributed labeling exactly.
     */
-  private def localTarjan(e: DataFrame): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    val es = e.as[(Long, Long)].collect()
+  private def localTarjan(es: Array[(Long, Long)]): Seq[(Long, Long)] = {
     val adj = scala.collection.mutable.Map.empty[Long,
       scala.collection.mutable.ArrayBuffer[Long]]
     val allNodes = scala.collection.mutable.LinkedHashSet.empty[Long]
@@ -1551,8 +1453,7 @@ object Graph {
         }
       }
     }
-    spark.createDataset(comp.toSeq).toDF("id", "scc")
-      .repartition(col("scc"))
+    comp.toSeq
   }
 
   /** E100: neighborhood link prediction (Liben-Nowell & Kleinberg,
@@ -1579,10 +1480,10 @@ object Graph {
     */
   def linkPrediction(edges: DataFrame, srcCol: String, dstCol: String,
                      maxDeg: Long = 1000L, topK: Int = 100): DataFrame = {
+    import edges.sparkSession.implicits._
     val e = edges.select(col(srcCol).cast("long").as("a"),
         col(dstCol).cast("long").as("b"))
       .filter(col("a") =!= col("b")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
     // hybrid driver rung (the CC/LPA/kCore/HITS precedent, r8 VERDICT
     // task #6): under the size gate the wedge census runs as
     // one driver loop — the distributed plan's cost at gate scale is
@@ -1591,33 +1492,31 @@ object Graph {
     // bails back to the distributed path if the candidate-pair set
     // outgrows the in-memory bound. 64 bytes per edge: the pair plus
     // its adjacency entries and candidate-pair counters.
-    if (graft.fitsDriver(edges.sparkSession, e.count() * 64)) {
-      localLinkPrediction(e, maxDeg, topK) match {
-        case Some(out) => e.unpersist(); return out
-        case None => // fall through to the distributed wedge join
-      }
+    graft.hybrid("linkPrediction", e.as[(Long, Long)], 64)(es =>
+      localLinkPrediction(es, maxDeg, topK)
+        .map(_.toDF("id_a", "id_b", "cn", "ra_micro"))) { (e, _) =>
+      val sym = e.union(e.select(col("b").as("a"), col("a").as("b")))
+      val deg = sym.groupBy(col("a").as("z"))
+        .agg(count(lit(1)).as("deg"))
+        .filter(col("deg") <= maxDeg)
+      // wedges a–z–b through capped-degree hubs only; a < b halves the
+      // pair space (scores are symmetric)
+      val hop = sym.select(col("b").as("z"), col("a"))
+        .join(deg, "z")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val wedges = hop.select(col("z"), col("a"), col("deg"))
+        .join(hop.select(col("z"), col("a").as("b")), "z")
+        .filter(col("a") < col("b"))
+      val scored = wedges.groupBy(col("a"), col("b"))
+        .agg(count(lit(1)).as("cn"),
+          sum(expr("1000000L div deg")).as("ra_micro"))
+        .join(e, Seq("a", "b"), "left_anti")
+        .orderBy(col("cn").desc, col("ra_micro").desc, col("a"), col("b"))
+        .limit(topK)
+        .select(col("a").as("id_a"), col("b").as("id_b"),
+          col("cn"), col("ra_micro"))
+      graft.sealResult(scored, e, hop)
     }
-    val sym = e.union(e.select(col("b").as("a"), col("a").as("b")))
-    val deg = sym.groupBy(col("a").as("z"))
-      .agg(count(lit(1)).as("deg"))
-      .filter(col("deg") <= maxDeg)
-    // wedges a–z–b through capped-degree hubs only; a < b halves the
-    // pair space (scores are symmetric)
-    val hop = sym.select(col("b").as("z"), col("a"))
-      .join(deg, "z")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val wedges = hop.select(col("z"), col("a"), col("deg"))
-      .join(hop.select(col("z"), col("a").as("b")), "z")
-      .filter(col("a") < col("b"))
-    val scored = wedges.groupBy(col("a"), col("b"))
-      .agg(count(lit(1)).as("cn"),
-        sum(expr("1000000L div deg")).as("ra_micro"))
-      .join(e, Seq("a", "b"), "left_anti")
-      .orderBy(col("cn").desc, col("ra_micro").desc, col("a"), col("b"))
-      .limit(topK)
-      .select(col("a").as("id_a"), col("b").as("id_b"),
-        col("cn"), col("ra_micro"))
-    graft.sealResult(scored, e, hop)
   }
 
   /** [[linkPrediction]]'s driver rung: the same wedge census —
@@ -1627,11 +1526,9 @@ object Graph {
     * are hash-indistinguishable. Returns None (→ distributed path)
     * if the candidate-pair map exceeds `pairBound` entries.
     */
-  private def localLinkPrediction(e: DataFrame, maxDeg: Long, topK: Int,
-      pairBound: Int = 30000000): Option[DataFrame] = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    val edgePairs = e.collect().map(r => (r.getLong(0), r.getLong(1)))
+  private def localLinkPrediction(edgePairs: Array[(Long, Long)],
+      maxDeg: Long, topK: Int, pairBound: Int = 30000000)
+      : Option[Seq[(Long, Long, Long, Long)]] = {
     val adj = new scala.collection.mutable.HashMap[Long,
       scala.collection.mutable.ArrayBuffer[Long]]
     edgePairs.foreach { case (a, b) =>
@@ -1666,7 +1563,7 @@ object Graph {
       .toSeq
       .sortBy { case (a, b, cn, ra) => (-cn, -ra, a, b) }
       .take(topK)
-    Some(top.toDF("id_a", "id_b", "cn", "ra_micro"))
+    Some(top)
   }
 
   /** E101: personalized PageRank (fixed-point) — [[pageRankFixed]]'s
@@ -1695,82 +1592,113 @@ object Graph {
                seeds: DataFrame,
                dampNum: Long = 85L, dampDen: Long = 100L,
                iterations: Int = 5,
-               scale: Long = 1000000000000L): DataFrame = {
-    val spark = edges.sparkSession
+               scale: Long = 1000000000000L): DataFrame =
+    fixedRank("pprFixed", edges, srcCol, dstCol,
+      Some(seeds.select(col(seeds.columns.head).cast("long").as("id"))
+        .distinct()),
+      dampNum, dampDen, iterations, scale)
+
+  /** The one fixed-point rank kernel behind [[pageRankFixed]] (`seeds`
+    * None: uniform teleport, every graph node a seed, |S| = n) and
+    * [[pprFixed]] (teleport on the distinct seed ids). One round:
+    *
+    *   rank'(v) = [v ∈ S]·base + (dampNum·inflow(v)) div dampDen
+    *   base     = ((dampDen−dampNum)·scale) div (dampDen·|S|)
+    *
+    * from rank₀(v) = [v ∈ S]·(scale div |S|). The uniform case runs no
+    * seed job and no seed join: its teleport flag is a literal.
+    */
+  private def fixedRank(op: String, edges: DataFrame, srcCol: String,
+                        dstCol: String, seeds: Option[DataFrame],
+                        dampNum: Long, dampDen: Long, iterations: Int,
+                        scale: Long): DataFrame = {
+    import edges.sparkSession.implicits._
     val e = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val sd = seeds.select(col(seeds.columns.head).cast("long").as("id"))
-      .distinct()
     // 16 bytes per edge: one (src, dst) long pair
-    if (graft.fitsDriver(spark, e.count() * 16)) {
-      import spark.implicits._
-      val es = e.as[(Long, Long)].collect()
-      e.unpersist()
-      val seedSet = sd.as[Long].collect().toSet
-      val nSeeds = seedSet.size.toLong
-      require(nSeeds > 0, "pprFixed needs a non-empty seed set")
-      val ids = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
-      val idx = ids.zipWithIndex.toMap
-      val n = ids.length
-      val degA = new Array[Long](n)
-      es.foreach { case (s, _) => degA(idx(s)) += 1 }
-      val adj = es.map { case (s, d) => (idx(s), idx(d)) }
-        .groupBy(_._1).map { case (s, arr) => s -> arr.map(_._2) }
-      val base = ((dampDen - dampNum) * scale) / (dampDen * nSeeds)
-      var rank = ids.map(id =>
-        if (seedSet(id)) scale / nSeeds else 0L)
-      for (_ <- 1 to iterations) {
-        val inflow = new Array[Long](n)
-        adj.foreach { case (s, ds) =>
-          val c = rank(s) / degA(s)
-          ds.foreach(d => inflow(d) += c)
-        }
-        rank = ids.indices.toArray.map { i =>
-          (if (seedSet(ids(i))) base else 0L) +
-            (dampNum * inflow(i)) / dampDen
-        }
+    graft.hybrid(op, e.as[(Long, Long)], 16)(es =>
+      Some(localFixedRank(es, seeds.map(_.as[Long].collect().toSet),
+          dampNum, dampDen, iterations, scale).toDF("id", "rank_fp"))) {
+        (e, _) =>
+      val nodes = e.select(col("src").as("id"))
+        .union(e.select(col("dst").as("id"))).distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // (id, is_seed) over graph nodes, |S|, and the frames to release
+      val (isSeed, nSeeds, held) = seeds match {
+        case None =>
+          (nodes.select(col("id"), lit(true).as("is_seed")), nodes.count(),
+            Seq.empty[DataFrame])
+        case Some(sd) =>
+          val seedNodes = sd.persist(StorageLevel.MEMORY_AND_DISK)
+          val nS = seedNodes.count()
+          require(nS > 0, "pprFixed needs a non-empty seed set")
+          val flagged = nodes.join(seedNodes.select(col("id"),
+              lit(true).as("__s")), Seq("id"), "left")
+            .select(col("id"),
+              coalesce(col("__s"), lit(false)).as("is_seed"))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          (flagged, nS, Seq(flagged, seedNodes))
       }
-      return spark.createDataset(ids.toSeq.map(id => (id, rank(idx(id)))))
-        .toDF("id", "rank_fp")
-    }
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val seedNodes = sd.persist(StorageLevel.MEMORY_AND_DISK)
-    val nSeeds = seedNodes.count()
-    require(nSeeds > 0, "pprFixed needs a non-empty seed set")
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val withDeg = e.join(outdeg, "src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val base = ((dampDen - dampNum) * scale) / (dampDen * nSeeds)
-    val isSeed = nodes.join(seedNodes.select(col("id"),
-        lit(true).as("__s")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("__s"), lit(false)).as("is_seed"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var ranks = isSeed.select(col("id"),
-        when(col("is_seed"), lit(scale / nSeeds)).otherwise(lit(0L))
-          .as("rank_fp"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    for (_ <- 1 to iterations) {
-      val contribs = withDeg.join(ranks, withDeg("src") === ranks("id"))
-        .groupBy(col("dst").as("id"))
-        .agg(sum(expr("rank_fp div deg")).as("inflow"))
-      val next = isSeed.join(contribs, Seq("id"), "left")
-        .select(col("id"),
-          (when(col("is_seed"), lit(base)).otherwise(lit(0L)) +
-            expr(s"($dampNum * coalesce(inflow, 0L)) div $dampDen"))
+      val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      val withDeg = e.join(outdeg, "src")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val base = ((dampDen - dampNum) * scale) / (dampDen * nSeeds)
+      var ranks = isSeed.select(col("id"),
+          when(col("is_seed"), lit(scale / nSeeds)).otherwise(lit(0L))
             .as("rank_fp"))
-        .localCheckpoint(true)
-      ranks.unpersist()
-      ranks = next
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      for (_ <- 1 to iterations) {
+        val contribs = withDeg.join(ranks, withDeg("src") === ranks("id"))
+          .groupBy(col("dst").as("id"))
+          .agg(sum(expr("rank_fp div deg")).as("inflow"))
+        val next = isSeed.join(contribs, Seq("id"), "left")
+          .select(col("id"),
+            (when(col("is_seed"), lit(base)).otherwise(lit(0L)) +
+              expr(s"($dampNum * coalesce(inflow, 0L)) div $dampDen"))
+              .as("rank_fp"))
+          .localCheckpoint(true)
+        ranks.unpersist()
+        ranks = next
+      }
+      nodes.unpersist()
+      held.foreach(_.unpersist())
+      withDeg.unpersist()
+      e.unpersist()
+      ranks
     }
-    nodes.unpersist()
-    isSeed.unpersist()
-    seedNodes.unpersist()
-    withDeg.unpersist()
-    e.unpersist()
-    ranks
+  }
+
+  /** [[fixedRank]]'s driver rung: the identical integer rounds over
+    * arrays indexed by sorted node id; `seeds` None = every node.
+    * @return (id, rank_fp) per graph node
+    */
+  private def localFixedRank(es: Array[(Long, Long)],
+                             seeds: Option[Set[Long]], dampNum: Long,
+                             dampDen: Long, iterations: Int,
+                             scale: Long): Seq[(Long, Long)] = {
+    seeds.foreach(s => require(s.nonEmpty,
+      "pprFixed needs a non-empty seed set"))
+    val ids = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
+    val idx = ids.zipWithIndex.toMap
+    val n = ids.length
+    val isSeed = ids.map(id => seeds.forall(_(id)))
+    val nSeeds = seeds.fold(n.toLong)(_.size.toLong)
+    val deg = new Array[Long](n)
+    es.foreach { case (s, _) => deg(idx(s)) += 1 }
+    val adj = es.map { case (s, d) => (idx(s), idx(d)) }
+      .groupBy(_._1).map { case (s, arr) => s -> arr.map(_._2) }
+    val base = ((dampDen - dampNum) * scale) / (dampDen * nSeeds)
+    var rank = isSeed.map(s => if (s) scale / nSeeds else 0L)
+    for (_ <- 1 to iterations) {
+      val inflow = new Array[Long](n)
+      adj.foreach { case (s, ds) =>
+        val c = rank(s) / deg(s)
+        ds.foreach(d => inflow(d) += c)
+      }
+      rank = Array.tabulate(n)(i =>
+        (if (isSeed(i)) base else 0L) + (dampNum * inflow(i)) / dampDen)
+    }
+    ids.toSeq.map(id => (id, rank(idx(id))))
   }
 }

@@ -84,24 +84,22 @@ object Prefs {
         s"bradleyTerryFixed: max per-item judgments ${mx.getLong(1)} " +
           s"exceeds the BIGINT-safe bound $bound at scale=$scale — " +
           "lower `scale`")
+    import spark.implicits._
     val nPairs = pairs.count()
     if (nPairs == 0) {
       w.unpersist(); pairs.unpersist(); items.unpersist()
-      import spark.implicits._
       return Seq.empty[(String, Long, Long, Long)]
         .toDF("item", "n_games", "n_wins", "rating_fp")
     }
-    // 16 bytes per (i, j) pair: the pair's count plus its rating slot
-    if (graft.fitsDriver(spark, nPairs * 16)) {
-      // driver rung: the tournament fits comfortably in memory — the
-      // SAME integer recurrence, asserted bit-equal to the distributed
-      // rounds in Round8OpsSpec
-      import spark.implicits._
-      val ps = pairs.select(col("i"), col("j"), col("nij"))
-        .as[(String, String, Long)].collect()
+    // 16 bytes per (i, j) pair: the pair's count plus its rating slot.
+    // Driver rung: the tournament fits comfortably in memory — the SAME
+    // integer recurrence, asserted bit-equal to the distributed rounds
+    // in Round8OpsSpec
+    graft.hybridSized("bradleyTerryFixed", pairs.as[(String, String, Long)],
+        nPairs * 16) { ps =>
       val it = items.select(col("i"), col("games"), col("wins"))
         .as[(String, Long, Long)].collect()
-      w.unpersist(); pairs.unpersist(); items.unpersist()
+      w.unpersist(); items.unpersist()
       val ids = it.map(_._1).sorted
       val idx = ids.zipWithIndex.toMap
       val wins = new Array[Long](ids.length)
@@ -121,31 +119,32 @@ object Prefs {
           math.min(cap, math.max(1L, wins(i) * scale * scale / d))
         }
       }
-      return spark.createDataset(ids.toSeq.map(i =>
+      Some(spark.createDataset(ids.toSeq.map(i =>
           (i, games(idx(i)), wins(idx(i)), p(idx(i)))))
-        .toDF("item", "n_games", "n_wins", "rating_fp")
+        .toDF("item", "n_games", "n_wins", "rating_fp"))
+    } { pairs =>
+      var ranks = items.select(col("i"), lit(scale).as("p"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      for (_ <- 1 to iterations) {
+        val den = pairs
+          .join(ranks.select(col("i"), col("p").as("pi")), Seq("i"))
+          .join(ranks.select(col("i").as("j"), col("p").as("pj")), Seq("j"))
+          .groupBy(col("i"))
+          .agg(sum(expr(s"nij * ${scale}L * ${scale}L div (pi + pj)"))
+            .as("den"))
+        val next = items.join(den, Seq("i"))
+          .select(col("i"),
+            least(lit(cap), greatest(lit(1L),
+              expr(s"wins * ${scale}L * ${scale}L div greatest(den, 1L)")))
+              .as("p"))
+          .localCheckpoint(true)
+        ranks.unpersist()
+        ranks = next
+      }
+      val out = items.join(ranks, Seq("i"))
+        .select(col("i").as("item"), col("games").as("n_games"),
+          col("wins").as("n_wins"), col("p").as("rating_fp"))
+      graft.sealResult(out, w, pairs, items, ranks)
     }
-    var ranks = items.select(col("i"), lit(scale).as("p"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    for (_ <- 1 to iterations) {
-      val den = pairs
-        .join(ranks.select(col("i"), col("p").as("pi")), Seq("i"))
-        .join(ranks.select(col("i").as("j"), col("p").as("pj")), Seq("j"))
-        .groupBy(col("i"))
-        .agg(sum(expr(s"nij * ${scale}L * ${scale}L div (pi + pj)"))
-          .as("den"))
-      val next = items.join(den, Seq("i"))
-        .select(col("i"),
-          least(lit(cap), greatest(lit(1L),
-            expr(s"wins * ${scale}L * ${scale}L div greatest(den, 1L)")))
-            .as("p"))
-        .localCheckpoint(true)
-      ranks.unpersist()
-      ranks = next
-    }
-    val out = items.join(ranks, Seq("i"))
-      .select(col("i").as("item"), col("games").as("n_games"),
-        col("wins").as("n_wins"), col("p").as("rating_fp"))
-    graft.sealResult(out, w, pairs, items, ranks)
   }
 }

@@ -481,9 +481,10 @@ object Similarity {
     // the exact-integer trainers take this path; the float trainers
     // keep their distributed fold order. Round13OpsSpec pins path
     // equality.
-    if (graft.fitsDriver(spark, graft.leafBytes(corpus))) {
+    graft.hybridSized("kmeansFixedTrain", vecsPlan, graft.leafBytes(corpus)) {
+        vs =>
       import spark.implicits._
-      val pts = vecsPlan.collect().map(r =>
+      val pts = vs.map(r =>
         (r.getLong(0), r.getSeq[Double](1).map(_.toLong).toArray))
       var cents: Array[Array[Long]] =
         seedsByMd5(pts, k).map(_._2.clone())
@@ -511,61 +512,60 @@ object Similarity {
         }
       }
       val fin = assignAll()
-      return fin.groupBy(_._1).toSeq.map { case (cid, rows) =>
+      Some(fin.groupBy(_._1).toSeq.map { case (cid, rows) =>
         (cid.toLong, rows.length.toLong, rows.map(_._2).sum,
           cents(cid).sum)
       }.sortBy(_._1)
-        .toDF("cid", "n_assigned", "inertia", "centroid_sum")
-    }
-    val vecs = vecsPlan
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var cents: Array[(Int, Seq[Long])] = vecs
-        .orderBy(md5(col("id").cast("string")), col("id")).limit(k)
-        .orderBy(col("id")).collect()
-        .zipWithIndex
-        .map { case (r, i) => (i, r.getSeq[Double](1).map(_.toLong)) }
+        .toDF("cid", "n_assigned", "inertia", "centroid_sum"))
+    } { vecs =>
+      try {
+        var cents: Array[(Int, Seq[Long])] = vecs
+          .orderBy(md5(col("id").cast("string")), col("id")).limit(k)
+          .orderBy(col("id")).collect()
+          .zipWithIndex
+          .map { case (r, i) => (i, r.getSeq[Double](1).map(_.toLong)) }
 
-      def assign(cs: Array[(Int, Seq[Long])]) = {
-        val dists = array(cs.sortBy(_._1).map { case (_, cv) =>
-          sqDist(col("v"), typedLit(cv.map(_.toDouble))) }: _*)
-        vecs.withColumn("__d", dists)
-          .select(col("id"), col("v"),
-            (array_position(col("__d"), array_min(col("__d"))) - 1)
-              .cast("int").as("cid"),
-            array_min(col("__d")).as("d"))
-      }
+        def assign(cs: Array[(Int, Seq[Long])]) = {
+          val dists = array(cs.sortBy(_._1).map { case (_, cv) =>
+            sqDist(col("v"), typedLit(cv.map(_.toDouble))) }: _*)
+          vecs.withColumn("__d", dists)
+            .select(col("id"), col("v"),
+              (array_position(col("__d"), array_min(col("__d"))) - 1)
+                .cast("int").as("cid"),
+              array_min(col("__d")).as("d"))
+        }
 
-      for (_ <- 1 to iters) {
-        val sums = assign(cents)
-          .select(col("cid"), posexplode(col("v")))
-          .groupBy(col("cid"), col("pos"))
-          .agg(sum(col("col").cast("long")).as("s"), count(lit(1)).as("n"))
-          .collect() // k·dim tiny rows — the only driver traffic
-        val byCell = sums.groupBy(_.getInt(0))
-        cents = cents.map { case (cid, old) =>
-          byCell.get(cid) match {
-            case Some(rows) =>
-              // exact integer division — centroids stay integral
-              val dim = rows.map(r =>
-                r.getInt(1) -> r.getLong(2) / r.getLong(3)).toMap
-              (cid, old.indices.map(dim))
-            case None => (cid, old)
+        for (_ <- 1 to iters) {
+          val sums = assign(cents)
+            .select(col("cid"), posexplode(col("v")))
+            .groupBy(col("cid"), col("pos"))
+            .agg(sum(col("col").cast("long")).as("s"), count(lit(1)).as("n"))
+            .collect() // k·dim tiny rows — the only driver traffic
+          val byCell = sums.groupBy(_.getInt(0))
+          cents = cents.map { case (cid, old) =>
+            byCell.get(cid) match {
+              case Some(rows) =>
+                // exact integer division — centroids stay integral
+                val dim = rows.map(r =>
+                  r.getInt(1) -> r.getLong(2) / r.getLong(3)).toMap
+                (cid, old.indices.map(dim))
+              case None => (cid, old)
+            }
           }
         }
-      }
-      import spark.implicits._
-      val digest = cents.toSeq
-        .map { case (cid, cv) => (cid.toLong, cv.sum) }
-        .toDF("cid", "centroid_sum")
-      assign(cents)
-        .groupBy(col("cid"))
-        .agg(count(lit(1)).as("n_assigned"),
-          sum(col("d")).cast("long").as("inertia"))
-        .select(col("cid").cast("long").as("cid"),
-          col("n_assigned"), col("inertia"))
-        .join(digest, Seq("cid"))
-    } finally vecs.unpersist()
+        import spark.implicits._
+        val digest = cents.toSeq
+          .map { case (cid, cv) => (cid.toLong, cv.sum) }
+          .toDF("cid", "centroid_sum")
+        assign(cents)
+          .groupBy(col("cid"))
+          .agg(count(lit(1)).as("n_assigned"),
+            sum(col("d")).cast("long").as("inertia"))
+          .select(col("cid").cast("long").as("cid"),
+            col("n_assigned"), col("inertia"))
+          .join(digest, Seq("cid"))
+      } finally vecs.unpersist()
+    }
   }
 
   /** E79: k-center coreset selection — the Gonzalez (1985) greedy
@@ -602,9 +602,10 @@ object Similarity {
     // Gonzalez step is exact integer arithmetic, so under the size
     // gate ONE collect replaces 1 seed + (k−1)×(top-1 + checkpoint)
     // driver-synchronized jobs. Round13OpsSpec pins path equality.
-    if (graft.fitsDriver(spark, graft.leafBytes(corpus))) {
+    graft.hybridSized("kCenterSelect", vecsPlan, graft.leafBytes(corpus)) {
+        vs =>
       import spark.implicits._
-      val pts = vecsPlan.collect().map(r =>
+      val pts = vs.map(r =>
         (r.getLong(0), r.getSeq[Double](1).map(_.toLong).toArray))
       require(pts.nonEmpty, "kCenterSelect: empty corpus")
       def d2(a: Array[Long], b: Array[Long]): Long = {
@@ -636,48 +637,47 @@ object Similarity {
         }
         (best, bestD)
       }
-      return asn.groupBy(_._1).toSeq.map { case (cid, rows) =>
+      Some(asn.groupBy(_._1).toSeq.map { case (cid, rows) =>
         (cid.toLong, centers(cid)._1, rows.length.toLong,
           rows.map(_._2).max)
-      }.sortBy(_._1).toDF("cid", "center_id", "n_assigned", "max_d")
+      }.sortBy(_._1).toDF("cid", "center_id", "n_assigned", "max_d"))
+    } { vecs =>
+      try {
+        val seed = vecs
+          .orderBy(md5(col("id").cast("string")), col("id")).limit(1)
+          .collect().head
+        var centers = Vector((seed.getLong(0), seed.getSeq[Double](1)))
+        var cur = vecs.withColumn("mind",
+          sqDist(col("v"), typedLit(centers.head._2)))
+        for (_ <- 2 to k) {
+          // farthest-first: top-1 by (running min dist DESC, id ASC) —
+          // a combinable TakeOrdered, not a global sort
+          val far = cur.orderBy(col("mind").desc, col("id").asc).limit(1)
+            .select(col("id"), col("v")).collect().head
+          centers :+= ((far.getLong(0), far.getSeq[Double](1)))
+          cur = cur.withColumn("mind",
+              least(col("mind"), sqDist(col("v"), typedLit(far.getSeq[Double](1)))))
+            .localCheckpoint(true)
+        }
+        // final assignment: argmin over the k centers, ties to lowest cid
+        val dists = array(centers.map { case (_, cv) =>
+          sqDist(col("v"), typedLit(cv)) }: _*)
+        import spark.implicits._
+        val centerDf = centers.zipWithIndex
+          .map { case ((id, _), i) => (i.toLong, id) }
+          .toDF("cid", "center_id")
+        vecs.withColumn("__d", dists)
+          .select(col("id"),
+            (array_position(col("__d"), array_min(col("__d"))) - 1)
+              .cast("long").as("cid"),
+            array_min(col("__d")).cast("long").as("d"))
+          .groupBy(col("cid"))
+          .agg(count(lit(1)).as("n_assigned"), max(col("d")).as("max_d"))
+          .join(centerDf, Seq("cid"))
+          .select(col("cid"), col("center_id"), col("n_assigned"),
+            col("max_d"))
+      } finally vecs.unpersist()
     }
-    val vecs = vecsPlan
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val seed = vecs
-        .orderBy(md5(col("id").cast("string")), col("id")).limit(1)
-        .collect().head
-      var centers = Vector((seed.getLong(0), seed.getSeq[Double](1)))
-      var cur = vecs.withColumn("mind",
-        sqDist(col("v"), typedLit(centers.head._2)))
-      for (_ <- 2 to k) {
-        // farthest-first: top-1 by (running min dist DESC, id ASC) —
-        // a combinable TakeOrdered, not a global sort
-        val far = cur.orderBy(col("mind").desc, col("id").asc).limit(1)
-          .select(col("id"), col("v")).collect().head
-        centers :+= ((far.getLong(0), far.getSeq[Double](1)))
-        cur = cur.withColumn("mind",
-            least(col("mind"), sqDist(col("v"), typedLit(far.getSeq[Double](1)))))
-          .localCheckpoint(true)
-      }
-      // final assignment: argmin over the k centers, ties to lowest cid
-      val dists = array(centers.map { case (_, cv) =>
-        sqDist(col("v"), typedLit(cv)) }: _*)
-      import spark.implicits._
-      val centerDf = centers.zipWithIndex
-        .map { case ((id, _), i) => (i.toLong, id) }
-        .toDF("cid", "center_id")
-      vecs.withColumn("__d", dists)
-        .select(col("id"),
-          (array_position(col("__d"), array_min(col("__d"))) - 1)
-            .cast("long").as("cid"),
-          array_min(col("__d")).cast("long").as("d"))
-        .groupBy(col("cid"))
-        .agg(count(lit(1)).as("n_assigned"), max(col("d")).as("max_d"))
-        .join(centerDf, Seq("cid"))
-        .select(col("cid"), col("center_id"), col("n_assigned"),
-          col("max_d"))
-    } finally vecs.unpersist()
   }
 
   /** Int8 scalar quantization of an embedding column — the 100 TB
@@ -923,8 +923,9 @@ object Similarity {
     // dim probe + seed job + iters collect jobs; the final
     // corpus-sized code assignment stays DISTRIBUTED through the same
     // native pq_codes expression. Round13OpsSpec pins path equality.
-    if (graft.fitsDriver(corpus.sparkSession, graft.leafBytes(corpus))) {
-      val pts = vecsPlan.collect().map(r =>
+    graft.hybridSized("pqFixedEncode", vecsPlan, graft.leafBytes(corpus)) {
+        vs =>
+      val pts = vs.map(r =>
         (r.getLong(0), r.getSeq[Double](1).map(_.toLong).toArray))
       require(pts.nonEmpty, "pqFixedEncode: empty corpus")
       val d0 = pts.head._2.length
@@ -963,72 +964,71 @@ object Similarity {
       }
       val booksArr = Array.tabulate(m, cents(0).length)((s, c) =>
         cents(s)(c).map(_.toDouble))
-      return vecsPlan.select(col("id"),
+      Some(vecsPlan.select(col("id"),
           posexplode(graft.plans.VectorFunctions.pqCodes(col("v"),
             booksArr)).as(Seq("sb", "code")))
         .select(col("id"), col("sb").cast("long").as("sb"),
           col("code").cast("long").as("code"))
-        .localCheckpoint(true)
-    }
-    val d0 = corpus.select(size(col(vecCol))).head.getInt(0)
-    require(d0 % m == 0, s"dim $d0 not divisible by m=$m")
-    val d = d0 / m
-    val vecs = vecsPlan
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val seedIds = corpus.select(col(idCol).cast("long").as("id"))
-        .orderBy(md5(col("id").cast("string")), col("id")).limit(k)
-        .orderBy(col("id")).collect().map(_.getLong(0))
-      val cidOf = seedIds.zipWithIndex.toMap
-      var cents: Array[(Int, Int, Seq[Long])] = vecs
-        .filter(col("id").isin(seedIds: _*))
-        .collect()
-        .flatMap { r =>
-          val cid = cidOf(r.getLong(0))
-          val full = r.getSeq[Double](1)
-          (0 until m).map(s =>
-            (s, cid, full.slice(s * d, s * d + d).map(_.toLong)))
+        .localCheckpoint(true))
+    } { vecs =>
+      val d0 = corpus.select(size(col(vecCol))).head.getInt(0)
+      require(d0 % m == 0, s"dim $d0 not divisible by m=$m")
+      val d = d0 / m
+      try {
+        val seedIds = corpus.select(col(idCol).cast("long").as("id"))
+          .orderBy(md5(col("id").cast("string")), col("id")).limit(k)
+          .orderBy(col("id")).collect().map(_.getLong(0))
+        val cidOf = seedIds.zipWithIndex.toMap
+        var cents: Array[(Int, Int, Seq[Long])] = vecs
+          .filter(col("id").isin(seedIds: _*))
+          .collect()
+          .flatMap { r =>
+            val cid = cidOf(r.getLong(0))
+            val full = r.getSeq[Double](1)
+            (0 until m).map(s =>
+              (s, cid, full.slice(s * d, s * d + d).map(_.toLong)))
+          }
+
+        def books(cs: Array[(Int, Int, Seq[Long])]) = {
+          val arr = Array.ofDim[Array[Double]](m, k)
+          cs.foreach { case (s, c, cv) => arr(s)(c) = cv.map(_.toDouble).toArray }
+          arr
         }
 
-      def books(cs: Array[(Int, Int, Seq[Long])]) = {
-        val arr = Array.ofDim[Array[Double]](m, k)
-        cs.foreach { case (s, c, cv) => arr(s)(c) = cv.map(_.toDouble).toArray }
-        arr
-      }
-
-      for (_ <- 1 to iters) {
-        // per-(sub, cell, dim) sums collapse map-side to m·k·d scalars
-        // — the only driver traffic, exactly like pqTrain; sums of
-        // integral doubles are exact, update is integer division
-        val sums = vecs
-          .select(graft.plans.VectorFunctions.pqCodes(col("v"),
-              books(cents)).as("cids"),
-            posexplode(col("v")).as(Seq("p", "x")))
-          .select(expr(s"p div $d").cast("int").as("sb"),
-            element_at(col("cids"), expr(s"p div $d").cast("int") + 1)
-              .as("cid"),
-            expr(s"p % $d").cast("int").as("lp"), col("x"))
-          .groupBy(col("sb"), col("cid"), col("lp"))
-          .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
-          .collect()
-        val byCell = sums.groupBy(r => (r.getInt(0), r.getInt(1)))
-        cents = cents.map { case (sb, cid, old) =>
-          byCell.get((sb, cid)) match {
-            case Some(rows) =>
-              val dims = rows.map(r =>
-                r.getInt(2) -> r.getDouble(3).toLong / r.getLong(4)).toMap
-              (sb, cid, old.indices.map(dims))
-            case None => (sb, cid, old)
+        for (_ <- 1 to iters) {
+          // per-(sub, cell, dim) sums collapse map-side to m·k·d scalars
+          // — the only driver traffic, exactly like pqTrain; sums of
+          // integral doubles are exact, update is integer division
+          val sums = vecs
+            .select(graft.plans.VectorFunctions.pqCodes(col("v"),
+                books(cents)).as("cids"),
+              posexplode(col("v")).as(Seq("p", "x")))
+            .select(expr(s"p div $d").cast("int").as("sb"),
+              element_at(col("cids"), expr(s"p div $d").cast("int") + 1)
+                .as("cid"),
+              expr(s"p % $d").cast("int").as("lp"), col("x"))
+            .groupBy(col("sb"), col("cid"), col("lp"))
+            .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
+            .collect()
+          val byCell = sums.groupBy(r => (r.getInt(0), r.getInt(1)))
+          cents = cents.map { case (sb, cid, old) =>
+            byCell.get((sb, cid)) match {
+              case Some(rows) =>
+                val dims = rows.map(r =>
+                  r.getInt(2) -> r.getDouble(3).toLong / r.getLong(4)).toMap
+                (sb, cid, old.indices.map(dims))
+              case None => (sb, cid, old)
+            }
           }
         }
-      }
-      vecs.select(col("id"),
-          posexplode(graft.plans.VectorFunctions.pqCodes(col("v"),
-            books(cents))).as(Seq("sb", "code")))
-        .select(col("id"), col("sb").cast("long").as("sb"),
-          col("code").cast("long").as("code"))
-        .localCheckpoint(true)
-    } finally vecs.unpersist()
+        vecs.select(col("id"),
+            posexplode(graft.plans.VectorFunctions.pqCodes(col("v"),
+              books(cents))).as(Seq("sb", "code")))
+          .select(col("id"), col("sb").cast("long").as("sb"),
+            col("code").cast("long").as("code"))
+          .localCheckpoint(true)
+      } finally vecs.unpersist()
+    }
   }
 
   /** PQ encoding: vector → m codes (nearest per-subspace centroid,

@@ -210,21 +210,6 @@ object Stats {
       .drop("__lo", "__hi")
   }
 
-  /** Global dense 1..n rank by (value, tie) WITHOUT the bare
-    * `Window.orderBy` that serializes the whole table onto one
-    * partition — the E49 two-level trick applied to VALUE order:
-    * coarse value bucket (integer div — deterministic, unlike a
-    * sampled range partitioner), per-bucket counts, prefix offsets
-    * over the BUCKET-cardinality frame (that window being
-    * single-partition is immaterial), within-bucket rank as a KEYED
-    * window. rank = bucket offset + within-bucket row_number — the
-    * identical total order at any parallelism, all integer
-    * arithmetic. Skewed value distributions skew the bucket window's
-    * partitions, not a single global one; shrink `bucketWidth` to
-    * spread them.
-    *
-    * @return df plus `rankCol` (long, 1-based).
-    */
   /** Corpus-percentile calibration of a per-row integer score — the
     * curation gate "keep the top X% by quality/length/score" expressed
     * as EXACT rank arithmetic: global ascending rank via
@@ -1401,6 +1386,21 @@ object Stats {
         .as("z"))
   }
 
+  /** Global dense 1..n rank by (value, tie) WITHOUT the bare
+    * `Window.orderBy` that serializes the whole table onto one
+    * partition — the E49 two-level trick applied to VALUE order:
+    * coarse value bucket (integer div — deterministic, unlike a
+    * sampled range partitioner), per-bucket counts, prefix offsets
+    * over the BUCKET-cardinality frame (that window being
+    * single-partition is immaterial), within-bucket rank as a KEYED
+    * window. rank = bucket offset + within-bucket row_number — the
+    * identical total order at any parallelism, all integer
+    * arithmetic. Skewed value distributions skew the bucket window's
+    * partitions, not a single global one; shrink `bucketWidth` to
+    * spread them.
+    *
+    * @return df plus `rankCol` (long, 1-based).
+    */
   def globalValueRank(df: DataFrame, valueCol: String, tieCol: String,
                       rankCol: String,
                       bucketWidth: Long = 1L << 20): DataFrame = {

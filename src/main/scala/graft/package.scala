@@ -1,4 +1,6 @@
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.scheduler.SparkListenerEvent
+import org.apache.spark.sql.{DataFrame, Dataset, GraftBridge, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** graft — a Spark-native analytics/ETL engine with the capabilities of
   * the reference banking ETL pipeline (see SURVEY.md), re-expressed as
@@ -24,14 +26,7 @@ package object graft {
     * by the ContextCleaner once the result is garbage-collected).
     */
   private[graft] def sealResult(result: DataFrame,
-      intermediates: org.apache.spark.sql.Dataset[_]*): DataFrame = {
-    // dev-only (tools.PlanDump): skip the eager checkpoint so the
-    // operator's REAL plan is visible to explain() — a sealed result
-    // dumps as an opaque `Scan ExistingRDD`. Never set by the driver,
-    // bench, or Verify; intermediates stay persisted (the caller is a
-    // one-shot plan dump, and unpersisting them under a live plan
-    // would change what explain reports).
-    if (sys.env.contains("SPARK_GRAFT_NO_SEAL")) return result
+      intermediates: Dataset[_]*): DataFrame = {
     val out = result.localCheckpoint(eager = true)
     intermediates.foreach(_.unpersist())
     out
@@ -45,8 +40,8 @@ package object graft {
     * Long-lived sessions that skip this still drain via Spark's
     * ContextCleaner when the result object is garbage-collected.
     */
-  def release(df: org.apache.spark.sql.Dataset[_]): Unit = {
-    org.apache.spark.sql.GraftBridge.unpersistPlanRdds(df)
+  def release(df: Dataset[_]): Unit = {
+    GraftBridge.unpersistPlanRdds(df)
     df.unpersist()
   }
 
@@ -74,14 +69,69 @@ package object graft {
     df.queryExecution.optimizedPlan.collectLeaves()
       .map(_.stats.sizeInBytes).sum
 
-  /** The one driver-local size gate: a hybrid operator collects and
-    * solves on the driver iff `bytes` (rows × per-row driver cost from
-    * a count it already takes, or a corpus's [[leafBytes]]) is at most
-    * `spark.graft.localSolveBytes` (default 32,000,000; 0 forces every
-    * non-empty input distributed). Both paths give the same relation.
+  private def localSolveBound(spark: SparkSession): BigInt =
+    BigInt(spark.conf.get("spark.graft.localSolveBytes", "32000000"))
+
+  /** The one driver-local size gate, consulted only by [[hybridSized]]:
+    * an input of `bytes` driver bytes may be collected and solved on the
+    * driver iff it is at most `spark.graft.localSolveBytes` (default
+    * 32,000,000; 0 forces every non-empty input distributed), read per
+    * call.
     */
   private[graft] def fitsDriver(spark: SparkSession, bytes: BigInt): Boolean =
-    bytes <= BigInt(spark.conf.get("spark.graft.localSolveBytes", "32000000"))
+    bytes <= localSolveBound(spark)
+
+  /** One hybrid decision, posted to the listener bus (read it in
+    * `SparkListener.onOtherEvent`): the operator, its input's size in
+    * driver bytes, the bound it was checked against, the path taken
+    * (`"local"` or `"distributed"`) and the job group of the thread
+    * that called the operator (null when none is set).
+    */
+  final case class HybridPath(op: String, bytes: BigInt, bound: BigInt,
+      path: String, jobGroup: String) extends SparkListenerEvent
+
+  /** The one hybrid rung: persists `input`, sizes it as its row count ×
+    * `rowBytes` and decides as [[hybridSized]] does, handing the count
+    * to the distributed builder. The count is the only job the
+    * decision costs, and it materializes the cache both paths read.
+    */
+  private[graft] def hybrid[T](op: String, input: Dataset[T], rowBytes: Long)(
+      local: Array[T] => Option[DataFrame])(
+      distributed: (DataFrame, Long) => DataFrame): DataFrame = {
+    input.persist(StorageLevel.MEMORY_AND_DISK)
+    val n = input.count()
+    hybridSized(op, input, BigInt(n) * rowBytes)(local)(distributed(_, n))
+  }
+
+  /** [[hybrid]] for an input the caller has already sized (a corpus's
+    * [[leafBytes]], or a stats row it reads anyway). When `bytes`
+    * [[fitsDriver]], the input is collected as typed rows and handed to
+    * `local`, the driver solver; if it returns a frame, the input is
+    * unpersisted and that frame is the result. Otherwise — too large,
+    * or the solver declined (None, e.g. a bound it meets mid-solve) —
+    * the input is persisted (if it is not already) and handed to
+    * `distributed`, which owns it from then on. Both paths give the
+    * same relation; the choice is recorded as one [[HybridPath]] event.
+    */
+  private[graft] def hybridSized[T](op: String, input: Dataset[T],
+      bytes: BigInt)(local: Array[T] => Option[DataFrame])(
+      distributed: DataFrame => DataFrame): DataFrame = {
+    val spark = input.sparkSession
+    val solved =
+      if (fitsDriver(spark, bytes)) local(input.collect()) else None
+    GraftBridge.post(spark, HybridPath(op, bytes, localSolveBound(spark),
+      if (solved.isDefined) "local" else "distributed",
+      spark.sparkContext.getLocalProperty("spark.jobGroup.id")))
+    solved match {
+      case Some(out) =>
+        input.unpersist()
+        out
+      case None =>
+        if (input.storageLevel == StorageLevel.NONE)
+          input.persist(StorageLevel.MEMORY_AND_DISK)
+        distributed(input.toDF())
+    }
+  }
 
   /** True iff the frame is scan-shaped: no shuffle-inducing logical
     * node, so probing `df.rdd.getNumPartitions` is plan-time only

@@ -16,17 +16,19 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *    (extract.py:380,438 column-mismatch guard);
   *  - rows with null/empty primary key are dropped (extract.py:387);
   *  - duplicate primary keys keep the LAST occurrence in file order
-  *    (extract.py:389 drop_duplicates keep='last');
+  *    (extract.py:389 drop_duplicates keep='last'); across the files of
+  *    one glob, the last file in name order wins;
   *  - the numeric-digits sort key (extract.py:272) is derived as a
   *    COLUMN — the reference's global pre-insert sort is replaced by
   *    an orderable key, because a total order is a single-writer
   *    bottleneck at 100 TB.
   *
   * Scale notes: "keep last per key" is a window over the key — one
-  * shuffle, no driver state. File order within a file is preserved by
-  * pairing each row with its byte offset via the csv reader's
-  * partition-local order (monotonically_increasing_id is monotone
-  * within and across file splits in read order).
+  * shuffle, no driver state, ordered by (file path, row position).
+  * The row position is `monotonically_increasing_id`, which is monotone
+  * within one file: its splits are read in offset order. It says
+  * nothing about order ACROSS files — Spark packs a multi-file read's
+  * splits largest first — so the file path orders files.
   */
 object CsvStaging {
 
@@ -77,24 +79,26 @@ object CsvStaging {
       .csv(expanded.map(_.toString): _*)
 
     val ordered = raw.select(columns.map(col): _*)
+      .withColumn("__file", input_file_name())
       .withColumn("__file_order", monotonically_increasing_id())
 
     val valid = col(primaryKey).isNotNull && trim(col(primaryKey)) =!= ""
 
-    // keep-last per key, by file order (reference keep='last')
+    // keep-last per key: the last file in name order, then the last row
+    // within it (reference keep='last')
     val w = Window.partitionBy(col(primaryKey))
-      .orderBy(col("__file_order").desc)
+      .orderBy(col("__file").desc, col("__file_order").desc)
     val deduped = ordered.filter(valid)
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
-      .drop("__rn", "__file_order")
+      .drop("__rn", "__file", "__file_order")
       .withColumn("numeric_sort_key", numericSortKey(col(primaryKey)))
 
     // per-file rows, and over the glob (the rollup's total row) rows,
     // valid-key rows and distinct valid keys — the dedup keeps one row
     // per distinct valid key
     val stats = ordered
-      .select(element_at(split(input_file_name(), "/"), -1).as("file_name"),
+      .select(element_at(split(col("__file"), "/"), -1).as("file_name"),
         valid.as("valid"), col(primaryKey).as("pk"))
       .rollup(col("file_name"))
       .agg(grouping(col("file_name")).as("total"), count(lit(1)).as("rows"),

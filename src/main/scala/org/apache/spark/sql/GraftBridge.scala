@@ -34,6 +34,13 @@ object GraftBridge {
       case _ => ()
     }
 
+  /** Post a custom event to every listener of `spark`'s context
+    * (`listenerBus` is private[spark]).
+    */
+  def post(spark: SparkSession,
+           event: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+    spark.sparkContext.listenerBus.post(event)
+
   /** Flush the async listener bus (QueryExecutionListener events post
     * asynchronously) — lets tests read listener-captured plans
     * deterministically. `listenerBus` is private[spark].

@@ -7,12 +7,33 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.Cleaning
 
 object SparkTestSession {
+  private val tempDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  sys.addShutdownHook(tempDirs.forEach { d =>
+    try {
+      val under = java.nio.file.Files.walk(d)
+      try under.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.deleteIfExists(p))
+      finally under.close()
+    } catch {
+      case _: java.io.IOException | _: java.io.UncheckedIOException => ()
+    }
+  })
+
+  /** A fresh directory under the system temp dir, deleted with
+    * everything in it when the JVM exits.
+    */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d
+  }
+
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
+    .config("spark.sql.warehouse.dir", tempDir("graft_wh").toString)
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
@@ -27,6 +48,45 @@ object SparkTestSession {
       body: => T): T = {
     session.conf.set("spark.graft.localSolveBytes", bytes)
     try body finally session.conf.unset("spark.graft.localSolveBytes")
+  }
+
+  /** Runs `body` and asserts that every hybrid operator it called took
+    * `path`, and that at least one did. `"distributed"` runs `body`
+    * under bound 0 ([[withLocalSolveBytes]]); `"local"` runs it at the
+    * session's bound (the default, which every test input fits). The
+    * operators' [[graft.HybridPath]] events are filtered on a fresh
+    * job group set on this thread, so events that other threads or
+    * suites post never count.
+    */
+  def onPath[T](session: SparkSession, path: String)(body: => T): T = {
+    require(path == "local" || path == "distributed", path)
+    val group = s"hybrid-path-${System.nanoTime()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[HybridPath]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case h: HybridPath if h.jobGroup == group => seen.add(h); ()
+        case _ => ()
+      }
+    }
+    val sc = session.sparkContext
+    sc.setJobGroup(group, s"hybrid $path probe")
+    sc.addSparkListener(l)
+    try {
+      val out =
+        if (path == "distributed") withLocalSolveBytes(session, 0L)(body)
+        else body
+      org.apache.spark.sql.GraftBridge.waitListenerBusEmpty(session)
+      val got = seen.toArray(Array.empty[HybridPath]).toSeq
+      org.scalatest.Assertions.assert(
+        got.nonEmpty && got.forall(_.path == path),
+        s"expected every hybrid operator on the $path path, got " +
+          got.map(h => s"${h.op}: ${h.path}").mkString("[", ", ", "]"))
+      out
+    } finally {
+      sc.removeSparkListener(l)
+      sc.clearJobGroup()
+    }
   }
 }
 

@@ -31,7 +31,7 @@ class CodegenCanarySpec extends AnyFunSuite {
   test("EtlMain full run compiles every stage (no interpreted fallback), " +
     "rows unchanged") {
     for (src <- EtlTestData.sources) withClue(s"${src.name}: ") {
-      val out = java.nio.file.Files.createTempDirectory("graft_canary").toString
+      val out = SparkTestSession.tempDir("graft_canary").toString
       strict {
         EtlMain.runFull(spark, src.dir, out, "2026-08-14")
       }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import SparkTestSession.withLocalSolveBytes
+import SparkTestSession.onPath
 
 import graft.functions.TextFunctions
 import graft.operators.Corpus
@@ -622,12 +622,12 @@ class CorpusSpec extends AnyFunSuite {
     val docs = (1 to 30).map(i => (i.toLong, i % 3 != 0,
       s"w${i % 5} w${i % 7} w${i % 2} common token w${i % 11}"))
       .toDF("doc_id", "pos", "text")
-    def run(bound: Long) = withLocalSolveBytes(spark, bound) {
+    def run(path: String) = onPath(spark, path) {
       Corpus.perceptronTrain(docs, "doc_id", "pos", "text",
         TextFunctions.words, rounds = 3)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
-    assert(run(0L) == run(Long.MaxValue),
+    assert(run("distributed") == run("local"),
       "driver rung must be bit-equal to the distributed round loop")
   }
 

@@ -216,7 +216,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("csv export round-trips with NA nulls") {
-    val out = java.nio.file.Files.createTempDirectory("graft_csv").toString + "/x"
+    val out = SparkTestSession.tempDir("graft_csv").toString + "/x"
     val df = Seq((1L, "a"), (2L, null.asInstanceOf[String])).toDF("id", "s")
     graft.sources.Writers.writeCsv(df.coalesce(1), out)
     val back = spark.read.option("header", "true").csv(out).collect()

@@ -24,7 +24,7 @@ final case class EtlSource(name: String, dir: String,
 object EtlTestData {
 
   lazy val fixture: EtlSource = {
-    val dir = Files.createTempDirectory("graft_etl_fixture")
+    val dir = SparkTestSession.tempDir("graft_etl_fixture")
     val fx = ScaleFixture.write(dir, 1)
     val stats = Seq("branches" -> fx.branches, "customers" -> fx.customers,
       "loans" -> fx.loans)

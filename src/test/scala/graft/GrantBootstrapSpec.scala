@@ -72,7 +72,7 @@ class GrantBootstrapSpec extends AnyFunSuite {
   }
 
   test("Derby rung EXECUTES: grants land in SYS.SYSTABLEPERMS") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_grants")
+    val dir = SparkTestSession.tempDir("graft_grants")
     val url = s"jdbc:derby:$dir/gdb"
     val props = new java.util.Properties
     def withConn[A](u: String)(f: java.sql.Connection => A): A = {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import SparkTestSession.withLocalSolveBytes
+import SparkTestSession.onPath
 
 import graft.operators.{Dedup, Graph, Sampling}
 
@@ -55,11 +55,11 @@ class GraphSamplingSpec extends AnyFunSuite {
       val df = edges.toDF("a", "b")
       // a size gate of 0 forces the DISTRIBUTED joins in both
       // orientations; the default run exercises the driver-local rung
-      val (fwd, ids) = withLocalSolveBytes(spark, 0L) {
+      val (fwd, ids) = onPath(spark, "distributed") {
         (Graph.triangleStats(df, "a", "b").head,
           Graph.triangleStats(df, "a", "b", degreeOrdered = false).head)
       }
-      val loc = Graph.triangleStats(df, "a", "b").head
+      val loc = onPath(spark, "local")(Graph.triangleStats(df, "a", "b").head)
       for (other <- Seq(ids, loc)) {
         assert(fwd.getAs[Long]("n_triangles") == other.getAs[Long]("n_triangles"))
         assert(fwd.getAs[Long]("n_nodes") == other.getAs[Long]("n_nodes"))
@@ -82,8 +82,8 @@ class GraphSamplingSpec extends AnyFunSuite {
         Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)),
         (0L until 10L).flatMap(i => ((i + 1) until 10L).map(j => (i, j))))) {
       val df = edges.toDF("a", "b")
-      def rows(degOrdered: Boolean, bound: Long) =
-        withLocalSolveBytes(spark, bound) {
+      def rows(degOrdered: Boolean, path: String) =
+        onPath(spark, path) {
           Graph.localClustering(df, "a", "b", degreeOrdered = degOrdered)
             .collect()
             .map(r => r.getAs[Long]("id") ->
@@ -91,8 +91,8 @@ class GraphSamplingSpec extends AnyFunSuite {
                 r.getAs[Double]("lcc")))).toMap
         }
       // both distributed orientations AND the driver-local rung agree
-      assert(rows(true, 0L) == rows(false, 0L))
-      assert(rows(true, 0L) == rows(true, Long.MaxValue))
+      assert(rows(true, "distributed") == rows(false, "distributed"))
+      assert(rows(true, "distributed") == rows(true, "local"))
     }
     // spot-check exact values on K4 + pendant: node 4 sees 3 triangles
     // over deg 4 → lcc = 6/12; pendant 5 deg 2, 0 triangles → 0.0
@@ -109,15 +109,15 @@ class GraphSamplingSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(23)
     val edges = Seq.fill(120)((s"n${rnd.nextInt(25)}", s"n${rnd.nextInt(25)}"))
       .filter(e => e._1 != e._2).toDF("s", "t")
-    def run(bound: Long) = withLocalSolveBytes(spark, bound) {
+    def run(path: String) = onPath(spark, path) {
       Graph.hitsFixedPoint(edges, "s", "t", rounds = 3)
         .collect()
         .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     }
-    assert(run(Long.MaxValue) == run(0L))
+    assert(run("local") == run("distributed"))
     // distributed-path overflow guard fails loudly when scale² eats
     // the Long headroom (the wrap would otherwise be silent garbage)
-    withLocalSolveBytes(spark, 0L) {
+    onPath(spark, "distributed") {
       intercept[IllegalArgumentException] {
         Graph.hitsFixedPoint(edges, "s", "t", rounds = 1,
           scale = 4000000000L)
@@ -153,12 +153,12 @@ class GraphSamplingSpec extends AnyFunSuite {
       val a = rnd.nextInt(120).toLong; val b = rnd.nextInt(120).toLong
       (a, b)
     }.filter { case (a, b) => a != b }
-    def run(bound: Long) = withLocalSolveBytes(spark, bound) {
+    def run(path: String) = onPath(spark, path) {
       Graph.connectedComponents(edges.toDF("a", "b"), "a", "b")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
-    val local = run(Long.MaxValue)
-    val distributed = run(0L) // force the iterated path
+    val local = run("local")
+    val distributed = run("distributed") // force the iterated path
     assert(local == distributed)
   }
 
@@ -196,8 +196,8 @@ class GraphSamplingSpec extends AnyFunSuite {
     // forces the DISTRIBUTED loop even on this tiny graph.
     val edges = Seq((1L, 0L), (2L, 0L), (3L, 0L), (0L, 1L),
       (1L, 2L), (2L, 3L), (3L, 1L)).toDF("s", "d")
-    for (bound <- Seq(0L, 16000L)) { // distributed and local paths
-      val r = withLocalSolveBytes(spark, bound) {
+    for (path <- Seq("distributed", "local")) {
+      val r = onPath(spark, path) {
         Graph.pageRank(edges, "s", "d")
           .collect()
           .map(x => x.getAs[Long]("id") -> x.getAs[Double]("rank")).toMap
@@ -212,9 +212,11 @@ class GraphSamplingSpec extends AnyFunSuite {
     import spark.implicits._
     val edges = (1 to 60).map(i => (i.toLong, (i % 7).toLong))
       .toDF("s", "d")
-    val local = Graph.pageRank(edges, "s", "d").collect()
-      .map(x => x.getAs[Long]("id") -> x.getAs[Double]("rank")).toMap
-    val dist = withLocalSolveBytes(spark, 0L) {
+    val local = onPath(spark, "local") {
+      Graph.pageRank(edges, "s", "d").collect()
+        .map(x => x.getAs[Long]("id") -> x.getAs[Double]("rank")).toMap
+    }
+    val dist = onPath(spark, "distributed") {
       Graph.pageRank(edges.repartition(13), "s", "d").collect()
         .map(x => x.getAs[Long]("id") -> x.getAs[Double]("rank")).toMap
     }
@@ -226,9 +228,11 @@ class GraphSamplingSpec extends AnyFunSuite {
     import spark.implicits._
     val edges = (1 to 60).map(i => (i.toLong, (i % 7).toLong))
       .toDF("s", "d")
-    val local = Graph.pageRankFixed(edges, "s", "d").collect()
-      .map(x => x.getAs[Long]("id") -> x.getAs[Long]("rank_fp")).toMap
-    val dist = withLocalSolveBytes(spark, 0L) {
+    val local = onPath(spark, "local") {
+      Graph.pageRankFixed(edges, "s", "d").collect()
+        .map(x => x.getAs[Long]("id") -> x.getAs[Long]("rank_fp")).toMap
+    }
+    val dist = onPath(spark, "distributed") {
       Graph.pageRankFixed(edges.repartition(13), "s", "d").collect()
         .map(x => x.getAs[Long]("id") -> x.getAs[Long]("rank_fp")).toMap
     }
@@ -254,7 +258,7 @@ class GraphSamplingSpec extends AnyFunSuite {
       Graph.labelPropagation(d, "a", "b", rounds = 3)
         .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("community"))
         .toMap
-    val got = run(edges)
+    val got = onPath(spark, "local")(run(edges))
     // dense cores keep their own min label; the bridge does not merge them
     assert(Seq(1L, 2L, 3L, 4L).map(got) == Seq(1L, 1L, 1L, 1L))
     assert(Seq(5L, 6L, 7L, 8L).map(got) == Seq(5L, 5L, 5L, 5L))
@@ -267,7 +271,7 @@ class GraphSamplingSpec extends AnyFunSuite {
     // the distributed loop (forced) is bit-identical to the driver path
     // — LPA state is all-integer, so unlike PageRank there is no fp
     // caveat to the equivalence
-    val dist = withLocalSolveBytes(spark, 0L) {
+    val dist = onPath(spark, "distributed") {
       Graph.labelPropagation(edges, "a", "b", rounds = 3)
         .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("community"))
         .toMap
@@ -440,16 +444,17 @@ class GraphSamplingSpec extends AnyFunSuite {
     // local peel ≡ distributed rounds, exactly, incl. on random graphs
     def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(withLocalSolveBytes(spark, 0L) {
+    assert(onPath(spark, "distributed") {
       asMap(Graph.kCore(edges, "s", "d", k = 2))
-    } == asMap(Graph.kCore(edges, "s", "d", k = 2)))
+    } == onPath(spark, "local")(asMap(Graph.kCore(edges, "s", "d", k = 2))))
     val rnd = new scala.util.Random(21)
     val redges = (1 to 80).map(_ =>
       (rnd.nextInt(25).toLong, rnd.nextInt(25).toLong)).toDF("s", "d")
     for (kk <- Seq(2, 3)) {
-      assert(withLocalSolveBytes(spark, 0L) {
+      assert(onPath(spark, "distributed") {
         asMap(Graph.kCore(redges, "s", "d", kk))
-      } == asMap(Graph.kCore(redges, "s", "d", kk)), s"k=$kk")
+      } == onPath(spark, "local")(asMap(Graph.kCore(redges, "s", "d", kk))),
+        s"k=$kk")
     }
   }
 
@@ -478,8 +483,8 @@ class GraphSamplingSpec extends AnyFunSuite {
       .map(_ => (rnd.nextInt(20).toLong, rnd.nextInt(20).toLong))
       .filter(e => e._1 != e._2)
     val seeds = Seq(0L, 3L, 17L)
-    assert(hops(redges, seeds, 3) ==
-      withLocalSolveBytes(spark, 0L)(hops(redges, seeds, 3)))
+    assert(onPath(spark, "local")(hops(redges, seeds, 3)) ==
+      onPath(spark, "distributed")(hops(redges, seeds, 3)))
     // maxHops=0 → the seed set itself (present seeds only at hop 0)
     assert(hops(path, Seq(2L), 0) == Map(2L -> 0L))
   }

@@ -134,7 +134,7 @@ class LayoutBloomSpec extends AnyFunSuite {
   }
 
   test("zorderWrite gives every file a tight 2-D bounding box") {
-    val out = Files.createTempDirectory("graft_z").toString + "/t"
+    val out = SparkTestSession.tempDir("graft_z").toString + "/t"
     val n = 100000L
     // two independent uniform dims — a 1-D sort would leave the other
     // dim's per-file range at ~full span

@@ -79,8 +79,8 @@ class PackingStreamSinkSpec extends AnyFunSuite {
   test("streaming upsert sink merges batches by key (latest wins)") {
     implicit val sc = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val target = java.nio.file.Files.createTempDirectory("graft_up").toString + "/t"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_upc").toString
+    val target = SparkTestSession.tempDir("graft_up").toString + "/t"
+    val ckpt = SparkTestSession.tempDir("graft_upc").toString
     val input = MemoryStream[(Long, String)]
     input.addData((1L, "a"), (2L, "b"))
     val q1 = graft.streaming.StreamingEtl.upsertSink(

@@ -14,7 +14,7 @@ class ParquetIoSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def tmp() = Files.createTempDirectory("graft_pio").toString
+  private def tmp() = SparkTestSession.tempDir("graft_pio").toString
 
   test("readIfExists: absent path is None, existing path reads") {
     val dir = tmp()

@@ -35,7 +35,7 @@ class PgDialectSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def beforeAll(): Unit = {
     if (!new java.io.File(s"$bin/initdb").canExecute) return
     if (sh("id", "-u", "postgres")._1 != 0) return
-    dir = java.nio.file.Files.createTempDirectory("graft_pg").toString
+    dir = SparkTestSession.tempDir("graft_pg").toString
     if (sh("chown", "-R", "postgres:postgres", dir)._1 != 0) return
     val init = sh("su", "postgres", "-s", "/bin/bash", "-c",
       s"$bin/initdb -D $dir/data -U graft --no-sync")

@@ -131,11 +131,11 @@ class PipelineSpec extends AnyFunSuite {
     "0 rows and adds no file to production") {
     import java.nio.file.{Files, Paths}
     val src = EtlTestData.fixture
-    val csvDir = Files.createTempDirectory("graft_resend")
+    val csvDir = SparkTestSession.tempDir("graft_resend")
     // branches: a non-partitioned table; customers: a partitioned one
     val entities = Seq("branches", "customers")
     entities.foreach(e => Files.copy(Paths.get(src.csv(e)), csvDir.resolve(s"$e.csv")))
-    val out = Files.createTempDirectory("graft_resend_out").toString
+    val out = SparkTestSession.tempDir("graft_resend_out").toString
     EtlMain.runFull(spark, csvDir.toString, out, "2026-08-14")
     val before = entities.map(e => e -> filesUnder(s"$out/$e")).toMap
     entities.foreach(e => Files.copy(csvDir.resolve(s"$e.csv"),
@@ -156,7 +156,7 @@ class PipelineSpec extends AnyFunSuite {
     import graft.operators.Loads
     val src = EtlTestData.fixture
     def csvCopy(prefix: String) = {
-      val d = Files.createTempDirectory(prefix)
+      val d = SparkTestSession.tempDir(prefix)
       BankEtl.schemas.foreach(e =>
         Files.copy(Paths.get(src.csv(e.name)), d.resolve(s"${e.name}.csv")))
       d
@@ -168,7 +168,7 @@ class PipelineSpec extends AnyFunSuite {
     val broken = new java.util.ArrayList[String](good)
     broken.set(0, good.get(0).replace("loan_status", "status"))
     Files.write(loans, broken)
-    val out = Files.createTempDirectory("graft_rerun_out").toString
+    val out = SparkTestSession.tempDir("graft_rerun_out").toString
     val date = "2026-08-14"
     intercept[IllegalArgumentException] {
       EtlMain.runFull(spark, csvDir.toString, out, date)
@@ -178,7 +178,7 @@ class PipelineSpec extends AnyFunSuite {
     EtlMain.runFull(spark, csvDir.toString, out, date, Some(log))
     assert(fullRecords(log, "skip").keySet == Set("branches", "customers"))
     assert(fullRecords(log, "ok").keySet == Set("loans", "transactions"))
-    val clean = Files.createTempDirectory("graft_rerun_clean").toString
+    val clean = SparkTestSession.tempDir("graft_rerun_clean").toString
     EtlMain.runFull(spark, csvCopy("graft_rerun_csv").toString, clean, date)
     def digests(dir: String) = Loads.digestReport(BankEtl.schemas.map { e =>
       val df = spark.read.parquet(s"$dir/${e.name}")
@@ -231,8 +231,8 @@ class PipelineSpec extends AnyFunSuite {
   test("EtlMain: phase-split extract/transform/load ≡ fused full run") {
     for (src <- EtlTestData.sources) withClue(s"${src.name}: ") {
       val dataDir = src.dir
-      val split = java.nio.file.Files.createTempDirectory("graft_split").toString
-      val fused = java.nio.file.Files.createTempDirectory("graft_fused").toString
+      val split = SparkTestSession.tempDir("graft_split").toString
+      val fused = SparkTestSession.tempDir("graft_fused").toString
       val date = "2026-08-14"
       EtlMain.runExtract(spark, dataDir, split)
       EtlMain.runTransform(spark, split, date)
@@ -260,12 +260,12 @@ class PipelineSpec extends AnyFunSuite {
     import graft.pipeline.RunLog
     import graft.tools.TransactionsFixture
     for (src <- EtlTestData.sources) withClue(s"${src.name}: ") {
-      val csvDir = Files.createTempDirectory("graft_data4")
+      val csvDir = SparkTestSession.tempDir("graft_data4")
       Seq("branches", "customers", "loans").foreach { e =>
         Files.copy(Paths.get(src.csv(e)), csvDir.resolve(s"$e.csv"))
       }
       val fx = TransactionsFixture.write(csvDir.resolve("transactions.csv"))
-      val out = Files.createTempDirectory("graft_out4").toString
+      val out = SparkTestSession.tempDir("graft_out4").toString
       val log = new RunLog(s"$out/_logs", RunLog.newRunId())
       EtlMain.runFull(spark, csvDir.toString, out, "2026-08-14", Some(log))
       // the reference's own target: `[etl] summary full: ok=4`
@@ -401,9 +401,9 @@ class PipelineSpec extends AnyFunSuite {
     "100x run is tools.EtlScale, results in SURVEY §7j)") {
     import java.nio.file.Files
     import graft.tools.ScaleFixture
-    val csv = Files.createTempDirectory("graft_scale3_csv")
+    val csv = SparkTestSession.tempDir("graft_scale3_csv")
     val fx = ScaleFixture.write(csv, 3)
-    val out = Files.createTempDirectory("graft_scale3_out").toString
+    val out = SparkTestSession.tempDir("graft_scale3_out").toString
     val log = new graft.pipeline.RunLog(s"$out/_logs",
       graft.pipeline.RunLog.newRunId())
     EtlMain.runFull(spark, csv.toString, out, "2026-08-16", Some(log))

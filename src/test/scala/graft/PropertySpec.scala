@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import SparkTestSession.withLocalSolveBytes
+import SparkTestSession.onPath
 
 import graft.plans.TopKBuffer
 
@@ -305,13 +305,13 @@ class PropertySpec extends AnyFunSuite {
       val edges = (for (i <- 0 until n; j <- (i + 1) until n
         if r.nextInt(100) < 35) yield (i.toLong, j.toLong)).toVector
       val k = 3 + r.nextInt(2)
-      def run(bound: Long) = withLocalSolveBytes(spark, bound) {
+      def run(path: String) = onPath(spark, path) {
         Graph.kTruss(edges.toDF("s", "d"), "s", "d", k)
           .collect().map(x => ((x.getLong(0), x.getLong(1)), x.getLong(2)))
           .toMap
       }
-      val local = run(Long.MaxValue)
-      val dist = run(0L)
+      val local = run("local")
+      val dist = run("distributed")
       // brute: iterate support-recompute + filter until stable
       var es = edges.toSet
       var stable = false

@@ -67,8 +67,9 @@ class Round13OpsSpec extends AnyFunSuite {
       operators.Similarity.pqFixedEncode(emb, "vec_id", "embedding",
         8, 16, 3)
     ).map(_.collect().map(_.toString).sorted.toSeq)
-    val local = runAll() // default gate: tiny corpus takes the local path
-    val dist = SparkTestSession.withLocalSolveBytes(spark, 0L)(runAll())
+    // the default bound: the tiny corpus takes the local path
+    val local = SparkTestSession.onPath(spark, "local")(runAll())
+    val dist = SparkTestSession.onPath(spark, "distributed")(runAll())
     assert(local == dist)
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import SparkTestSession.withLocalSolveBytes
+import SparkTestSession.onPath
 
 import graft.operators.{Graph, Linkage, Sampling, Sessions, Similarity,
   Stats, TimeSeries}
@@ -269,11 +269,13 @@ class Round4OpsSpec extends AnyFunSuite {
         v -> nodes.filter(u =>
           reach(idx(u))(idx(v)) && reach(idx(v))(idx(u))).min
       }.toMap
-      val local = Graph.stronglyConnectedComponents(df, "s", "d")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val local = onPath(spark, "local") {
+        Graph.stronglyConnectedComponents(df, "s", "d")
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
       assert(local == exp, s"trial $trial local != brute force")
       // distributed path (size gate 0) must agree exactly
-      val dist = withLocalSolveBytes(spark, 0L) {
+      val dist = onPath(spark, "distributed") {
         Graph.stronglyConnectedComponents(df.repartition(5),
             "s", "d", maxIter = 40)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -320,10 +322,12 @@ class Round4OpsSpec extends AnyFunSuite {
           math.min(dp.getOrElse(k, Long.MaxValue),
             relax.getOrElse(k, Long.MaxValue))).toMap
       }
-      val local = Graph.shortestPaths(df, "s", "d", "w", seeds, "id", h)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val local = onPath(spark, "local") {
+        Graph.shortestPaths(df, "s", "d", "w", seeds, "id", h)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
       assert(local == dp, s"trial $trial local != DP")
-      val distd = withLocalSolveBytes(spark, 0L) {
+      val distd = onPath(spark, "distributed") {
         Graph.shortestPaths(df.repartition(5), "s", "d", "w",
             seeds, "id", h)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -391,16 +395,18 @@ class Round4OpsSpec extends AnyFunSuite {
     }.toDF("bk", "it")
     def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
       df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
-    val tLocal = operators.Analytics
-      .frequentTriples(baskets, "bk", "it", 600)
-    val tDist = withLocalSolveBytes(spark, 0L) {
+    val tLocal = onPath(spark, "local") {
+      operators.Analytics.frequentTriples(baskets, "bk", "it", 600)
+    }
+    val tDist = onPath(spark, "distributed") {
       operators.Analytics.frequentTriples(baskets, "bk", "it", 600)
     }
     assert(tLocal.columns.sameElements(tDist.columns))
     assert(rows(tLocal) == rows(tDist) && rows(tLocal).nonEmpty)
-    val bLocal = operators.Analytics
-      .basketLift(baskets, "bk", "it", minSupport = 8L)
-    val bDist = withLocalSolveBytes(spark, 0L) {
+    val bLocal = onPath(spark, "local") {
+      operators.Analytics.basketLift(baskets, "bk", "it", minSupport = 8L)
+    }
+    val bDist = onPath(spark, "distributed") {
       operators.Analytics.basketLift(baskets, "bk", "it", minSupport = 8L)
     }
     assert(bLocal.columns.sameElements(bDist.columns))

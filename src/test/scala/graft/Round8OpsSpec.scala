@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import SparkTestSession.withLocalSolveBytes
+import SparkTestSession.onPath
 
 import org.apache.spark.sql.functions.col
 
@@ -76,9 +76,11 @@ class Round8OpsSpec extends AnyFunSuite {
     // distance from the seed
     val edges = (1L to 4L).map(i => (i, i + 1)).toDF("s", "d")
     val seed = Seq(1L).toDF("id")
-    val local = Graph.pprFixed(edges, "s", "d", seed)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dist = withLocalSolveBytes(spark, 0L) {
+    val local = onPath(spark, "local") {
+      Graph.pprFixed(edges, "s", "d", seed)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    val dist = onPath(spark, "distributed") {
       Graph.pprFixed(edges, "s", "d", seed)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
@@ -332,10 +334,12 @@ class Round8OpsSpec extends AnyFunSuite {
       ("a", "b"), ("a", "b"), ("a", "b"), ("b", "a"),
       ("b", "c"), ("b", "c"), ("a", "c"), ("a", "c"), ("c", "b"))
     val df = cmp.toDF("win", "lose")
-    val got = Prefs.bradleyTerryFixed(df, "win", "lose")
-      .collect()
-      .map(r => r.getString(0) ->
-        (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    val got = onPath(spark, "local") {
+      Prefs.bradleyTerryFixed(df, "win", "lose")
+        .collect()
+        .map(r => r.getString(0) ->
+          (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    }
     // independent integer replay of the 5 MM rounds
     val S = 1000000L
     val wins = cmp.groupBy(_._1).map { case (k, v) => k -> v.size.toLong }
@@ -367,7 +371,7 @@ class Round8OpsSpec extends AnyFunSuite {
     // ranking respects the planted order
     assert(p("a") > p("b") && p("b") > p("c"))
     // the distributed rounds are bit-equal to the driver rung
-    val dist = withLocalSolveBytes(spark, 0L) {
+    val dist = onPath(spark, "distributed") {
       Prefs.bradleyTerryFixed(df, "win", "lose")
         .collect()
         .map(r => r.getString(0) ->

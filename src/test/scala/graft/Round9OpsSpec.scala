@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import SparkTestSession.withLocalSolveBytes
+import SparkTestSession.onPath
 
 /** Round-9 additions: bench-harness floor gate, VERDICT/ADVICE fixes. */
 class Round9OpsSpec extends AnyFunSuite {
@@ -50,9 +50,11 @@ class Round9OpsSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSeq
-    val local = rows(Graph.linkPrediction(edges, "src", "dst",
-      maxDeg = 50L, topK = 40))
-    val dist = withLocalSolveBytes(spark, 0L) {
+    val local = onPath(spark, "local") {
+      rows(Graph.linkPrediction(edges, "src", "dst", maxDeg = 50L,
+        topK = 40))
+    }
+    val dist = onPath(spark, "distributed") {
       rows(Graph.linkPrediction(edges, "src", "dst", maxDeg = 50L,
         topK = 40))
     }
@@ -75,13 +77,13 @@ class Round9OpsSpec extends AnyFunSuite {
     val tri = Seq((10L, 11L), (11L, 12L), (10L, 12L))
     val path = Seq((20L, 21L), (21L, 22L))
     val edges = (k5 ++ star ++ tri ++ path).toDF("s", "d")
-    def run(bound: Long) = withLocalSolveBytes(spark, bound) {
+    def run(path: String) = onPath(spark, path) {
       Graph.kTruss(edges, "s", "d", k = 3)
         .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2)))
         .sortBy(_._1)
     }
-    val local = run(Long.MaxValue)
-    val dist = run(0L)
+    val local = run("local")
+    val dist = run("distributed")
     assert(local.toSeq == dist.toSeq)
     val m = local.toMap
     // K5: every edge closes 3 triangles; dangling triangle: 1 each;
@@ -96,8 +98,10 @@ class Round9OpsSpec extends AnyFunSuite {
     // cascade: k=5 on K5-minus-one-edge must empty out (each removal
     // drops neighbors below threshold transitively)
     val chipped = k5.filterNot(_ == ((1L, 2L))).toDF("s", "d")
-    assert(Graph.kTruss(chipped, "s", "d", k = 5).count() == 0)
-    assert(withLocalSolveBytes(spark, 0L) {
+    assert(onPath(spark, "local") {
+      Graph.kTruss(chipped, "s", "d", k = 5).count()
+    } == 0)
+    assert(onPath(spark, "distributed") {
       Graph.kTruss(chipped, "s", "d", k = 5).count()
     } == 0)
   }
@@ -483,7 +487,7 @@ class Round9OpsSpec extends AnyFunSuite {
     val ref = batch(2000, 100, 0).toDF("id", "cat", "v")
     val okCur = batch(2100, 100, 0).toDF("id", "cat", "v")
     val strs = Seq("cat"); val nums = Seq("v")
-    val dir = java.nio.file.Files.createTempDirectory("graft_qg").toString
+    val dir = SparkTestSession.tempDir("graft_qg").toString
     val rl = new RunLog(dir, RunLog.newRunId(), echo = false)
     val pass = QualityGate.evaluate(ref, okCur, strs, nums,
       psiCols = Seq("v"), log = Some(rl))
@@ -562,7 +566,7 @@ class Round9OpsSpec extends AnyFunSuite {
     // JDBC engine (embedded Derby stands in for the unreachable MySQL)
     val spark2 = spark
     import spark2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ecstore")
+    val dir = SparkTestSession.tempDir("graft_ecstore")
     val store = new graft.sources.JdbcStagingStore(
       s"jdbc:derby:$dir/db;create=true", new java.util.Properties)
     store.write(Seq((1, "a"), (2, "b")).toDF("id", "v"), "t",

@@ -12,7 +12,7 @@ import graft.pipeline.RunLog
 class RunLogSpec extends AnyFunSuite {
 
   private def tmpDir(): String =
-    Files.createTempDirectory("runlog").toString
+    SparkTestSession.tempDir("runlog").toString
 
   private val fixedClock: () => java.time.Instant =
     () => java.time.Instant.parse("2024-06-01T12:00:00Z")

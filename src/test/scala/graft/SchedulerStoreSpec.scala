@@ -43,7 +43,7 @@ class SchedulerStoreSpec extends AnyFunSuite {
   }
 
   test("file lock: exclusive, re-acquirable after release, breaks stale") {
-    val p = java.nio.file.Files.createTempDirectory("graft_lock")
+    val p = SparkTestSession.tempDir("graft_lock")
       .resolve("lock")
     val l1 = new FileLock(p); val l2 = new FileLock(p)
     assert(l1.tryAcquire())
@@ -58,7 +58,7 @@ class SchedulerStoreSpec extends AnyFunSuite {
 
   test("ParquetStagingStore read/write/upsert semantics") {
     val store = new ParquetStagingStore(
-      java.nio.file.Files.createTempDirectory("graft_store").toString)
+      SparkTestSession.tempDir("graft_store").toString)
     store.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), "t", SaveMode.Overwrite)
     assert(store.read(spark, "t").count() == 2)
     store.upsert(Seq((2L, "B2"), (3L, "c")).toDF("k", "v"), "t", Seq("k"))
@@ -73,7 +73,7 @@ class SchedulerStoreSpec extends AnyFunSuite {
   // ships in /opt/spark/jars, so the JDBC store's semantics run for
   // real here — same trait, same assertions as the parquet store.
   private def derbyStore(db: String) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_derby")
+    val dir = SparkTestSession.tempDir("graft_derby")
     new graft.sources.JdbcStagingStore(
       s"jdbc:derby:$dir/$db;create=true", new java.util.Properties)
   }
@@ -167,7 +167,7 @@ class SchedulerStoreSpec extends AnyFunSuite {
 
   test("JdbcUpsert: executor plumbing runs for real on Derby (update-else-insert)") {
     import graft.sources.JdbcUpsert
-    val dir = java.nio.file.Files.createTempDirectory("graft_native_ups")
+    val dir = SparkTestSession.tempDir("graft_native_ups")
     val url = s"jdbc:derby:$dir/nupsdb;create=true"
     val props = new java.util.Properties
     // seed the table via the spark jdbc sink (creates schema)
@@ -213,7 +213,7 @@ class SchedulerStoreSpec extends AnyFunSuite {
 
   test("hasUniqueKey: detects PK / unique index on exactly the key set " +
     "(ADVICE r5: native upsert must not assume the constraint exists)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_derby")
+    val dir = SparkTestSession.tempDir("graft_derby")
     val url = s"jdbc:derby:$dir/pkdb;create=true"
     val props = new java.util.Properties
     val store = new graft.sources.JdbcStagingStore(url, props)

@@ -14,7 +14,7 @@ class SnapshotCatalogSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def root(): String =
-    Files.createTempDirectory("snapcat").toString
+    SparkTestSession.tempDir("snapcat").toString
 
   test("publish is all-or-nothing across tables; reads are consistent") {
     val r = root()

@@ -10,7 +10,26 @@ class SourcesSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def tmpDir() = Files.createTempDirectory("graft_test").toString
+  private def tmpDir() = SparkTestSession.tempDir("graft_test").toString
+
+  test("CsvStaging: keep-last across files follows file name order, " +
+      "whichever file is larger") {
+    // Spark packs a multi-file read's splits largest first, so the
+    // larger file's rows are read first whatever its name
+    for (larger <- Seq("c_1.csv", "c_2.csv")) {
+      val dir = tmpDir()
+      for (f <- Seq("c_1.csv", "c_2.csv")) {
+        val pad = if (f == larger) (1 to 200).map(i => s"P$i,$f,$i") else Nil
+        Files.writeString(java.nio.file.Path.of(dir, f),
+          (Seq("id,src,v", s"K,$f,0") ++ pad).mkString("", "\n", "\n"))
+      }
+      val res = CsvStaging.read(spark, s"$dir/c_*.csv",
+        Seq("id", "src", "v"), "id")
+      assert(res.data.filter(col("id") === "K").select("src").as[String]
+        .collect().toSeq == Seq("c_2.csv"), s"larger file: $larger")
+      assert(res.totalRows == 202 && res.dedupedRows == 1)
+    }
+  }
 
   test("CsvStaging: raw strings, schema check, pk filter, keep-last dedup") {
     val dir = tmpDir()

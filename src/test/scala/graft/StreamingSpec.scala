@@ -146,7 +146,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.sources.CsvStaging
     val entity = BankEtl.schemas.find(_.name == "loans").get
     for (src <- EtlTestData.sources) withClue(s"${src.name}: ") {
-      val dir = java.nio.file.Files.createTempDirectory("graft_etl_stream").toString
+      val dir = SparkTestSession.tempDir("graft_etl_stream").toString
       java.nio.file.Files.copy(
         java.nio.file.Path.of(src.csv("loans")),
         java.nio.file.Path.of(dir, "loans.csv"))
@@ -170,9 +170,9 @@ class StreamingSpec extends AnyFunSuite {
 
   test("AvailableNow file stream processes a batch then resumes from checkpoint") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_sout").toString
+    val dir = SparkTestSession.tempDir("graft_stream").toString
+    val ckpt = SparkTestSession.tempDir("graft_ckpt").toString
+    val out = SparkTestSession.tempDir("graft_sout").toString
     def writeBatch(ids: Range): Unit =
       ids.map(i => Event(i, ts(i % 60), 1, "click", 1.0)).toDF()
         .coalesce(1).write.mode("append").parquet(dir)
@@ -463,8 +463,7 @@ class StreamingSpec extends AnyFunSuite {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // UnsafeRow state is bit-positional and cannot evolve; Avro can
     spark.conf.set(encKey, "avro")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("tws_evolve").toString
+    val ckpt = SparkTestSession.tempDir("tws_evolve").toString
     val input = MemoryStream[Event]
     // the memory sink cannot recover from a checkpoint — collect
     // through foreachBatch (which can) instead
@@ -568,9 +567,9 @@ class StreamingSpec extends AnyFunSuite {
 
   test("ledgerSink: epoch re-delivery and crash replay stay exactly-once") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_lsrc").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_lck").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_lout").toString + "/t"
+    val dir = SparkTestSession.tempDir("graft_lsrc").toString
+    val ckpt = SparkTestSession.tempDir("graft_lck").toString
+    val out = SparkTestSession.tempDir("graft_lout").toString + "/t"
     def writeBatch(ids: Range): Unit =
       ids.map(i => Event(i, ts(i % 60), 1, "click", 1.0)).toDF()
         .coalesce(1).write.mode("append").parquet(dir)

@@ -10,7 +10,7 @@ class WritersSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   test("partitioned write enables partition pruning on read") {
-    val out = Files.createTempDirectory("graft_part").toString + "/orders"
+    val out = SparkTestSession.tempDir("graft_part").toString + "/orders"
     val orders = table(spark, "/root/testdata/sf0.001", "orders")
     Writers.writePartitioned(orders, out, Seq("o_orderstatus"),
       sortCols = Seq("o_orderdate"))
@@ -33,7 +33,7 @@ class WritersSpec extends AnyFunSuite {
     "idempotent backfill, untouched bytes intact, null guard (D14)") {
     val spark2 = spark
     import spark2.implicits._
-    val out = Files.createTempDirectory("graft_dpo").toString + "/t"
+    val out = SparkTestSession.tempDir("graft_dpo").toString + "/t"
     Seq(("2024-01-01", 1L, "orig"), ("2024-01-01", 2L, "orig"),
       ("2024-01-02", 3L, "orig"), ("2024-01-03", 4L, "orig"))
       .toDF("day", "id", "v")
@@ -67,7 +67,7 @@ class WritersSpec extends AnyFunSuite {
   }
 
   test("orc roundtrip: partition pruning + predicate pushdown to the stripe") {
-    val out = Files.createTempDirectory("graft_orc").toString + "/orders"
+    val out = SparkTestSession.tempDir("graft_orc").toString + "/orders"
     val orders = table(spark, "/root/testdata/sf0.001", "orders")
     Writers.writeOrc(orders, out, partitionCols = Seq("o_orderstatus"),
       sortCols = Seq("o_orderdate"))
@@ -91,7 +91,7 @@ class WritersSpec extends AnyFunSuite {
 
   test("schema evolution: appended files with new columns merge on read") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_evo").toString + "/t"
+    val out = SparkTestSession.tempDir("graft_evo").toString + "/t"
     Seq((1L, "a")).toDF("id", "v").write.parquet(out)
     Seq((2L, "b", 9.5)).toDF("id", "v", "score")
       .write.mode("append").parquet(out)
@@ -118,7 +118,7 @@ class WritersSpec extends AnyFunSuite {
 
   test("compact merges a small-file directory, preserving every row") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_compact").toString + "/t"
+    val dir = SparkTestSession.tempDir("graft_compact").toString + "/t"
     // simulate streaming-append damage: 40 tiny files
     spark.range(0, 4000).select($"id", ($"id" % 7).as("k"))
       .repartition(40).write.parquet(dir)
@@ -139,7 +139,7 @@ class WritersSpec extends AnyFunSuite {
 
   test("compact refuses a hive-partitioned directory (would flatten layout)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_compact_part").toString + "/t"
+    val dir = SparkTestSession.tempDir("graft_compact_part").toString + "/t"
     spark.range(0, 100).select($"id", ($"id" % 3).as("k"))
       .write.partitionBy("k").parquet(dir)
     val ex = intercept[IllegalArgumentException] {
@@ -153,7 +153,7 @@ class WritersSpec extends AnyFunSuite {
 
   test("compact self-heals the crash window (dir renamed to bak, swap not done)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_compact_crash").toString + "/t"
+    val dir = SparkTestSession.tempDir("graft_compact_crash").toString + "/t"
     spark.range(0, 500).select($"id").repartition(5).write.parquet(dir)
     // simulate a crash between rename(dir→bak) and rename(tmp→dir):
     // the data directory is absent, only the bak survives
@@ -170,7 +170,7 @@ class WritersSpec extends AnyFunSuite {
     import graft.sources.VersionedTable
     val spark2 = spark
     import spark2.implicits._
-    val dir = Files.createTempDirectory("graft_ver").toString + "/t"
+    val dir = SparkTestSession.tempDir("graft_ver").toString + "/t"
     assert(VersionedTable.versions(spark, dir).isEmpty)
     val v1 = VersionedTable.write(Seq((1L, "a")).toDF("k", "s"), dir)
     val v2 = VersionedTable.write(Seq((1L, "a"), (2L, "b")).toDF("k", "s"), dir)
@@ -197,7 +197,7 @@ class WritersSpec extends AnyFunSuite {
     import graft.sources.VersionedTable
     val spark2 = spark
     import spark2.implicits._
-    val dir = Files.createTempDirectory("graft_dv").toString + "/t"
+    val dir = SparkTestSession.tempDir("graft_dv").toString + "/t"
     VersionedTable.write((1L to 10L).map(i => (i, s"row$i")).toDF("k", "s"),
       dir)
     // merge-on-read delete: v2 holds ONLY the key set + base pointer
@@ -250,7 +250,7 @@ class WritersSpec extends AnyFunSuite {
     import graft.sources.VersionedTable
     val spark2 = spark
     import spark2.implicits._
-    val dir = Files.createTempDirectory("graft_erase").toString + "/t"
+    val dir = SparkTestSession.tempDir("graft_erase").toString + "/t"
     VersionedTable.write((1L to 10L).map(i => (i, s"row$i")).toDF("k", "s"), dir)
     VersionedTable.write((1L to 12L).map(i => (i, s"row$i")).toDF("k", "s"), dir)
     val (v, removed) = VersionedTable.eraseKeys(spark, dir, "k",
@@ -271,7 +271,7 @@ class WritersSpec extends AnyFunSuite {
   test("schema evolution: widened batches merge, old rows null-fill, pruning intact") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = Files.createTempDirectory("graft_evo").toString + "/t"
+    val dir = SparkTestSession.tempDir("graft_evo").toString + "/t"
     // generation 1: (k, a); generation 2 adds column b
     Seq((1L, "x"), (2L, "y")).toDF("k", "a")
       .write.parquet(s"$dir/batch=1")
@@ -294,7 +294,7 @@ class WritersSpec extends AnyFunSuite {
 
   test("data skipping: manifest prunes files, range read ≡ full filter") {
     import graft.sources.DataSkipping
-    val dir = Files.createTempDirectory("graft_skip").toString + "/orders"
+    val dir = SparkTestSession.tempDir("graft_skip").toString + "/orders"
     val orders = table(spark, "/root/testdata/sf0.001", "orders")
     // range-clustered layout → tight per-file min/max on the price
     orders.repartitionByRange(8, col("o_totalprice"))

@@ -42,13 +42,13 @@ object EtlScale {
     }
 
     def run(m: Int): (Map[String, Long], ScaleFixture.Fixture, String) = {
-      val csv = Files.createTempDirectory(s"graft_scale_csv_$m")
+      val csv = graft.SparkTestSession.tempDir(s"graft_scale_csv_$m")
       val t0 = System.nanoTime()
       val fx = ScaleFixture.write(csv, m)
       println(f"[scale] ${m}x fixture written in ${(System.nanoTime() - t0) / 1e9}%.1fs " +
         s"(${fx.branches.totalRows} br / ${fx.customers.totalRows} cu / " +
         s"${fx.loans.totalRows} lo / ${fx.transactions.totalRows} tx rows)")
-      val out = Files.createTempDirectory(s"graft_scale_out_$m").toString
+      val out = graft.SparkTestSession.tempDir(s"graft_scale_out_$m").toString
       val log = new graft.pipeline.RunLog(s"$out/_logs",
         graft.pipeline.RunLog.newRunId())
       graft.EtlMain.runFull(spark, csv.toString, out, "2026-08-16", Some(log))

@@ -48,7 +48,7 @@ object StreamSoak {
 
     def soak(name: String, mode: String)
             (mk: Dataset[Event] => org.apache.spark.sql.DataFrame): Unit = {
-      val ckpt = java.nio.file.Files.createTempDirectory(s"soak_$name")
+      val ckpt = graft.SparkTestSession.tempDir(s"soak_$name")
         .toString
       val q = mk(events).writeStream.format("noop").outputMode(mode)
         .option("checkpointLocation", ckpt)
