@@ -216,7 +216,7 @@ object Bench {
         // pay eviction churn + GC (observed: a trivial count inflating
         // 0.4s → 3s near the end of a full run). clearCache only reaches
         // CacheManager entries; sealed results also carry RDD-level
-        // localCheckpoint blocks — sweep those too.
+        // checkpoint blocks — sweep those too.
         sweep()
         // min-of-3 per sample point (r10 #5: mids are now gated
         // ABSOLUTELY at MidGate, so one or two GC-debt singles must

@@ -30,7 +30,7 @@ object Verify {
       // revisits — clear between queries (same discipline as Bench) so
       // the gate run doesn't accrete hundreds of dead cached datasets.
       // clearCache only reaches CacheManager entries; sealed results
-      // also carry RDD-level localCheckpoint blocks — sweep those too.
+      // also carry RDD-level checkpoint blocks — sweep those too.
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))

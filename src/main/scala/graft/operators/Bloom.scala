@@ -39,23 +39,21 @@ import org.apache.spark.sql.types.BinaryType
   * automatically for shuffle SEMI/inner joins, but not for this "keep
   * the big side unshuffled" anti-join plan.
   *
-  * Scan discipline (the round-4 weak mark): the verdict column is
-  * computed ONCE. With `materialize = true` (default) the marked
+  * Scan discipline: the verdict column is computed ONCE. The marked
   * projection is persisted and both branches (clean pass-through,
-  * suspect verification) split from the cache — the big side appears
-  * in exactly ONE scan of the executed plan (asserted in
-  * PlanAuditSpec). With `materialize = false` nothing is cached and
-  * each branch re-scans the source with the codegen'd probe — two
-  * map-side scans, zero shuffle, zero cache: the right trade when
-  * `big` is a raw 100 TB file source whose re-scan (with pushdown)
-  * is cheaper than materializing it. Either way no row is ever
-  * probe-evaluated through an interpreter.
+  * suspect verification) split from the cache, so the big side
+  * appears in exactly ONE scan of the executed plan (asserted in
+  * PlanAuditSpec), and no row is ever probe-evaluated through an
+  * interpreter.
   *
-  * Cache-release contract: with `materialize = true` the marked big
-  * side stays cached for the session (the result is lazy, so the
-  * operator cannot unpersist it) — release with
-  * `spark.catalog.clearCache()` once consumed (Verify/Bench do this
-  * per query), or pass `materialize = false` for a zero-cache plan.
+  * Cache-release contract — the one documented exception to the
+  * operators' free-what-you-create rule: the anti join's result is
+  * LAZY and shares the marked side's cache between its two branches,
+  * so the operator cannot free that cache, and [[graft.release]] on
+  * the result does not reach it either (the cache belongs to the
+  * marked projection, not to the result). It stays cached for the
+  * session until `spark.catalog.clearCache()` (Verify/Bench do this
+  * between queries).
   */
 object Bloom {
 
@@ -107,14 +105,12 @@ object Bloom {
     * through).
     *
     * @return lazy result, bit-identical to `big.join(keys, anti)`.
-    *         With `materialize = true` the probe-marked projection of
-    *         `big` stays CACHED after the caller consumes the result —
-    *         release it with `spark.catalog.clearCache()` (or
-    *         [[graft.release]]) once done, or pass
-    *         `materialize = false` for a zero-cache two-scan plan.
+    *         The probe-marked projection of `big` stays CACHED after
+    *         the caller consumes the result — free it with
+    *         `spark.catalog.clearCache()` once done.
     */
   def antiJoin(big: DataFrame, keys: DataFrame, keyCol: String,
-               fpp: Double = 0.01, materialize: Boolean = true): DataFrame = {
+               fpp: Double = 0.01): DataFrame = {
     val nKeys = keys.count()
     if (nKeys == 0) return big
     val bits = buildBloom(keys, keyCol,
@@ -123,11 +119,8 @@ object Bloom {
     // must survive untouched, not be silently replaced then dropped
     val suspect = Iterator.iterate("__ga_suspect")(_ + "_")
       .dropWhile(big.columns.contains).next()
-    val marked = big.withColumn(suspect, mightContain(bits, col(keyCol)))
-    val src =
-      if (materialize)
-        marked.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else marked
+    val src = big.withColumn(suspect, mightContain(bits, col(keyCol)))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val clean = src.filter(!col(suspect)).drop(suspect)
     val suspects = src.filter(col(suspect)).drop(suspect)
     clean.unionByName(suspects.join(keys, Seq(keyCol), "left_anti"))

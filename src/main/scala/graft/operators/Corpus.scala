@@ -593,12 +593,7 @@ object Corpus {
         col("ta").as("tot_a"), col("tb").as("tot_b"),
         foldField("kab").as("kl_ab"), foldField("kba").as("kl_ba"),
         (foldField("jst") * 0.5).as("js"))
-      // one row — materialize eagerly so the joined-term cache can be
-      // released before returning (no persisted lineage left leaked,
-      // the CC/triangle discipline)
-      .localCheckpoint(true)
-    joined.unpersist()
-    result
+    graft.sealResult(result, joined)
   }
 
   /** E60: hashed linear quality classifier — the fasttext-shaped
@@ -925,9 +920,7 @@ object Corpus {
         .select(col("b").as("bucket"),
           coalesce(col("wv"), lit(0L)).as("weight"))
         .union(Seq((-1L, bias), (-2L, errs)).toDF("bucket", "weight"))
-        .localCheckpoint(true)
-      feats.unpersist()
-      out
+      graft.sealResult(out, feats)
     }
   }
 

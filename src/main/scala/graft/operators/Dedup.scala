@@ -411,12 +411,7 @@ object Dedup {
         (col("n_shared").cast("double") /
           least(col("sz_a"), col("sz_b")).cast("double"))
           .as("containment"))
-      // materialize the (pair-cardinality) result so the rare-stream
-      // cache can be released here — no persisted lineage leaks to the
-      // caller (the CC/kCore cache discipline)
-      .localCheckpoint()
-    rare.unpersist()
-    fps.unpersist()
-    result
+    // pair-cardinality result: seal it so the fp caches are freed here
+    graft.sealResult(result, rare, fps)
   }
 }

@@ -22,12 +22,30 @@ import org.apache.spark.storage.StorageLevel
   * labels on dst, then groupBy src + min) — the same primitive as
   * GraphX/GraphFrames CC, no driver-side adjacency. Convergence is
   * detected by a one-scalar aggregate (sum of labels is strictly
-  * decreasing until fixpoint), not by collecting labels. Each round's
-  * result is persisted and the previous round's cache released; a
-  * production run over billions of edges would additionally
-  * `checkpoint()` every few rounds to truncate lineage.
+  * decreasing until fixpoint), not by collecting labels. Each round is
+  * checkpointed ([[graft.measuredRound]]: the sum is the job that
+  * fills the checkpoint) and the replaced round freed.
+  *
+  * Storage: every distributed builder frees exactly what it created.
+  * Loop state that is checkpointed per round goes through
+  * [[graft.nextRound]] (the replaced round is freed as the new one
+  * lands), final results through [[graft.sealResult]], and a result
+  * is either the loop state itself or sealed — never a lazy view over
+  * operator storage, which [[graft.release]] could not reach.
   */
 object Graph {
+
+  /** Canonical undirected edges (a, b): both ids cast to long,
+    * self-loops dropped, each edge once as (least, greatest).
+    */
+  private def undirected(edges: DataFrame, srcCol: String,
+                         dstCol: String): DataFrame =
+    edges.select(col(srcCol).cast("long").as("s"),
+        col(dstCol).cast("long").as("d"))
+      .filter(col("s") =!= col("d"))
+      .select(least(col("s"), col("d")).as("a"),
+        greatest(col("s"), col("d")).as("b"))
+      .distinct()
 
   /** Connected components over an undirected edge list.
     *
@@ -52,20 +70,16 @@ object Graph {
     // canonicalize to undirected (min,max) edges FIRST and persist:
     // the naive union(e, e.swapped) evaluates the upstream pipeline —
     // often an expensive dedup-candidate join — TWICE before any cache
-    // materializes, and carries 2× the rows through the distinct
-    val und = edges.select(col(srcCol).cast("long").as("s"),
-        col(dstCol).cast("long").as("d"))
-      .filter(col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("src"),
-        greatest(col("s"), col("d")).as("dst"))
-      .distinct()
-    // 16 bytes per edge: one (src, dst) long pair; union-find treats
+    // materializes, and carries 2× the rows through the distinct.
+    // 16 bytes per edge: one (a, b) long pair; union-find treats
     // edges as undirected — no symmetrization needed
-    graft.hybrid("connectedComponents", und.as[(Long, Long)], 16)(es =>
+    graft.hybrid("connectedComponents",
+        undirected(edges, srcCol, dstCol).as[(Long, Long)], 16)(es =>
       Some(localUnionFind(es).toDF("id", "comp")
         .repartition(col("comp")))) { (und, _) =>
       // symmetrize (from cache) so min-propagation flows both directions
-      val sym = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
+      val sym = und.union(und.select(col("b"), col("a")))
+        .toDF("src", "dst")
         .persist(StorageLevel.MEMORY_AND_DISK)
       sym.count()
       und.unpersist()
@@ -86,14 +100,15 @@ object Graph {
         val nbrMin = sym.join(labels, sym("dst") === labels("id"))
           .groupBy(sym("src").as("id"))
           .agg(min(col("comp")).as("nbr_comp"))
-        val next = labels.as("l")
+        // the round's sum is the job that materializes it: one job per
+        // round, and the checkpoint keeps the plan one round deep (two
+        // references to `labels` per round would otherwise double the
+        // plan every round)
+        val (next, s) = graft.measuredRound(labels, labels.as("l")
           .join(nbrMin.as("n"), col("l.id") === col("n.id"), "left")
           .select(col("l.id").as("id"),
             least(col("l.comp"), coalesce(col("n.nbr_comp"), col("l.comp")))
-              .as("comp"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val s = next.agg(sum(col("comp"))).head.getLong(0)
-        labels.unpersist()
+              .as("comp")))(_.agg(sum(col("comp"))).head.getLong(0))
         labels = next
         converged = s == prevSum
         prevSum = s
@@ -101,17 +116,13 @@ object Graph {
       }
       sym.unpersist()
       if (!converged) {
-        labels.unpersist()
+        graft.release(labels)
         throw new IllegalStateException(
           s"connectedComponents: no fixpoint after $maxIter rounds — " +
             "component diameter exceeds maxIter; raise maxIter " +
             "(labels would be incorrect, refusing to return them)")
       }
-      // materialize eagerly, then release the cache slot: callers get a
-      // self-contained result with no dangling persisted lineage to leak
-      val out = labels.localCheckpoint(true)
-      labels.unpersist()
-      out
+      labels
     }
   }
 
@@ -192,18 +203,13 @@ object Graph {
         val contribs = withDeg.join(ranks, withDeg("src") === ranks("id"))
           .groupBy(col("dst").as("id"))
           .agg(sum(col("rank") / col("deg")).as("inflow"))
-        // localCheckpoint (eager) TRUNCATES LINEAGE each round — without
-        // it the plan nests one join level per iteration: generated code
-        // blows past JIT/janino limits and plan rendering itself is
-        // quadratic. A cluster run over billions of edges would use
-        // reliable checkpoint() to HDFS instead, same reason.
-        val next = nodes.join(contribs, Seq("id"), "left")
+        // the round's checkpoint truncates lineage: without it the plan
+        // nests one join level per iteration, generated code blows past
+        // JIT/janino limits and plan rendering itself is quadratic
+        ranks = graft.nextRound(ranks, nodes.join(contribs, Seq("id"), "left")
           .select(col("id"),
             (lit(base) + lit(damping) * coalesce(col("inflow"), lit(0.0)))
-              .as("rank"))
-          .localCheckpoint(true)
-        ranks.unpersist()
-        ranks = next
+              .as("rank")))
       }
       nodes.unpersist()
       withDeg.unpersist()
@@ -240,8 +246,8 @@ object Graph {
     * shared [[graft.hybrid]] rung power-iterate on the driver
     * (identical integer ops ⇒ identical result to the distributed
     * loop, asserted in GraphSamplingSpec); larger graphs run the two-shuffle
-    * distributed rounds with per-round localCheckpoint lineage
-    * truncation. Dangling nodes leak mass, as in [[pageRank]].
+    * distributed rounds, ranks advanced through [[graft.nextRound]].
+    * Dangling nodes leak mass, as in [[pageRank]].
     *
     * @return (id, rank_fp) — rank in scale-units, BIGINT.
     */
@@ -270,9 +276,9 @@ object Graph {
     * (document-graph hubs; lower `scale` for denser graphs).
     *
     * Scale design: each round = two keyed joins + two keyed aggregates
-    * + two 1-row broadcast normalizations; O(rounds) shuffles; state
-    * persisted per round, previous released. String node ids (URLs)
-    * supported directly.
+    * + two 1-row broadcast normalizations; O(rounds) shuffles; both
+    * scores checkpointed per half-round through [[graft.nextRound]],
+    * the replaced one freed. String node ids (URLs) supported directly.
     *
     * @return (id, hub_fp, auth_fp) in `scale`-units (round max = scale).
     */
@@ -343,28 +349,25 @@ object Graph {
             when(col("mx") > 0, expr(s"(s * ${scale}L) div mx"))
               .otherwise(lit(0L)).as(outCol))
       }
+      // both scores are loop state: each half-round reads the other's
+      // round twice (`normalized` uses its input for the zero-fill and
+      // the max), so without a per-round checkpoint the plan would grow
+      // fourfold per round. The zero authority before round 1 is a view
+      // of `nodes` and owns no storage.
       var hub = nodes.select(col("id"), lit(scale).as("hub_fp"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      var auth: DataFrame = null
+      var auth = nodes.select(col("id"), lit(0L).as("auth_fp"))
       for (_ <- 1 to rounds) {
-        val aNext = normalized(
+        auth = graft.nextRound(auth, normalized(
           e.join(hub.withColumnRenamed("id", "src"), "src")
             .groupBy(col("dst").as("id")).agg(sum(col("hub_fp")).as("s")),
-          "auth_fp").persist(StorageLevel.MEMORY_AND_DISK)
-        aNext.count()
-        if (auth != null) auth.unpersist()
-        auth = aNext
-        val hNext = normalized(
+          "auth_fp"))
+        hub = graft.nextRound(hub, normalized(
           e.join(auth.withColumnRenamed("id", "dst"), "dst")
             .groupBy(col("src").as("id")).agg(sum(col("auth_fp")).as("s")),
-          "hub_fp").persist(StorageLevel.MEMORY_AND_DISK)
-        hNext.count()
-        hub.unpersist()
-        hub = hNext
+          "hub_fp"))
       }
-      val out = hub.join(auth, Seq("id")).localCheckpoint(true)
-      hub.unpersist(); auth.unpersist(); nodes.unpersist(); e.unpersist()
-      out
+      graft.sealResult(hub.join(auth, Seq("id")), hub, auth, nodes, e)
     }
   }
 
@@ -422,43 +425,30 @@ object Graph {
     * graph (dup clusters triangulate heavily; spurious LSH chains
     * don't).
     *
-    * Two orientations, identical output (asserted in
-    * GraphSamplingSpec), pure execution strategy:
-    *
-    *  - `degreeOrdered = true` (default): point every edge at the
-    *    HIGHER-(degree, id) endpoint and enumerate wedges at the node
-    *    holding two out-edges — the Schank/Ortmann forward algorithm.
-    *    Out-degrees are O(√m)-bounded (arboricity), so a web-scale
-    *    hub of degree D generates O(√m·D) wedge rows instead of
-    *    O(D²): the difference between a skewed wedge join finishing
-    *    and one executor exploding. Costs two extra keyed joins to
-    *    attach degrees — the right trade the moment the graph has
-    *    hubs.
-    *  - `degreeOrdered = false`: id-orientation a<b<c as
-    *    (a,b)⋈(b,c)⋈(a,c) — fewer joins, fine for the small balanced
-    *    graphs a dedup funnel leaves.
+    * Triangles enumerate under the Schank/Ortmann forward orientation
+    * ([[forwardEdges]]): every edge points at its HIGHER-(degree, id)
+    * endpoint and wedges are enumerated at the node holding both
+    * out-edges. Out-degrees are O(√m)-bounded (arboricity), so a
+    * web-scale hub of degree D generates O(√m·D) wedge rows instead of
+    * the O(D²) of an id-ordered a<b<c join — the difference between a
+    * skewed wedge join finishing and one executor exploding.
     *
     * Wedge count Σ d(d−1)/2 stays integral (d(d−1) is even, DIV keeps
     * it exact), so clustering = 3·T / wedges is ONE double division
-    * of exact integers — bit-identical everywhere, in both plans.
+    * of exact integers — bit-identical everywhere, on either path.
     *
     * @return one row: (n_nodes, n_edges, n_triangles, clustering)
     */
-  def triangleStats(edges: DataFrame, srcCol: String, dstCol: String,
-                    degreeOrdered: Boolean = true): DataFrame = {
+  def triangleStats(edges: DataFrame, srcCol: String,
+                    dstCol: String): DataFrame = {
     import edges.sparkSession.implicits._
-    val und = edges.select(col(srcCol).cast("long").as("s"),
-        col(dstCol).cast("long").as("d"))
-      .filter(col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("a"),
-        greatest(col("s"), col("d")).as("b"))
-      .distinct()
     // hybrid small-graph rung (CC/PageRank/LPA/HITS discipline): the
     // wedge joins are pure scheduling floor under the size gate — the
     // driver enumeration is the same forward orientation, bit-equal
     // (GraphSamplingSpec). 64 bytes per edge: the pair plus its two
     // adjacency entries and the per-node degree/triangle counters.
-    graft.hybrid("triangleStats", und.as[(Long, Long)], 64) { es =>
+    graft.hybrid("triangleStats",
+        undirected(edges, srcCol, dstCol).as[(Long, Long)], 64) { es =>
       val (dg, _, total) = localTriangleCounts(es)
       val wedges = dg.values.map(d => d * (d - 1) / 2).sum
       val clustering =
@@ -467,57 +457,58 @@ object Graph {
       Some(Seq((dg.size.toLong, es.length.toLong, total, clustering))
         .toDF("n_nodes", "n_edges", "n_triangles", "clustering"))
     } { (und, _) =>
-      val deg = und.select(explode(array(col("a"), col("b"))).as("p"))
-        .groupBy(col("p")).agg(count(lit(1)).as("d"))
+      val deg = und.select(explode(array(col("a"), col("b"))).as("id"))
+        .groupBy(col("id")).agg(count(lit(1)).as("degree"))
       // d(d−1) is even, so DIV keeps the wedge sum in exact integers —
       // a float `/` would sum doubles in partition order
       val nodeStats = deg.agg(count(lit(1)).as("n_nodes"),
-        sum(expr("d * (d - 1) DIV 2")).cast("long").as("wedges"))
+        sum(expr("degree * (degree - 1) DIV 2")).cast("long").as("wedges"))
       val edgeStats = und.agg(count(lit(1)).as("n_edges"))
-      var oriented: DataFrame = null
-      val tri = if (degreeOrdered) {
-        // rank r(v) = (deg v, v); orient lo-rank → hi-rank, out-edges
-        // carry the dst rank so the wedge dedup needs no further join
-        val dd = und
-          .join(deg.select(col("p").as("a"), col("d").as("da")), "a")
-          .join(deg.select(col("p").as("b"), col("d").as("db")), "b")
-        oriented = dd.select(
-            when(col("da") < col("db") ||
-                 (col("da") === col("db") && col("a") < col("b")),
-              struct(col("a").as("src"), col("b").as("dst"),
-                col("db").as("dd")))
-            .otherwise(struct(col("b").as("src"), col("a").as("dst"),
-              col("da").as("dd"))).as("e"))
-          .select(col("e.src").as("src"), col("e.dst").as("dst"),
-            col("e.dd").as("dd"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val w1 = oriented.toDF("src", "x", "dx")
-        val w2 = oriented.toDF("src", "y", "dy")
-        // each wedge once: (rank x) < (rank y); the closing edge, if it
-        // exists, is oriented x→y by transitivity of the rank order
-        w1.join(w2, "src")
-          .filter(col("dx") < col("dy") ||
-            (col("dx") === col("dy") && col("x") < col("y")))
-          .join(oriented.select(col("src").as("x"), col("dst").as("y")),
-            Seq("x", "y"), "left_semi")
-          .agg(count(lit(1)).as("n_triangles"))
-      } else {
-        val e1 = und.toDF("a", "b")
-        val e2 = und.toDF("b", "c")
-        val e3 = und.toDF("a", "c")
-        e1.join(e2, "b").join(e3, Seq("a", "c"), "left_semi")
-          .agg(count(lit(1)).as("n_triangles"))
-      }
-      val out = nodeStats.crossJoin(edgeStats).crossJoin(tri)
+      val oriented = forwardEdges(und, deg)
+      val tri = triangles(oriented).agg(count(lit(1)).as("n_triangles"))
+      graft.sealResult(nodeStats.crossJoin(edgeStats).crossJoin(tri)
         .select(col("n_nodes"), col("n_edges"), col("n_triangles"),
           when(col("wedges") > 0,
             (col("n_triangles") * 3).cast("double") /
-              col("wedges").cast("double")).as("clustering"))
-        .localCheckpoint(true)
-      if (oriented != null) oriented.unpersist()
-      und.unpersist()
-      out
+              col("wedges").cast("double")).as("clustering")),
+        oriented, und)
     }
+  }
+
+  /** Forward orientation of canonical edges (a, b) given each node's
+    * `degree`: rank r(v) = (degree v, v), every edge points lo-rank →
+    * hi-rank, and carries its dst's degree (`dd`) so the wedge filter
+    * needs no further join. Persisted: [[triangles]] reads it three
+    * times.
+    */
+  private def forwardEdges(und: DataFrame, deg: DataFrame): DataFrame =
+    und.join(deg.select(col("id").as("a"), col("degree").as("da")), "a")
+      .join(deg.select(col("id").as("b"), col("degree").as("db")), "b")
+      .select(
+        when(col("da") < col("db") ||
+             (col("da") === col("db") && col("a") < col("b")),
+          struct(col("a").as("src"), col("b").as("dst"),
+            col("db").as("dd")))
+        .otherwise(struct(col("b").as("src"), col("a").as("dst"),
+          col("da").as("dd"))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"),
+        col("e.dd").as("dd"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** Every triangle exactly once as (src, x, y): wedges at the node
+    * holding two out-edges of [[forwardEdges]], with rank x < rank y,
+    * closed by the edge x→y (oriented so by transitivity of the rank
+    * order).
+    */
+  private def triangles(oriented: DataFrame): DataFrame = {
+    val w1 = oriented.toDF("src", "x", "dx")
+    val w2 = oriented.toDF("src", "y", "dy")
+    w1.join(w2, "src")
+      .filter(col("dx") < col("dy") ||
+        (col("dx") === col("dy") && col("x") < col("y")))
+      .join(oriented.select(col("src").as("x"), col("dst").as("y")),
+        Seq("x", "y"), "left_semi")
+      .select(col("src"), col("x"), col("y"))
   }
 
   /** E76: per-node local clustering coefficient (Watts–Strogatz) over
@@ -526,35 +517,21 @@ object Graph {
     * true duplicate-clique members (lcc ≈ 1) from LSH-chain bridge
     * nodes (lcc ≈ 0) so survivorship can distrust the bridges.
     *
-    * Per-node triangle counts come from ONE triangle enumeration with
-    * each found triangle credited to all three corners; lcc =
-    * 2·T / (deg·(deg−1)) is one IEEE division of exact integers —
-    * engine-deterministic, hash-gateable raw.
-    *
-    * Same two orientations as [[triangleStats]], identical output
-    * (asserted in GraphSamplingSpec): `degreeOrdered = true` (default)
-    * enumerates wedges under the Schank/Ortmann forward orientation —
-    * out-degrees O(√m)-bounded by arboricity, so a hub of degree D
-    * costs O(√m·D) wedge rows, not O(D²); the sf1 rehearsal is what
-    * promoted this from "documented alternative" to default — the
-    * id-ordered form (`degreeOrdered = false`, join-minimal, fine on
-    * balanced dedup graphs) ran unbounded the moment the pair graph
-    * densified.
+    * Per-node triangle counts come from ONE triangle enumeration (the
+    * [[triangleStats]] forward orientation, hub-safe) with each found
+    * triangle credited to all three corners; lcc = 2·T / (deg·(deg−1))
+    * is one IEEE division of exact integers — engine-deterministic,
+    * hash-gateable raw.
     *
     * @return (id, degree, n_tri, lcc) — lcc 0.0 for degree < 2.
     */
-  def localClustering(edges: DataFrame, srcCol: String, dstCol: String,
-                      degreeOrdered: Boolean = true): DataFrame = {
+  def localClustering(edges: DataFrame, srcCol: String,
+                      dstCol: String): DataFrame = {
     import edges.sparkSession.implicits._
-    val und = edges.select(col(srcCol).cast("long").as("s"),
-        col(dstCol).cast("long").as("d"))
-      .filter(col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("a"),
-        greatest(col("s"), col("d")).as("b"))
-      .distinct()
     // hybrid small-graph rung, same enumeration crediting all corners
     // (64 bytes per edge, the triangleStats driver footprint)
-    graft.hybrid("localClustering", und.as[(Long, Long)], 64) { es =>
+    graft.hybrid("localClustering",
+        undirected(edges, srcCol, dstCol).as[(Long, Long)], 64) { es =>
       val (dg, tri, _) = localTriangleCounts(es)
       Some(dg.toSeq.map { case (id, d) =>
         val t = tri.getOrElse(id, 0L)
@@ -565,57 +542,19 @@ object Graph {
       val deg = und.select(explode(array(col("a"), col("b"))).as("id"))
         .groupBy(col("id")).agg(count(lit(1)).as("degree"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      var oriented: DataFrame = null
-      val triCorners = if (degreeOrdered) {
-        // rank r(v) = (deg v, v); orient lo-rank → hi-rank; wedges at
-        // the 2-out-edge node; INNER closing join (the rows ARE the
-        // triangles, oriented x→y by rank transitivity, each once)
-        val dd = und
-          .join(deg.select(col("id").as("a"), col("degree").as("da")), "a")
-          .join(deg.select(col("id").as("b"), col("degree").as("db")), "b")
-        oriented = dd.select(
-            when(col("da") < col("db") ||
-                 (col("da") === col("db") && col("a") < col("b")),
-              struct(col("a").as("src"), col("b").as("dst"),
-                col("db").as("dd")))
-            .otherwise(struct(col("b").as("src"), col("a").as("dst"),
-              col("da").as("dd"))).as("e"))
-          .select(col("e.src").as("src"), col("e.dst").as("dst"),
-            col("e.dd").as("dd"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val w1 = oriented.toDF("src", "x", "dx")
-        val w2 = oriented.toDF("src", "y", "dy")
-        w1.join(w2, "src")
-          .filter(col("dx") < col("dy") ||
-            (col("dx") === col("dy") && col("x") < col("y")))
-          .join(oriented.select(col("src").as("x"), col("dst").as("y")),
-            Seq("x", "y"))
-          .select(col("src").as("a"), col("x").as("b"), col("y").as("c"))
-      } else {
-        val e1 = und.toDF("a", "b")
-        val e2 = und.toDF("b", "c")
-        val e3 = und.toDF("a", "c")
-        // inner (not semi) join on the closing edge: the (a,b,c) rows ARE
-        // the triangles, each exactly once under a<b<c
-        e1.join(e2, "b").join(e3, Seq("a", "c"))
-      }
-      val tris = triCorners.persist(StorageLevel.MEMORY_AND_DISK)
+      val oriented = forwardEdges(und, deg)
+      val tris = triangles(oriented).persist(StorageLevel.MEMORY_AND_DISK)
       val triPerNode = tris.select(explode(
-          array(col("a"), col("b"), col("c"))).as("id"))
+          array(col("src"), col("x"), col("y"))).as("id"))
         .groupBy(col("id")).agg(count(lit(1)).as("n_tri"))
-      val out = deg.join(triPerNode, Seq("id"), "left")
+      graft.sealResult(deg.join(triPerNode, Seq("id"), "left")
         .select(col("id"), col("degree"),
           coalesce(col("n_tri"), lit(0L)).as("n_tri"),
           when(col("degree") >= 2,
             (coalesce(col("n_tri"), lit(0L)) * 2).cast("double") /
               (col("degree") * (col("degree") - 1)).cast("double"))
-            .otherwise(lit(0.0)).as("lcc"))
-        .localCheckpoint(true)
-      tris.unpersist()
-      if (oriented != null) oriented.unpersist()
-      deg.unpersist()
-      und.unpersist()
-      out
+            .otherwise(lit(0.0)).as("lcc")),
+        tris, oriented, deg, und)
     }
   }
 
@@ -635,8 +574,10 @@ object Graph {
     * Scale design: each round is one keyed join (edges ⋈ labels on
     * dst) + two keyed aggregates ((node, label) counts, then per-node
     * argmax via ONE lexicographic struct max — no per-node sort, no
-    * window). O(rounds) shuffles total; labels persisted per round,
-    * previous round released, same cache discipline as CC.
+    * window). O(rounds) shuffles total; labels checkpointed per round
+    * through [[graft.nextRound]], the replaced round freed. The state
+    * carries the output's column names, so the last round IS the
+    * result and owns its only storage.
     *
     * @return (id, community) for every node appearing in any edge.
     */
@@ -645,44 +586,38 @@ object Graph {
     import edges.sparkSession.implicits._
     // canonicalize + persist BEFORE symmetrizing — union(e, e.swap) on
     // an unpersisted plan would evaluate the (often expensive) upstream
-    // candidate join twice, the exact trap connectedComponents documents
-    val e = edges.select(col(srcCol).cast("long").as("s"),
-        col(dstCol).cast("long").as("d"))
-      .filter(col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("src"),
-        greatest(col("s"), col("d")).as("dst"))
-      .distinct()
-    // hybrid execution, same rationale as CC/PageRank: post-funnel
+    // candidate join twice, the exact trap connectedComponents documents.
+    // Hybrid execution, same rationale as CC/PageRank: post-funnel
     // graphs are tiny, and LPA's update is pure INTEGER arithmetic
     // (counts + min-label ties), so the driver loop is bit-identical
     // to the distributed rounds — asserted in GraphSamplingSpec.
-    // 16 bytes per edge: one (src, dst) long pair.
-    graft.hybrid("labelPropagation", e.as[(Long, Long)], 16)(es =>
+    // 16 bytes per edge: one (a, b) long pair.
+    graft.hybrid("labelPropagation",
+        undirected(edges, srcCol, dstCol).as[(Long, Long)], 16)(es =>
       Some(localLabelPropagation(es, rounds).toDF("id", "community")
         .repartition(col("community")))) { (e, _) =>
-      val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+      val sym = e.union(e.select(col("b"), col("a")))
+        .toDF("src", "dst")
         .persist(StorageLevel.MEMORY_AND_DISK)
       sym.count()
       e.unpersist()
-      var labels = sym.select(col("src").as("v")).distinct()
-        .select(col("v"), col("v").as("lab"))
+      var labels = sym.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("community"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       for (_ <- 1 to rounds) {
-        val nbr = sym.join(labels, sym("dst") === labels("v"))
-          .select(sym("src").as("v"), col("lab"))
+        val nbr = sym.join(labels, sym("dst") === labels("id"))
+          .select(sym("src").as("id"), col("community"))
         // argmax(count, then min label) = max of the (count, -label)
         // struct — map-combinable, no window, no per-node sort
-        val next = nbr.groupBy(col("v"), col("lab"))
+        labels = graft.nextRound(labels, nbr
+          .groupBy(col("id"), col("community"))
           .agg(count(lit(1)).as("c"))
-          .groupBy(col("v"))
-          .agg(max(struct(col("c"), (-col("lab")).as("nl"))).as("m"))
-          .select(col("v"), (-col("m.nl")).as("lab"))
-          .localCheckpoint(true)
-        labels.unpersist()
-        labels = next
+          .groupBy(col("id"))
+          .agg(max(struct(col("c"), (-col("community")).as("nl"))).as("m"))
+          .select(col("id"), (-col("m.nl")).as("community")))
       }
       sym.unpersist()
-      labels.select(col("v").as("id"), col("lab").as("community"))
+      labels
     }
   }
 
@@ -751,10 +686,11 @@ object Graph {
     * Iterative peeling: drop nodes with degree < k, recompute degrees
     * on the survivor-induced subgraph, repeat to fixpoint. Each round
     * is one keyed degree agg + two semi joins; the convergence check
-    * is a scalar count (never a collect); per-round `localCheckpoint`
-    * truncates lineage exactly like connectedComponents. Rounds =
-    * peeling depth (tiny for clique-like graphs); throws past
-    * `maxRounds` rather than returning a non-core silently.
+    * is a scalar count (never a collect); the surviving edges are the
+    * loop state ([[graft.nextRound]]). At the fixpoint the degrees are
+    * sealed from the last round, which is then freed. Rounds = peeling
+    * depth (tiny for clique-like graphs); throws past `maxRounds`
+    * rather than returning a non-core silently.
     *
     * @return surviving nodes with their final in-core degree:
     *         (id, core_deg).
@@ -763,49 +699,43 @@ object Graph {
             maxRounds: Int = 30): DataFrame = {
     import edges.sparkSession.implicits._
     require(k >= 1, s"k must be ≥ 1: $k")
-    val und0 = edges.select(col(srcCol).cast("long").as("s"),
-        col(dstCol).cast("long").as("d"))
-      .filter(col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("a"),
-        greatest(col("s"), col("d")).as("b"))
-      .distinct()
+    def degrees(e: DataFrame): DataFrame =
+      e.select(explode(array(col("a"), col("b"))).as("p"))
+        .groupBy(col("p")).agg(count(lit(1)).as("deg"))
     // 16 bytes per edge: one (a, b) long pair. Same hybrid rung as
     // CC/LPA/PageRank: a reduced graph this small peels on the driver
     // in one pass (all-integer state → bit-identical to the distributed
     // rounds, spec-asserted); each distributed round would otherwise
     // pay the full scheduling floor for kilobytes of work
-    graft.hybrid("kCore", und0.as[(Long, Long)], 16)(es =>
+    graft.hybrid("kCore",
+        undirected(edges, srcCol, dstCol).as[(Long, Long)], 16)(es =>
       Some(localKCore(es, k).toDF("id", "core_deg"))) { (und, n) =>
       var cur = und
       var nEdges = n
       var round = 0
-      var converged = false
-      var lastDeg: DataFrame = null
-      while (!converged) {
-        val deg = cur.select(explode(array(col("a"), col("b"))).as("p"))
-          .groupBy(col("p")).agg(count(lit(1)).as("deg"))
-        val keep = deg.filter(col("deg") >= k).select(col("p"))
-        val next = cur
+      var out: DataFrame = null
+      while (out == null) {
+        val keep = degrees(cur).filter(col("deg") >= k).select(col("p"))
+        cur = graft.nextRound(cur, cur
           .join(keep.withColumnRenamed("p", "a"), Seq("a"), "left_semi")
           .join(keep.withColumnRenamed("p", "b"), Seq("b"), "left_semi")
-          .select(col("a"), col("b"))
-          .localCheckpoint(true)
-        val nNext = next.count()
-        if (nNext == nEdges) {
-          converged = true
-          lastDeg = deg
-        } else {
-          cur.unpersist()
-          cur = next
+          .select(col("a"), col("b")))
+        val nNext = cur.count()
+        if (nNext == nEdges)
+          // fixpoint: every surviving degree is ≥ k
+          out = graft.sealResult(degrees(cur)
+            .select(col("p").as("id"), col("deg").as("core_deg")), cur)
+        else {
           nEdges = nNext
           round += 1
-          if (round > maxRounds)
+          if (round > maxRounds) {
+            graft.release(cur)
             throw new IllegalStateException(
               s"kCore: no fixpoint after $maxRounds peeling rounds")
+          }
         }
       }
-      // final degrees ARE ≥ k for every survivor by the fixpoint
-      lastDeg.select(col("p").as("id"), col("deg").as("core_deg"))
+      out
     }
   }
 
@@ -825,7 +755,9 @@ object Graph {
     * (the kCore discipline — wrong answers are never returned).
     * Support counting is exact integers → hash-gateable; the oracle
     * unrolls the rounds MATERIALIZED, so hash-equality also certifies
-    * convergence within the unroll. Under the shared
+    * convergence within the unroll. The surviving edges are the loop
+    * state ([[graft.nextRound]]); the fixpoint's supports are sealed
+    * from the last round, which is then freed. Under the shared
     * [[graft.hybrid]] rung the standard queue-cascade peel runs on
     * the driver (k-truss is the
     * unique maximal subgraph, so peel order is immaterial) —
@@ -838,14 +770,9 @@ object Graph {
              maxRounds: Int = 30): DataFrame = {
     require(k >= 3, s"k must be ≥ 3 (k=2 is the whole graph): $k")
     import edges.sparkSession.implicits._
-    val und0 = edges.select(col(srcCol).cast("long").as("s"),
-        col(dstCol).cast("long").as("d"))
-      .filter(col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("a"),
-        greatest(col("s"), col("d")).as("b"))
-      .distinct()
     // 16 bytes per edge: one (a, b) long pair
-    graft.hybrid("kTruss", und0.as[(Long, Long)], 16)(es =>
+    graft.hybrid("kTruss",
+        undirected(edges, srcCol, dstCol).as[(Long, Long)], 16)(es =>
       Some(localKTruss(es, k).toDF("id_a", "id_b", "support"))) {
         (und, n) =>
       def support(e: DataFrame): DataFrame = {
@@ -865,36 +792,29 @@ object Graph {
       var round = 0
       var out: DataFrame = null
       while (out == null) {
-        val sup = support(cur)
-        val next = cur.join(sup.filter(col("support") >= k - 2),
-            Seq("a", "b"), "left_semi")
-          .localCheckpoint(true)
-        val nNext = next.count()
-        if (nNext == nEdges) {
-          // fixpoint: sup was computed over the surviving set itself
-          out = cur.join(sup, Seq("a", "b"))
+        cur = graft.nextRound(cur, cur.join(
+          support(cur).filter(col("support") >= k - 2),
+          Seq("a", "b"), "left_semi"))
+        val nNext = cur.count()
+        if (nNext == nEdges)
+          // fixpoint: the round kept every edge, so its supports are
+          // the ones the previous round was filtered by
+          out = graft.sealResult(cur.join(support(cur), Seq("a", "b"))
             .select(col("a").as("id_a"), col("b").as("id_b"),
-              col("support"))
-            .localCheckpoint(true)
-          graft.release(cur)
-        } else {
-          // release the superseded round's CHECKPOINT blocks, not just
-          // its CacheManager entry — plain unpersist leaves
-          // localCheckpoint RDD blocks pinned until GC, so a high-round
-          // peel would accumulate block-manager storage for the whole
-          // query (`next` is already eagerly checkpointed and does not
-          // depend on `cur`)
-          graft.release(cur)
-          cur = next
+              col("support")), cur)
+        else {
           nEdges = nNext
           round += 1
-          if (nEdges == 0)
+          if (nEdges == 0) {
             // empty fixpoint: no edge closes k−2 triangles
-            out = cur.select(col("a").as("id_a"), col("b").as("id_b"),
-              lit(0L).as("support"))
-          else if (round > maxRounds)
+            graft.release(cur)
+            out = Seq.empty[(Long, Long, Long)]
+              .toDF("id_a", "id_b", "support")
+          } else if (round > maxRounds) {
+            graft.release(cur)
             throw new IllegalStateException(
               s"kTruss: no fixpoint after $maxRounds peeling rounds")
+          }
         }
       }
       out
@@ -1005,20 +925,15 @@ object Graph {
     val und = (if (assumeCanonical)
         edges.select(col(srcCol).cast("long").as("a"),
           col(dstCol).cast("long").as("b"))
-      else edges.select(col(srcCol).cast("long").as("s"),
-          col(dstCol).cast("long").as("d"))
-        .filter(col("s") =!= col("d"))
-        .select(least(col("s"), col("d")).as("a"),
-          greatest(col("s"), col("d")).as("b"))
-        .distinct())
+      else undirected(edges, srcCol, dstCol))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // round-12 (measured): the final query references und from THREE
-    // independent subtrees (two broadcast-degree builds + the moment
-    // aggregate); AQE schedules them concurrently, and a lazily
-    // persisted und is recomputed by ALL of them (each starts before
-    // any completes and populates the cache). Materialize once first
-    // — the CC persist+count discipline; at scale this is the one
-    // edge pass you'd pay anyway on first use.
+    // the final query references und from THREE independent subtrees
+    // (two broadcast-degree builds + the moment aggregate); AQE
+    // schedules them concurrently, and a lazily persisted und would be
+    // recomputed by ALL of them (each starts before any completes and
+    // populates the cache). Materialize once first — the CC
+    // persist+count discipline; at scale this is the one edge pass
+    // you'd pay anyway on first use.
     und.count()
     // deg0 is read three times (two broadcast-degree builds + the
     // moment aggregate) — persist the node-cardinality table so the
@@ -1053,18 +968,15 @@ object Graph {
       col("s2").as("sx"), col("s2").as("sy"),
       (col("pp") * 2).as("sxy"),
       col("s3").as("sxx"), col("s3").as("syy"))
-    val r = m
+    graft.sealResult(m
       .select(col("n_nodes"), col("n_edges"),
         when(col("n") * col("sxx") - col("sx") * col("sx") > 0 &&
              col("n") * col("syy") - col("sy") * col("sy") > 0,
           (col("n") * col("sxy") - col("sx") * col("sy")).cast("double") /
             (sqrt((col("n") * col("sxx") - col("sx") * col("sx")).cast("double")) *
              sqrt((col("n") * col("syy") - col("sy") * col("sy")).cast("double"))))
-          .as("assortativity"))
-      .localCheckpoint(true)
-    deg0.unpersist()
-    und.unpersist()
-    r
+          .as("assortativity")),
+      deg0, und)
   }
 
   /** Multi-source BFS: minimum hop distance from a SEED SET over an
@@ -1077,8 +989,8 @@ object Graph {
     * (i−1) frontier against the edge list (frontier-sized, not
     * graph-sized), anti-joins the visited set, and unions the new
     * nodes in at hop i. Two keyed shuffles per round, O(maxHops)
-    * rounds, per-round `localCheckpoint` truncating lineage (the CC
-    * cache discipline); the only scalar crossing the driver is the
+    * rounds; the frontier and the visited set are both loop state
+    * ([[graft.nextRound]]); the only scalar crossing the driver is the
     * new-frontier count (early exit when the frontier drains). Same
     * hybrid rung as CC/LPA/kCore: a reduced graph under the shared
     * [[graft.hybrid]] rung runs a driver-side queue BFS —
@@ -1095,15 +1007,10 @@ object Graph {
                    maxHops: Int): DataFrame = {
     import edges.sparkSession.implicits._
     require(maxHops >= 0, s"maxHops must be ≥ 0: $maxHops")
-    val und = edges.select(col(srcCol).cast("long").as("s"),
-        col(dstCol).cast("long").as("d"))
-      .filter(col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("a"),
-        greatest(col("s"), col("d")).as("b"))
-      .distinct()
     val seed = seeds.select(col(seedCol).cast("long").as("id")).distinct()
     // 16 bytes per edge: one (a, b) long pair
-    graft.hybrid("shortestHops", und.as[(Long, Long)], 16)(es =>
+    graft.hybrid("shortestHops",
+        undirected(edges, srcCol, dstCol).as[(Long, Long)], 16)(es =>
       Some(localBfs(es, seed.as[Long].collect(), maxHops)
         .toDF("id", "hop"))) { (und, _) =>
       val sym = und.union(und.select(col("b").as("a"), col("a").as("b")))
@@ -1111,24 +1018,23 @@ object Graph {
         .persist(StorageLevel.MEMORY_AND_DISK)
       sym.count()
       und.unpersist()
-      var dist = seed.select(col("id"), lit(0L).as("hop"))
-        .localCheckpoint(true)
-      var frontier = dist
+      var dist = graft.sealResult(seed.select(col("id"), lit(0L).as("hop")))
+      // the hop-0 frontier is a view of `dist`, owning no storage of
+      // its own, so replacing it never frees the visited set
+      var frontier = dist.select(col("id"))
       var hop = 0L
       var drained = false
       while (!drained && hop < maxHops) {
         hop += 1
-        val next = sym.join(frontier, sym("src") === frontier("id"))
-          .select(sym("dst").as("id")).distinct()
-          .join(dist, Seq("id"), "left_anti")
-          .select(col("id"), lit(hop).as("hop"))
-          .localCheckpoint(true)
-        if (next.count() == 0) drained = true
-        else {
-          dist = dist.union(next).localCheckpoint(true)
-          frontier = next
-        }
+        frontier = graft.nextRound(frontier,
+          sym.join(frontier, sym("src") === frontier("id"))
+            .select(sym("dst").as("id")).distinct()
+            .join(dist, Seq("id"), "left_anti"))
+        if (frontier.count() == 0) drained = true
+        else dist = graft.nextRound(dist,
+          dist.union(frontier.select(col("id"), lit(hop).as("hop"))))
       }
+      graft.release(frontier)
       sym.unpersist()
       dist
     }
@@ -1185,8 +1091,9 @@ object Graph {
     *      the root r (f(r)=r) along REVERSED edges restricted to the
     *      class: flagged ⟺ v ⇝ r through the class ⟺ v ∈ SCC(r).
     *   4. Extract flagged nodes (scc = f), remove, repeat.
-    * Every converging loop uses the scalar-sum/count convergence +
-    * per-round localCheckpoint discipline; exhaustion THROWS rather
+    * Every converging loop uses the scalar-sum/count convergence, with
+    * each state (remaining edges, nodes, assigned labels, f, flags)
+    * advanced through [[graft.nextRound]]; exhaustion THROWS rather
     * than returning partial labels (the CC contract). Worst case
     * (a long chain of SCCs) needs O(chain) outer rounds — the known
     * FW-BW caveat; trimming removes the common DAG tails first.
@@ -1210,13 +1117,11 @@ object Graph {
     graft.hybrid("stronglyConnectedComponents", e0.as[(Long, Long)], 16)(
         es => Some(localTarjan(es).toDF("id", "scc")
           .repartition(col("scc")))) { (e0, _) =>
-      var remaining = e0.localCheckpoint(true)
-      e0.unpersist()
-      var nodes = remaining.select(col("src").as("id"))
-        .union(remaining.select(col("dst").as("id")))
-        .distinct().localCheckpoint(true)
-      var assigned = spark.emptyDataset[(Long, Long)].toDF("id", "scc")
-        .localCheckpoint(true)
+      var remaining = graft.nextRound(e0, e0)
+      var nodes = graft.sealResult(remaining.select(col("src").as("id"))
+        .union(remaining.select(col("dst").as("id"))).distinct())
+      var assigned = graft.sealResult(
+        spark.emptyDataset[(Long, Long)].toDF("id", "scc"))
       var outer = 0
       while (nodes.count() > 0 && outer < maxIter) {
         outer += 1
@@ -1225,28 +1130,27 @@ object Graph {
         while (trimmed && nodes.count() > 0) {
           val hasIn = remaining.select(col("dst").as("id")).distinct()
           val hasOut = remaining.select(col("src").as("id")).distinct()
-          val keep = nodes.join(hasIn, Seq("id"), "left_semi")
-            .join(hasOut, Seq("id"), "left_semi")
-            .localCheckpoint(true)
-          val dropped = nodes.join(keep, Seq("id"), "left_anti")
-            .select(col("id"), col("id").as("scc"))
-            .localCheckpoint(true)
-          if (dropped.count() == 0) trimmed = false
-          else {
-            assigned = assigned.union(dropped).localCheckpoint(true)
+          val keep = graft.sealResult(nodes.join(hasIn, Seq("id"), "left_semi")
+            .join(hasOut, Seq("id"), "left_semi"))
+          val dropped = graft.sealResult(nodes.join(keep, Seq("id"), "left_anti")
+            .select(col("id"), col("id").as("scc")))
+          if (dropped.count() == 0) {
+            trimmed = false
+            Seq(keep, dropped).foreach(graft.release)
+          } else {
+            assigned = graft.nextRound(assigned, assigned.union(dropped))
+            Seq(dropped, nodes).foreach(graft.release)
             nodes = keep
-            remaining = remaining
+            remaining = graft.nextRound(remaining, remaining
               .join(keep.select(col("id").as("src")), Seq("src"), "left_semi")
               .join(keep.select(col("id").as("dst")), Seq("dst"), "left_semi")
-              .select(col("src"), col("dst"))
-              .localCheckpoint(true)
+              .select(col("src"), col("dst")))
           }
         }
         if (nodes.count() == 0) () // all trimmed — outer loop exits
         else {
           // 2. forward min-label to fixpoint (directed CC loop)
-          var f = nodes.select(col("id"), col("id").as("f"))
-            .localCheckpoint(true)
+          var f = graft.sealResult(nodes.select(col("id"), col("id").as("f")))
           var prevSum = f.agg(sum(col("f"))).head.getLong(0)
           var converged = false
           var it = 0
@@ -1255,20 +1159,18 @@ object Graph {
             val inMin = remaining.join(f, remaining("src") === f("id"))
               .groupBy(remaining("dst").as("id"))
               .agg(min(col("f")).as("inf"))
-            val next = f.as("l").join(inMin.as("n"), Seq("id"), "left")
+            f = graft.nextRound(f, f.as("l").join(inMin.as("n"), Seq("id"), "left")
               .select(col("id"),
-                least(col("l.f"), coalesce(col("n.inf"), col("l.f"))).as("f"))
-              .localCheckpoint(true)
-            val s = next.agg(sum(col("f"))).head.getLong(0)
-            f = next
+                least(col("l.f"), coalesce(col("n.inf"), col("l.f"))).as("f")))
+            val s = f.agg(sum(col("f"))).head.getLong(0)
             converged = s == prevSum
             prevSum = s
           }
           if (!converged) throw new IllegalStateException(
             s"scc: forward pass hit $maxIter rounds without a fixpoint")
           // 3. backward check within f-classes from each root
-          var flagged = f.filter(col("id") === col("f"))
-            .select(col("id"), col("f")).localCheckpoint(true)
+          var flagged = graft.sealResult(f.filter(col("id") === col("f"))
+            .select(col("id"), col("f")))
           var prevN = flagged.count()
           var done = false
           var bit = 0
@@ -1281,30 +1183,29 @@ object Graph {
                 Seq("src"))
               .filter(col("fs") === col("fd"))
               .select(col("src").as("id"), col("fs").as("f"))
-            val nf = flagged.union(step).distinct().localCheckpoint(true)
-            val n = nf.count()
+            flagged = graft.nextRound(flagged, flagged.union(step).distinct())
+            val n = flagged.count()
             done = n == prevN
-            flagged = nf
             prevN = n
           }
           if (!done) throw new IllegalStateException(
             s"scc: backward pass hit $maxIter rounds without a fixpoint")
           // 4. extract flagged (scc = f), remove, iterate
-          assigned = assigned
-            .union(flagged.select(col("id"), col("f").as("scc")))
-            .localCheckpoint(true)
-          nodes = nodes.join(flagged.select(col("id")), Seq("id"), "left_anti")
-            .localCheckpoint(true)
-          remaining = remaining
+          assigned = graft.nextRound(assigned, assigned
+            .union(flagged.select(col("id"), col("f").as("scc"))))
+          nodes = graft.nextRound(nodes,
+            nodes.join(flagged.select(col("id")), Seq("id"), "left_anti"))
+          remaining = graft.nextRound(remaining, remaining
             .join(nodes.select(col("id").as("src")), Seq("src"), "left_semi")
             .join(nodes.select(col("id").as("dst")), Seq("dst"), "left_semi")
-            .select(col("src"), col("dst"))
-            .localCheckpoint(true)
+            .select(col("src"), col("dst")))
+          Seq(flagged, f).foreach(graft.release)
         }
       }
       if (nodes.count() > 0) throw new IllegalStateException(
         s"scc: $maxIter outer rounds left nodes unassigned — a chain of " +
           "SCCs longer than maxIter; raise maxIter")
+      Seq(nodes, remaining).foreach(graft.release)
       assigned
     }
   }
@@ -1316,7 +1217,8 @@ object Graph {
     * hash-gateable; the hop bound both bounds work and makes the
     * semantics well-defined even with negative edge weights). Per
     * round: one keyed join + min aggregate + min-merge, scalar-sum
-    * convergence for early exit, per-round localCheckpoint; driver
+    * convergence for early exit, distances advanced through
+    * [[graft.nextRound]]; driver
     * fast path under the shared [[graft.hybrid]] rung runs the
     * same rounds in a hash map, asserted identical.
     *
@@ -1340,8 +1242,7 @@ object Graph {
     graft.hybrid("shortestPaths", e.as[(Long, Long, Long)], 16)(es =>
       Some(localBellmanFord(es, seed.as[Long].collect(), maxHops)
         .toDF("id", "cost"))) { (e, _) =>
-      var dist = seed.select(col("id"), lit(0L).as("cost"))
-        .localCheckpoint(true)
+      var dist = graft.sealResult(seed.select(col("id"), lit(0L).as("cost")))
       var prevSum = dist.agg(coalesce(sum(col("cost")), lit(0L)))
         .head.getLong(0)
       var prevN = dist.count()
@@ -1352,15 +1253,14 @@ object Graph {
         val relax = e.join(dist, e("src") === dist("id"))
           .groupBy(e("dst").as("id"))
           .agg(min(col("cost") + col("w")).as("cand"))
-        val next = dist.as("d").join(relax.as("r"), Seq("id"), "full_outer")
-          .select(col("id"),
-            least(coalesce(col("d.cost"), col("r.cand")),
-              coalesce(col("r.cand"), col("d.cost"))).as("cost"))
-          .localCheckpoint(true)
-        val s = next.agg(coalesce(sum(col("cost")), lit(0L))).head.getLong(0)
-        val n = next.count()
+        dist = graft.nextRound(dist,
+          dist.as("d").join(relax.as("r"), Seq("id"), "full_outer")
+            .select(col("id"),
+              least(coalesce(col("d.cost"), col("r.cand")),
+                coalesce(col("r.cand"), col("d.cost"))).as("cost")))
+        val s = dist.agg(coalesce(sum(col("cost")), lit(0L))).head.getLong(0)
+        val n = dist.count()
         converged = s == prevSum && n == prevN
-        dist = next
         prevSum = s
         prevN = n
       }
@@ -1484,10 +1384,9 @@ object Graph {
     val e = edges.select(col(srcCol).cast("long").as("a"),
         col(dstCol).cast("long").as("b"))
       .filter(col("a") =!= col("b")).distinct()
-    // hybrid driver rung (the CC/LPA/kCore/HITS precedent, r8 VERDICT
-    // task #6): under the size gate the wedge census runs as
-    // one driver loop — the distributed plan's cost at gate scale is
-    // pure scheduling floor (~4s for kilobyte partitions). Bit-equal
+    // hybrid driver rung (as CC/LPA/kCore/HITS): under the size gate
+    // the wedge census runs as one driver loop — the distributed
+    // plan's cost at that scale is pure scheduling floor. Bit-equal
     // by construction (Round9OpsSpec asserts local ≡ distributed);
     // bails back to the distributed path if the candidate-pair set
     // outgrows the in-memory bound. 64 bytes per edge: the pair plus
@@ -1580,8 +1479,8 @@ object Graph {
     * with init rank = scale div |S| on seeds, 0 elsewhere. Integer
     * sums are order-free → hash-gateable cross-engine; dangling nodes
     * leak mass exactly as in [[pageRankFixed]]. Same hybrid driver /
-    * two-shuffle-per-round distributed execution with localCheckpoint
-    * lineage truncation.
+    * two-shuffle-per-round distributed execution, ranks advanced
+    * through [[graft.nextRound]].
     *
     * @param seeds one `id` column; rows not present in the graph are
     *              ignored for mass but still divide |S| — pass graph
@@ -1652,14 +1551,11 @@ object Graph {
         val contribs = withDeg.join(ranks, withDeg("src") === ranks("id"))
           .groupBy(col("dst").as("id"))
           .agg(sum(expr("rank_fp div deg")).as("inflow"))
-        val next = isSeed.join(contribs, Seq("id"), "left")
+        ranks = graft.nextRound(ranks, isSeed.join(contribs, Seq("id"), "left")
           .select(col("id"),
             (when(col("is_seed"), lit(base)).otherwise(lit(0L)) +
               expr(s"($dampNum * coalesce(inflow, 0L)) div $dampDen"))
-              .as("rank_fp"))
-          .localCheckpoint(true)
-        ranks.unpersist()
-        ranks = next
+              .as("rank_fp")))
       }
       nodes.unpersist()
       held.foreach(_.unpersist())

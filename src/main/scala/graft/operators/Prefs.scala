@@ -132,14 +132,11 @@ object Prefs {
           .groupBy(col("i"))
           .agg(sum(expr(s"nij * ${scale}L * ${scale}L div (pi + pj)"))
             .as("den"))
-        val next = items.join(den, Seq("i"))
+        ranks = graft.nextRound(ranks, items.join(den, Seq("i"))
           .select(col("i"),
             least(lit(cap), greatest(lit(1L),
               expr(s"wins * ${scale}L * ${scale}L div greatest(den, 1L)")))
-              .as("p"))
-          .localCheckpoint(true)
-        ranks.unpersist()
-        ranks = next
+              .as("p")))
       }
       val out = items.join(ranks, Seq("i"))
         .select(col("i").as("item"), col("games").as("n_games"),

@@ -582,8 +582,8 @@ object Similarity {
     * the LOWEST id, md5-portable seed — bit-identical on any
     * engine/partitioning, hash-gateable. Each round is one argmax
     * scan (top-1, combinable) + one O(D) driver fetch + one in-row
-    * running-min update with per-round localCheckpoint; the corpus
-    * never shuffles.
+    * running-min update, checkpointed per round through
+    * [[graft.nextRound]]; the corpus never shuffles.
     *
     * @return one row per selected center: (cid = pick order 0..k−1,
     *         center_id, n_assigned, max_d) — assignment/radius from
@@ -655,10 +655,10 @@ object Similarity {
           val far = cur.orderBy(col("mind").desc, col("id").asc).limit(1)
             .select(col("id"), col("v")).collect().head
           centers :+= ((far.getLong(0), far.getSeq[Double](1)))
-          cur = cur.withColumn("mind",
-              least(col("mind"), sqDist(col("v"), typedLit(far.getSeq[Double](1)))))
-            .localCheckpoint(true)
+          cur = graft.nextRound(cur, cur.withColumn("mind",
+            least(col("mind"), sqDist(col("v"), typedLit(far.getSeq[Double](1))))))
         }
+        graft.release(cur)
         // final assignment: argmin over the k centers, ties to lowest cid
         val dists = array(centers.map { case (_, cv) =>
           sqDist(col("v"), typedLit(cv)) }: _*)
@@ -964,12 +964,11 @@ object Similarity {
       }
       val booksArr = Array.tabulate(m, cents(0).length)((s, c) =>
         cents(s)(c).map(_.toDouble))
-      Some(vecsPlan.select(col("id"),
+      Some(graft.sealResult(vecsPlan.select(col("id"),
           posexplode(graft.plans.VectorFunctions.pqCodes(col("v"),
             booksArr)).as(Seq("sb", "code")))
         .select(col("id"), col("sb").cast("long").as("sb"),
-          col("code").cast("long").as("code"))
-        .localCheckpoint(true))
+          col("code").cast("long").as("code"))))
     } { vecs =>
       val d0 = corpus.select(size(col(vecCol))).head.getInt(0)
       require(d0 % m == 0, s"dim $d0 not divisible by m=$m")
@@ -1021,12 +1020,11 @@ object Similarity {
             }
           }
         }
-        vecs.select(col("id"),
+        graft.sealResult(vecs.select(col("id"),
             posexplode(graft.plans.VectorFunctions.pqCodes(col("v"),
               books(cents))).as(Seq("sb", "code")))
           .select(col("id"), col("sb").cast("long").as("sb"),
-            col("code").cast("long").as("code"))
-          .localCheckpoint(true)
+            col("code").cast("long").as("code")))
       } finally vecs.unpersist()
     }
   }

@@ -2241,7 +2241,7 @@ object Stats {
       val taskCnt = src.groupBy(col("t"))
         .agg(count(lit(1)).as("cnt"), countDistinct(col("sys")).as("ds"))
       // kept is task-cardinality; the semi-join probes it once and the
-      // count materializes it — localCheckpoint-free persist released
+      // count materializes it — a checkpoint-free persist released
       // with the source below via the shared finally
       val kept = taskCnt.filter(col("cnt") === k && col("ds") === k)
         .select(col("t"))

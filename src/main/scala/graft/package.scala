@@ -16,32 +16,64 @@ package object graft {
     */
   val BatchDate = "2026-08-12"
 
-  /** Operator-internal cache discipline (Graph.scala's pattern applied
-    * library-wide — VERDICT r5 §wrong.1): eagerly materialize `result`
-    * via `localCheckpoint(true)` — truncating its lineage off every
-    * persisted intermediate — then release those intermediates. A
-    * caller composing several operators in one job therefore never
-    * accretes dead cached datasets: each result is self-contained, and
-    * its ONLY storage is its own checkpoint, freed by [[release]] (or
-    * by the ContextCleaner once the result is garbage-collected).
+  /** Operator storage, rule 1 of 2 — a final result: eagerly
+    * materializes `result` via `localCheckpoint(true)`, truncating its
+    * lineage off every intermediate, then [[release]]s those
+    * intermediates. A caller composing several operators in one job
+    * therefore never accretes dead cached datasets: each result is
+    * self-contained, and its ONLY storage is its own checkpoint, freed
+    * by [[release]] (or by the ContextCleaner once the result is
+    * garbage-collected). An intermediate is anything the operator
+    * created (a persisted frame, a round's checkpoint), never the
+    * caller's input.
     */
   private[graft] def sealResult(result: DataFrame,
       intermediates: Dataset[_]*): DataFrame = {
     val out = result.localCheckpoint(eager = true)
-    intermediates.foreach(_.unpersist())
+    intermediates.foreach(release)
     out
   }
 
-  /** Release the block-manager storage a graft operator result carries:
-    * the result's own `localCheckpoint` blocks (plus any checkpointed
-    * aggregates embedded in its plan) and its CacheManager entry if the
-    * caller persisted it. Call once the result is consumed (written to
-    * a sink / collected); afterwards the DataFrame must not be reused.
-    * Long-lived sessions that skip this still drain via Spark's
+  /** Operator storage, rule 2 of 2 — distributed loop state: eagerly
+    * checkpoints `next` (one job; the checkpoint also truncates the
+    * lineage that would otherwise nest one plan level per round), then
+    * [[release]]s `prev`, the round it replaces. `next` may read `prev`:
+    * it is materialized before `prev` is freed. A loop's final state is
+    * then either the result itself (it owns exactly its checkpoint) or
+    * released once a sealed result has been built from it.
+    */
+  private[graft] def nextRound(prev: Dataset[_], next: DataFrame): DataFrame =
+    sealResult(next, prev)
+
+  /** [[nextRound]] for a loop whose per-round convergence scalar is the
+    * job that materializes the round: `next` is checkpointed lazily,
+    * `measure` runs on it (that one job fills the checkpoint), and only
+    * then is `prev` released. Returns the new round and its measure.
+    */
+  private[graft] def measuredRound[T](prev: Dataset[_], next: DataFrame)(
+      measure: DataFrame => T): (DataFrame, T) = {
+    val out = next.localCheckpoint(eager = false)
+    val m = measure(out)
+    release(prev)
+    (out, m)
+  }
+
+  /** Release the block-manager storage `df` OWNS: its own checkpoint
+    * (when `df` is a `localCheckpoint` result, as every sealed operator
+    * result and every loop round is) and its CacheManager entry (when
+    * it was persisted). Storage that `df` merely reads — a checkpoint
+    * or cache further down its plan, such as the caller's input — is
+    * left alone. Call once the result is consumed (written to a sink /
+    * collected); afterwards the DataFrame must not be reused. Long-
+    * lived sessions that skip this still drain via Spark's
     * ContextCleaner when the result object is garbage-collected.
     */
   def release(df: Dataset[_]): Unit = {
-    GraftBridge.unpersistPlanRdds(df)
+    df.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.execution.LogicalRDD =>
+        l.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
     df.unpersist()
   }
 

@@ -19,21 +19,6 @@ object GraftBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** Unpersist every RDD-backed leaf (`LogicalRDD`) in `df`'s analyzed
-    * plan — the block-manager storage a `localCheckpoint(true)` result
-    * carries (its own checkpoint, plus any checkpointed small
-    * aggregates embedded in a still-lazy plan). `spark.catalog
-    * .clearCache()` does NOT reach these: they are RDD-level persists,
-    * not CacheManager entries. After this call the dataset's
-    * checkpointed data is gone and it must not be recomputed from.
-    */
-  def unpersistPlanRdds(df: Dataset[_]): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Post a custom event to every listener of `spark`'s context
     * (`listenerBus` is private[spark]).
     */

@@ -42,9 +42,10 @@ class GraphSamplingSpec extends AnyFunSuite {
   }
 
   test("triangleStats: degree-ordered ≡ id-ordered, incl. hub skew") {
-    // star hub 0 + random edges: the shape where id-orientation's
-    // wedge fan-out is quadratic in the hub degree and the forward
-    // algorithm's is not — outputs must match exactly anyway
+    // star hub 0 + random edges: the shape where an id-ordered wedge
+    // fan-out is quadratic in the hub degree and the forward
+    // orientation's is not; the distributed joins and the driver-local
+    // rung must match exactly
     val rnd = new scala.util.Random(11)
     val star = (1L to 30L).map(i => (0L, i))
     val extra = Seq.fill(60)((rnd.nextInt(31).toLong, rnd.nextInt(31).toLong))
@@ -53,27 +54,22 @@ class GraphSamplingSpec extends AnyFunSuite {
         Seq((1L, 2L), (2L, 3L), (3L, 1L)), // one triangle, all ranks tied
         (0L until 12L).flatMap(i => ((i + 1) until 12L).map(j => (i, j))))) { // K12
       val df = edges.toDF("a", "b")
-      // a size gate of 0 forces the DISTRIBUTED joins in both
-      // orientations; the default run exercises the driver-local rung
-      val (fwd, ids) = onPath(spark, "distributed") {
-        (Graph.triangleStats(df, "a", "b").head,
-          Graph.triangleStats(df, "a", "b", degreeOrdered = false).head)
-      }
+      // a size gate of 0 forces the DISTRIBUTED joins; the default
+      // run exercises the driver-local rung
+      val fwd = onPath(spark, "distributed")(
+        Graph.triangleStats(df, "a", "b").head)
       val loc = onPath(spark, "local")(Graph.triangleStats(df, "a", "b").head)
-      for (other <- Seq(ids, loc)) {
-        assert(fwd.getAs[Long]("n_triangles") == other.getAs[Long]("n_triangles"))
-        assert(fwd.getAs[Long]("n_nodes") == other.getAs[Long]("n_nodes"))
-        assert(fwd.getAs[Long]("n_edges") == other.getAs[Long]("n_edges"))
-        assert(fwd.getAs[Double]("clustering") == other.getAs[Double]("clustering"))
-      }
+      assert(fwd.getAs[Long]("n_triangles") == loc.getAs[Long]("n_triangles"))
+      assert(fwd.getAs[Long]("n_nodes") == loc.getAs[Long]("n_nodes"))
+      assert(fwd.getAs[Long]("n_edges") == loc.getAs[Long]("n_edges"))
+      assert(fwd.getAs[Double]("clustering") == loc.getAs[Double]("clustering"))
     }
   }
 
   test("localClustering: degree-ordered ≡ id-ordered per node, incl. hub skew") {
-    // same shapes as the triangleStats equivalence: the sf1 rehearsal
-    // showed the id-ordered enumeration running unbounded on a dense
-    // pair graph, so the forward orientation is now the default — and
-    // must credit each corner identically
+    // same shapes as the triangleStats equivalence: the distributed
+    // forward orientation and the driver-local rung must credit each
+    // corner identically
     val rnd = new scala.util.Random(17)
     val star = (1L to 30L).map(i => (0L, i))
     val extra = Seq.fill(60)((rnd.nextInt(31).toLong, rnd.nextInt(31).toLong))
@@ -82,17 +78,15 @@ class GraphSamplingSpec extends AnyFunSuite {
         Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)),
         (0L until 10L).flatMap(i => ((i + 1) until 10L).map(j => (i, j))))) {
       val df = edges.toDF("a", "b")
-      def rows(degOrdered: Boolean, path: String) =
+      def rows(path: String) =
         onPath(spark, path) {
-          Graph.localClustering(df, "a", "b", degreeOrdered = degOrdered)
+          Graph.localClustering(df, "a", "b")
             .collect()
             .map(r => r.getAs[Long]("id") ->
               ((r.getAs[Long]("degree"), r.getAs[Long]("n_tri"),
                 r.getAs[Double]("lcc")))).toMap
         }
-      // both distributed orientations AND the driver-local rung agree
-      assert(rows(true, "distributed") == rows(false, "distributed"))
-      assert(rows(true, "distributed") == rows(true, "local"))
+      assert(rows("distributed") == rows("local"))
     }
     // spot-check exact values on K4 + pendant: node 4 sees 3 triangles
     // over deg 4 → lcc = 6/12; pendant 5 deg 2, 0 triangles → 0.0

@@ -50,19 +50,6 @@ class LayoutBloomSpec extends AnyFunSuite {
       Seq("k", "__ga_suspect"))
   }
 
-  test("bloom anti join: rescan mode (materialize=false) is identical") {
-    // the 100 TB file-source trade: two map-side codegen'd scans, zero
-    // cache — must produce the same rows as the materialized default
-    val big = spark.range(0, 20000).select($"id".as("k"), ($"id" % 7).as("v"))
-    val keys = spark.range(0, 20000).filter($"id" % 97 === 0)
-      .select($"id".as("k"))
-    val got = Bloom.antiJoin(big, keys, "k", 0.05, materialize = false)
-      .collect().map(_.getLong(0)).sorted
-    val exp = big.join(keys, Seq("k"), "left_anti")
-      .collect().map(_.getLong(0)).sorted
-    assert(got.toSeq == exp.toSeq)
-  }
-
   test("bloom joins are exact across MISMATCHED key dtypes (int vs long)") {
     // xxhash64 is type-sensitive (hashInt != hashLong); the build side
     // casts to the big side's dtype, so an int-keyed denylist against a
