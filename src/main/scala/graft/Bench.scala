@@ -108,6 +108,7 @@ object Bench {
       .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    muteReleasedCheckpointWarnings()
     // absorb one-time cost (codegen compilation, JIT, parquet reader
     // init) so it isn't billed to whichever queries happen to run first:
     // run EVERY query once at the smallest SF — same generated code,

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 import graft.pipeline.{BankEtl, BatchScheduler, RunLog}
@@ -88,11 +90,22 @@ object EtlMain {
     neu.toString
   }
 
-  /** Runs `body` on each entity with new files under `csvDir`, in
-    * schema order, logging under `phase`. The tracker hashes every
-    * entity's files in one job up front and records the processed
-    * ones, with exactly the hashes it diffed, in one write at the end —
-    * also when a later entity fails, so a re-run skips what loaded.
+  /** Runs `body` on each entity with new files under `csvDir`, logging
+    * under `phase`. The tracker hashes every entity's files in one job
+    * up front and records the processed ones, with exactly the hashes
+    * it diffed, in one write at the end.
+    *
+    * Invariants:
+    *  - the pending entities run concurrently, one driver thread each,
+    *    so their Spark jobs overlap; each thread carries the caller's
+    *    Spark local properties (job group, description, scheduler pool);
+    *  - `body` runs the one action on its entity's staged `data`; the
+    *    staging stats are read after it;
+    *  - RunLog records stay per entity; the tracker records exactly the
+    *    entities that finished, also when another one failed, so a
+    *    re-run skips what loaded;
+    *  - when entities fail, the first failure in schema order is
+    *    rethrown once every entity has finished.
     */
   private def forEachPending(spark: SparkSession, csvDir: String,
                              outDir: String, phase: String, rl: RunLog)
@@ -100,28 +113,50 @@ object EtlMain {
     val tracker = new FileTracker(spark, trackerPath(spark, outDir))
     val globs = BankEtl.schemas.map(e => e -> s"$csvDir/${e.name}*.csv")
     val pending = tracker.pending(globs.map(_._2))
-    val done = Seq.newBuilder[(FileTracker.TrackedFile, Long)]
-    try globs.foreach { case (entity, glob) =>
-      val files = pending.files(glob)
-      if (files.isEmpty) {
-        rl.log(phase, entity.name, "skip", "reason" -> "no new files")
-      } else {
-        rl.timed[Long](phase, entity.name, n => Seq("rows_out" -> n)) {
-          val staged = BankEtl.extract(spark, glob, entity)
-          val n = body(entity, staged)
-          // per-FILE raw counts (not the glob total against every file)
-          done ++= files.map(f => f -> staged.perFileRows.getOrElse(f.name, 0L))
-          rl.log(phase, entity.name, "stats",
-            "csv_rows" -> staged.totalRows,
-            "invalid_pk" -> staged.invalidKeyRows,
-            "deduped" -> staged.dedupedRows)
-          n
-        }
-      }
-    } finally {
-      val processed = done.result()
+    val (idle, work) = globs.partition { case (_, glob) => pending.files(glob).isEmpty }
+    idle.foreach { case (entity, _) =>
+      rl.log(phase, entity.name, "skip", "reason" -> "no new files")
+    }
+    val outcomes = sideBySide(work) { case (entity, glob) =>
+      rl.timed[(Long, Seq[(FileTracker.TrackedFile, Long)])](phase, entity.name,
+        r => Seq("rows_out" -> r._1)) {
+        val staged = BankEtl.extract(spark, glob, entity)
+        val n = body(entity, staged)
+        rl.log(phase, entity.name, "stats",
+          "csv_rows" -> staged.totalRows,
+          "invalid_pk" -> staged.invalidKeyRows,
+          "deduped" -> staged.dedupedRows)
+        // per-FILE raw counts (not the glob total against every file)
+        (n, pending.files(glob).map(f => f -> staged.perFileRows.getOrElse(f.name, 0L)))
+      }._2
+    }
+    try outcomes.foreach(_.get)
+    finally {
+      val processed = outcomes.flatMap(_.toOption).flatten
       if (processed.nonEmpty) tracker.record(pending, processed)
     }
+  }
+
+  /** `body` on each item, each on a new driver thread, and every
+    * outcome in item order once all have finished. A thread started by
+    * the caller inherits a copy of its Spark local properties (job
+    * group, description, scheduler pool) and its active session.
+    */
+  private def sideBySide[A, B](items: Seq[A])(body: A => B): Seq[Try[B]] = {
+    val outcomes = new Array[Try[B]](items.size)
+    val threads = items.zipWithIndex.map { case (a, i) =>
+      val t = new Thread(() => outcomes(i) =
+        try Success(body(a)) catch { case e: Throwable => Failure(e) },
+        s"graft-etl-$i")
+      t.start()
+      t
+    }
+    try threads.foreach(_.join())
+    catch { case e: InterruptedException =>
+      threads.foreach(_.interrupt())
+      throw e
+    }
+    outcomes.toSeq
   }
 
   /** Extract phase: stage new CSV files (raw strings, PK-filtered,
@@ -150,9 +185,10 @@ object EtlMain {
         case Some(staged) =>
           rl.timed[Long]("transform", entity.name,
             n => Seq("rows_out" -> n)) {
-            val out = BankEtl.transform(entity.name, staged, batchDate)
+            val (out, rows) = BankEtl.withRowMetric(
+              BankEtl.transform(entity.name, staged, batchDate))
             sources.ParquetIo.replace(out, transformed(outDir, entity.name))
-            out.count()
+            rows()
           }
       }
     }

@@ -18,6 +18,7 @@ object Verify {
       .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    muteReleasedCheckpointWarnings()
     // zero-interpreted-fallback gate: any CodeGenerator ERROR during the
     // sweep (64 KB method, janino failure → silent interpreted re-run)
     // fails Verify loudly instead of shipping a slow plan (r8 VERDICT #1)

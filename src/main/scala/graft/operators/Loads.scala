@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Load-phase semantics of the reference (src/load.py), re-expressed as
   * distributed set operations.
@@ -181,10 +184,6 @@ object Loads {
         (dim("valid_to").isNull || facts(factTime) < dim("valid_to")),
       "left")
 
-  /** Row-count reconciliation across tables (load.py:317 verify_counts):
-    * one row per table with its count. Counts run as independent
-    * partial-aggregated jobs; the union is metadata-sized.
-    */
   /** Snapshot diff (CDC derivation): classify every primary key across
     * two table snapshots as Inserted / Deleted / Updated / unchanged.
     * One full-outer equi-join on the key — the canonical way to turn
@@ -259,11 +258,23 @@ object Loads {
       .agg(sum(col("__n")).as("__n"),
         sumCols.map(c => sum(col(s"__sum_$c")).as(s"__sum_$c")): _*)
 
-  def countReport(tables: Map[String, DataFrame]): DataFrame =
-    tables.toSeq.sortBy(_._1).map { case (name, df) =>
-      df.agg(count(lit(1)).as("n_rows")).select(lit(name).as("tbl"),
-        col("n_rows"))
-    }.reduce(_ unionByName _)
+  /** Row-count reconciliation across tables (load.py:317
+    * verify_counts): one (tbl, n_rows) row per table in name order; a
+    * table with no rows reports 0. One aggregate over the union of
+    * tag-only scans (each reads no column), whatever the number of
+    * tables. One marker row per table, which counts as no row, keeps an
+    * empty table in the report.
+    */
+  def countReport(tables: Map[String, DataFrame]): DataFrame = {
+    val named = tables.toSeq.sortBy(_._1)
+    val markers = named.head._2.sparkSession.createDataFrame(
+      named.map { case (name, _) => Row(name, null) }.asJava,
+      StructType.fromDDL("tbl STRING, row BOOLEAN"))
+    named.map { case (name, df) => df.select(lit(name).as("tbl"), lit(true).as("row")) }
+      .foldLeft(markers)(_ unionByName _)
+      .groupBy(col("tbl")).agg(count(col("row")).as("n_rows"))
+      .coalesce(1).sortWithinPartitions(col("tbl"))
+  }
 
   /** D10: content-digest reconciliation — the stronger form of
     * [[countReport]]: an ORDER-INVARIANT digest of table content

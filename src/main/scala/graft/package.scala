@@ -77,6 +77,15 @@ package object graft {
     df.unpersist()
   }
 
+  /** Mutes Spark's WARN on each freed checkpoint ("lineage has been
+    * truncated and cannot be recomputed after unpersisting"): [[release]],
+    * [[nextRound]] and a sweep between queries free checkpoints on
+    * purpose. The test log configuration mutes the same logger.
+    */
+  def muteReleasedCheckpointWarnings(): Unit =
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
+
   /** Per-partition INPUT-byte target for the data-bound
     * [[fanOut]] width (guide §2: "size partitions by bytes"). The
     * value (256 KiB of compressed parquet ≈ ~1-2 MB of in-memory

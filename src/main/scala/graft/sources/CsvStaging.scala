@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -32,14 +32,32 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   */
 object CsvStaging {
 
-  /** `perFileRows`: raw row count per source FILE (the tracker's
+  /** The staged batch and its stats. `data` is lazy; the stats cover
+    * the whole glob and are counted by the first action on `data` (two
+    * unnamed observations on its plan), so they are valid, without a
+    * job of their own, once that action has run. Reading one earlier
+    * blocks until an action on `data` completes.
+    *
+    * `perFileRows`: raw row count per source FILE name (the tracker's
     * record_count must be per file, not the glob total — a multi-file
     * glob would otherwise record the sum against every file). Small by
     * construction: O(#files).
     */
-  final case class StagingResult(data: DataFrame, totalRows: Long,
-                                 invalidKeyRows: Long, dedupedRows: Long,
-                                 perFileRows: Map[String, Long] = Map.empty)
+  final class StagingResult private[CsvStaging] (val data: DataFrame,
+                                                 parsed: Observation,
+                                                 kept: Observation,
+                                                 fileNames: Seq[String]) {
+    private lazy val counts: Map[String, Long] =
+      (parsed.get ++ kept.get).map { case (k, v) => k -> v.asInstanceOf[Long] }
+    def totalRows: Long = counts("rows")
+    def invalidKeyRows: Long = counts("rows") - counts("valid")
+    /** Valid-key rows shadowed by a later row with the same key: the
+      * keep-last dedup leaves one row per distinct valid key.
+      */
+    def dedupedRows: Long = counts("valid") - counts("keys")
+    def perFileRows: Map[String, Long] =
+      fileNames.zipWithIndex.map { case (n, i) => n -> counts(s"file_$i") }.toMap
+  }
 
   def schemaFor(columns: Seq[String]): StructType =
     StructType(columns.map(c => StructField(c, StringType, nullable = true)))
@@ -54,9 +72,11 @@ object CsvStaging {
     *    file is parsed against it with `enforceSchema=false`: Spark
     *    checks each file's own header against it, where `header=true`
     *    alone would apply one file's column order to every file;
-    *  - the stats (rows per file, rows, valid-key rows, distinct valid
-    *    keys) cover the whole glob and come from ONE aggregate query;
-    *    `data` stays lazy.
+    *  - the glob is parsed once per action on `data` and this method
+    *    runs no job: the stats (rows, valid-key rows and rows per file
+    *    on the parsed rows; distinct valid keys after the keep-last
+    *    filter) are observed by the caller's own action and are valid
+    *    after it (see [[StagingResult]]).
     */
   def read(spark: SparkSession, path: String, columns: Seq[String],
            primaryKey: String): StagingResult = {
@@ -78,39 +98,30 @@ object CsvStaging {
       .option("mode", "PERMISSIVE")
       .csv(expanded.map(_.toString): _*)
 
+    val valid = col(primaryKey).isNotNull && trim(col(primaryKey)) =!= ""
+    // per file NAME, as the tracker keys its state
+    val fileNames = expanded.map(_.getName).distinct
+    val parsed = Observation()
     val ordered = raw.select(columns.map(col): _*)
       .withColumn("__file", input_file_name())
       .withColumn("__file_order", monotonically_increasing_id())
-
-    val valid = col(primaryKey).isNotNull && trim(col(primaryKey)) =!= ""
+      .observe(parsed, count(lit(1)).as("rows"),
+        count_if(valid).as("valid") +: fileNames.zipWithIndex.map { case (n, i) =>
+          count_if(col("__file").endsWith(s"/$n")).as(s"file_$i")
+        }: _*)
 
     // keep-last per key: the last file in name order, then the last row
-    // within it (reference keep='last')
+    // within it (reference keep='last'); one row per distinct valid key
     val w = Window.partitionBy(col(primaryKey))
       .orderBy(col("__file").desc, col("__file_order").desc)
+    val kept = Observation()
     val deduped = ordered.filter(valid)
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
+      .observe(kept, count(lit(1)).as("keys"))
       .drop("__rn", "__file", "__file_order")
       .withColumn("numeric_sort_key", numericSortKey(col(primaryKey)))
-
-    // per-file rows, and over the glob (the rollup's total row) rows,
-    // valid-key rows and distinct valid keys — the dedup keeps one row
-    // per distinct valid key
-    val stats = ordered
-      .select(element_at(split(col("__file"), "/"), -1).as("file_name"),
-        valid.as("valid"), col(primaryKey).as("pk"))
-      .rollup(col("file_name"))
-      .agg(grouping(col("file_name")).as("total"), count(lit(1)).as("rows"),
-        count_if(col("valid")).as("valid"),
-        count_distinct(when(col("valid"), col("pk"))).as("keys"))
-      .collect()
-    val (totals, files) = stats.partition(_.getAs[Byte]("total") == 1)
-    val perFile = files.map(r => r.getAs[String]("file_name") -> r.getAs[Long]("rows")).toMap
-    val (total, kept, keys) = totals.headOption
-      .map(r => (r.getAs[Long]("rows"), r.getAs[Long]("valid"), r.getAs[Long]("keys")))
-      .getOrElse((0L, 0L, 0L))
-    StagingResult(deduped, total, total - kept, kept - keys, perFile)
+    new StagingResult(deduped, parsed, kept, fileNames)
   }
 
   /** The first line of `file`, split by the CSV reader's own parser

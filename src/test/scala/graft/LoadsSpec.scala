@@ -117,4 +117,13 @@ class LoadsSpec extends AnyFunSuite {
     assert(d1 != d3)
   }
 
+  test("countReport: one row per table in name order, an empty table as 0") {
+    import graft.operators.Loads
+    val a = Seq((1L, "x"), (2L, "y"), (3L, "z")).toDF("k", "v")
+    val rows = Loads.countReport(Map("b" -> a.limit(0), "a" -> a.repartition(3),
+      "c" -> a.filter(col("k") > 1L))).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toSeq
+    assert(rows == Seq("a" -> 3L, "b" -> 0L, "c" -> 2L))
+  }
+
 }

@@ -75,9 +75,11 @@ class PipelineSpec extends AnyFunSuite {
     for (src <- EtlTestData.sources) withClue(s"${src.name}: ") {
       val branches = BankEtl.extract(spark, src.csv("branches"),
         BankEtl.schemas.find(_.name == "branches").get)
+      branches.data.count() // the stats are counted by the first action
       assert(branches.totalRows == src.rows("branches"))
       val loansStaged = BankEtl.extract(spark, src.csv("loans"),
         BankEtl.schemas.find(_.name == "loans").get)
+      loansStaged.data.count()
       assert(loansStaged.totalRows == src.rows("loans"))
     }
   }
@@ -150,6 +152,22 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("EtlMain: an entity whose every key is invalid loads 0 rows and " +
+    "logs its stats") {
+    import java.nio.file.Files
+    val csvDir = SparkTestSession.tempDir("graft_invalid")
+    Files.writeString(csvDir.resolve("branches.csv"),
+      "branch_id,branch_name,city,state,manager_name\n,a,b,c,d\n ,e,f,g,h\n")
+    val out = SparkTestSession.tempDir("graft_invalid_out").toString
+    val log = new graft.pipeline.RunLog(s"$out/_logs", graft.pipeline.RunLog.newRunId())
+    EtlMain.runFull(spark, csvDir.toString, out, "2026-08-14", Some(log))
+    val ok = fullRecords(log, "ok")("branches")
+    assert(ok.contains("\"rows_out\":0,"), ok)
+    val stats = fullRecords(log, "stats")("branches")
+    assert(stats.contains("\"csv_rows\":2,\"invalid_pk\":2,\"deduped\":0"), stats)
+    assert(!new java.io.File(s"$out/branches").exists())
+  }
+
   test("EtlMain: a re-run after a failed entity skips what loaded and " +
     "ends with the tables of one clean run") {
     import java.nio.file.{Files, Paths}
@@ -164,7 +182,8 @@ class PipelineSpec extends AnyFunSuite {
     val csvDir = csvCopy("graft_rerun")
     val loans = csvDir.resolve("loans.csv")
     val good = Files.readAllLines(loans)
-    // a wrong column set: loans fails after branches and customers load
+    // a wrong column set: loans fails; the entities that do not depend
+    // on it load all the same
     val broken = new java.util.ArrayList[String](good)
     broken.set(0, good.get(0).replace("loan_status", "status"))
     Files.write(loans, broken)
@@ -173,11 +192,15 @@ class PipelineSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       EtlMain.runFull(spark, csvDir.toString, out, date)
     }
+    for (e <- Seq("branches", "customers", "transactions"))
+      assert(spark.read.parquet(s"$out/$e").count() == src.staged(e), e)
+    assert(!new java.io.File(s"$out/loans").exists())
     Files.write(loans, good)
     val log = new graft.pipeline.RunLog(s"$out/_logs", graft.pipeline.RunLog.newRunId())
     EtlMain.runFull(spark, csvDir.toString, out, date, Some(log))
-    assert(fullRecords(log, "skip").keySet == Set("branches", "customers"))
-    assert(fullRecords(log, "ok").keySet == Set("loans", "transactions"))
+    assert(fullRecords(log, "skip").keySet ==
+      Set("branches", "customers", "transactions"))
+    assert(fullRecords(log, "ok").keySet == Set("loans"))
     val clean = SparkTestSession.tempDir("graft_rerun_clean").toString
     EtlMain.runFull(spark, csvCopy("graft_rerun_csv").toString, clean, date)
     def digests(dir: String) = Loads.digestReport(BankEtl.schemas.map { e =>
@@ -185,6 +208,46 @@ class PipelineSpec extends AnyFunSuite {
       e.name -> ((df, df.columns.toSeq.sorted))
     }.toMap).collect().map(_.toSeq).toSeq
     assert(digests(out) == digests(clean))
+  }
+
+  test("EtlMain: the jobs of side-by-side entities carry the caller's " +
+    "job group") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+      SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val group = s"etl-side-by-side-${System.nanoTime()}"
+    // per SQL execution its call stack, and per job (execution, group):
+    // the run's jobs are those whose execution EtlMain started, so a
+    // straggler job of an earlier suite cannot be mistaken for one
+    val stacks = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => stacks.put(x.executionId.toString, x.details)
+        case _ => ()
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(
+        (String.valueOf(e.properties.getProperty("spark.sql.execution.id")),
+          String.valueOf(e.properties.getProperty("spark.jobGroup.id"))))
+    }
+    val out = SparkTestSession.tempDir("graft_group_out").toString
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "side by side")
+    try EtlMain.runFull(spark, EtlTestData.fixture.dir, out, "2026-08-14")
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.sql.GraftBridge.waitListenerBusEmpty(spark)
+      sc.removeSparkListener(listener)
+    }
+    def startedBy(method: String) = jobs.asScala.toSeq.filter { case (id, _) =>
+      Option(stacks.get(id)).exists(_.contains(s"graft.EtlMain$$.$method"))
+    }
+    // the four entity loads ran on their own threads
+    assert(startedBy("loadProduction").size >= 4)
+    val run = startedBy("")
+    assert(run.forall(_._2 == group), run)
   }
 
   test("PlanMetrics: shuffle budget assertions against executed plans") {

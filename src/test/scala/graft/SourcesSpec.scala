@@ -25,6 +25,7 @@ class SourcesSpec extends AnyFunSuite {
       }
       val res = CsvStaging.read(spark, s"$dir/c_*.csv",
         Seq("id", "src", "v"), "id")
+      res.data.count() // the stats are counted by the first action
       assert(res.data.filter(col("id") === "K").select("src").as[String]
         .collect().toSeq == Seq("c_2.csv"), s"larger file: $larger")
       assert(res.totalRows == 202 && res.dedupedRows == 1)
@@ -43,6 +44,7 @@ class SourcesSpec extends AnyFunSuite {
         |""".stripMargin)
     val res = CsvStaging.read(spark, s"$dir/loans.csv",
       Seq("loan_id", "customer_id", "loan_amount"), "loan_id")
+    res.data.count()
     assert(res.totalRows == 5 && res.invalidKeyRows == 1 && res.dedupedRows == 1)
     val rows = res.data.collect().map(r =>
       r.getAs[String]("loan_id") -> r.getAs[String]("loan_amount")).toMap
@@ -65,6 +67,7 @@ class SourcesSpec extends AnyFunSuite {
     Files.writeString(java.nio.file.Path.of(dir, "tx_2.csv"),
       "id,v\nT3,3\nT4,4\nT5,5\n")
     val res = CsvStaging.read(spark, s"$dir/tx_*.csv", Seq("id", "v"), "id")
+    res.data.count()
     // record_count must be per FILE, not the glob total (ADVICE r1)
     assert(res.perFileRows == Map("tx_1.csv" -> 2L, "tx_2.csv" -> 3L))
     assert(res.totalRows == 5)
@@ -72,10 +75,27 @@ class SourcesSpec extends AnyFunSuite {
     Files.writeString(java.nio.file.Path.of(dir, "tx_3.csv"),
       "id,v\nT6,6\n,7\nT6,8\nT2,9\n")
     val all = CsvStaging.read(spark, s"$dir/tx_*.csv", Seq("id", "v"), "id")
+    all.data.count()
     assert(all.perFileRows("tx_3.csv") == 4L && all.totalRows == 9)
     assert(all.invalidKeyRows == 1 && all.dedupedRows == 2)
     assert(all.data.collect().map(_.getString(0)).sorted.toSeq ==
       Seq("T1", "T2", "T3", "T4", "T5", "T6"))
+  }
+
+  test("CsvStaging: a glob where every key is invalid reports its stats " +
+    "after one action, without blocking") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val dir = tmpDir()
+    Files.writeString(java.nio.file.Path.of(dir, "bad_1.csv"), "id,v\n,1\n ,2\n")
+    Files.writeString(java.nio.file.Path.of(dir, "bad_2.csv"), "id,v\n,3\n")
+    val res = CsvStaging.read(spark, s"$dir/bad_*.csv", Seq("id", "v"), "id")
+    assert(res.data.count() == 0)
+    // an observation whose node the plan lost would wait forever
+    val stats = Await.result(Future((res.totalRows, res.invalidKeyRows,
+      res.dedupedRows, res.perFileRows)), 60.seconds)
+    assert(stats == ((3L, 3L, 0L, Map("bad_1.csv" -> 2L, "bad_2.csv" -> 1L))))
   }
 
   test("JsonlSource: good rows parse, malformed lines quarantine") {

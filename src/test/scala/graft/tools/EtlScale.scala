@@ -51,7 +51,11 @@ object EtlScale {
       val out = graft.SparkTestSession.tempDir(s"graft_scale_out_$m").toString
       val log = new graft.pipeline.RunLog(s"$out/_logs",
         graft.pipeline.RunLog.newRunId())
+      val t1 = System.nanoTime()
       graft.EtlMain.runFull(spark, csv.toString, out, "2026-08-16", Some(log))
+      // the entities run side by side, so their durations overlap
+      println(s"[scale] ${m}x runFull wall ${(System.nanoTime() - t1) / 1000000L}ms, " +
+        s"per-entity durations summed ${durations(log.currentFile).getOrElse("full", 0L)}ms")
       // rows asserted BY CONSTRUCTION at any multiplier
       def prodCount(e: String) = spark.read.parquet(s"$out/$e").count()
       val checks = Seq(
