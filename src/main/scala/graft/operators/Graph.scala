@@ -22,14 +22,21 @@ import org.apache.spark.storage.StorageLevel
   * labels on dst, then groupBy src + min) — the same primitive as
   * GraphX/GraphFrames CC, no driver-side adjacency. Convergence is
   * detected by a one-scalar aggregate (sum of labels is strictly
-  * decreasing until fixpoint), not by collecting labels. Each round is
-  * checkpointed ([[graft.measuredRound]]: the sum is the job that
-  * fills the checkpoint) and the replaced round freed.
+  * decreasing until fixpoint), not by collecting labels.
+  *
+  * Every converging distributed loop here (CC, kCore, kTruss, the BFS
+  * visited set, Bellman–Ford and SCC's trim, forward and backward
+  * passes) follows one rule, [[graft.fixpoint]]: a round's convergence
+  * scalar is read by the job that materializes the round, the round it
+  * replaces is freed, and the loop stops when the scalar repeats or at
+  * its round bound. A loop that must not return short of a fixpoint
+  * exits through [[graft.giveUp]], which frees everything it holds
+  * before it throws.
   *
   * Storage: every distributed builder frees exactly what it created.
-  * Loop state that is checkpointed per round goes through
-  * [[graft.nextRound]] (the replaced round is freed as the new one
-  * lands), final results through [[graft.sealResult]], and a result
+  * Loop state goes through [[graft.fixpoint]] or, for a fixed number of
+  * rounds, [[graft.nextRound]] (the replaced round is freed as the new
+  * one lands), final results through [[graft.sealResult]], and a result
   * is either the loop state itself or sealed — never a lazy view over
   * operator storage, which [[graft.release]] could not reach.
   */
@@ -81,47 +88,35 @@ object Graph {
       val sym = und.union(und.select(col("b"), col("a")))
         .toDF("src", "dst")
         .persist(StorageLevel.MEMORY_AND_DISK)
-      sym.count()
-      und.unpersist()
       // round 0 fused into init: label₀ = min(id, direct neighbors) — one
       // groupBy instead of an identity-label table plus a full round
-      var labels = sym
+      val init = sym
         .groupBy(col("src"))
         .agg(min(col("dst")).as("mn"))
         .select(col("src").as("id"), least(col("src"), col("mn")).as("comp"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       // sum(comp) strictly decreases while any label can still shrink, so
       // an unchanged sum IS the fixpoint — one scalar per round crosses
-      // the driver, never the label table
-      var prevSum = labels.agg(sum(col("comp"))).head.getLong(0)
-      var iter = 0
-      var converged = false
-      while (!converged && iter < maxIter) {
-        val nbrMin = sym.join(labels, sym("dst") === labels("id"))
+      // the driver, never the label table. The first round only sets the
+      // baseline sum, hence maxIter + 1 rounds.
+      val (labels, _, fixed) = graft.fixpoint(init, maxIter + 1) {
+          (prev, round) =>
+        // round 1 filled sym's cache, so und is no longer read
+        if (round == 2) und.unpersist()
+        val nbrMin = sym.join(prev, sym("dst") === prev("id"))
           .groupBy(sym("src").as("id"))
           .agg(min(col("comp")).as("nbr_comp"))
-        // the round's sum is the job that materializes it: one job per
-        // round, and the checkpoint keeps the plan one round deep (two
-        // references to `labels` per round would otherwise double the
-        // plan every round)
-        val (next, s) = graft.measuredRound(labels, labels.as("l")
+        prev.as("l")
           .join(nbrMin.as("n"), col("l.id") === col("n.id"), "left")
           .select(col("l.id").as("id"),
             least(col("l.comp"), coalesce(col("n.nbr_comp"), col("l.comp")))
-              .as("comp")))(_.agg(sum(col("comp"))).head.getLong(0))
-        labels = next
-        converged = s == prevSum
-        prevSum = s
-        iter += 1
-      }
-      sym.unpersist()
-      if (!converged) {
-        graft.release(labels)
-        throw new IllegalStateException(
-          s"connectedComponents: no fixpoint after $maxIter rounds — " +
-            "component diameter exceeds maxIter; raise maxIter " +
-            "(labels would be incorrect, refusing to return them)")
-      }
+              .as("comp"))
+      }(_.agg(sum(col("comp"))).head.getLong(0))
+      Seq(und, sym).foreach(_.unpersist())
+      if (!fixed) graft.giveUp(
+        s"connectedComponents: no fixpoint after $maxIter rounds — " +
+          "component diameter exceeds maxIter; raise maxIter " +
+          "(labels would be incorrect, refusing to return them)", labels)
       labels
     }
   }
@@ -599,12 +594,10 @@ object Graph {
       val sym = e.union(e.select(col("b"), col("a")))
         .toDF("src", "dst")
         .persist(StorageLevel.MEMORY_AND_DISK)
-      sym.count()
-      e.unpersist()
       var labels = sym.select(col("src").as("id")).distinct()
         .select(col("id"), col("id").as("community"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      for (_ <- 1 to rounds) {
+      for (round <- 1 to rounds) {
         val nbr = sym.join(labels, sym("dst") === labels("id"))
           .select(sym("src").as("id"), col("community"))
         // argmax(count, then min label) = max of the (count, -label)
@@ -615,8 +608,10 @@ object Graph {
           .groupBy(col("id"))
           .agg(max(struct(col("c"), (-col("community")).as("nl"))).as("m"))
           .select(col("id"), (-col("m.nl")).as("community")))
+        // round 1 filled sym's cache, so e is no longer read
+        if (round == 1) e.unpersist()
       }
-      sym.unpersist()
+      Seq(e, sym).foreach(_.unpersist())
       labels
     }
   }
@@ -685,12 +680,13 @@ object Graph {
     *
     * Iterative peeling: drop nodes with degree < k, recompute degrees
     * on the survivor-induced subgraph, repeat to fixpoint. Each round
-    * is one keyed degree agg + two semi joins; the convergence check
-    * is a scalar count (never a collect); the surviving edges are the
-    * loop state ([[graft.nextRound]]). At the fixpoint the degrees are
-    * sealed from the last round, which is then freed. Rounds = peeling
-    * depth (tiny for clique-like graphs); throws past `maxRounds`
-    * rather than returning a non-core silently.
+    * is one keyed degree agg + two semi joins; the surviving edges are
+    * the loop state and their count, read by the job that materializes
+    * the round, is the convergence check ([[graft.fixpoint]]; never a
+    * collect). At the fixpoint the degrees are sealed from the last
+    * round, which is then freed. Rounds = peeling depth (tiny for
+    * clique-like graphs); throws past `maxRounds` rather than
+    * returning a non-core silently.
     *
     * @return surviving nodes with their final in-core degree:
     *         (id, core_deg).
@@ -710,32 +706,21 @@ object Graph {
     graft.hybrid("kCore",
         undirected(edges, srcCol, dstCol).as[(Long, Long)], 16)(es =>
       Some(localKCore(es, k).toDF("id", "core_deg"))) { (und, n) =>
-      var cur = und
-      var nEdges = n
-      var round = 0
-      var out: DataFrame = null
-      while (out == null) {
-        val keep = degrees(cur).filter(col("deg") >= k).select(col("p"))
-        cur = graft.nextRound(cur, cur
+      // the edge count is unchanged exactly at the fixpoint, where every
+      // surviving degree is ≥ k; `maxRounds` peeling rounds may each
+      // drop edges before the one that must find the fixpoint
+      val (cur, _, fixed) = graft.fixpoint(und, maxRounds + 1, Some(n)) {
+          (prev, _) =>
+        val keep = degrees(prev).filter(col("deg") >= k).select(col("p"))
+        prev
           .join(keep.withColumnRenamed("p", "a"), Seq("a"), "left_semi")
           .join(keep.withColumnRenamed("p", "b"), Seq("b"), "left_semi")
-          .select(col("a"), col("b")))
-        val nNext = cur.count()
-        if (nNext == nEdges)
-          // fixpoint: every surviving degree is ≥ k
-          out = graft.sealResult(degrees(cur)
-            .select(col("p").as("id"), col("deg").as("core_deg")), cur)
-        else {
-          nEdges = nNext
-          round += 1
-          if (round > maxRounds) {
-            graft.release(cur)
-            throw new IllegalStateException(
-              s"kCore: no fixpoint after $maxRounds peeling rounds")
-          }
-        }
-      }
-      out
+          .select(col("a"), col("b"))
+      }(_.count())
+      if (!fixed) graft.giveUp(
+        s"kCore: no fixpoint after $maxRounds peeling rounds", cur)
+      graft.sealResult(degrees(cur)
+        .select(col("p").as("id"), col("deg").as("core_deg")), cur)
     }
   }
 
@@ -756,8 +741,8 @@ object Graph {
     * Support counting is exact integers → hash-gateable; the oracle
     * unrolls the rounds MATERIALIZED, so hash-equality also certifies
     * convergence within the unroll. The surviving edges are the loop
-    * state ([[graft.nextRound]]); the fixpoint's supports are sealed
-    * from the last round, which is then freed. Under the shared
+    * state ([[graft.fixpoint]], the kCore rule); the fixpoint's supports
+    * are sealed from the last round, which is then freed. Under the shared
     * [[graft.hybrid]] rung the standard queue-cascade peel runs on
     * the driver (k-truss is the
     * unique maximal subgraph, so peel order is immaterial) —
@@ -787,37 +772,19 @@ object Graph {
           .select(col("e.a").as("a"), col("e.b").as("b"))
           .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
       }
-      var cur = und
-      var nEdges = n
-      var round = 0
-      var out: DataFrame = null
-      while (out == null) {
-        cur = graft.nextRound(cur, cur.join(
-          support(cur).filter(col("support") >= k - 2),
-          Seq("a", "b"), "left_semi"))
-        val nNext = cur.count()
-        if (nNext == nEdges)
-          // fixpoint: the round kept every edge, so its supports are
-          // the ones the previous round was filtered by
-          out = graft.sealResult(cur.join(support(cur), Seq("a", "b"))
-            .select(col("a").as("id_a"), col("b").as("id_b"),
-              col("support")), cur)
-        else {
-          nEdges = nNext
-          round += 1
-          if (nEdges == 0) {
-            // empty fixpoint: no edge closes k−2 triangles
-            graft.release(cur)
-            out = Seq.empty[(Long, Long, Long)]
-              .toDF("id_a", "id_b", "support")
-          } else if (round > maxRounds) {
-            graft.release(cur)
-            throw new IllegalStateException(
-              s"kTruss: no fixpoint after $maxRounds peeling rounds")
-          }
-        }
-      }
-      out
+      // as kCore's: the fixpoint keeps every edge, so its supports are
+      // the ones the last round was filtered by
+      val (cur, m, fixed) = graft.fixpoint(und, maxRounds + 1, Some(n)) {
+          (prev, _) =>
+        prev.join(support(prev).filter(col("support") >= k - 2),
+          Seq("a", "b"), "left_semi")
+      }(_.count())
+      // a round that drops the last edge ends at the empty fixpoint
+      if (!fixed && !m.contains(0L)) graft.giveUp(
+        s"kTruss: no fixpoint after $maxRounds peeling rounds", cur)
+      graft.sealResult(cur.join(support(cur), Seq("a", "b"))
+        .select(col("a").as("id_a"), col("b").as("id_b"), col("support")),
+        cur)
     }
   }
 
@@ -986,12 +953,13 @@ object Graph {
     * materializing transitive closure.
     *
     * Scale shape: frontier expansion — round i joins ONLY the hop-
-    * (i−1) frontier against the edge list (frontier-sized, not
-    * graph-sized), anti-joins the visited set, and unions the new
-    * nodes in at hop i. Two keyed shuffles per round, O(maxHops)
-    * rounds; the frontier and the visited set are both loop state
-    * ([[graft.nextRound]]); the only scalar crossing the driver is the
-    * new-frontier count (early exit when the frontier drains). Same
+    * (i−1) frontier of the visited set against the edge list
+    * (frontier-sized, not graph-sized), anti-joins the visited set, and
+    * unions the new nodes in at hop i. Two keyed shuffles per round,
+    * O(maxHops) rounds; the visited set is the loop state
+    * ([[graft.fixpoint]]), and the only scalar crossing the driver is
+    * its size, read by the job that materializes the round (early exit
+    * when it stops growing: the frontier drained). Same
     * hybrid rung as CC/LPA/kCore: a reduced graph under the shared
     * [[graft.hybrid]] rung runs a driver-side queue BFS —
     * all-integer state, asserted bit-identical to the distributed rounds.
@@ -1016,26 +984,21 @@ object Graph {
       val sym = und.union(und.select(col("b").as("a"), col("a").as("b")))
         .toDF("src", "dst")
         .persist(StorageLevel.MEMORY_AND_DISK)
-      sym.count()
-      und.unpersist()
-      var dist = graft.sealResult(seed.select(col("id"), lit(0L).as("hop")))
-      // the hop-0 frontier is a view of `dist`, owning no storage of
-      // its own, so replacing it never frees the visited set
-      var frontier = dist.select(col("id"))
-      var hop = 0L
-      var drained = false
-      while (!drained && hop < maxHops) {
-        hop += 1
-        frontier = graft.nextRound(frontier,
-          sym.join(frontier, sym("src") === frontier("id"))
-            .select(sym("dst").as("id")).distinct()
-            .join(dist, Seq("id"), "left_anti"))
-        if (frontier.count() == 0) drained = true
-        else dist = graft.nextRound(dist,
-          dist.union(frontier.select(col("id"), lit(hop).as("hop"))))
-      }
-      graft.release(frontier)
-      sym.unpersist()
+      // the visited set is the loop state: round r joins its hop-(r−1)
+      // frontier against the edges and adds the unvisited neighbors at
+      // hop r; its size is unchanged exactly when the frontier drains
+      val (dist, _, _) = graft.fixpoint(
+          seed.select(col("id"), lit(0L).as("hop")), maxHops) {
+          (prev, round) =>
+        // round 1 filled sym's cache, so und is no longer read
+        if (round == 2) und.unpersist()
+        val frontier = prev.filter(col("hop") === round - 1)
+        prev.union(sym.join(frontier, sym("src") === frontier("id"))
+          .select(sym("dst").as("id")).distinct()
+          .join(prev, Seq("id"), "left_anti")
+          .select(col("id"), lit(round.toLong).as("hop")))
+      }(_.count())
+      Seq(und, sym).foreach(_.unpersist())
       dist
     }
   }
@@ -1082,21 +1045,25 @@ object Graph {
     * The distributed path is trim + forward-min/backward-check
     * (the FW-BW-MIN / coloring family):
     *   1. TRIM — nodes with zero in- or out-degree among the remaining
-    *      graph are singleton SCCs; peel to fixpoint (two degree
-    *      aggregates per round — kills the DAG skeleton fast).
+    *      edges are singleton SCCs; their edges leave, to fixpoint (two
+    *      distinct endpoint sets per round — kills the DAG skeleton
+    *      fast).
     *   2. FORWARD — f(v) = min id that can reach v, by min-label
     *      propagation along edge direction to fixpoint (the CC loop,
     *      directed).
     *   3. BACKWARD CHECK — within each f-class, flags propagate from
     *      the root r (f(r)=r) along REVERSED edges restricted to the
     *      class: flagged ⟺ v ⇝ r through the class ⟺ v ∈ SCC(r).
-    *   4. Extract flagged nodes (scc = f), remove, repeat.
-    * Every converging loop uses the scalar-sum/count convergence, with
-    * each state (remaining edges, nodes, assigned labels, f, flags)
-    * advanced through [[graft.nextRound]]; exhaustion THROWS rather
-    * than returning partial labels (the CC contract). Worst case
-    * (a long chain of SCCs) needs O(chain) outer rounds — the known
-    * FW-BW caveat; trimming removes the common DAG tails first.
+    *   4. Extract flagged nodes (scc = f), drop their edges, repeat.
+    * Each of the three converging loops is a [[graft.fixpoint]] (edge
+    * count, sum of f, flag count); the edge count each trim ends at
+    * stays in a driver variable, so no state is counted twice. Nodes
+    * never flagged are the trimmed singletons: the result labels every
+    * node of the input once, at the end. Exhaustion THROWS through
+    * [[graft.giveUp]], freeing the loop's state, rather than returning
+    * partial labels (the CC contract). Worst case (a long chain of
+    * SCCs) needs O(chain) outer rounds — the known FW-BW caveat;
+    * trimming removes the common DAG tails first.
     *
     * @return (id, scc) — scc = min id of the strongly connected
     *         component; every endpoint of a non-self-loop edge
@@ -1116,97 +1083,77 @@ object Graph {
     // 16 bytes per edge: one (src, dst) long pair
     graft.hybrid("stronglyConnectedComponents", e0.as[(Long, Long)], 16)(
         es => Some(localTarjan(es).toDF("id", "scc")
-          .repartition(col("scc")))) { (e0, _) =>
-      var remaining = graft.nextRound(e0, e0)
-      var nodes = graft.sealResult(remaining.select(col("src").as("id"))
-        .union(remaining.select(col("dst").as("id"))).distinct())
-      var assigned = graft.sealResult(
-        spark.emptyDataset[(Long, Long)].toDF("id", "scc"))
-      var outer = 0
-      while (nodes.count() > 0 && outer < maxIter) {
-        outer += 1
-        // 1. trim to fixpoint: zero in- or out-degree ⇒ singleton SCC
-        var trimmed = true
-        while (trimmed && nodes.count() > 0) {
-          val hasIn = remaining.select(col("dst").as("id")).distinct()
-          val hasOut = remaining.select(col("src").as("id")).distinct()
-          val keep = graft.sealResult(nodes.join(hasIn, Seq("id"), "left_semi")
-            .join(hasOut, Seq("id"), "left_semi"))
-          val dropped = graft.sealResult(nodes.join(keep, Seq("id"), "left_anti")
-            .select(col("id"), col("id").as("scc")))
-          if (dropped.count() == 0) {
-            trimmed = false
-            Seq(keep, dropped).foreach(graft.release)
-          } else {
-            assigned = graft.nextRound(assigned, assigned.union(dropped))
-            Seq(dropped, nodes).foreach(graft.release)
-            nodes = keep
-            remaining = graft.nextRound(remaining, remaining
-              .join(keep.select(col("id").as("src")), Seq("src"), "left_semi")
-              .join(keep.select(col("id").as("dst")), Seq("dst"), "left_semi")
-              .select(col("src"), col("dst")))
-          }
-        }
-        if (nodes.count() == 0) () // all trimmed — outer loop exits
-        else {
-          // 2. forward min-label to fixpoint (directed CC loop)
-          var f = graft.sealResult(nodes.select(col("id"), col("id").as("f")))
-          var prevSum = f.agg(sum(col("f"))).head.getLong(0)
-          var converged = false
-          var it = 0
-          while (!converged && it < maxIter) {
-            it += 1
-            val inMin = remaining.join(f, remaining("src") === f("id"))
-              .groupBy(remaining("dst").as("id"))
-              .agg(min(col("f")).as("inf"))
-            f = graft.nextRound(f, f.as("l").join(inMin.as("n"), Seq("id"), "left")
-              .select(col("id"),
-                least(col("l.f"), coalesce(col("n.inf"), col("l.f"))).as("f")))
-            val s = f.agg(sum(col("f"))).head.getLong(0)
-            converged = s == prevSum
-            prevSum = s
-          }
-          if (!converged) throw new IllegalStateException(
-            s"scc: forward pass hit $maxIter rounds without a fixpoint")
-          // 3. backward check within f-classes from each root
-          var flagged = graft.sealResult(f.filter(col("id") === col("f"))
-            .select(col("id"), col("f")))
-          var prevN = flagged.count()
-          var done = false
-          var bit = 0
-          while (!done && bit < maxIter) {
-            bit += 1
-            val step = remaining
-              .join(flagged.select(col("id").as("dst"), col("f").as("fd")),
-                Seq("dst"))
-              .join(f.select(col("id").as("src"), col("f").as("fs")),
-                Seq("src"))
-              .filter(col("fs") === col("fd"))
-              .select(col("src").as("id"), col("fs").as("f"))
-            flagged = graft.nextRound(flagged, flagged.union(step).distinct())
-            val n = flagged.count()
-            done = n == prevN
-            prevN = n
-          }
-          if (!done) throw new IllegalStateException(
-            s"scc: backward pass hit $maxIter rounds without a fixpoint")
-          // 4. extract flagged (scc = f), remove, iterate
-          assigned = graft.nextRound(assigned, assigned
-            .union(flagged.select(col("id"), col("f").as("scc"))))
-          nodes = graft.nextRound(nodes,
-            nodes.join(flagged.select(col("id")), Seq("id"), "left_anti"))
-          remaining = graft.nextRound(remaining, remaining
-            .join(nodes.select(col("id").as("src")), Seq("src"), "left_semi")
-            .join(nodes.select(col("id").as("dst")), Seq("dst"), "left_semi")
-            .select(col("src"), col("dst")))
-          Seq(flagged, f).foreach(graft.release)
-        }
+          .repartition(col("scc")))) { (e0, n) =>
+      def endpoints(e: DataFrame): DataFrame = e.select(col("src").as("id"))
+        .union(e.select(col("dst").as("id"))).distinct()
+      // 1. trim to fixpoint: a node without an in- or an out-edge among
+      // the remaining edges is a singleton SCC and its edges leave; the
+      // edge count (`known` when the caller holds it) is unchanged
+      // exactly at the fixpoint, where every endpoint has both
+      def trim(e: DataFrame, known: Option[Long]): (DataFrame, Long) = {
+        val (out, m, _) = graft.fixpoint(e, Int.MaxValue, known) {
+            (prev, _) =>
+          val live = prev.select(col("dst").as("id")).distinct()
+            .join(prev.select(col("src").as("id")).distinct(), "id")
+          prev.join(live.select(col("id").as("src")), Seq("src"), "left_semi")
+            .join(live.select(col("id").as("dst")), Seq("dst"), "left_semi")
+        }(_.count())
+        (out, m.get)
       }
-      if (nodes.count() > 0) throw new IllegalStateException(
-        s"scc: $maxIter outer rounds left nodes unassigned — a chain of " +
-          "SCCs longer than maxIter; raise maxIter")
-      Seq(nodes, remaining).foreach(graft.release)
-      assigned
+      // every node is labeled at the end: by the flagged set that took
+      // it, else as a trimmed singleton
+      val nodes = graft.sealResult(endpoints(e0))
+      var found = List(spark.emptyDataset[(Long, Long)].toDF("id", "f"))
+      var (remaining, nEdges) = trim(e0, Some(n))
+      var outer = 0
+      while (nEdges > 0) {
+        outer += 1
+        if (outer > maxIter) graft.giveUp(s"scc: $maxIter outer rounds " +
+          "left nodes unassigned — a chain of SCCs longer than maxIter; " +
+          "raise maxIter", remaining :: nodes :: found: _*)
+        // 2. forward min-label to fixpoint (directed CC loop); as in CC
+        // the first round only sets the baseline sum
+        val (f, _, forward) = graft.fixpoint(endpoints(remaining)
+            .select(col("id"), col("id").as("f")), maxIter + 1) { (prev, _) =>
+          val inMin = remaining.join(prev, remaining("src") === prev("id"))
+            .groupBy(remaining("dst").as("id"))
+            .agg(min(col("f")).as("inf"))
+          prev.as("l").join(inMin.as("n"), Seq("id"), "left")
+            .select(col("id"),
+              least(col("l.f"), coalesce(col("n.inf"), col("l.f"))).as("f"))
+        }(_.agg(sum(col("f"))).head.getLong(0))
+        if (!forward) graft.giveUp(
+          s"scc: forward pass hit $maxIter rounds without a fixpoint",
+          f :: remaining :: nodes :: found: _*)
+        // 3. backward check within f-classes from each root
+        val (flagged, _, backward) = graft.fixpoint(
+            f.filter(col("id") === col("f")), maxIter + 1) { (prev, _) =>
+          prev.union(remaining
+            .join(prev.select(col("id").as("dst"), col("f").as("fd")),
+              Seq("dst"))
+            .join(f.select(col("id").as("src"), col("f").as("fs")),
+              Seq("src"))
+            .filter(col("fs") === col("fd"))
+            .select(col("src").as("id"), col("fs").as("f"))).distinct()
+        }(_.count())
+        if (!backward) graft.giveUp(
+          s"scc: backward pass hit $maxIter rounds without a fixpoint",
+          flagged :: f :: remaining :: nodes :: found: _*)
+        // 4. flagged nodes take scc = f; their edges leave, and the trim
+        // runs on the edges left (its first round materializes them)
+        found = flagged :: found
+        val (next, m) = trim(remaining
+          .join(flagged.select(col("id").as("src")), Seq("src"), "left_anti")
+          .join(flagged.select(col("id").as("dst")), Seq("dst"), "left_anti"),
+          None)
+        Seq(remaining, f).foreach(graft.release)
+        remaining = next
+        nEdges = m
+      }
+      graft.release(remaining)
+      graft.sealResult(nodes.join(found.reduce(_.union(_)), Seq("id"), "left")
+        .select(col("id"), coalesce(col("f"), col("id")).as("scc")),
+        nodes :: found: _*)
     }
   }
 
@@ -1216,9 +1163,9 @@ object Graph {
     * is an EXACT long (min-plus semiring over integers — order-free,
     * hash-gateable; the hop bound both bounds work and makes the
     * semantics well-defined even with negative edge weights). Per
-    * round: one keyed join + min aggregate + min-merge, scalar-sum
-    * convergence for early exit, distances advanced through
-    * [[graft.nextRound]]; driver
+    * round: one keyed join + min aggregate + min-merge; the distances
+    * are a [[graft.fixpoint]] whose (sum, count), read in one aggregate,
+    * exits early once no cost falls and no node joins; driver
     * fast path under the shared [[graft.hybrid]] rung runs the
     * same rounds in a hash map, asserted identical.
     *
@@ -1242,27 +1189,21 @@ object Graph {
     graft.hybrid("shortestPaths", e.as[(Long, Long, Long)], 16)(es =>
       Some(localBellmanFord(es, seed.as[Long].collect(), maxHops)
         .toDF("id", "cost"))) { (e, _) =>
-      var dist = graft.sealResult(seed.select(col("id"), lit(0L).as("cost")))
-      var prevSum = dist.agg(coalesce(sum(col("cost")), lit(0L)))
-        .head.getLong(0)
-      var prevN = dist.count()
-      var round = 0
-      var converged = false
-      while (!converged && round < maxHops) {
-        round += 1
-        val relax = e.join(dist, e("src") === dist("id"))
+      // costs never rise and reached nodes stay reached, so an unchanged
+      // (sum, count) is the fixpoint; past it a round changes nothing,
+      // so the first round setting the baseline costs no correctness
+      val (dist, _, _) = graft.fixpoint(
+          seed.select(col("id"), lit(0L).as("cost")), maxHops) { (prev, _) =>
+        val relax = e.join(prev, e("src") === prev("id"))
           .groupBy(e("dst").as("id"))
           .agg(min(col("cost") + col("w")).as("cand"))
-        dist = graft.nextRound(dist,
-          dist.as("d").join(relax.as("r"), Seq("id"), "full_outer")
-            .select(col("id"),
-              least(coalesce(col("d.cost"), col("r.cand")),
-                coalesce(col("r.cand"), col("d.cost"))).as("cost")))
-        val s = dist.agg(coalesce(sum(col("cost")), lit(0L))).head.getLong(0)
-        val n = dist.count()
-        converged = s == prevSum && n == prevN
-        prevSum = s
-        prevN = n
+        prev.as("d").join(relax.as("r"), Seq("id"), "full_outer")
+          .select(col("id"),
+            least(coalesce(col("d.cost"), col("r.cand")),
+              coalesce(col("r.cand"), col("d.cost"))).as("cost"))
+      } { d =>
+        val r = d.agg(coalesce(sum(col("cost")), lit(0L)), count(lit(1))).head
+        (r.getLong(0), r.getLong(1))
       }
       e.unpersist()
       dist

@@ -45,17 +45,43 @@ package object graft {
   private[graft] def nextRound(prev: Dataset[_], next: DataFrame): DataFrame =
     sealResult(next, prev)
 
-  /** [[nextRound]] for a loop whose per-round convergence scalar is the
-    * job that materializes the round: `next` is checkpointed lazily,
-    * `measure` runs on it (that one job fills the checkpoint), and only
-    * then is `prev` released. Returns the new round and its measure.
+  /** [[nextRound]] for a converging loop — the one fixpoint rule. Round
+    * `r` (from 1) checkpoints `step(state, r)` lazily and runs `measure`
+    * on it, so the one job that reads the round's convergence scalar
+    * also fills its checkpoint (`measure` must read every partition: an
+    * aggregate); then the round it replaces is released. The loop stops
+    * at the first round whose measure equals the previous one — `start`
+    * is `init`'s measure when the caller already holds it; without it
+    * the first round only sets the baseline — or after `maxRounds`
+    * rounds. Returns the last state, its measure (`start` when no round
+    * ran) and whether it is a fixpoint; a loop that may not stop short
+    * of one hands the state to [[giveUp]].
     */
-  private[graft] def measuredRound[T](prev: Dataset[_], next: DataFrame)(
-      measure: DataFrame => T): (DataFrame, T) = {
-    val out = next.localCheckpoint(eager = false)
-    val m = measure(out)
-    release(prev)
-    (out, m)
+  private[graft] def fixpoint[M](init: DataFrame, maxRounds: Int,
+      start: Option[M] = None)(step: (DataFrame, Int) => DataFrame)(
+      measure: DataFrame => M): (DataFrame, Option[M], Boolean) = {
+    var state = init
+    var last = start
+    var round = 0
+    while (round < maxRounds) {
+      round += 1
+      val next = step(state, round).localCheckpoint(eager = false)
+      val m = measure(next)
+      release(state)
+      state = next
+      if (last.contains(m)) return (state, last, true)
+      last = Some(m)
+    }
+    (state, last, false)
+  }
+
+  /** The one exit of a distributed loop that found no fixpoint within
+    * its bound: releases `state` (everything the loop still holds),
+    * then throws, so a refused result leaves no storage behind.
+    */
+  private[graft] def giveUp(message: String, state: Dataset[_]*): Nothing = {
+    state.foreach(release)
+    throw new IllegalStateException(message)
   }
 
   /** Release the block-manager storage `df` OWNS: its own checkpoint

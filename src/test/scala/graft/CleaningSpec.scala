@@ -50,17 +50,53 @@ object SparkTestSession {
     try body finally session.conf.unset("spark.graft.localSolveBytes")
   }
 
+  /** Runs `body` and counts the Spark jobs it launched. Counts ONLY
+    * jobs carrying a fresh job group set on this thread: the
+    * SparkContext listener bus is JVM-global, so a late async job from
+    * an earlier suite (streaming teardown, cleaner work) would otherwise
+    * land in the window (job events have no sessionUUID, so the group
+    * id is the filter). An [[onPath]] inside `body` keeps this group.
+    */
+  def buildJobs[T](session: SparkSession, label: String)(
+      body: => T): (T, Int) = {
+    val group = s"build-probe-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        if (Option(js.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet(); ()
+        }
+      }
+    }
+    val sc = session.sparkContext
+    sc.setJobGroup(group, label)
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      org.apache.spark.sql.GraftBridge.waitListenerBusEmpty(session)
+      (out, jobs.get())
+    } finally {
+      sc.removeSparkListener(l)
+      sc.clearJobGroup()
+    }
+  }
+
   /** Runs `body` and asserts that every hybrid operator it called took
     * `path`, and that at least one did. `"distributed"` runs `body`
     * under bound 0 ([[withLocalSolveBytes]]); `"local"` runs it at the
     * session's bound (the default, which every test input fits). The
-    * operators' [[graft.HybridPath]] events are filtered on a fresh
-    * job group set on this thread, so events that other threads or
-    * suites post never count.
+    * operators' [[graft.HybridPath]] events are filtered on this
+    * thread's job group — the caller's (as [[buildJobs]] sets it), else
+    * a fresh one — so events that other threads or suites post never
+    * count.
     */
   def onPath[T](session: SparkSession, path: String)(body: => T): T = {
     require(path == "local" || path == "distributed", path)
-    val group = s"hybrid-path-${System.nanoTime()}"
+    val sc = session.sparkContext
+    val outer = Option(sc.getLocalProperty("spark.jobGroup.id"))
+    val group = outer.getOrElse(s"hybrid-path-${System.nanoTime()}")
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[HybridPath]()
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onOtherEvent(
@@ -69,8 +105,7 @@ object SparkTestSession {
         case _ => ()
       }
     }
-    val sc = session.sparkContext
-    sc.setJobGroup(group, s"hybrid $path probe")
+    if (outer.isEmpty) sc.setJobGroup(group, s"hybrid $path probe")
     sc.addSparkListener(l)
     try {
       val out =
@@ -85,7 +120,7 @@ object SparkTestSession {
       out
     } finally {
       sc.removeSparkListener(l)
-      sc.clearJobGroup()
+      if (outer.isEmpty) sc.clearJobGroup()
     }
   }
 }

@@ -22,7 +22,7 @@ import graft.operators.{Analytics, Corpus, Dedup, Graph, Prefs, Similarity}
   */
 class OperatorStorageSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
-  import SparkTestSession.onPath
+  import SparkTestSession.{buildJobs, onPath}
 
   private def cleanSlate(): Unit = {
     spark.catalog.clearCache()
@@ -116,6 +116,42 @@ class OperatorStorageSpec extends AnyFunSuite {
       graft.release(out)
       assert(held.isEmpty, s"$name ($path) left ${held.size} persistent " +
         s"RDDs: ${held.mkString("; ")}")
+    }
+
+  // each bound is below the rounds the graph above needs
+  private val givingUp: Seq[(String, SparkSession => DataFrame)] = Seq(
+    "connectedComponents" ->
+      (s => Graph.connectedComponents(graph(s), "a", "b", maxIter = 1)),
+    "kCore" -> (s => Graph.kCore(graph(s), "a", "b", k = 2, maxRounds = 1)),
+    "kTruss" -> (s => Graph.kTruss(graph(s), "a", "b", k = 3, maxRounds = 0)),
+    "stronglyConnectedComponents" -> (s =>
+      Graph.stronglyConnectedComponents(graph(s), "a", "b", maxIter = 1)))
+
+  for ((name, run) <- givingUp)
+    test(s"$name that finds no fixpoint throws and holds no storage") {
+      cleanSlate()
+      intercept[IllegalStateException](onPath(spark, "distributed")(run(spark)))
+      assert(held.isEmpty, s"$name left ${held.mkString("; ")}")
+    }
+
+  /** Jobs each converging operator runs on the distributed path over the
+    * graph above, its result's `count()` included, as measured: a
+    * round's convergence scalar read in a job of its own shows here.
+    */
+  private val jobBudget = Seq("connectedComponents" -> 51, "kCore" -> 26,
+    "kTruss" -> 23, "shortestHops" -> 27, "stronglyConnectedComponents" -> 157,
+    "shortestPaths" -> 26, "labelPropagation" -> 22)
+
+  for ((name, budget) <- jobBudget)
+    test(s"$name on the distributed path stays within its job budget") {
+      cleanSlate()
+      val run = hybrids.toMap.apply(name)
+      val (_, jobs) = buildJobs(spark, name) {
+        val out = onPath(spark, "distributed")(run(spark))
+        out.count()
+        graft.release(out)
+      }
+      assert(jobs <= budget, s"$name ran $jobs jobs, budget $budget")
     }
 
   test("sealed single-path operators hold no storage once released") {

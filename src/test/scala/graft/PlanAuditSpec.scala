@@ -20,38 +20,8 @@ class PlanAuditSpec extends AnyFunSuite {
   // newSession() makes stray events undeliverable by construction —
   // and starts from builder-default confs, so no conf leakage either.
   lazy val spark = SparkTestSession.spark.newSession()
+  import SparkTestSession.buildJobs
   private val dir = "/root/testdata/sf0.001"
-
-  /** Run `body` and count the Spark jobs it launched. Counts ONLY
-    * jobs carrying this thread's job group: the SparkContext listener
-    * bus is JVM-global, so a late async job from an earlier suite
-    * (streaming teardown, cleaner work) would otherwise land in the
-    * window (job events have no sessionUUID, so the group id is the
-    * filter — the job-side twin of the isolated session).
-    */
-  private def buildJobs[T](label: String)(body: => T): (T, Int) = {
-    val group = s"build-probe-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (Option(js.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group)) {
-          jobs.incrementAndGet(); ()
-        }
-      }
-    }
-    spark.sparkContext.setJobGroup(group, label)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val out = body
-      org.apache.spark.sql.GraftBridge.waitListenerBusEmpty(spark)
-      (out, jobs.get())
-    } finally {
-      spark.sparkContext.removeSparkListener(l)
-      spark.sparkContext.clearJobGroup()
-    }
-  }
 
   /** All plans a gate query PLANS OR EXECUTES. Sealed operators
     * (graft.sealResult) materialize inside the query fn and return a
@@ -766,7 +736,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // second linear corpus scan paid even when the plan never executed.
     val emb = graft.table(spark, dir, "embeddings")
     emb.count() // materialize the session/table setup outside the probe
-    val (dfs, built) = buildJobs("sampler zero-job probe") {
+    val (dfs, built) = buildJobs(spark, "sampler zero-job probe") {
       Seq(operators.Similarity.knnClassifyEval(
           emb, "vec_id", "label", "embedding", 5, queryMod = 7),
         operators.Similarity.hardNegatives(
@@ -793,7 +763,7 @@ class PlanAuditSpec extends AnyFunSuite {
     emb.count() // materialize the session/table setup outside the probe
     val qs = emb.filter(org.apache.spark.sql.functions.col("vec_id") % 1000 === 0)
     for (k <- Seq(3, 10)) {
-      val (df, built) = buildJobs(s"mmr k=$k zero-job probe") {
+      val (df, built) = buildJobs(spark, s"mmr k=$k zero-job probe") {
         operators.Similarity.mmrRerank(emb, qs, "vec_id", "embedding", k = k)
       }
       assert(built == 0, s"mmrRerank k=$k launched $built jobs while building")

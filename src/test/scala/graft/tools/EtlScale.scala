@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
 /** EtlMain at 100× the reference's data volume (r9 VERDICT #5): runs
   * the FULL reference-surface pipeline on ScaleFixture CSVs at 1× and
   * 100×, asserts production row counts BY CONSTRUCTION, and prints
@@ -19,15 +17,7 @@ import org.apache.spark.sql.SparkSession
 object EtlScale {
   def main(args: Array[String]): Unit = {
     val mult = if (args.nonEmpty) args(0).toInt else 100
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-etl-scale")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession("graft-etl-scale", "WARN")
 
     def durations(file: java.nio.file.Path): Map[String, Long] = {
       val pr = """"phase":"([^"]*)"""".r

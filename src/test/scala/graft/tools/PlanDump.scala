@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named gate queries to files
   * (dev tool for the optimization-round plan artifacts).
   *
@@ -13,13 +11,7 @@ object PlanDump {
     val outDir = args(0)
     val suffix = args(1)
     val dir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession("graft-plan-dump")
     val names: Seq[String] =
       if (args(2) == "ALL") graft.SparkEntry.queries.keys.toSeq.sorted
       else args(2).split(",").toSeq

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-query job/stage profiler (dev tool): runs named gate queries,
   * reporting per-iteration wall time and, for the last iteration, the
@@ -9,21 +8,14 @@ import org.apache.spark.sql.SparkSession
   * input MB) so the expensive pass inside a multi-job operator is
   * attributable.
   *
-  * args: <comma-names> [sfDir] [iters] [cpus]
+  * args: <comma-names> [sfDir] [iters]; cores from `SPARK_GRAFT_CPUS`
   */
 object QProf {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val iters = if (args.length > 2) args(2).toInt else 3
-    val cpus = if (args.length > 3) args(3) else "32"
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession("graft-qprof")
 
     case class JobAgg(var t0: Long = 0L, var t1: Long = 0L,
                       var stages: Int = 0, var tasks: Int = 0,

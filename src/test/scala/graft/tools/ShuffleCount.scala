@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measure per-query shuffle/broadcast counts (summed over every plan
   * a gate query executes, AQE-aware via PlanMetrics) to pin budgets in
   * PlanAuditSpec (r9 VERDICT #8).
@@ -10,13 +8,7 @@ object ShuffleCount {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val names = args(0).split(",").toSeq
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession("graft-shuffle-count")
     for (n <- names) {
       val sums = java.util.Collections.synchronizedList(
         new java.util.ArrayList[(Int, Int)]())

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -17,15 +17,10 @@ object StreamSoak {
   def main(args: Array[String]): Unit = {
     val rowsPerBatch = sys.env.getOrElse("SOAK_ROWS_PER_BATCH", "200000").toInt
     val nBatches = sys.env.getOrElse("SOAK_BATCHES", "5").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession("graft-stream-soak", "WARN",
+      Seq("spark.sql.streaming.stateStore.providerClass" ->
+        ("org.apache.spark.sql.execution.streaming.state." +
+          "RocksDBStateStoreProvider")))
     import spark.implicits._
 
     val types = array(lit("view"), lit("click"), lit("purchase"),
